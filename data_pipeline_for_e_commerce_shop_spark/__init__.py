@@ -14,7 +14,8 @@ Layout
                    dedup, similarity search, text analysis, multimodal
 - ``functions``  — scalar helpers (portable hashing, date/json utils)
 - ``streaming``  — Structured Streaming control plane (ingest, debounce,
-                   single-flight batch runner)
+                   single-flight batch runner over a CAS-committed JSON
+                   state log)
 - ``pipeline``   — medallion runner wiring raw -> validated -> KPIs
 """
 

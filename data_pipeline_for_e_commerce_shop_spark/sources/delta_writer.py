@@ -9,12 +9,13 @@ What a commit is (PROTOCOL.md): stage parquet data files into the
 table directory under unique names, then atomically publish
 ``_delta_log/<20-digit version>.json`` containing the protocol /
 metaData actions (first commit only) and one ``add`` action per staged
-file (plus ``remove`` actions for an overwrite).  The atomic-publish
-CAS is the same os.link discipline as sources/versioned.py — two
-racing writers cannot both claim a version; the loser retries with a
-FRESH read of the log (for overwrite that re-read includes the live
-file set, so the retry is a sound read-modify-write), and a loser
-whose SetTransaction batch was committed by the winner skips itself.
+file (plus ``remove`` actions for an overwrite).  The atomic publish
+is ``sources/versioned.publish_once``, the repo's one ``os.link``
+compare-and-swap — two racing writers cannot both claim a version;
+the loser retries with a FRESH read of the log (for overwrite that
+re-read includes the live file set, so the retry is a sound
+read-modify-write), and a loser whose SetTransaction batch was
+committed by the winner skips itself.
 
 Checkpoints: every ``checkpoint_interval`` commits the writer emits a
 classic single-file checkpoint ``<v>.checkpoint.parquet`` — one row
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame
 
 from data_pipeline_for_e_commerce_shop_spark.sources.versioned import (
     ConcurrentWriteError,
+    publish_once,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
     _checkpoints,
@@ -291,17 +293,9 @@ def rename_delta_column(table_path: str, old: str, new: str) -> int:
             },
         ]
         log = os.path.join(table_path, "_delta_log")
-        tmp = os.path.join(log, f".tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-        final = os.path.join(log, f"{v:020d}.json")
-        try:
-            os.link(tmp, final)  # atomic commit point
-        except FileExistsError:
+        text = "".join(json.dumps(a) + "\n" for a in actions)
+        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
             continue  # lost the race; re-read and retry
-        finally:
-            os.unlink(tmp)
         return v
     raise ConcurrentWriteError(
         f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} RENAME"
@@ -433,17 +427,9 @@ def write_delta_commit(
                 }
             }
         )
-        tmp = os.path.join(log, f".tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-        final = os.path.join(log, f"{v:020d}.json")
-        try:
-            os.link(tmp, final)  # atomic commit point
-        except FileExistsError:
+        text = "".join(json.dumps(a) + "\n" for a in actions)
+        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
             continue  # lost the race; re-read the log and retry
-        finally:
-            os.unlink(tmp)
         if checkpoint_interval and (v + 1) % checkpoint_interval == 0:
             _write_checkpoint(table_path, v)
         return v
@@ -779,17 +765,9 @@ def optimize_delta_table(
                 }
             }
         )
-        tmp = os.path.join(log, f".tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-        final = os.path.join(log, f"{v:020d}.json")
-        try:
-            os.link(tmp, final)  # atomic commit point
-        except FileExistsError:
+        text = "".join(json.dumps(a) + "\n" for a in actions)
+        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
             continue  # lost the race; re-read the log and retry
-        finally:
-            os.unlink(tmp)
         if checkpoint_interval and (v + 1) % checkpoint_interval == 0:
             _write_checkpoint(table_path, v)
         return v

@@ -10,11 +10,13 @@ Design (Delta's, re-expressed on a POSIX dir):
   (``data_<uuid>``) that is NEVER renamed — no rename races, and a
   crashed writer leaves only an unreferenced orphan dir (vacuumed by
   ``expire_versions``), never a half-visible version.
-- The commit point is the atomic creation of ``_log/v=N.json`` via
-  ``os.link`` from a fully-written temp file: hard-link creation fails
-  with EEXIST if the name is taken, so exactly ONE writer wins each
-  version number and the file always appears with complete content
-  (readers can never observe a partial manifest).
+- The commit point is the atomic creation of ``_log/v=N.json`` by
+  :func:`publish_once`, an ``os.link`` from a fully-written temp file
+  (the Delta writer and the batch runner commit through it too):
+  hard-link creation fails with EEXIST if the name is taken, so
+  exactly ONE writer wins each version number and the file always
+  appears with complete content (readers can never observe a partial
+  manifest).
 - Versions are DENSE (each commit claims current+1), which makes the
   log a total order: a writer that read version ``v`` can request
   ``expected_current=v`` and the commit fails with
@@ -38,7 +40,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_MANIFEST = "_versions.json"  # legacy single-file manifest (read-only)
 _LOG_DIR = "_log"
 _ENTRY_RE = re.compile(r"v=(\d+)\.json\Z")
 _MAX_COMMIT_ATTEMPTS = 64
@@ -50,29 +51,40 @@ class ConcurrentWriteError(RuntimeError):
     ``expected_current``).  Re-read the new current and retry."""
 
 
+def publish_once(path: str, text: str) -> bool:
+    """The package's one compare-and-swap commit: create ``path`` holding
+    ``text`` iff no file has that name yet.  The text is written to a
+    temp file beside ``path`` and hard-linked into place; ``os.link``
+    fails with EEXIST when the name is taken, so exactly one racing
+    writer wins and readers never see a partial file.  Returns False
+    when another writer got there first."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp_{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 def _log_dir(table_path: str) -> str:
     return os.path.join(table_path, _LOG_DIR)
 
 
 def _committed_entries(table_path: str) -> list[dict]:
-    """All committed versions, oldest first, from the commit log
-    (falling back to the legacy single-file manifest for tables
-    written before the log existed)."""
+    """All committed versions, oldest first, from the commit log."""
     d = _log_dir(table_path)
-    if os.path.isdir(d):
-        entries = []
-        for name in os.listdir(d):
-            if _ENTRY_RE.match(name):
-                with open(os.path.join(d, name)) as f:
-                    entries.append(json.load(f))
-        return sorted(entries, key=lambda e: e["v"])
-    legacy = os.path.join(table_path, _MANIFEST)
-    if os.path.exists(legacy):
-        with open(legacy) as f:
-            return sorted(
-                json.load(f)["versions"], key=lambda e: e["v"]
-            )
-    return []
+    if not os.path.isdir(d):
+        return []
+    entries = []
+    for name in os.listdir(d):
+        if _ENTRY_RE.match(name):
+            with open(os.path.join(d, name)) as f:
+                entries.append(json.load(f))
+    return sorted(entries, key=lambda e: e["v"])
 
 
 def current_version(table_path: str) -> int:
@@ -87,12 +99,6 @@ def versions(table_path: str) -> list[dict]:
         {"v": e["v"], "n_rows": e["n_rows"]}
         for e in _committed_entries(table_path)
     ]
-
-
-def _data_path(table_path: str, entry: dict) -> str:
-    # log entries reference their uuid data dir; legacy entries used
-    # the rename-into-place v=N layout
-    return os.path.join(table_path, entry.get("dir", f"v={entry['v']}"))
 
 
 def write_versioned(
@@ -129,19 +135,10 @@ def write_versioned(
             )
         v = cur + 1
         entry = {"v": v, "n_rows": n_rows, "dir": data_dir}
-        tmp = os.path.join(
-            _log_dir(table_path), f".tmp_{uuid.uuid4().hex}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
         final = os.path.join(_log_dir(table_path), f"v={v}.json")
-        try:
-            os.link(tmp, final)  # the atomic commit point
+        if publish_once(final, json.dumps(entry)):
             return v
-        except FileExistsError:
-            continue  # lost the race for v; re-read and retry
-        finally:
-            os.unlink(tmp)
+        # lost the race for v; re-read and retry
     shutil.rmtree(staged, ignore_errors=True)
     raise RuntimeError(
         f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} commit"
@@ -162,7 +159,7 @@ def read_versioned(
         raise ValueError(
             f"version {v} not in table history {sorted(by_v)}"
         )
-    return spark.read.parquet(_data_path(table_path, by_v[v]))
+    return spark.read.parquet(os.path.join(table_path, by_v[v]["dir"]))
 
 
 def expire_versions(table_path: str, keep_last: int = 2) -> list[int]:
@@ -180,27 +177,13 @@ def expire_versions(table_path: str, keep_last: int = 2) -> list[int]:
     for e in to_drop:
         if e["v"] == cur:
             continue
-        shutil.rmtree(_data_path(table_path, e), ignore_errors=True)
+        shutil.rmtree(os.path.join(table_path, e["dir"]), ignore_errors=True)
         log_file = os.path.join(_log_dir(table_path), f"v={e['v']}.json")
         if os.path.exists(log_file):
             os.unlink(log_file)
         dropped.append(e["v"])
-    # legacy manifest, if present, must not resurrect dropped versions
-    legacy = os.path.join(table_path, _MANIFEST)
-    if os.path.exists(legacy) and not os.path.isdir(_log_dir(table_path)):
-        with open(legacy) as f:
-            man = json.load(f)
-        man["versions"] = [
-            e for e in man["versions"] if e["v"] not in dropped
-        ]
-        tmp = legacy + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, legacy)
-    # vacuum unreferenced staging dirs (only uuid-named data dirs;
-    # never touches v=N legacy dirs of surviving versions)
-    survivors = _committed_entries(table_path)
-    referenced = {e.get("dir") for e in survivors if e.get("dir")}
+    # vacuum unreferenced staging dirs
+    referenced = {e["dir"] for e in _committed_entries(table_path)}
     for name in os.listdir(table_path):
         if name.startswith("data_") and name not in referenced:
             shutil.rmtree(

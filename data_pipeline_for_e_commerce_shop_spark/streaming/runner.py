@@ -8,23 +8,35 @@ SURVEY §4.3).  Status flow: pending -> processing -> done|failed with
 retry/backoff handled by Step Functions
 (stepfunction/stepfunction.json:71-79,196-204).
 
-Here the job-state table is a parquet-backed table updated with a
-CONDITIONAL transition (only one claimant can move pending->processing
-— the race is fixed by construction, single-writer read-modify-write;
-on Delta this is ``MERGE ... WHEN MATCHED AND t.status='pending'``).
-The runner loop is the controller's FIFO probe: oldest pending batch,
-one in flight, N attempts with recorded history.
+Here the job-state table is a log of JSON snapshots, ``v=N.json``
+holding every batch record at version N.  A transition reads the
+newest snapshot, changes it in Python and commits N+1 through
+``sources/versioned.publish_once``, the repo's one ``os.link``
+compare-and-swap (CAS); a lost CAS re-reads and retries, so only one
+claimant can move a batch pending->processing.  Superseded snapshots
+are pruned after a commit.  A claim older than :data:`LEASE` is a dead
+driver's: the next claim marks it failed, the retry budget decides
+whether it runs again, and the queue behind it moves on.  No
+transition runs a Spark job; ``enqueue`` collects the debounce frame
+once.  The runner loop is the controller's FIFO probe: oldest pending
+batch, one in flight, N attempts with recorded history.
 """
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
+import json
 import os
+import re
+import time
 import traceback
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from data_pipeline_for_e_commerce_shop_spark.sources.versioned import publish_once
 
 BATCH_STATE_SCHEMA = T.StructType(
     [
@@ -39,139 +51,155 @@ BATCH_STATE_SCHEMA = T.StructType(
         T.StructField("last_error", T.StringType(), True),
     ]
 )
+_TIMESTAMPS = ("created_at", "processing_started_at", "completed_at")
+
+# A claim older than this belongs to a dead driver.  Illustrative: one
+# batch takes 8-17 s, so any value far above that works.
+LEASE = dt.timedelta(minutes=30)
+# A superseded snapshot is deleted only once this old, so a writer that
+# read it cannot link its successor into a name already freed.
+_PRUNE_AFTER_S = 60.0
+_SNAPSHOT_RE = re.compile(r"v=(\d+)\.json\Z")
+
+
+def _iso(ts: dt.datetime) -> str:
+    # fixed width, so the strings sort like the instants
+    return ts.isoformat(timespec="microseconds")
+
+
+def _row(rec: dict) -> Row:
+    ts = {k: dt.datetime.fromisoformat(rec[k]) for k in _TIMESTAMPS if rec[k]}
+    return Row(**{**rec, **ts})
 
 
 class BatchStateTable:
-    """Parquet-backed job-state table (reference DynamoDB batch_chunks,
-    readme.md:113-114; Delta table in production)."""
+    """Job-state table (reference DynamoDB batch_chunks,
+    readme.md:113-114) as a CAS-committed log of JSON snapshots."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
+    def _load(self) -> tuple[int, list[dict]]:
+        """The newest snapshot as (version, records); (0, []) before
+        the first commit."""
+        names = os.listdir(self.path) if os.path.isdir(self.path) else []
+        versions = [int(m.group(1)) for m in map(_SNAPSHOT_RE.match, names) if m]
+        if not versions:
+            return 0, []
+        v = max(versions)
+        with open(os.path.join(self.path, f"v={v}.json")) as f:
+            return v, json.load(f)
+
+    def _commit(self, change: Callable[[list[dict]], object]) -> object:
+        """Read -> ``change`` the records in place -> commit the next
+        version; returns what ``change`` returns.  A lost CAS means
+        another writer committed, so re-read and retry.  A change that
+        edits nothing commits nothing."""
+        os.makedirs(self.path, exist_ok=True)
+        while True:
+            v, records = self._load()
+            before = json.dumps(records)
+            result = change(records)
+            after = json.dumps(records)
+            if after == before:
+                return result
+            if publish_once(os.path.join(self.path, f"v={v + 1}.json"), after):
+                self._prune(v + 1)
+                return result
+
+    def _prune(self, current: int) -> None:
+        cutoff = time.time() - _PRUNE_AFTER_S
+        for name in os.listdir(self.path):
+            m, p = _SNAPSHOT_RE.match(name), os.path.join(self.path, name)
+            with contextlib.suppress(FileNotFoundError):  # pruned by another
+                if m and int(m.group(1)) < current and os.path.getmtime(p) < cutoff:
+                    os.unlink(p)
 
     def read(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame([], BATCH_STATE_SCHEMA)
-        return self.spark.read.parquet(self.path)
-
-    def _overwrite(self, df: DataFrame) -> None:
-        rows = df.collect()  # job-state is control metadata: O(batches), tiny
-        out = self.spark.createDataFrame(rows, BATCH_STATE_SCHEMA)
-        out.coalesce(1).write.mode("overwrite").parquet(self.path)
+        """The current records as a DataFrame, for inspection; the
+        control loop never calls it."""
+        rows = [_row(r) for r in self._load()[1]]
+        return self.spark.createDataFrame(rows, BATCH_STATE_SCHEMA)
 
     def enqueue(self, batches: DataFrame) -> None:
-        """T4: append newly closed debounce windows as pending rows,
+        """T4: append newly closed debounce windows as pending records,
         idempotent on batch_id (re-running the debounce can't double-
-        enqueue — the anti-join drops already-known ids)."""
-        existing = self.read().select("batch_id")
-        fresh = (
-            batches.select(
-                "batch_id",
-                "group_key",
-                "file_paths",
-                F.lit("pending").alias("status"),
-                F.coalesce(
-                    F.col("batch_start"), F.current_timestamp()
-                ).alias("created_at"),
-                F.lit(None).cast("timestamp").alias("processing_started_at"),
-                F.lit(None).cast("timestamp").alias("completed_at"),
-                F.lit(0).alias("attempts"),
-                F.lit(None).cast("string").alias("last_error"),
-            )
-            .join(existing, "batch_id", "left_anti")
-        )
-        merged = self.read().unionByName(fresh)
-        self._overwrite(merged)
+        enqueue)."""
+        cols = ("batch_id", "group_key", "file_paths", "batch_start")
+        rows = batches.select(*cols).collect()
+        now = _iso(dt.datetime.now())
+
+        def add(records):
+            known = {r["batch_id"] for r in records}
+            for b in rows:
+                if b["batch_id"] in known:
+                    continue
+                known.add(b["batch_id"])
+                start = b["batch_start"]
+                records.append(dict(  # BATCH_STATE_SCHEMA order
+                    batch_id=b["batch_id"], group_key=b["group_key"],
+                    file_paths=b["file_paths"], status="pending",
+                    created_at=_iso(start) if start else now,
+                    processing_started_at=None, completed_at=None,
+                    attempts=0, last_error=None,
+                ))
+
+        self._commit(add)
 
     def claim_next(self) -> Row | None:
         """T6: single-flight FIFO claim with a CONDITIONAL transition.
 
-        If any batch is 'processing', claim nothing (reference
-        controller probe, lambda/controller.py:52-61).  Otherwise move
-        the OLDEST pending row to processing — guarded on its current
-        status, so a concurrent duplicate trigger (the reference's T5/T6
-        race) cannot double-claim.
+        If any batch is 'processing' within its lease, claim nothing
+        (reference controller probe, lambda/controller.py:52-61).
+        Otherwise move the OLDEST pending record to processing.  The
+        CAS commit guards the move, so a concurrent duplicate trigger
+        (the reference's T5/T6 race) cannot double-claim.  A claim whose
+        lease expired is first marked failed.
         """
-        state = self.read()
-        if state.filter(F.col("status") == "processing").limit(1).count() > 0:
-            return None
-        oldest = (
-            state.filter(F.col("status") == "pending")
-            .orderBy(F.col("created_at").asc(), F.col("batch_id").asc())
-            .limit(1)
-            .collect()
-        )
-        if not oldest:
-            return None
-        bid = oldest[0]["batch_id"]
-        updated = state.withColumn(
-            "status",
-            F.when(
-                (F.col("batch_id") == bid) & (F.col("status") == "pending"),
-                F.lit("processing"),
-            ).otherwise(F.col("status")),
-        ).withColumn(
-            "processing_started_at",
-            F.when(
-                (F.col("batch_id") == bid)
-                & (F.col("processing_started_at").isNull()),
-                F.current_timestamp(),
-            ).otherwise(F.col("processing_started_at")),
-        ).withColumn(
-            "attempts",
-            F.when(F.col("batch_id") == bid, F.col("attempts") + 1).otherwise(
-                F.col("attempts")
-            ),
-        )
-        self._overwrite(updated)
-        return self.read().filter(F.col("batch_id") == bid).collect()[0]
+
+        def claim(records):
+            now = dt.datetime.now()
+            expired = _iso(now - LEASE)
+            for r in records:
+                if r["status"] == "processing" and r["processing_started_at"] < expired:
+                    r.update(status="failed", completed_at=_iso(now),
+                             last_error="lease expired")
+            pending = [r for r in records if r["status"] == "pending"]
+            if not pending or any(r["status"] == "processing" for r in records):
+                return None
+            oldest = min(pending, key=lambda r: (r["created_at"], r["batch_id"]))
+            oldest.update(status="processing", processing_started_at=_iso(now),
+                          attempts=oldest["attempts"] + 1)
+            return _row(oldest)
+
+        return self._commit(claim)
 
     def finish(self, batch_id: str, status: str, error: str | None = None) -> None:
         """T7: processing -> done|failed stamp (reference
         lambda/confirm_status.py:31-46)."""
-        updated = self.read().withColumn(
-            "status",
-            F.when(F.col("batch_id") == batch_id, F.lit(status)).otherwise(
-                F.col("status")
-            ),
-        ).withColumn(
-            "completed_at",
-            F.when(F.col("batch_id") == batch_id, F.current_timestamp()).otherwise(
-                F.col("completed_at")
-            ),
-        ).withColumn(
-            "last_error",
-            F.when(F.col("batch_id") == batch_id, F.lit(error)).otherwise(
-                F.col("last_error")
-            ),
-        )
-        self._overwrite(updated)
+
+        def stamp(records):
+            for r in records:
+                if r["batch_id"] == batch_id:
+                    r.update(status=status, completed_at=_iso(dt.datetime.now()),
+                             last_error=error)
+
+        self._commit(stamp)
 
     def requeue_failed(self, max_attempts: int = 3) -> int:
         """T9: failed batches under the attempt budget go back to
         pending (reference Step Functions Retry 3x,
         stepfunction.json:71-79)."""
-        state = self.read()
-        n = state.filter(
-            (F.col("status") == "failed") & (F.col("attempts") < max_attempts)
-        ).count()
-        if n:
-            self._overwrite(
-                state.withColumn(
-                    "status",
-                    F.when(
-                        (F.col("status") == "failed")
-                        & (F.col("attempts") < max_attempts),
-                        F.lit("pending"),
-                    ).otherwise(F.col("status")),
-                )
-            )
-        return n
+
+        def requeue(records):
+            retry = [r for r in records
+                     if r["status"] == "failed" and r["attempts"] < max_attempts]
+            for r in retry:
+                r["status"] = "pending"
+            return len(retry)
+
+        return self._commit(requeue)
 
 
 def run_until_drained(
@@ -197,7 +225,5 @@ def run_until_drained(
             table.finish(row["batch_id"], "done")
         except Exception:
             table.finish(row["batch_id"], "failed", traceback.format_exc()[-2000:])
-    state = table.read()
-    done = state.filter(F.col("status") == "done").count()
-    failed = state.filter(F.col("status") == "failed").count()
-    return {"done": done, "failed": failed}
+    statuses = [r["status"] for r in table._load()[1]]
+    return {"done": statuses.count("done"), "failed": statuses.count("failed")}

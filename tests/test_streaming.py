@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
+import threading
+import uuid
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -13,6 +16,7 @@ from data_pipeline_for_e_commerce_shop_spark.schemas import ORDERS_SCHEMA
 from data_pipeline_for_e_commerce_shop_spark.streaming.debounce import debounce_batches
 from data_pipeline_for_e_commerce_shop_spark.streaming.ingest import run_gated_ingest
 from data_pipeline_for_e_commerce_shop_spark.streaming.runner import (
+    LEASE,
     BatchStateTable,
     run_until_drained,
 )
@@ -201,6 +205,129 @@ def test_runner_single_flight(spark, tmp_path):
     table.finish(first["batch_id"], "done")
     second = table.claim_next()
     assert second is not None and second["batch_id"] != first["batch_id"]
+
+
+def _backdate_claim(table, batch_id, attempts):
+    """Make ``batch_id`` look claimed by a driver that died before its
+    lease ran out, committed through the table's own commit path."""
+    started = dt.datetime.now() - LEASE - dt.timedelta(seconds=1)
+
+    def crash(records):
+        for r in records:
+            if r["batch_id"] == batch_id:
+                r.update(
+                    status="processing",
+                    processing_started_at=started.isoformat(timespec="microseconds"),
+                    attempts=attempts,
+                )
+
+    table._commit(crash)
+
+
+def test_runner_lease_frees_crashed_batch(spark, tmp_path):
+    """A driver that dies mid-batch blocks the queue only until its
+    lease expires; then the batch and the one behind it both run."""
+    table = BatchStateTable(spark, str(tmp_path / "state"))
+    t0 = dt.datetime(2024, 3, 1, 10, 0, 0)
+    table.enqueue(
+        _mk_batches(
+            spark,
+            [("b1", "g1", ["a.csv"], t0), ("b2", "g1", ["b.csv"], t0 + dt.timedelta(seconds=1))],
+        )
+    )
+    assert table.claim_next()["batch_id"] == "b1"  # its driver dies here
+    processed = []
+    # within the lease the claim still holds
+    assert run_until_drained(table, processed.append) == {"done": 0, "failed": 0}
+    assert processed == []
+
+    _backdate_claim(table, "b1", attempts=1)
+    stats = run_until_drained(
+        table, lambda row: processed.append((row["batch_id"], row["attempts"]))
+    )
+    assert stats == {"done": 2, "failed": 0}
+    assert sorted(processed) == [("b1", 2), ("b2", 1)]
+
+
+def test_runner_expired_lease_spends_retry_budget(spark, tmp_path):
+    table = BatchStateTable(spark, str(tmp_path / "state"))
+    t0 = dt.datetime(2024, 3, 1, 10, 0, 0)
+    table.enqueue(_mk_batches(spark, [("b1", "g1", ["a.csv"], t0)]))
+    _backdate_claim(table, "b1", attempts=3)
+    processed = []
+    assert run_until_drained(table, processed.append, max_attempts=3) == {
+        "done": 0,
+        "failed": 1,
+    }
+    assert processed == []
+    assert table.read().collect()[0]["last_error"] == "lease expired"
+
+
+def test_runner_concurrent_claims_single_winner(spark, tmp_path):
+    """The CAS commit lets exactly one of N racing claimants move the
+    one pending batch to processing."""
+    path = str(tmp_path / "state")
+    t0 = dt.datetime(2024, 3, 1, 10, 0, 0)
+    BatchStateTable(spark, path).enqueue(_mk_batches(spark, [("b1", "g1", ["a.csv"], t0)]))
+    n = 8
+    barrier = threading.Barrier(n)
+    got = [None] * n
+
+    def claim(i):
+        table = BatchStateTable(spark, path)
+        barrier.wait()
+        got[i] = table.claim_next()
+
+    threads = [threading.Thread(target=claim, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    winners = [r for r in got if r is not None]
+    assert len(winners) == 1 and winners[0]["batch_id"] == "b1"
+    assert winners[0]["attempts"] == 1
+
+
+def test_runner_control_plane_runs_no_spark_jobs(spark, tmp_path):
+    """State transitions are driver-side file commits: only enqueue's
+    collect of the debounce frame reaches the engine."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    table = BatchStateTable(spark, str(tmp_path / "state"))
+
+    def debounced():
+        events = spark.createDataFrame(
+            [_ev(0, "g1", "a.csv"), _ev(200, "g1", "c.csv"), _ev(10, "g2", "x.csv")],
+            EVENT_SCHEMA,
+        )
+        return debounce_batches(events, watermark=None)
+
+    def jobs(fn):
+        group = f"runner-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    n_collect = jobs(lambda: debounced().collect())
+    assert n_collect >= 1
+    assert jobs(lambda: table.enqueue(debounced())) == n_collect
+
+    def control():
+        row = table.claim_next()
+        table.finish(row["batch_id"], "failed", "boom")
+        assert table.requeue_failed() == 1
+        assert run_until_drained(table, lambda row: None) == {"done": 3, "failed": 0}
+
+    assert jobs(control) == 0
 
 
 def test_stream_batch_duality(spark, sf_dir):
