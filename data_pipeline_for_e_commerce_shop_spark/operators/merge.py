@@ -11,7 +11,7 @@ are null — so a single coalesce-merge covers the whole branch matrix.
 
 Spark mapping: with a MERGE-capable table format this is one
 ``MERGE INTO ... WHEN MATCHED UPDATE SET c = coalesce(s.c, t.c)``.
-Without Delta in this environment we express the identical algebra as a
+No delta-spark runtime ships here, so the identical algebra is a
 full-outer join + coalesce projection, which is also exactly what the
 oracle SQL checks.  Properties (tested in tests/test_merge.py):
 
@@ -116,6 +116,15 @@ def additive_merge(
     return joined.select(*out_cols)
 
 
+def _sorted_provenance(source: DataFrame, provenance_col: str | None) -> DataFrame:
+    """A first write's provenance arrays, normalized as the merge's are."""
+    if not provenance_col:
+        return source
+    return source.withColumn(
+        provenance_col, F.array_sort(F.array_distinct(F.col(provenance_col)))
+    )
+
+
 def upsert_parquet_table(
     spark,
     table_path: str,
@@ -127,16 +136,17 @@ def upsert_parquet_table(
     """S7/S11: merge into a parquet-backed serving table, creating it if
     absent (reference table autovivification,
     scripts/transformation.py:57-77).  Production: Delta MERGE INTO
-    (reference scripts/helperfunction.py:110-208); delta-spark is not in
-    this container, so the merge is emulated on parquet.
+    (reference scripts/helperfunction.py:110-208).  The medallion KPI
+    serving tables stay plain parquet, so the merge is emulated here.
 
     ATOMICITY BOUNDARY (what the emulation does and does not give):
 
-    - Crash safety: the merged result is written to a temp sibling,
-      then promoted with a rename-aside swap (original -> backup,
-      temp -> primary, delete backup).  A crash at any step leaves a
-      complete copy at the primary path or at a recoverable
-      ``__upsert_bak_*`` sibling — never an empty primary.
+    - Crash safety: the merged result is promoted with
+      ``sinks.swap_parquet`` (stage to a sibling, rename the original
+      aside, promote, drop the backup).  A crash at any step leaves a
+      complete copy at the primary path or at the ``__upsert_bak_*``
+      sibling, and the next upsert puts a lone backup back in place
+      before it reads the table.
     - Single concurrent writer ONLY: there is no commit log, so two
       simultaneous upserts race read-modify-write and the slower one
       silently drops the faster one's rows (lost update), exactly the
@@ -144,7 +154,7 @@ def upsert_parquet_table(
       Callers must serialize writers per table (the streaming runner's
       single-flight FIFO claim, streaming/runner.py, is that lock) —
       or use :func:`upsert_versioned_table`, which closes this hole
-      with the commit log's compare-and-swap and a loser-retries loop.
+      with the Delta log's compare-and-swap and a loser-retries loop.
     - Readers during the swap window can catch the path between the
       two renames and see a missing directory; Delta readers never do.
 
@@ -153,33 +163,22 @@ def upsert_parquet_table(
     test_upsert_concurrent_writer_boundary).
     """
     import os
-    import shutil
-    import uuid
 
-    if os.path.isdir(table_path) and any(
-        f.endswith(".parquet") for f in os.listdir(table_path)
-    ):
-        target = spark.read.parquet(table_path)
-        merged = coalescing_merge(target, source, keys, value_cols, provenance_col)
-        # Read-modify-write via temp-then-swap: writing the merge
-        # straight over its own input path would delete the files the
-        # (lazy, partially-cached) plan may still need, and a crash
-        # mid-overwrite would lose the only durable copy.
-        suffix = uuid.uuid4().hex[:8]
-        tmp = f"{table_path.rstrip('/')}__upsert_{suffix}"
-        bak = f"{table_path.rstrip('/')}__upsert_bak_{suffix}"
-        merged.write.parquet(tmp)
-        os.rename(table_path, bak)
-        os.rename(tmp, table_path)
-        shutil.rmtree(bak)
-    else:
-        merged = source
-        if provenance_col:
-            merged = merged.withColumn(
-                provenance_col,
-                F.array_sort(F.array_distinct(F.col(provenance_col))),
-            )
-        merged.write.mode("overwrite").parquet(table_path)
+    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
+        swap_parquet,
+    )
+
+    def build():
+        if os.path.isdir(table_path) and any(
+            f.endswith(".parquet") for f in os.listdir(table_path)
+        ):
+            target = spark.read.parquet(table_path)
+            return coalescing_merge(
+                target, source, keys, value_cols, provenance_col
+            ).write
+        return _sorted_provenance(source, provenance_col).write
+
+    swap_parquet(table_path, build, "upsert")
     return spark.read.parquet(table_path)
 
 
@@ -190,49 +189,29 @@ def upsert_versioned_table(
     keys: list[str],
     value_cols: list[str],
     provenance_col: str | None = "data_sources",
-    max_retries: int = 8,
 ) -> int:
     """MULTI-WRITER-SAFE merge: the Delta MERGE INTO shape (reference
-    scripts/helperfunction.py:110-208) on the versioned commit log
-    (sources/versioned.py) instead of ``upsert_parquet_table``'s
+    scripts/helperfunction.py:110-208) on the Delta log
+    (sources/delta_writer.py) instead of ``upsert_parquet_table``'s
     single-writer parquet swap.
 
-    Optimistic concurrency, Delta-style: read the current version,
-    merge, then commit with ``expected_current`` pinned to what was
-    read.  If another writer committed in between, the commit raises
-    ``ConcurrentWriteError`` WITHOUT publishing (exactly one writer
-    wins each version — the atomic ``os.link`` in the commit log is
-    the arbiter), and this writer re-reads the NEW current and
-    re-merges, so no committed row is ever lost — the lost-update
-    anomaly the plain-parquet emulation documents is closed here.
-    Returns the committed version number."""
-    from data_pipeline_for_e_commerce_shop_spark.sources import (
-        versioned as V,
+    Optimistic concurrency, Delta-style: read the latest version,
+    merge, then commit an overwrite pinned to the version read
+    (``delta_writer.rewrite_delta_table``).  If another writer
+    committed in between, the commit raises ``ConcurrentWriteError``
+    WITHOUT publishing (exactly one writer wins each version — the
+    atomic ``os.link`` of the log entry is the arbiter), and this
+    writer re-reads the NEW latest version and re-merges, so no
+    committed row is ever lost — the lost-update anomaly the
+    plain-parquet emulation documents is closed here.  Returns the
+    committed version number (0 for the first commit)."""
+    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+        rewrite_delta_table,
     )
 
-    last_err: Exception | None = None
-    for _ in range(max_retries):
-        cur = V.current_version(table_path)
-        if cur == 0:
-            merged = source
-            if provenance_col:
-                merged = merged.withColumn(
-                    provenance_col,
-                    F.array_sort(F.array_distinct(F.col(provenance_col))),
-                )
-        else:
-            target = V.read_versioned(spark, table_path)
-            merged = coalescing_merge(
-                target, source, keys, value_cols, provenance_col
-            )
-        try:
-            return V.write_versioned(
-                merged, table_path, expected_current=cur
-            )
-        except V.ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise RuntimeError(
-        f"{table_path}: upsert lost the commit race {max_retries}"
-        f" times; last: {last_err}"
-    )
+    def fold(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return _sorted_provenance(source, provenance_col)
+        return coalescing_merge(target, source, keys, value_cols, provenance_col)
+
+    return rewrite_delta_table(spark, table_path, fold)

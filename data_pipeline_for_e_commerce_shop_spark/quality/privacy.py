@@ -231,47 +231,41 @@ def erase_user(
     """Right-to-erasure (GDPR art. 17) for a parquet table: rewrite
     without the subject's rows and return an audit record.
 
-    Read-modify-write with an explicit pre/post count — the same
-    sink-agnostic shape as operators/merge.upsert_parquet_table; on a
-    Delta/Iceberg sink the body becomes a ``DELETE WHERE`` and the
+    Read-modify-write with an explicit pre/post count, promoted with
+    ``sinks.swap_parquet`` like operators/merge.upsert_parquet_table; on
+    a Delta/Iceberg sink the body becomes a ``DELETE WHERE`` and the
     audit record comes from the commit metrics.  The rewrite is
     partition-preserving-in-spirit only (plain parquet has no row-level
     delete); at 100 TB the erasure batch accumulates many subjects and
     rewrites each affected file once, which is why the audit counts
     matter: they prove the batch touched exactly what it claimed.
     """
-    import os
-    import shutil
-    import uuid
+    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
+        swap_parquet,
+    )
 
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(table_path)
     # null-safe: (NULL == v) is NULL and ~NULL is NULL, so a plain
     # ~(col == v) would silently DROP every NULL-keyed row; eqNullSafe
     # makes the subject predicate total
     hit = F.col(key_col).eqNullSafe(F.lit(key_value))
-    # one aggregate pass for both audit counts (not two table scans)
-    counts = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(hit.cast("long")).alias("n_hit"),
-    ).collect()[0]
+    counts = {}
+
+    def build():
+        df = spark.read.parquet(table_path)
+        # one aggregate pass for both audit counts (not two table scans)
+        counts.update(
+            df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(hit.cast("long")).alias("n_hit"),
+            ).collect()[0].asDict()
+        )
+        return df.where(~hit).write
+
+    # a plain overwrite would delete the only durable copy before the
+    # new one exists; the swap keeps a full copy at every step
+    swap_parquet(table_path, build, "erase")
     n_before, n_erase = int(counts["n"]), int(counts["n_hit"] or 0)
-    # write-to-temp-then-swap: a plain overwrite deletes the only
-    # durable copy before the new one exists (a mid-write failure
-    # would lose the table).  Swap order matters: rename the ORIGINAL
-    # aside first, then promote the rewrite, then delete the backup —
-    # a crash at any point leaves a full copy at the primary path or
-    # at a recoverable '__erase_bak_*' sibling (never rmtree-then-
-    # rename, whose window has no data at the primary path at all).
-    suffix = uuid.uuid4().hex[:8]
-    tmp = f"{table_path.rstrip('/')}__erase_{suffix}"
-    bak = f"{table_path.rstrip('/')}__erase_bak_{suffix}"
-    df.where(~hit).write.parquet(tmp)
-    n_after = spark.read.parquet(tmp).count()
-    os.rename(table_path, bak)
-    os.rename(tmp, table_path)
-    shutil.rmtree(bak)
+    n_after = spark.read.parquet(table_path).count()
     return {
         "table": table_path,
         "key_col": key_col,

@@ -10,12 +10,16 @@ table directory under unique names, then atomically publish
 ``_delta_log/<20-digit version>.json`` containing the protocol /
 metaData actions (first commit only) and one ``add`` action per staged
 file (plus ``remove`` actions for an overwrite).  The atomic publish
-is ``sources/versioned.publish_once``, the repo's one ``os.link``
+is :func:`publish_once`, the package's one ``os.link``
 compare-and-swap — two racing writers cannot both claim a version;
 the loser retries with a FRESH read of the log (for overwrite that
 re-read includes the live file set, so the retry is a sound
 read-modify-write), and a loser whose SetTransaction batch was
-committed by the winner skips itself.
+committed by the winner skips itself.  A read-modify-write caller
+pins the version it read (``expected_version``) and re-folds on
+:class:`ConcurrentWriteError`; :func:`rewrite_delta_table` is that
+loop, and the package's versioned serving tables (the multi-writer
+KPI merge, the streaming KPI fold) commit through it.
 
 Checkpoints: every ``checkpoint_interval`` commits the writer emits a
 classic single-file checkpoint ``<v>.checkpoint.parquet`` — one row
@@ -38,23 +42,46 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from data_pipeline_for_e_commerce_shop_spark.sources.versioned import (
-    ConcurrentWriteError,
-    publish_once,
-)
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
     _checkpoints,
     _resolve_files,
     checkpoint_actions,
     delta_log_versions,
     last_txn_versions,
+    read_delta_table,
 )
 
 _MAX_COMMIT_ATTEMPTS = 20
 DEFAULT_CHECKPOINT_INTERVAL = 10
+
+
+class ConcurrentWriteError(RuntimeError):
+    """Another writer committed between this writer's read and its
+    commit (the table moved past ``expected_version``), or the commit
+    could not be made consistent with the log.  Re-read and retry."""
+
+
+def publish_once(path: str, text: str) -> bool:
+    """The package's one compare-and-swap commit: create ``path`` holding
+    ``text`` iff no file has that name yet.  The text is written to a
+    temp file beside ``path`` and hard-linked into place; ``os.link``
+    fails with EEXIST when the name is taken, so exactly one racing
+    writer wins and readers never see a partial file.  Returns False
+    when another writer got there first."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp_{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 def _latest_version(table_path: str) -> int:
@@ -174,6 +201,15 @@ def _stage_data_files(
         )
     shutil.rmtree(tmp, ignore_errors=True)
     return adds
+
+
+def _drop_staged(table_path: str, adds: list[dict]) -> None:
+    """Delete data files staged for a commit that will not happen."""
+    for a in adds:
+        try:
+            os.unlink(os.path.join(table_path, a["path"]))
+        except FileNotFoundError:
+            pass
 
 
 def _metadata_action(df: DataFrame, column_mapping: bool = False) -> dict:
@@ -310,6 +346,7 @@ def write_delta_commit(
     checkpoint_interval: int = DEFAULT_CHECKPOINT_INTERVAL,
     txn: tuple[str, int] | None = None,
     column_mapping: bool = False,
+    expected_version: int | None = None,
 ) -> int | None:
     """Commit ``df`` to a Delta table (creating it if absent); returns
     the committed version.  ``mode``: 'append' adds files; 'overwrite'
@@ -339,7 +376,14 @@ def write_delta_commit(
     mapped table detect the mode from the log automatically (the flag
     is creation-time only) and project logical -> physical before
     staging; after :func:`rename_delta_column` the NEW logical names
-    are what an appending df must carry."""
+    are what an appending df must carry.
+
+    ``expected_version`` is the optimistic-concurrency guard for
+    read-modify-write callers: the commit raises
+    :class:`ConcurrentWriteError`, publishing nothing and deleting its
+    staged files, unless the table's latest version is still this one
+    (-1: the table must not exist yet).  ``None`` commits blindly at
+    whatever version is next."""
     from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
         _latest_metadata,
     )
@@ -375,17 +419,20 @@ def write_delta_commit(
         ) >= int(txn[1]):
             # this batch is already in the log: drop the staged files,
             # report the skip
-            for a in adds:
-                try:
-                    os.unlink(os.path.join(table_path, a["path"]))
-                except FileNotFoundError:
-                    pass
+            _drop_staged(table_path, adds)
             return None
+        cur = _latest_version(table_path)
+        if expected_version is not None and cur != expected_version:
+            _drop_staged(table_path, adds)
+            raise ConcurrentWriteError(
+                f"{table_path}: expected version {expected_version},"
+                f" found {cur}"
+            )
         try:
             live_before, _ = _resolve_files(table_path, None)
         except FileNotFoundError:
             live_before = []
-        v = _latest_version(table_path) + 1
+        v = cur + 1
         actions: list[dict] = []
         if txn is not None:
             actions.append(
@@ -436,6 +483,39 @@ def write_delta_commit(
     raise ConcurrentWriteError(
         f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} Delta"
         " commit attempts (pathological writer contention)"
+    )
+
+
+def rewrite_delta_table(
+    spark,
+    table_path: str,
+    fold: Callable[[DataFrame | None], DataFrame],
+    txn: tuple[str, int] | None = None,
+) -> int | None:
+    """Optimistic read-modify-write of a whole Delta table: read the
+    latest version (``None`` while the table does not exist), commit
+    ``fold(current)`` as an overwrite pinned to that version, and on
+    :class:`ConcurrentWriteError` re-read and re-fold, so a writer that
+    committed in between loses no row.  ``txn`` as in
+    :func:`write_delta_commit`: a batch already in the log is skipped
+    and None returned.  Returns the committed version."""
+    last: Exception | None = None
+    for _ in range(_MAX_COMMIT_ATTEMPTS):
+        cur = _latest_version(table_path)
+        current = read_delta_table(spark, table_path, cur) if cur >= 0 else None
+        try:
+            return write_delta_commit(
+                fold(current),
+                table_path,
+                mode="overwrite",
+                txn=txn,
+                expected_version=cur,
+            )
+        except ConcurrentWriteError as e:
+            last = e
+    raise ConcurrentWriteError(
+        f"{table_path}: lost the commit race {_MAX_COMMIT_ATTEMPTS}"
+        f" times; last: {last}"
     )
 
 
@@ -728,11 +808,7 @@ def optimize_delta_table(
         live_now, _ = _resolve_files(table_path, None)
         live_rel = {os.path.relpath(fp, table_path) for fp in live_now}
         if not set(remove_rel) <= live_rel:
-            for a in adds:
-                try:
-                    os.unlink(os.path.join(table_path, a["path"]))
-                except FileNotFoundError:
-                    pass
+            _drop_staged(table_path, adds)
             raise ConcurrentWriteError(
                 f"{table_path}: OPTIMIZE lost a conflict — a concurrent"
                 " writer removed a file this plan compacts; re-plan"

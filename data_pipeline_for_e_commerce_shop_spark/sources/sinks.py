@@ -1,19 +1,28 @@
 """Sink operators S5-S7, S9-S11 (SURVEY §2.1).
 
-No Delta Lake runtime is available in this environment, so tables are
-parquet directories with Hive-style ``dt=`` partitions and sinks use
-dynamic partition overwrite.  On a production cluster these map 1:1 onto
-Delta/Iceberg tables (noted per function); the operator semantics —
-partition-scoped overwrite, quarantine-with-reason, idempotent manifest —
-are identical.
+The medallion zones and KPI serving tables are plain parquet
+directories (Hive-style ``dt=`` partitions for the zones), written two
+ways: :func:`write_partitioned` replaces the partitions a batch
+carries (dynamic partition overwrite), and :func:`swap_parquet`
+replaces a whole table through a rename-aside swap (the KPI merge,
+compaction, erasure).  Versioned tables with concurrent writers use
+the Delta log instead (``sources/delta_writer``).  On a production
+cluster these map 1:1 onto Delta/Iceberg tables (noted per function);
+the operator semantics — partition-scoped overwrite,
+quarantine-with-reason, idempotent manifest — are identical.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
+import shutil
+import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 
@@ -61,39 +70,63 @@ def write_alert(alerts_path: str, payload: dict) -> None:
     """S10: alert append (reference SNS publish,
     lambda/s3_validation.py:160-177) represented as an alerts table row."""
     os.makedirs(alerts_path, exist_ok=True)
-    fname = f"alert_{abs(hash(json.dumps(payload, sort_keys=True)))}.json"
+    # a content digest, not hash(): str hashing is salted per process,
+    # so a retried alert would land under a second name
+    text = json.dumps(payload, sort_keys=True)
+    fname = f"alert_{hashlib.sha256(text.encode()).hexdigest()[:16]}.json"
     with open(os.path.join(alerts_path, fname), "w") as f:
-        json.dump(payload, f, sort_keys=True)
+        f.write(text)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
+def swap_parquet(
+    path: str, build: Callable[[], DataFrameWriter], tag: str
 ) -> None:
-    """Hash-bucketed (and per-bucket sorted) catalog table.
+    """Replace the parquet table at ``path`` with what ``build()``'s
+    writer produces: stage to a sibling, rename the original aside,
+    promote the staged copy, drop the backup.  Writing a table over
+    its own input would delete files its lazy plan still reads, and a
+    crash mid-overwrite would lose the only copy; here a crash at any
+    step leaves a complete table at ``path`` or at the
+    ``<name>__<tag>_bak_<hex>`` sibling.
 
-    Both sides of a join bucketed on their join keys with the same
-    bucket count are CO-LOCATED: the join needs no shuffle at all —
-    the single biggest cost elimination available for a repeated
-    fact-to-fact join at 100 TB (every query on `order_id` pays a full
-    fact shuffle otherwise; bucketing pays it once, at write time).
+    Every swap first repairs what an earlier one left, before
+    ``build`` reads the table: a backup with no primary is the last
+    committed table and is renamed back into place; a backup next to a
+    primary is stale and dropped; staging siblings
+    (``<name>__<tag>_<hex>``) never committed and are dropped.
 
-    Repartitioning by the bucket column first keeps one file per
-    bucket, which also lets Spark trust the sort order and skip the
-    sort before a merge join.
-    """
-    w = (
-        df.repartition(n_buckets, F.col(bucket_col))
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
+    Single writer per table: two concurrent swaps race their
+    read-modify-write (tables with concurrent writers belong on the
+    Delta log).  Local filesystem only: object stores have no atomic
+    directory rename."""
+    path = path.rstrip("/")
+    parent = os.path.dirname(path) or "."
+    debris = re.compile(
+        re.escape(os.path.basename(path)) + r"__[a-z]+(_bak)?_[0-9a-f]{8}\Z"
     )
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+    siblings = os.listdir(parent) if os.path.isdir(parent) else []
+    baks = []
+    for name in siblings:
+        m = debris.match(name)
+        if m and m.group(1):
+            baks.append(os.path.join(parent, name))
+        elif m:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+    if baks and not os.path.exists(path):
+        os.rename(baks.pop(), path)
+    for d in baks:
+        shutil.rmtree(d)
+
+    suffix = uuid.uuid4().hex[:8]
+    staged = f"{path}__{tag}_{suffix}"
+    bak = f"{path}__{tag}_bak_{suffix}"
+    build().parquet(staged)
+    if os.path.exists(path):
+        os.rename(path, bak)
+        os.rename(staged, path)
+        shutil.rmtree(bak)
+    else:
+        os.rename(staged, path)
 
 
 def compact_table(
@@ -118,39 +151,21 @@ def compact_table(
     by passing that partition's path instead.  Returns the number of
     files after compaction.
 
-    LOCAL-FILESYSTEM ONLY: the finishing swap uses directory renames,
-    which (a) do not exist atomically on object stores and (b) leave a
-    window between the two moves where the table directory is absent —
-    a crash there is rolled back on the next call only manually.  At
-    100 TB use a transactional table format (Delta/Iceberg OPTIMIZE);
-    this utility is the plain-parquet equivalent for dev/CI data.
+    The rewrite is promoted with :func:`swap_parquet` (local filesystem
+    only; at 100 TB use a transactional table format's OPTIMIZE, as
+    ``delta_writer.optimize_delta_table`` does for Delta tables).
     """
     import glob
-    import os
-    import shutil
 
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    shutil.rmtree(tmp, ignore_errors=True)  # debris from a crashed run
-    shutil.rmtree(old, ignore_errors=True)
-    w = (
-        df.coalesce(n_files)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_rows_per_file)
-    )
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(tmp)
-    shutil.move(path, old)
-    try:
-        shutil.move(tmp, path)
-    except BaseException:
-        shutil.move(old, path)  # roll the original back into place
-        raise
-    shutil.rmtree(old)
+    def build():
+        df = spark.read.parquet(path)
+        n_files = max(1, -(-df.count() // target_rows_per_file))
+        w = df.coalesce(n_files).write.option(
+            "maxRecordsPerFile", target_rows_per_file
+        )
+        return w.partitionBy(partition_col) if partition_col else w
+
+    swap_parquet(path, build, "compact")
     return len(
         glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
@@ -168,7 +183,6 @@ def expire_partitions(
     deletion, not row filtering, is what keeps retention O(partitions)
     at 100 TB.
     """
-    import shutil
 
     def _order_key(dirname: str):
         # "latest" must follow the partition VALUE, not the directory

@@ -8,20 +8,35 @@ decomposable terms), which an additive merge folds into the serving
 table.  Averages/ratios are derived from the accumulated terms at read
 time, so they are always consistent with the totals.
 
-Exactly-once: the checkpoint tracks processed files, so a restarted
-``availableNow`` run skips everything already folded in — re-running
-the stream does NOT double-count (tests/test_incremental.py).  With a
-transactional table format the merge itself is also atomic; on plain
-parquet the read-modify-write in upsert is the single-writer section.
+The serving table is a Delta table (``sources/delta_writer``): each
+fold reads the latest version and commits the merged table as an
+overwrite pinned to it, so a competing writer's commit is re-read and
+re-folded, never lost, and every version stays readable by number.
+
+Exactly-once: the stream checkpoint tracks processed files, so a
+restarted ``availableNow`` run skips everything already folded in.  A
+micro-batch that committed to the table but not to the checkpoint
+(crash between the two) is re-run by Structured Streaming; each commit
+carries ``txn=(<app id>, batch_id)`` with the app id derived from the
+checkpoint location, so the re-run is recognized and skipped
+(tests/test_incremental.py).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from data_pipeline_for_e_commerce_shop_spark.operators.merge import additive_merge
+from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
+    read_delta_table,
+)
+from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+    rewrite_delta_table,
+)
 
 KEY_COLS = ["category", "order_date"]
 SUM_COLS = ["n_items", "revenue_cents", "n_returned"]
@@ -46,29 +61,30 @@ def partial_category_kpis(batch: DataFrame) -> DataFrame:
     )
 
 
-def accumulate_into(spark: SparkSession, table_path: str, partial: DataFrame) -> None:
-    """Fold one batch's partials into the parquet serving table."""
-    import os
+def accumulate_into(
+    spark: SparkSession,
+    table_path: str,
+    partial: DataFrame,
+    txn: tuple[str, int] | None = None,
+) -> int | None:
+    """Fold one batch's partials into the Delta serving table; returns
+    the committed version, or None when ``txn`` marks a batch already
+    folded in."""
 
-    if os.path.isdir(table_path) and any(
-        f.endswith(".parquet") for f in os.listdir(table_path)
-    ):
-        target = spark.read.parquet(table_path)
-        merged = additive_merge(
+    def fold(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return partial
+        return additive_merge(
             target, partial, KEY_COLS, SUM_COLS, sketch_cols=SKETCH_COLS
         )
-    else:
-        merged = partial
-    out = merged.cache()
-    out.count()  # materialize before overwriting the input path
-    out.write.mode("overwrite").parquet(table_path)
-    out.unpersist()
+
+    return rewrite_delta_table(spark, table_path, fold, txn=txn)
 
 
 def serving_view(spark: SparkSession, table_path: str) -> DataFrame:
     """Derived KPIs from the accumulated terms — identical shape to the
     batch category_kpis output."""
-    t = spark.read.parquet(table_path)
+    t = read_delta_table(spark, table_path)
     return t.select(
         "category",
         "order_date",
@@ -90,85 +106,18 @@ def run_incremental_kpis(
 ) -> None:
     """Drain all currently-available files into the serving table
     (Trigger.AvailableNow), then stop.  Call again after new files
-    arrive — the checkpoint guarantees each file folds in exactly once.
+    arrive — the checkpoint and the per-batch SetTransaction guarantee
+    each file folds in exactly once, also across a crash between the
+    table commit and the checkpoint commit.
     """
+    app_id = f"incremental-kpis:{os.path.abspath(checkpoint_dir)}"
 
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        accumulate_into(spark, table_path, partial_category_kpis(batch))
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def accumulate_into_versioned(
-    spark: SparkSession,
-    table_path: str,
-    partial: DataFrame,
-    max_retries: int = 8,
-) -> int:
-    """Fold one batch's partials into a VERSIONED serving table with
-    the round-4 compare-and-swap commit (sources/versioned.py) instead
-    of the plain-parquet overwrite: the additive merge re-reads the
-    table it will commit over, pins ``expected_current``, and re-folds
-    on ``ConcurrentWriteError`` — so a competing writer (another
-    pipeline, a manual backfill) can interleave without either side's
-    rows being lost, the multi-writer posture ``accumulate_into``
-    explicitly does not have.  The partial is checkpointed once so
-    retries re-merge the SAME batch data.  Returns the committed
-    version."""
-    from data_pipeline_for_e_commerce_shop_spark.sources import (
-        versioned as V,
-    )
-
-    part_ck = partial.localCheckpoint(eager=True)
-    last: Exception | None = None
-    for _ in range(max_retries):
-        cur = V.current_version(table_path)
-        if cur == 0:
-            merged = part_ck
-        else:
-            merged = additive_merge(
-                V.read_versioned(spark, table_path),
-                part_ck,
-                KEY_COLS,
-                SUM_COLS,
-                sketch_cols=SKETCH_COLS,
-            )
-        try:
-            return V.write_versioned(
-                merged, table_path, expected_current=cur
-            )
-        except V.ConcurrentWriteError as e:
-            last = e
-            continue
-    raise RuntimeError(
-        f"{table_path}: additive fold lost the commit race"
-        f" {max_retries} times; last: {last}"
-    )
-
-
-def run_incremental_kpis_versioned(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    table_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """``run_incremental_kpis`` on the CAS-versioned serving table:
-    availableNow drain where every micro-batch is a versioned commit —
-    exactly-once from the stream checkpoint (replayed files never
-    re-fold) AND lost-update-free under concurrent writers (the CAS
-    retry loop).  Each drain leaves a time-travelable version chain."""
-
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        accumulate_into_versioned(
-            spark, table_path, partial_category_kpis(batch)
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        accumulate_into(
+            spark,
+            table_path,
+            partial_category_kpis(batch),
+            txn=(app_id, batch_id),
         )
 
     stream = spark.readStream.schema(schema).parquet(source_dir)

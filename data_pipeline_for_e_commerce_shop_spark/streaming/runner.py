@@ -11,7 +11,7 @@ retry/backoff handled by Step Functions
 Here the job-state table is a log of JSON snapshots, ``v=N.json``
 holding every batch record at version N.  A transition reads the
 newest snapshot, changes it in Python and commits N+1 through
-``sources/versioned.publish_once``, the repo's one ``os.link``
+``sources/delta_writer.publish_once``, the repo's one ``os.link``
 compare-and-swap (CAS); a lost CAS re-reads and retries, so only one
 claimant can move a batch pending->processing.  Superseded snapshots
 are pruned after a commit.  A claim older than :data:`LEASE` is a dead
@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from data_pipeline_for_e_commerce_shop_spark.sources.versioned import publish_once
+from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import publish_once
 
 BATCH_STATE_SCHEMA = T.StructType(
     [

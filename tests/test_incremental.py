@@ -3,6 +3,8 @@ batch recompute, and re-running the stream must not double-count."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -116,6 +118,37 @@ def test_rerun_does_not_double_count(spark, tmp_path):
     # no new files: the checkpoint must make this a no-op
     run_incremental_kpis(spark, str(src), SCHEMA, table, ckpt)
     assert _collect_kpis(spark, table) == before
+
+
+def test_stream_replay_after_crash_counts_batch_once(spark, tmp_path):
+    """Kill-and-resume: batch 0 commits to the serving table, then the
+    driver dies before the stream checkpoint records commits/0.  The
+    restarted stream re-runs batch 0 with the same offsets; its
+    SetTransaction marks it as already folded in, so its revenue counts
+    once, and batch 1 still folds in."""
+    src = tmp_path / "src"
+    table = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
+    src.mkdir()
+    spark.createDataFrame(WAVE1, SCHEMA).coalesce(1).write.mode("append").parquet(
+        str(src)
+    )
+    run_incremental_kpis(spark, str(src), SCHEMA, table, ckpt)
+    os.unlink(os.path.join(ckpt, "commits", "0"))
+    crc = os.path.join(ckpt, "commits", ".0.crc")
+    if os.path.exists(crc):  # the local-fs checksum twin goes too
+        os.unlink(crc)
+    spark.createDataFrame(WAVE2, SCHEMA).coalesce(1).write.mode("append").parquet(
+        str(src)
+    )
+    run_incremental_kpis(spark, str(src), SCHEMA, table, ckpt)
+
+    revenue = {k: v[0] for k, v in _collect_kpis(spark, table).items()}
+    assert revenue == {
+        ("toys", "2024-03-01"): 18.50,  # 15.50 + 3.00, not 34.00
+        ("books", "2024-03-01"): 3.25,
+        ("books", "2024-03-02"): 8.00,
+    }
 
 
 def test_partial_terms_are_decomposable(spark):

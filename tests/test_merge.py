@@ -146,17 +146,59 @@ def test_upsert_crash_window_keeps_a_copy(spark, tmp_path, monkeypatch):
     assert _as_map(spark.read.parquet(str(baks[0])))["k1"][0] == 1
 
 
+def test_upsert_recovers_from_crash_between_swap_renames(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the swap's two renames leaves the table only at
+    the __upsert_bak_* sibling.  The next upsert must put that backup
+    back before it reads the table: otherwise it finds no table, writes
+    only its own batch and silently drops the KPI history."""
+    import os as _os
+
+    from data_pipeline_for_e_commerce_shop_spark.operators import merge as m
+
+    path = str(tmp_path / "kpi")
+    base = _df(spark, [("k1", 1, 1.0, ["a"]), ("k2", 2, 2.0, ["a"])])
+    m.upsert_parquet_table(spark, path, base, ["k"], ["a", "b"])
+
+    real_rename = _os.rename
+    calls = {"n": 0}
+
+    def crash_on_promote(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:  # original already aside, copy not promoted
+            raise OSError("simulated crash between the swap's renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr("os.rename", crash_on_promote)
+    with pytest.raises(OSError, match="simulated crash"):
+        m.upsert_parquet_table(
+            spark, path, _df(spark, [("k3", 3, None, ["b"])]), ["k"], ["a", "b"]
+        )
+    assert not _os.path.exists(path)  # the crash window
+
+    m.upsert_parquet_table(
+        spark, path, _df(spark, [("k4", 4, 4.0, ["c"])]), ["k"], ["a", "b"]
+    )
+    after = _as_map(spark.read.parquet(path))
+    # the crashed batch never committed; the history and the next
+    # batch are both there
+    assert sorted(after) == ["k1", "k2", "k4"]
+    assert after["k1"] == (1, 1.0, ("a",))
+    assert [d.name for d in tmp_path.iterdir()] == ["kpi"]
+
+
 def test_upsert_concurrent_writer_boundary(spark, tmp_path):
     """Documents the PLAIN-PARQUET emulation's declared limit (no
     commit log): two interleaved read-modify-write upserts exhibit
     LOST UPDATE — the second writer, having read before the first
     wrote, silently drops the first writer's rows.  Delta's optimistic
     concurrency would instead fail the second commit.  That behavior
-    now exists: merge.upsert_versioned_table on the versioned commit
-    log rejects the stale commit and retries on the new current
-    (tests/test_round4_invariants.test_versioned_cas_two_writers_
-    exactly_one_wins); this test keeps asserting the plain path's
-    boundary so the difference stays documented."""
+    exists on the Delta log: merge.upsert_versioned_table pins the
+    version it read, rejects the stale commit and retries on the new
+    latest version (tests/test_round4_invariants.test_versioned_cas_
+    two_writers_exactly_one_wins); this test keeps asserting the plain
+    path's boundary so the difference stays documented."""
     from data_pipeline_for_e_commerce_shop_spark.operators.merge import (
         coalescing_merge,
         upsert_parquet_table,

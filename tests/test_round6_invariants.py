@@ -30,12 +30,10 @@ from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
     read_delta_table,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+    ConcurrentWriteError,
     optimize_delta_table,
     vacuum_delta_table,
     write_delta_commit,
-)
-from data_pipeline_for_e_commerce_shop_spark.sources.versioned import (
-    ConcurrentWriteError,
 )
 
 

@@ -94,35 +94,29 @@ def test_quarantine_provenance_columns(spark, tmp_path):
     assert out["rejected_at"] is not None
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path, sf_dir):
-    """Co-located bucketed tables: the fact-to-fact join plans with
-    ZERO shuffle exchanges (the bucketing paid the shuffle at write)."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
-        exchange_count,
-        physical_plan,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import write_bucketed
+def test_alert_file_name_is_stable_across_processes(tmp_path):
+    """The same alert written from two processes with different str
+    hash salts lands in ONE file: a retried alert is not duplicated."""
+    import os
+    import subprocess
+    import sys
 
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bdb LOCATION '{tmp_path}/bdb'")
-    try:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice"
+    code = (
+        "import sys\n"
+        "from data_pipeline_for_e_commerce_shop_spark.sources.sinks"
+        " import write_alert\n"
+        "write_alert(sys.argv[1], {'batch_id': 'b1', 'reason': 'null_key',"
+        " 'n_rows': 3})\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for seed in ("1", "2"):
+        subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path)],
+            check=True,
+            cwd=repo,
+            env={**os.environ, "PYTHONHASHSEED": seed},
         )
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderdate"
-        )
-        write_bucketed(li, "bdb.li_b", "l_orderkey", n_buckets=4)
-        write_bucketed(orders, "bdb.ord_b", "o_orderkey", n_buckets=4)
-        a = spark.table("bdb.li_b")
-        b = spark.table("bdb.ord_b")
-        joined = a.join(b.hint("merge"), a.l_orderkey == b.o_orderkey)
-        plan = physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert exchange_count(joined) == 0, plan
-        assert joined.count() == li.count()
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS bdb CASCADE")
+    assert len(os.listdir(tmp_path)) == 1
 
 
 def test_normalize_path():
@@ -414,33 +408,46 @@ def test_arrow_ipc_reader_rejects_empty_dir(spark, tmp_path):
         read_arrow_ipc(spark, str(d))
 
 
-def test_versioned_write_time_travel_and_expiry(spark, tmp_path):
-    """Three commits: current advances, any historical version is
-    readable by number, expiry drops the oldest but never the
-    current, and unknown versions fail loudly."""
+def test_versioned_write_time_travel_and_expiry(spark, tmp_path, sf_dir):
+    """Three Delta overwrite commits: the latest version advances, any
+    historical version is readable by number, VACUUM drops the old
+    versions but never the current one, and unknown or vacuumed
+    versions fail loudly."""
+    import glob
+
     import pytest as _pytest
 
     from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources import versioned as V
+    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
+        read_delta_table,
+    )
+    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+        vacuum_delta_table,
+        write_delta_commit,
+    )
     from pyspark.sql import functions as F
 
-    base = load_table(spark, "/root/testdata/sf0.001", "region")
+    base = load_table(spark, sf_dir, "region")
     t = str(tmp_path / "region_versions")
-    v1 = V.write_versioned(base, t)
-    v2 = V.write_versioned(base.where(F.col("r_regionkey") > 0), t)
-    v3 = V.write_versioned(base.limit(1), t)
-    assert (v1, v2, v3) == (1, 2, 3)
-    n1 = V.read_versioned(spark, t, 1).count()
-    n2 = V.read_versioned(spark, t, 2).count()
-    n3 = V.read_versioned(spark, t).count()  # current == v3
-    assert n1 == base.count()
-    assert n2 == n1 - 1
-    assert n3 == 1
-    assert [e["v"] for e in V.versions(t)] == [1, 2, 3]
-    dropped = V.expire_versions(t, keep_last=2)
-    assert dropped == [1]
-    assert [e["v"] for e in V.versions(t)] == [2, 3]
+    # interval 3: the third commit (v2) writes the checkpoint VACUUM needs
+    vs = [
+        write_delta_commit(df, t, mode="overwrite", checkpoint_interval=3)
+        for df in (base, base.where(F.col("r_regionkey") > 0), base.limit(1))
+    ]
+    assert vs == [0, 1, 2]
+    n0 = read_delta_table(spark, t, 0).count()
+    n1 = read_delta_table(spark, t, 1).count()
+    assert n0 == base.count()
+    assert n1 == n0 - 1
+    assert read_delta_table(spark, t).count() == 1  # latest == v2
     with _pytest.raises(ValueError):
-        V.read_versioned(spark, t, 1)
-    # expired data really gone, survivors still readable
-    assert V.read_versioned(spark, t, 2).count() == n2
+        read_delta_table(spark, t, 7)
+    n_files = len(glob.glob(f"{t}/*.parquet"))
+    out = vacuum_delta_table(t, retention_ms=0)
+    assert out["log_commits_deleted"] == 3
+    assert 0 < out["data_files_deleted"] < n_files
+    with _pytest.raises(NotImplementedError):
+        read_delta_table(spark, t, 0)
+    # the current version survives, from the checkpoint alone
+    assert read_delta_table(spark, t).count() == 1
+    assert read_delta_table(spark, t, 2).count() == 1
