@@ -1,28 +1,18 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft engine (PySpark target).
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` maps every
 implemented operator (SURVEY.md §2) to a (spark, sf_dir) -> DataFrame
-callable; ``oracle_sql()`` holds the DuckDB-equivalent ANSI SQL.
+callable; ``oracle_sql()`` holds the DuckDB-equivalent ANSI SQL.  Both
+dicts follow the registry's registration order.
 
 Determinism contract: money aggregates go through exact integer cents
 (see functions/scalars.py) so Spark and DuckDB agree bit-for-bit; every
 computed column is aliased identically on both sides; ratios divide
 exact integers (same doubles on both engines).
 
-Ordering contract (rotation, round 7): the driver's CORRECTNESS gate
-checks only the FIRST 50 keys of ``queries()``, so the dict is ordered
-as  sentinels (regression continuity)
--> this round's window (_ROTATION_R7: 43 first-timers — the three
-queries whose plans change this round (ANN grading rewrites, the
-Apriori profile pass) get the hard signal on the NEW plans, then
-the oldest never-checked sim-only names, registry order)
--> the remaining never-checked queries (queued for round 8)
--> everything already green in CORRECTNESS_r01-r06.
-All registered oracles are additionally validated locally by
-tests/driver_sim.py (pandas-typed compare, sf0.01) every round — and
-since round 4 any sim mismatch persists a typed row diff under
-SELFCHECK_diffs/ — so rotation only changes WHICH get the driver's
-hard signal, never which are verified.
+Every registered oracle is checked at sf0.001 by
+tests/test_oracle_parity.py and at sf0.01 by
+``python -m tests.driver_sim``.
 """
 
 from __future__ import annotations
@@ -36,361 +26,6 @@ from data_pipeline_for_e_commerce_shop_spark.queries import (
     ORACLES,
 )
 
-# Keep a regression heartbeat on the flagship path plus the two queries
-# whose oracles were fixed this round (HUGEINT -> BIGINT casts): their
-# flip from FAIL to green is the round-3 proof the root cause was right.
-_SENTINELS = [
-    "category_kpis",
-    "order_kpis",
-    "merge_coalesce",
-    "null_gate",
-    "ri_orphans",
-    "events_sessionize",
-    "events_stream_sessionize",
-]
-
-# Round-7 window: 43 first-timers, VERDICT r6 item 1's priority —
-# oldest-registered sim-only names first, except that the three
-# queries CHANGED this round (the ann_mrr / ann_ivf_nprobe_curve
-# shared-assignment rewrite, VERDICT r6 item 7; the Apriori profile
-# pass, item 8) are fronted so brand-new plan machinery gets the
-# driver's hard signal in the same round it lands.  All 43 have
-# DuckDB oracles (the one no-oracle name in the backlog,
-# segment_price_quantiles_approx, stays rows-only by contract and is
-# NOT burned into a hash-check slot).
-_ROTATION_R7 = [
-    # changed this round — driver signal on the new plans
-    "ann_mrr",
-    "ann_ivf_nprobe_curve",
-    "basket_triples_apriori",
-    # oldest never-checked, registry order
-    "order_reconciliation",
-    "trailing_30d_revenue",
-    "embedding_label_centroids",
-    "new_vs_returning",
-    "category_revenue_share",
-    "dq_expectations",
-    "embedding_random_projection",
-    "segment_acctbal_median",
-    "events_transition_matrix",
-    "lineitem_pricing_summary",
-    "events_key_skew",
-    "events_rate_anomaly",
-    "layout_morton_codes",
-    "user_activity_streaks",
-    "events_gap_fill",
-    "part_fuzzy_names",
-    "category_price_trend",
-    "part_price_histogram",
-    "text_stopword_clean",
-    "cogroup_reconciliation",
-    "segment_price_quantiles_sampled",
-    "arrow_byte_stats",
-    "segment_balance_profile",
-    "status_unpivot_roundtrip",
-    "udtf_doc_chunks",
-    "sql_exists_subqueries",
-    "lineitem_column_profile",
-    "events_out_of_order",
-    "media_type_sniff",
-    "lang_confusion_matrix",
-    "session_bounce_rate",
-    "category_cross_sell",
-    "budget_allocation",
-    "events_mad_outliers",
-    "recsys_negative_samples",
-    "audience_overlap",
-    "fulfillment_lag",
-    "text_winnowing",
-    "corpus_fixed_sample",
-    "corpus_dedup_token_audit",
-]
-
-# Round-6 window: 43 first-timers, VERDICT r5 item 1's priority
-# order — the round-6 salted JOIN (brand-new plan machinery gets the
-# hard signal first), the two round-5 newcomers (bottom-k quantile
-# sketch, exactly-once Delta streaming sink), the canonical tpch_q*
-# suite (the descriptive-name duals were checked in r5; these are the
-# never-checked canonical registrations), the remaining streaming
-# duals, the fold/iterative refresh twins, and the oldest sim-only
-# names from the registry front.
-_ROTATION_R6 = [
-    # new this round
-    "event_type_salted_join",
-    "events_delta_optimize_vacuum",
-    # round-5 newcomers
-    "segment_quantile_sketch_bottomk",
-    "events_stream_delta_exactly_once",
-    # canonical TPC-H suite
-    "tpch_q1_pricing_summary",
-    "tpch_q3_unshipped_topk",
-    "tpch_q4_priority_late_lines",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_discount_uplift",
-    "tpch_q7_nation_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_type_profit",
-    "tpch_q10_returned_items",
-    "tpch_q13_order_count_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_bracket_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_dormant_customers",
-    # remaining streaming duals
-    "events_stream_drift_chi2",
-    "events_stream_hll_users",
-    "events_stream_cms_users",
-    "synthetic_source_kpis",
-    "events_backfill_hourly",
-    # fold / iterative refresh twins
-    "kpi_incremental_refresh",
-    "kpi_retraction_refresh",
-    "scd2_incremental_apply",
-    "part_inventory_replay",
-    "events_markov_stationary",
-    "segment_markov_clv",
-    "forecast_seasonal_naive",
-    "forecast_backtest",
-    # oldest sim-only names (registry front)
-    "monthly_status_pivot",
-    "time_to_conversion",
-    "text_bigram_topk",
-    "text_repetition",
-    "text_chunks",
-    "embedding_quantize",
-    "price_outliers",
-    "funnel_ordered",
-]
-
-# Round-5 window: 4 RE-checks + 39 first-timers.  The re-checks are
-# non-negotiable (VERDICT r4 item 1): events_ema/holt_recursive were
-# the r4 driver reds — re-registered this round on the driver-proven
-# aggregate-HOF fold plan with offset-positive floor division, so
-# engine-VERSION division semantics cannot diverge — and the two
-# Benford queries changed values this round (shares now cast from
-# strings; DuckDB 1.0 parses 17-digit numeric literals one ULP off,
-# the first latent bug the full-precision local gate surfaced).  The
-# 39 first-timers follow VERDICT r4 item 5's priority: the r4 TPC-H
-# suite (descriptive names: shipping_priority=Q3 etc.), the dedup
-# family (incl. the sub-blocked dedup_semantic/sweep whose geometry
-# became data-derived this round), sketch/streaming duals, displaced
-# SCM names, and this round's rewritten vocabulary-window + geometry
-# queries.
-_ROTATION_R5 = [
-    # re-checks: r4 reds on their new fold plans
-    "events_ema_recursive",
-    "events_holt_recursive",
-    # re-checks: value-changing constant fix (engine-version class)
-    "benford_digit_audit",
-    "benford_mad_conformity",
-    # changed this round, never driver-checked
-    "dedup_semantic",
-    "dedup_semantic_sweep",
-    "text_term_burstiness",
-    "token_coverage_curve",
-    "survey_raking_ipf",
-    "size_price_curve",
-    # r4 TPC-H suite
-    "shipping_priority",
-    "promo_revenue_share",
-    "top_supplier",
-    "large_volume_orders",
-    "returned_item_customers",
-    "order_priority_sla",
-    "nation_trade_matrix",
-    "supplier_market_share",
-    # dedup family
-    "dedup_exact_spans",
-    "dedup_winnow_pairs",
-    "dedup_containment_pairs",
-    "dedup_lsh_tuning_curve",
-    "dedup_cluster_sizes",
-    "dedup_transitivity_audit",
-    "dup_rate_by_language",
-    "dedup_weighted_jaccard",
-    # sketch / streaming duals
-    "kmv_theta_overlap",
-    "minhash_union_rollup",
-    "events_stream_dedup",
-    "events_stream_hourly_topk",
-    "events_stream_value_moments",
-    "stream_source_kpis",
-    # SCM names displaced from r4
-    "part_croston_forecast",
-    "supplier_otif",
-    "part_movers_topk",
-    "stale_parts",
-    "reorder_interval_profile",
-    "part_single_source_risk",
-    "part_return_shrinkage",
-    # text / corpus
-    "text_bm25_topk",
-    "text_bpe_merges",
-    "text_unigram_ce",
-    "corpus_budget_selection",
-]
-
-# Round-4 window (41/43 green in CORRECTNESS_r04; the 2 reds are the
-# re-registered ema/holt fronted again above) — kept for the
-# checked-set bookkeeping below.
-_ROTATION_R4 = [
-    # changed this round — driver signal on the new plans
-    "price_qty_dependence_grid",
-    "part_abc_xyz_matrix",
-    "layout_zorder_pruning_audit",
-    "purchase_propensity_lift",
-    "revenue_concentration_curve",
-    "ab_hte_screen",
-    "policy_snips",
-    # recursive-CTE / iterative trajectories
-    "events_ema_recursive",
-    "events_holt_recursive",
-    "events_cusum_changepoint",
-    "category_demand_slope",
-    # stats suite
-    "revenue_bootstrap_ci",
-    "anova_nation_priority",
-    "brand_mann_kendall",
-    "nation_spearman_bal_spend",
-    "revenue_ljung_box",
-    "priority_mannwhitney_leadtime",
-    "priority_kruskal_wallis",
-    "nation_kendall_tau",
-    "orders_benford_second_digit",
-    "events_hourly_rayleigh",
-    "orders_weekly_rayleigh",
-    "benford_mad_conformity",
-    "events_wasserstein_drift",
-    "mcnemar_lang_classifiers",
-    # graph
-    "part_degree_profile",
-    "part_label_propagation",
-    "part_kcore",
-    "part_link_prediction",
-    "customer_record_linkage",
-    "part_two_hop_reach",
-    "leadtime_variance_components",
-    # SCM classics
-    "part_xyz_classes",
-    "part_newsvendor_stock",
-    "part_eoq_policy",
-    "brand_bullwhip_ratio",
-    "supplier_lead_time_sla",
-    "part_abc_migration",
-    # round-4 operators (brand-new plan machinery — HyperBall register
-    # iteration, deterministic policy replay, minimax PAVA, bucketed
-    # pair-spine median, VariantType) get the hard signal first; the
-    # displaced SCM/dedup names stay sim-verified and queue for r5
-    "part_hyperball_reach",
-    "bandit_replay_egreedy",
-    "conversion_isotonic_curve",
-    "revenue_theil_sen",
-    "events_variant_json",
-]
-
-# Round-3 rotation (all 43 green in CORRECTNESS_r03) — kept for the
-# checked-set bookkeeping below.
-_ROTATION_R3 = [
-    "cumulative_active_users",
-    "survival_km",
-    "events_stateful_sessionize",
-    "cohort_retention",
-    "rolling_active_users",
-    "scd2_priority_history",
-    "scd2_point_in_time_join",
-    "scd2_timeline_alignment",
-    "hll_distinct_users",
-    "hll_merge_identity",
-    "hll_overlap",
-    "hll_rollup",
-    "hll_rolling_users",
-    "cms_heavy_hitters",
-    "cms_join_size",
-    "bloom_prune_orders",
-    "embedding_kmeans",
-    "ann_pq_topk",
-    "dedup_prefix_filter",
-    "dedup_chunk_level",
-    "dedup_cluster_reps",
-    "benchmark_contamination",
-    "corpus_pack_sequences",
-    "corpus_shuffle_split",
-    "corpus_source_mix",
-    "corpus_snapshot_diff",
-    "corpus_quality_sample",
-    "corpus_pipeline_funnel",
-    "corpus_split_leakage",
-    "basket_rules",
-    "basket_pairs",
-    "customer_rfm",
-    "part_abc_classes",
-    "part_pagerank",
-    "part_triangles",
-    "revenue_gini",
-    "ab_test_report",
-    "ab_logrank",
-    "ab_funnel_uplift",
-    "benford_digit_audit",
-    "event_rate_wilson_ci",
-    "events_drift_chi2",
-    "events_ks_drift",
-]
-
-# Every query with a green hard signal in CORRECTNESS_r01 or _r02;
-# these go to the back of the dict so rotation fronts new coverage.
-_CHECKED_R1_R2 = frozenset(
-    {
-        "ann_brute_topk", "ann_ivf_topk", "ann_lsh_topk", "ann_recall",
-        "asof_purchase_click", "brand_category_cube", "category_kpis",
-        "category_kpis_sql", "conditional_ratio", "customer_k_anonymity",
-        "customer_retention_setops", "customer_spend_quartiles",
-        "dedup_clusters", "dedup_embedding_cosine", "dedup_exact",
-        "dedup_incremental", "dedup_minhash_estimate", "dedup_minhash_lsh",
-        "dedup_near_jaccard", "dedup_simhash", "dedup_simhash_pairs",
-        "distinct_statuses", "embedding_stats", "event_type_salted_kpis",
-        "events_funnel", "events_hourly", "events_interval_join",
-        "events_pii_scan", "events_sessionize", "events_stream_enriched",
-        "events_stream_hourly", "events_stream_interval_join",
-        "events_stream_sessionize", "grouping_sets_kpis", "kpi_rollup",
-        "membership_semi", "merge_coalesce", "multimodal_features",
-        "multimodal_frames", "null_gate", "order_kpis", "order_kpis_approx",
-        "ordered_head", "priority_parse", "regional_revenue",
-        "revenue_moving_avg", "ri_orphans", "scalar_json",
-        "segment_price_quantiles", "text_fingerprint", "text_lang_id",
-        "text_quality", "text_quality_gate", "text_rare_tokens",
-        "text_stratified_sample", "text_tfidf_topk", "text_token_count",
-        "text_zipf_topk", "topk_per_group", "union_by_name",
-    }
-)
-
-
-def _ordered_names() -> list[str]:
-    front = _SENTINELS + _ROTATION_R7
-    missing = [n for n in front if n not in QUERIES]
-    assert not missing, f"rotation names not in registry: {missing}"
-    assert len(front) == len(set(front)) == 50
-    front_set = set(front)
-    checked = (
-        _CHECKED_R1_R2
-        | set(_ROTATION_R3)
-        | set(_ROTATION_R4)
-        | set(_ROTATION_R5)
-        | set(_ROTATION_R6)
-    )
-    rest_unchecked = [
-        n for n in QUERIES if n not in front_set and n not in checked
-    ]
-    rest_checked = [
-        n for n in QUERIES if n not in front_set and n in checked
-    ]
-    order = front + rest_unchecked + rest_checked
-    assert len(order) == len(QUERIES)
-    return order
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (category daily-revenue KPIs) on sf0.001."""
@@ -398,8 +33,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: QUERIES[n] for n in _ordered_names()}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: ORACLES[n] for n in _ordered_names() if n in ORACLES}
+    return {n: ORACLES[n] for n in QUERIES if n in ORACLES}

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_for_e_commerce_shop_spark.operators.layout import fan_out
 from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 M_BITS = 65536  # filter width (power of two)
@@ -94,14 +95,8 @@ def bloom_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions — codegen blowup, slower than the joins.)
     # materialised once — k broadcast mentions would re-run the build
     words = build_filter(hv, "k").localCheckpoint(eager=False)
-    # Fan-out guard (the r7 single-split device): the per-row md5
-    # probe positions are this query's dominant CPU, and a single-file
-    # orders scan pins them to one core.  Repartition on the order key
-    # ONLY when the scan yields fewer splits than the cluster has
-    # slots — a no-op at real scale.
-    par = spark.sparkContext.defaultParallelism
-    if orders.rdd.getNumPartitions() < par:
-        orders = orders.repartition(par, "o_orderkey")
+    # The per-row md5 probe positions are this query's dominant CPU.
+    orders = fan_out(orders, "o_orderkey")
     probe = orders.select(
         "o_orderstatus",
         "o_custkey",

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_for_e_commerce_shop_spark.operators.layout import fan_out
 from data_pipeline_for_e_commerce_shop_spark.schemas import (
     load_table,
     table_rowcount,
@@ -98,15 +99,9 @@ def _shingles(docs: DataFrame) -> DataFrame:
     # shorter than the shingle width explicitly.  Tokenize ONCE in a
     # prior projection (split is O(len(text)); referencing it three
     # times in one expression would re-split per reference).
-    # Fan-out guard (the simhash device, r7 generalized): the
-    # tokenize+shingle+md5 stage is the heavy per-row CPU of every
-    # consumer, and a small corpus arrives as ONE file split that pins
-    # it to a single core.  Repartition by doc_id ONLY when the scan
-    # yields fewer splits than the cluster has slots — at real scale
-    # the file count already provides parallelism and this is a no-op.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par, "doc_id")
+    # The tokenize+shingle+md5 stage is the heavy per-row CPU of every
+    # consumer, so spread a single-split corpus first.
+    docs = fan_out(docs, "doc_id")
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     sh = F.expr(
         "case when size(toks) >= 3 then"
@@ -265,7 +260,11 @@ def connected_components(
     # (the r7 form paid an eager checkpoint + a count job + a collect:
     # three actions over the shingle+minhash+banding lineage where one
     # suffices).  The driver holds at most threshold+1 narrow rows, so
-    # the collect is bounded at any corpus size.
+    # the collect is bounded at any corpus size.  The checkpoint is
+    # lazy: the probe's job fills it (Spark computes any partitions
+    # the limit skipped), so the big-graph path below reads the pairs
+    # without re-running the caller's lineage.
+    pairs = pairs.localCheckpoint(eager=False)
     local = pairs.select("doc_a", "doc_b").limit(
         driver_threshold + 1
     ).collect()
@@ -292,14 +291,11 @@ def connected_components(
             [(n, find(n)) for n in nodes_local],
             "doc_id long, cluster_id long",
         )
-    # Big-graph path: cut the caller's lineage FIRST — the count below,
-    # the node union, and the canonical-edge derivation would otherwise
-    # each re-execute the incoming plan (for LSH candidates that is the
-    # whole shingle+minhash+banding pipeline).  Size the loop's
-    # parallelism to the graph, not the session default: per-round
-    # shuffles on a candidate graph orders of magnitude smaller than
-    # the corpus would otherwise be pure task overhead.
-    pairs = pairs.localCheckpoint(eager=True)
+    # Big-graph path: the count, the node union and the canonical-edge
+    # derivation all read the checkpoint the probe filled.  Size the
+    # loop's parallelism to the graph, not the session default:
+    # per-round shuffles on a candidate graph orders of magnitude
+    # smaller than the corpus would otherwise be pure task overhead.
     n_edges = pairs.count()
     n_parts = max(
         1,
@@ -573,16 +569,9 @@ def simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(bit*2-1) > 0, so signatures — and the DuckDB oracle, which
     replays the naive 112-sum form — are bit-for-bit unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-    # The md5+vote projection is the heavy per-shingle stage; a small
-    # table arrives as ONE file split (maxPartitionBytes), which pins
-    # all of it to a single core (measured 9.5 s of the query's 6.7 s
-    # total at sf0.1).  Fan out ONLY when the scan yields fewer splits
-    # than the cluster has slots — at real scale the file count
-    # already provides parallelism and this is a no-op, so no shuffle
-    # is added where it would hurt.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par, "doc_id")
+    # The md5+vote projection is the heavy per-shingle stage; on one
+    # scan split it ran on a single core (measured 9.5 s of the
+    # query's 6.7 s total at sf0.1).  _shingles spreads the scan.
     # All wide expressions below are built as SQL STRINGS: the
     # per-Column form was ~1200 py4j round trips, or ~4 s of pure
     # plan-CONSTRUCTION latency per call (round-6 finding, the actual
@@ -888,7 +877,7 @@ def embedding_near_duplicates(
         F.lit(False).alias("is_probe"),
     )
 
-    # The 10x/100x scale rehearsal (scripts/scale_rehearsal.py) killed
+    # The 10x/100x scale rehearsal (BASELINE.md, round 4) killed
     # the original dense form of this verify: one |probe| x |home|
     # cosine matrix per bucket AND every candidate pair emitted
     # unthresholded — both O(n²/2^P) with a CONSTANT bucket count, so
@@ -1443,12 +1432,8 @@ def duplicated_spans(
     pairwise rung on this ladder.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Spread a single-file scan so the per-doc hash work parallelizes
-    # on local[*]; at scale the scan is already wide and this is a
-    # no-op (same device as winnowing / kmeans).
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par, "doc_id")
+    # Spread a single-file scan so the per-doc hash work parallelizes.
+    docs = fan_out(docs, "doc_id")
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     # 1-based start index i covers tokens [i, i+k-1] — matches DuckDB's
     # inclusive 1-based list slice t[i:i+k-1].

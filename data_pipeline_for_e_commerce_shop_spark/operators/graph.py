@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_for_e_commerce_shop_spark.operators.layout import fan_out
 from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 PR_SCALE = 1_000_000  # initial score in micro-units
@@ -90,12 +91,8 @@ def basket_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    # fan-out guard (the simhash device): the collect_set map side of
-    # a single-file scan otherwise runs on one core; no-op at real
-    # scale where the scan is already wide
-    par = spark.sparkContext.defaultParallelism
-    if li.rdd.getNumPartitions() < par:
-        li = li.repartition(par, "l_orderkey")
+    # spread the collect_set map side of a single-split scan
+    li = fan_out(li, "l_orderkey")
     return (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))

@@ -32,6 +32,22 @@ _SPREAD_STEPS = [
 ]
 
 
+def fan_out(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` into ``defaultParallelism``
+    partitions when its scan yields fewer splits than the cluster has
+    slots; otherwise return ``df`` unchanged.
+
+    A small table arrives as ONE file split (maxPartitionBytes), which
+    pins every per-row stage above it to a single core.  At real scale
+    the file count already provides parallelism and this is a no-op,
+    so no shuffle is added where it would hurt.  Call it on a scan:
+    on a frame with an exchange, ``rdd`` would run that exchange."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par, *keys)
+    return df
+
+
 def _spread_bits(col: Column) -> Column:
     """Spread the low 32 bits of ``col`` to the even bit positions of a
     64-bit value — five shift/or/mask steps, all JVM-side long

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_for_e_commerce_shop_spark.operators.layout import fan_out
 from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 
@@ -758,10 +759,7 @@ def kmeans_lloyd(
         if table_rowcount(sf_dir, "embeddings") <= driver_max:
             return _kmeans_driver(spark, emb.toPandas(), k, n_iter, dim)
 
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < par:
-        emb = emb.repartition(par, "vec_id")
-    emb = emb.localCheckpoint(eager=True)
+    emb = fan_out(emb, "vec_id").localCheckpoint(eager=True)
 
     seeds = knuth_order(emb).limit(k).drop("_h").collect()
     centroids: dict[int, list[int]] = {r["vec_id"]: list(r["v"]) for r in seeds}

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_for_e_commerce_shop_spark.operators.layout import fan_out
 from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 # n-gram-heuristic language lexicons (stopword stand-ins; the synthetic
@@ -561,13 +562,8 @@ def winnow_fingerprints(
     Returns exploded (doc_id, fingerprint) distinct rows.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # The single-file testdata scan arrives as 1 partition, which would
-    # serialize the per-doc hash/window work onto one core; spread it
-    # (same device as kmeans).  At scale the scan is already wide and
-    # this branch never fires.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par, "doc_id")
+    # Spread a single-split scan over the per-doc hash/window work.
+    docs = fan_out(docs, "doc_id")
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     grams = F.expr(
         f"case when size(toks) >= {k} then"

@@ -4,11 +4,11 @@ write a CORRECTNESS-shaped artifact.
 
 Usage: python -m tests.driver_sim [sf_dir] [out_json]
 
-This is the pre-rotation audit VERDICT r2 item 5 asked for: the driver
-only checks the first 50 registered queries per round, so this catches
-type-coercion mismatches (HUGEINT->float64, nullable-int->float64,
-date-vs-timestamp) across the whole registry before rotation exposes
-them to the driver.
+It catches type-coercion mismatches (HUGEINT->float64,
+nullable-int->float64, date-vs-timestamp) across the whole registry;
+tests/test_oracle_parity.py runs the same compare at sf0.001.  The
+session comes from ``session.get_spark()`` (``SPARK_GRAFT_CPUS`` sets
+the local slot count).
 """
 
 from __future__ import annotations
@@ -19,31 +19,22 @@ import sys
 import time
 import traceback
 
-from pyspark.sql import SparkSession
+from data_pipeline_for_e_commerce_shop_spark.session import get_spark
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "SELFCHECK.json"
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("driver-sim")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="driver-sim")
     spark.sparkContext.setLogLevel("ERROR")
 
     from data_pipeline_for_e_commerce_shop_spark.queries import ORACLES, QUERIES
     from tests.oracle_utils import compare_query, diff_query
 
     # VERDICT r3 item 5: on any mismatch, persist an inspectable
-    # spark-vs-oracle row diff — this sim is the only signal for the
-    # queries outside the driver's 50-per-round window, so its
-    # evidence must be reviewable, not just a one-line assert.
+    # spark-vs-oracle row diff, so the evidence is reviewable, not
+    # just a one-line assert.
     diff_dir = os.path.join(os.path.dirname(out) or ".", "SELFCHECK_diffs")
 
     def _write_diff(name: str, fn) -> None:

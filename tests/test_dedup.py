@@ -63,6 +63,30 @@ def test_connected_components_paths_agree(spark):
                     (40, 40), (41, 40), (42, 40)]
 
 
+def test_connected_components_big_path_evaluates_input_once(spark, tmp_path):
+    """On the big-graph path the size probe and the loop share one
+    materialisation of the pair frame: each upstream row is evaluated
+    exactly once.  A pass-through UDF appends a line per evaluation to
+    a file (an accumulator would miss the rows of a task the limit
+    probe stops early)."""
+    log = str(tmp_path / "evals")
+
+    def tap(x):
+        with open(log, "a") as f:
+            f.write(f"{x}\n")
+        return x
+
+    n = 40
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
+    ).select(F.udf(tap, "long")("doc_a").alias("doc_a"), "doc_b")
+    out = {r.doc_id: r.cluster_id for r in
+           dedup.connected_components(spark, pairs, driver_threshold=0).collect()}
+    assert out == {i: 0 for i in range(n + 1)}
+    with open(log) as f:
+        assert sorted(int(x) for x in f) == list(range(n))
+
+
 def test_duplicate_clusters_consistent(spark, sf_dir):
     pairs = dedup.lsh_candidate_pairs(spark, sf_dir).collect()
     clusters = {

@@ -204,3 +204,34 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
         .collect()[0][0]
     )
     assert joined.collect()[0][0] == expected
+
+
+def test_fan_out_spreads_a_single_split_frame(spark):
+    """A 1-partition frame comes back hash-partitioned on the key into
+    ``defaultParallelism`` partitions."""
+    import re
+
+    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+        physical_plan,
+    )
+
+    par = spark.sparkContext.defaultParallelism
+    one = spark.range(0, 100, numPartitions=1).withColumnRenamed("id", "k")
+    assert one.rdd.getNumPartitions() == 1 < par
+    plan = physical_plan(layout.fan_out(one, "k"))
+    shuffles = re.findall(r"hashpartitioning\(k#\d+L?, (\d+)\), REPARTITION", plan)
+    assert shuffles == [str(par)], plan
+
+
+def test_fan_out_leaves_a_wide_frame_alone(spark):
+    """A frame with at least ``defaultParallelism`` partitions comes
+    back unchanged: no new Exchange."""
+    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+        exchange_count,
+    )
+
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, numPartitions=par).withColumnRenamed("id", "k")
+    out = layout.fan_out(wide, "k")
+    assert out is wide
+    assert exchange_count(out) == 0

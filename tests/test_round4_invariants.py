@@ -602,7 +602,7 @@ def test_knuth_order_huge_ids_no_overflow(spark):
     """knuth_order's split multiply must (a) equal the direct
     (id * 2654435761) mod 2^32 reference for any id, (b) not overflow
     int64 for ids past ~3.46e9 — the 10x scale-rehearsal regression
-    (scripts/scale_rehearsal.py found ann_ivf_topk failing with
+    (BASELINE.md round 4: ann_ivf_topk failed with
     SparkArithmeticException on offset vec_ids)."""
     from data_pipeline_for_e_commerce_shop_spark.operators.similarity import (
         knuth_order,
