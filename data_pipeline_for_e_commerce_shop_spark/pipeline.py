@@ -6,24 +6,26 @@ RI gate, write Delta partitioned by dt) -> transformation job (star
 join, category/order KPIs, DynamoDB coalescing upsert).
 
 This runner re-expresses it:
-raw CSVs --schema+null gates--> quarantine or validated parquet
-(partitioned by per-row dt, dynamic overwrite) --star join + aggs-->
-KPI DataFrames --coalescing merge--> serving tables.
+raw CSVs --schema+null gates, then RI gate--> quarantine or validated
+parquet (partitioned by per-row dt, dynamic overwrite); the gated
+batch --star join + aggs--> KPI DataFrames --coalescing merge-->
+serving tables.  Each gate tags a rejected row with its reason instead
+of branching on counts: one quarantine write per entity and stage,
+whose ``DataFrame.observe`` metrics are the gate counts.
 
 Differences from the reference, by design (SURVEY §4.3):
 - per-row ``dt = to_date(created_at)`` instead of one batch date from
   ``first()`` (reference scripts/validation.py:191);
-- RI violations quarantined as rows (left_anti), not printed;
+- RI violations quarantined as rows, not printed;
 - partition-scoped dynamic overwrite instead of whole-table overwrite;
 - set-based MERGE instead of per-row get_item/put_item.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.functions.scalars import event_date, ratio
@@ -31,9 +33,10 @@ from data_pipeline_for_e_commerce_shop_spark.operators.merge import upsert_parqu
 from data_pipeline_for_e_commerce_shop_spark.quality.gates import (
     NULL_VALIDATION_ERROR,
     REFERENTIAL_ERROR,
+    SCHEMA_ERROR,
     DataValidationError,
     null_violation_counts,
-    ri_violations,
+    ri_violations,  # noqa: F401  (perfbench traces it here)
 )
 from data_pipeline_for_e_commerce_shop_spark.schemas import (
     ENTITY_SCHEMAS,
@@ -42,6 +45,7 @@ from data_pipeline_for_e_commerce_shop_spark.schemas import (
     REQUIRED_COLUMNS,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
+    CORRUPT_COL,
     read_csv_entity,
     schema_probe,
 )
@@ -66,6 +70,7 @@ class MedallionPipeline:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
+        self._cached: list[DataFrame] = []
 
     # ---------------------------------------------------- validation
 
@@ -75,9 +80,12 @@ class MedallionPipeline:
         """Schema + null gates for one entity (reference
         scripts/validation.py:145-199).
 
-        Non-strict mode quarantines violating rows and admits the rest
-        (the scalable posture); strict mode reproduces the reference's
-        fail-the-batch behavior via typed DataValidationError.
+        A corrupt CSV record is tagged ``SCHEMA_ERROR``, else a row with
+        nulls in gated columns ``NULL_VALIDATION_ERROR`` (the columns in
+        ``reason``); rejects are quarantined, the rest returned.  Strict
+        mode reproduces the reference's fail-the-batch behavior with a
+        typed DataValidationError, raised before anything is written.
+        The scan stays cached until :meth:`run_batch` returns.
         """
         schema = ENTITY_SCHEMAS[entity]
         # Header gate against the ACTUAL file header (S8 schema probe —
@@ -88,82 +96,100 @@ class MedallionPipeline:
             missing = REQUIRED_COLUMNS[entity] - actual
             if missing:
                 raise DataValidationError(
-                    "SCHEMA_ERROR",
+                    SCHEMA_ERROR,
                     f"{entity}: {p} missing columns {sorted(missing)}",
                 )
         # Cache the parsed scan: Spark requires it to query
-        # _corrupt_record, and the gates make several passes over the
-        # batch anyway (read-once semantics).
-        df = read_csv_entity(self.spark, paths, schema).cache()
-
-        corrupt = df.filter(F.col("_corrupt_record").isNotNull())
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-        if corrupt.limit(1).count() > 0:
-            write_quarantine(
-                corrupt,
-                f"{self.base}/rejected/{entity}",
-                "corrupt csv record",
-                "SCHEMA_ERROR",
-            )
+        # _corrupt_record, and the quarantine write and the RI gate
+        # both read the batch.
+        scan = self._cache(read_csv_entity(self.spark, paths, schema))
 
         gated = NON_NULL_COLUMNS[entity]
-        nulls = {
-            c: n for c, n in null_violation_counts(df, gated).items() if n > 0
-        }
-        if nulls:
-            if strict:
+        if strict:
+            clean = scan.where(F.col(CORRUPT_COL).isNull())
+            nulls = {c: n for c, n in null_violation_counts(clean, gated).items() if n}
+            if nulls:
                 raise DataValidationError(
                     NULL_VALIDATION_ERROR, f"{entity}: nulls in {nulls}"
                 )
-            null_cond = None
-            for c in gated:
-                cond = F.col(c).isNull()
-                null_cond = cond if null_cond is None else (null_cond | cond)
-            write_quarantine(
-                df.filter(null_cond).drop("_corrupt_record"),
-                f"{self.base}/rejected/{entity}",
-                f"nulls in required columns {sorted(nulls)}",
-                NULL_VALIDATION_ERROR,
-            )
-            df = df.filter(~null_cond)
-
-        result = ValidationResult(status="SUCCESS", null_counts=nulls)
-        return df, result
+        corrupt = F.col(CORRUPT_COL).isNotNull()
+        null_cols = F.concat_ws(", ", *[F.when(F.col(c).isNull(), c) for c in gated])
+        has_null = null_cols != ""
+        tagged = scan.select(
+            "*",
+            F.when(corrupt, "corrupt csv record")
+            .when(has_null, F.format_string("nulls in required columns [%s]", null_cols))
+            .alias("reason"),
+            F.when(corrupt, SCHEMA_ERROR)
+            .when(has_null, NULL_VALIDATION_ERROR)
+            .alias("error_type"),
+        )
+        null_reject = F.col("error_type") == NULL_VALIDATION_ERROR
+        df, observed = self._gate(
+            entity,
+            tagged,
+            [F.count(F.when(null_reject & F.col(c).isNull(), True)).alias(c) for c in gated],
+        )
+        nulls = {c: n for c, n in observed.items() if n}
+        return df, ValidationResult(status="SUCCESS", null_counts=nulls)
 
     def enforce_referential_integrity(
-        self, dfs: dict[str, DataFrame], strict: bool = False
+        self, dfs: dict[str, DataFrame]
     ) -> tuple[dict[str, DataFrame], dict[str, int]]:
-        """FK gates as left_anti joins (reference
-        scripts/validation.py:94-118 via collect+isin — SURVEY §4.3).
-
-        Violating child rows are quarantined; surviving rows keep FK
-        closure.  Returns cleaned dfs + violation counts.
-        """
+        """FK gates as left joins on each parent's distinct keys
+        (reference scripts/validation.py:94-118 via collect+isin —
+        SURVEY §4.3).  A child row is tagged with its first missing
+        parent in ``FOREIGN_KEYS`` order and quarantined.  Returns the
+        surviving rows (FK closure) + violation counts."""
         counts: dict[str, int] = {}
         out = dict(dfs)
-        for child, ckey, parent, pkey in FOREIGN_KEYS:
-            if child not in out or parent not in out:
+        for child in dict.fromkeys(c for c, *_ in FOREIGN_KEYS if c in dfs):
+            fks = [(k, p, pk) for c, k, p, pk in FOREIGN_KEYS if c == child and p in dfs]
+            if not fks:
                 continue
-            bad = ri_violations(out[child], ckey, out[parent], pkey)
-            n = bad.count()
-            counts[f"{child}.{ckey}"] = n
-            if n > 0:
-                if strict:
-                    raise DataValidationError(
-                        REFERENTIAL_ERROR,
-                        f"{child}.{ckey}: {n} rows with no parent in {parent}.{pkey}",
-                    )
-                write_quarantine(
-                    bad,
-                    f"{self.base}/rejected/{child}",
-                    f"orphaned {ckey}",
-                    REFERENTIAL_ERROR,
-                )
-                parent_keys = out[parent].select(
-                    F.col(pkey).alias(ckey)
-                ).distinct()
-                out[child] = out[child].join(parent_keys, ckey, "left_semi")
+            tagged, orphan = out[child], []
+            for i, (ckey, parent, pkey) in enumerate(fks):
+                found = f"_parent_{i}"
+                keys = out[parent].select(F.col(pkey).alias(found)).distinct()
+                tagged = tagged.join(keys, F.col(ckey) == F.col(found), "left")
+                orphan.append(F.when(F.col(found).isNull(), f"orphaned {ckey}"))
+            reason = F.coalesce(*orphan)
+            out[child], observed = self._gate(
+                child,
+                tagged.select(
+                    "*",
+                    F.lit(None).cast("string").alias(CORRUPT_COL),
+                    reason.alias("reason"),
+                    F.when(reason.isNotNull(), REFERENTIAL_ERROR).alias("error_type"),
+                ),
+                [
+                    F.count(F.when(F.col("reason") == f"orphaned {ckey}", True))
+                    .alias(f"{child}.{ckey}")
+                    for ckey, _, _ in fks
+                ],
+            )
+            counts.update(observed)
         return out, counts
+
+    def _gate(
+        self, entity: str, tagged: DataFrame, metrics: list
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """One write of the rows of ``tagged`` that carry an
+        ``error_type`` to ``rejected/<entity>``, always with the same
+        columns (the entity's, ``_corrupt_record``, ``reason``,
+        ``error_type``); returns the other rows and ``metrics``,
+        observed on that write."""
+        cols = ENTITY_SCHEMAS[entity].fieldNames()
+        obs = Observation()
+        rejects = (
+            tagged.where(F.col("error_type").isNotNull())
+            .select(*cols, CORRUPT_COL, "reason", "error_type")
+            .observe(obs, *metrics)
+        )
+        path = f"{self.base}/rejected/{entity}"
+        write_quarantine(rejects, path, F.col("reason"), F.col("error_type"))
+        passed = tagged.where(F.col("error_type").isNull()).select(*cols)
+        return passed, {k: int(v) for k, v in obs.get.items()}
 
     def write_validated(self, entity: str, df: DataFrame) -> str:
         """Validated zone write: per-row dt partition, dynamic overwrite
@@ -178,12 +204,6 @@ class MedallionPipeline:
         return path
 
     # ------------------------------------------------ transformation
-
-    def read_validated(self, entity: str) -> DataFrame | None:
-        path = f"{self.base}/validated/{entity}"
-        if not os.path.isdir(path):
-            return None
-        return self.spark.read.parquet(path)
 
     def compute_category_kpis(
         self, items: DataFrame, products: DataFrame
@@ -300,33 +320,44 @@ class MedallionPipeline:
 
     def run_batch(self, paths: dict[str, list[str]]) -> ValidationResult:
         """Full batch: validate every provided entity, enforce RI,
-        write validated zone, compute+merge KPIs.  Entities absent from
-        ``paths`` exercise the reference's partial-source branches."""
-        dfs: dict[str, DataFrame] = {}
+        write validated zone, compute+merge KPIs from the gated batch
+        (the reference's transformation input: its validated table
+        holds exactly the batch).  Entities absent from ``paths``
+        exercise the reference's partial-source branches.  The batch's
+        cached frames are released on the way out, raised or not."""
         result = ValidationResult(status="SUCCESS")
-        for entity, entity_paths in paths.items():
-            df, res = self.validate_and_load(entity, entity_paths)
-            dfs[entity] = df
-            result.null_counts.update(
-                {f"{entity}.{c}": n for c, n in res.null_counts.items()}
-            )
-        dfs, ri_counts = self.enforce_referential_integrity(dfs)
-        result.ri_violation_counts = ri_counts
-        for entity, df in dfs.items():
-            self.write_validated(entity, df)
+        try:
+            dfs: dict[str, DataFrame] = {}
+            for entity, entity_paths in paths.items():
+                dfs[entity], res = self.validate_and_load(entity, entity_paths)
+                result.null_counts.update(
+                    {f"{entity}.{c}": n for c, n in res.null_counts.items()}
+                )
+            dfs, result.ri_violation_counts = self.enforce_referential_integrity(dfs)
+            for entity in dfs:
+                # the validated write fills the cache, the KPIs read it
+                dfs[entity] = self._cache(dfs[entity])
+                self.write_validated(entity, dfs[entity])
 
-        orders = self.read_validated("orders") if "orders" in dfs else None
-        items = self.read_validated("order_items") if "order_items" in dfs else None
-        products = self.read_validated("products") if "products" in dfs else None
-        cat = (
-            self.compute_category_kpis(items, products)
-            if items is not None and products is not None
-            else None
-        )
-        okpi = (
-            self.compute_order_kpis(orders, items)
-            if orders is not None or items is not None
-            else None
-        )
-        self.upsert_kpis(cat, okpi)
+            orders, items, products = map(dfs.get, ("orders", "order_items", "products"))
+            cat = (
+                self.compute_category_kpis(items, products)
+                if items is not None and products is not None
+                else None
+            )
+            okpi = (
+                self.compute_order_kpis(orders, items)
+                if orders is not None or items is not None
+                else None
+            )
+            self.upsert_kpis(cat, okpi)
+        finally:
+            for df in self._cached:
+                df.unpersist()
+            self._cached.clear()
         return result
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, released when :meth:`run_batch` returns."""
+        self._cached.append(df.cache())
+        return df

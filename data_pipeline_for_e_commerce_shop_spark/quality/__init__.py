@@ -2,6 +2,4 @@ from data_pipeline_for_e_commerce_shop_spark.quality.gates import (  # noqa: F40
     DataValidationError,
     null_violation_counts,
     ri_violations,
-    schema_gate,
-    validate_entity,
 )

@@ -9,8 +9,6 @@ Reference semantics and the rewrites (SURVEY §4.3):
   ``~isin(list)`` (scripts/validation.py:100-116) — materializes every
   key on the driver.  Here: ``left_anti`` join, fully distributed, and
   the violating rows come back as a DataFrame (not a .show()).
-- Schema gate: required-header subset check
-  (reference lambda/s3_validation.py:128-135).
 - Error taxonomy preserved: NULL_VALIDATION_ERROR / REFERENTIAL_ERROR /
   UNKNOWN (reference scripts/validation.py:45-48).
 """
@@ -33,12 +31,6 @@ class DataValidationError(Exception):
         super().__init__(message)
         self.error_type = error_type
         self.message = message
-
-
-def schema_gate(df: DataFrame, required: set[str]) -> set[str]:
-    """Missing-column set; empty means pass
-    (reference lambda/s3_validation.py:128-135)."""
-    return required - set(df.columns)
 
 
 def null_violation_counts(df: DataFrame, columns: list[str]) -> dict[str, int]:
@@ -70,29 +62,6 @@ def ri_violations(
     """
     parent_keys = parent.select(F.col(parent_key).alias(child_key)).distinct()
     return child.join(parent_keys, on=child_key, how="left_anti")
-
-
-def validate_entity(
-    df: DataFrame,
-    required: set[str],
-    non_null_cols: list[str],
-) -> DataFrame:
-    """Run schema + null gates; raise typed errors; return df untouched.
-
-    Mirrors the reference validation flow (scripts/validation.py:145-219)
-    minus its driver round-trips.
-    """
-    missing = schema_gate(df, required)
-    if missing:
-        raise DataValidationError(
-            SCHEMA_ERROR, f"missing required columns: {sorted(missing)}"
-        )
-    nulls = {c: n for c, n in null_violation_counts(df, non_null_cols).items() if n}
-    if nulls:
-        raise DataValidationError(
-            NULL_VALIDATION_ERROR, f"null values in required columns: {nulls}"
-        )
-    return df
 
 
 # ------------------------- declarative expectation suite (dbt-test-like)

@@ -22,7 +22,7 @@ import shutil
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 
@@ -43,11 +43,13 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> No
 
 
 def write_quarantine(
-    bad_rows: DataFrame, path: str, reason: str, error_type: str
+    bad_rows: DataFrame, path: str, reason: str | Column, error_type: str | Column
 ) -> None:
     """S9: quarantine failing rows with reason/provenance columns —
     replaces the copy-to-rejected/-plus-JSON flow
-    (reference lambda/s3_validation.py:138-157)."""
+    (reference lambda/s3_validation.py:138-157).  ``reason`` and
+    ``error_type`` are a value or a per-row column.  Nothing is counted
+    first: an empty ``bad_rows`` may leave one zero-row file."""
     (
         bad_rows.withColumn("reason", F.lit(reason))
         .withColumn("error_type", F.lit(error_type))

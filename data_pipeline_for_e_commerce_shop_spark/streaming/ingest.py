@@ -16,7 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipeline_for_e_commerce_shop_spark.quality.gates import SCHEMA_ERROR
 from data_pipeline_for_e_commerce_shop_spark.sources.readers import CORRUPT_COL
+from data_pipeline_for_e_commerce_shop_spark.sources.sinks import write_quarantine
 
 
 def file_event_stream(
@@ -66,13 +68,7 @@ def run_gated_ingest(
         bad = batch.filter(F.col(CORRUPT_COL).isNotNull())
         ok.write.mode("append").parquet(admitted_path)
         if bad.limit(1).count() > 0:
-            (
-                bad.withColumn("reason", F.lit("corrupt csv record"))
-                .withColumn("error_type", F.lit("SCHEMA_ERROR"))
-                .withColumn("rejected_at", F.current_timestamp())
-                .write.mode("append")
-                .parquet(rejected_path)
-            )
+            write_quarantine(bad, rejected_path, "corrupt csv record", SCHEMA_ERROR)
 
     (
         stream.writeStream.foreachBatch(gate)

@@ -341,3 +341,142 @@ def test_cli_list_run_sql(capsys):
     assert '"n":5' in out.replace(" ", "")
 
     assert main(["run", "no_such_query"]) == 2
+
+
+# One batch with a row for every gate: a corrupt record and a null in a
+# gated column (orders and items), an order_id orphan, a product_id
+# orphan and a row orphaned on both foreign keys.
+DEFECT_ORDERS_CSV = ORDERS_CSV + (
+    "notanint,13,shipped,2024-03-02 09:00:00,,,,1\n"
+    "4,,shipped,2024-03-02 09:00:00,,,,1\n"
+)
+DEFECT_ITEMS_CSV = ITEMS_CSV + (
+    "104,999,13,500,complete,2024-03-02 10:00:00,,,,1.00\n"
+    "105,3,12,888,complete,2024-03-02 10:00:00,,,,2.00\n"
+    "106,998,13,887,complete,2024-03-02 10:00:00,,,,3.00\n"
+    "107,1,10,500,complete,2024-03-01 10:00:00,,,,notaprice\n"
+    "108,1,10,,complete,2024-03-01 10:00:00,,,,4.00\n"
+)
+
+
+def _defect_batch(raw_dir):
+    return {
+        "orders": [_write(raw_dir, "orders_part1.csv", DEFECT_ORDERS_CSV)],
+        "order_items": [_write(raw_dir, "order_items_part1.csv", DEFECT_ITEMS_CSV)],
+        "products": [_write(raw_dir, "products.csv", PRODUCTS_CSV)],
+    }
+
+
+def test_gates_land_every_row_exactly_once(spark, tmp_path, raw_dir, monkeypatch):
+    """Each input row ends up once in validated ∪ rejected, tagged with
+    the first gate it failed (FK order decides between orphan
+    reasons); the counts come from the quarantine writes themselves."""
+    from collections import Counter
+
+    from data_pipeline_for_e_commerce_shop_spark import pipeline as pl
+
+    def no_count_job(*args, **kwargs):
+        raise AssertionError("the non-strict gates must not run a count job")
+
+    monkeypatch.setattr(pl, "null_violation_counts", no_count_job)
+    zones = str(tmp_path / "zones")
+    result = MedallionPipeline(spark, zones).run_batch(_defect_batch(raw_dir))
+    assert result.null_counts == {"orders.user_id": 1, "order_items.product_id": 1}
+    assert result.ri_violation_counts == {
+        "order_items.order_id": 2,
+        "order_items.product_id": 1,
+    }
+
+    keys = {"orders": "order_id", "order_items": "id", "products": "id"}
+    expected = {
+        "orders": [(1, None), (2, None), (3, None), (None, "SCHEMA_ERROR"),
+                   (4, "NULL_VALIDATION_ERROR")],
+        "order_items": [(100, None), (101, None), (102, None), (103, None),
+                        (104, "REFERENTIAL_ERROR"), (105, "REFERENTIAL_ERROR"),
+                        (106, "REFERENTIAL_ERROR"), (107, "SCHEMA_ERROR"),
+                        (108, "NULL_VALIDATION_ERROR")],
+        "products": [(500, None), (501, None), (502, None)],
+    }
+    for entity, key in keys.items():
+        landed = [
+            (r[key], None)
+            for r in spark.read.parquet(f"{zones}/validated/{entity}").collect()
+        ]
+        rejected_dir = f"{zones}/rejected/{entity}"
+        rejected = []
+        if any(f.endswith(".parquet") for f in os.listdir(rejected_dir)):
+            rejected = spark.read.parquet(rejected_dir).collect()
+        landed += [(r[key], r["error_type"]) for r in rejected]
+        assert Counter(landed) == Counter(expected[entity]), entity
+
+    items = {
+        r["id"]: r["reason"]
+        for r in spark.read.parquet(f"{zones}/rejected/order_items").collect()
+    }
+    assert items[104] == items[106] == "orphaned order_id"
+    assert items[105] == "orphaned product_id"
+    assert items[108] == "nulls in required columns [product_id]"
+    orders = spark.read.parquet(f"{zones}/rejected/orders").collect()
+    corrupt = [r for r in orders if r["error_type"] == "SCHEMA_ERROR"]
+    assert corrupt[0]["_corrupt_record"].startswith("notanint,13,")
+
+
+def test_quarantine_files_share_one_schema_per_entity(spark, tmp_path, raw_dir):
+    """Every write to rejected/<entity> carries the same columns, so a
+    plain parquet read of the directory never drops one (a footer
+    without _corrupt_record that sorts first would hide it)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    zones = str(tmp_path / "zones")
+    MedallionPipeline(spark, zones).run_batch(_defect_batch(raw_dir))
+    for entity in ("orders", "order_items"):
+        files = glob.glob(f"{zones}/rejected/{entity}/*.parquet")
+        schemas = {str(pq.read_schema(f).remove_metadata()) for f in files}
+        assert len(schemas) == 1, (entity, schemas)
+        cols = pq.read_schema(files[0]).names
+        assert cols[-4:] == ["_corrupt_record", "reason", "error_type", "rejected_at"]
+
+
+def test_batch_releases_its_cached_scans(spark, tmp_path, raw_dir, monkeypatch):
+    """run_batch unpersists the scans it cached, also when it raises."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    pipe.run_batch(_defect_batch(raw_dir))
+    assert cache.isEmpty()
+
+    def boom(self, category_kpis, order_kpis):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(MedallionPipeline, "upsert_kpis", boom)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        pipe.run_batch(_defect_batch(raw_dir))
+    assert cache.isEmpty()
+
+
+def test_kpis_read_only_the_batch_products(spark, tmp_path, raw_dir):
+    """Products land under the wall date; a batch on a later date must
+    not join an earlier product snapshot into its category KPIs."""
+    zones = str(tmp_path / "zones")
+    pipe = MedallionPipeline(spark, zones)
+    pipe.run_batch(
+        {
+            "order_items": [_write(raw_dir, "order_items_part1.csv", ITEMS_CSV)],
+            "products": [_write(raw_dir, "products.csv", PRODUCTS_CSV)],
+        }
+    )
+    products = f"{zones}/validated/products"
+    (snapshot,) = [d for d in os.listdir(products) if d.startswith("dt=")]
+    os.rename(f"{products}/{snapshot}", f"{products}/dt=2000-01-01")
+    pipe.run_batch(
+        {
+            "order_items": [_write(raw_dir, "i2.csv", ITEMS_CSV)],
+            "products": [_write(raw_dir, "p2.csv", PRODUCTS_CSV)],
+        }
+    )
+    cat = spark.read.parquet(f"{zones}/kpis/category")
+    rows = {(r["category"], str(r["order_date"])): r for r in cat.collect()}
+    assert float(rows[("widgets", "2024-03-01")]["daily_revenue"]) == pytest.approx(39.98)
+    assert float(rows[("gadgets", "2024-03-01")]["daily_revenue"]) == pytest.approx(5.50)
