@@ -132,12 +132,14 @@ def upsert_parquet_table(
     keys: list[str],
     value_cols: list[str],
     provenance_col: str | None = "data_sources",
-) -> DataFrame:
+) -> None:
     """S7/S11: merge into a parquet-backed serving table, creating it if
     absent (reference table autovivification,
     scripts/transformation.py:57-77).  Production: Delta MERGE INTO
     (reference scripts/helperfunction.py:110-208).  The medallion KPI
     serving tables stay plain parquet, so the merge is emulated here.
+    Returns nothing: a re-read of the merged table would cost a
+    schema-inference job per call, and callers read it when they need it.
 
     ATOMICITY BOUNDARY (what the emulation does and does not give):
 
@@ -179,7 +181,6 @@ def upsert_parquet_table(
         return _sorted_provenance(source, provenance_col).write
 
     swap_parquet(table_path, build, "upsert")
-    return spark.read.parquet(table_path)
 
 
 def upsert_versioned_table(

@@ -92,7 +92,7 @@ class MedallionPipeline:
         # reading with an imposed schema would mask missing columns;
         # the reference peeks the first line, lambda/s3_validation.py:53-56).
         for p in [paths] if isinstance(paths, str) else paths:
-            actual = set(schema_probe(self.spark, p))
+            actual = set(schema_probe(p))
             missing = REQUIRED_COLUMNS[entity] - actual
             if missing:
                 raise DataValidationError(

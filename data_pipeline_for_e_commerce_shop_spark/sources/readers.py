@@ -17,6 +17,7 @@ Reference behaviors re-expressed:
 
 from __future__ import annotations
 
+import csv
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,10 +132,13 @@ def _is_parquet_table(path: str) -> bool:
     return _table_extension(path) == "parquet"
 
 
-def schema_probe(spark: SparkSession, path: str) -> list[str]:
-    """S8: header peek — replaces the boto3+csv first-row read
-    (reference lambda/s3_validation.py:53-56) with a header-only scan."""
-    return spark.read.option("header", True).csv(path).columns
+def schema_probe(path: str) -> list[str]:
+    """S8: header peek — the first CSV row, read in plain Python as the
+    reference reads it (lambda/s3_validation.py:53-56; a BOM is
+    stripped), so the header gate runs no Spark job.  An empty file has
+    no header and returns ``[]``."""
+    with open(path, newline="", encoding="utf-8-sig") as f:
+        return next(csv.reader(f), [])
 
 
 def with_source_file(df: DataFrame) -> DataFrame:

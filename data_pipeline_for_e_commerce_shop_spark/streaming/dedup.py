@@ -29,7 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import ensure_nanos_conf
+from ..schemas import parquet_schema, read_parquet
 from .windowed import drain_session, _STREAM_DIRS, _canon_ts, _drain_to_memory
 
 DUP_EVERY = 20  # every DUP_EVERY-th event_id is delivered twice
@@ -47,7 +47,7 @@ def _dup_stream_dir(spark: SparkSession, src: str) -> str:
     os.symlink(src, os.path.join(d, "batch0-original.parquet"))
     stage = os.path.join(d, "_stage")
     (
-        spark.read.parquet(src)
+        read_parquet(spark, src)
         .where(F.col("event_id") % DUP_EVERY == 0)
         .coalesce(1)
         .write.mode("overwrite")
@@ -75,8 +75,7 @@ def stream_dedup_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens batch-side on the drained output.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)  # events.ts parquet vintage; see schemas.load_table
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     d = _dup_stream_dir(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(d), schema

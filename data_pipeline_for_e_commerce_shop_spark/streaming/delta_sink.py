@@ -84,18 +84,17 @@ def stream_events_to_delta(spark, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from data_pipeline_for_e_commerce_shop_spark.schemas import parquet_schema
     from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
         read_delta_table,
     )
     from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import (
         _as_stream_dir,
         _canon_ts,
-        ensure_nanos_conf,
     )
 
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     table = os.path.join(_tmpdir("delta_eo_"), "events_delta")
     sink = delta_exactly_once_sink(table, "events-ingest")
     for _ in range(2):  # second pass = replay; txn guard skips it

@@ -162,10 +162,9 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic only.
     """
     src = f"{sf_dir}/events.parquet"
-    from ..schemas import ensure_nanos_conf
+    from ..schemas import parquet_schema
 
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
     )
@@ -267,10 +266,9 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the modern stateful API.
     """
     src = f"{sf_dir}/events.parquet"
-    from ..schemas import ensure_nanos_conf
+    from ..schemas import parquet_schema
 
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
     )

@@ -30,7 +30,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import ensure_nanos_conf
+from ..schemas import ensure_nanos_conf, parquet_schema, read_parquet
 
 _STREAM_DIRS: dict[str, str] = {}
 
@@ -158,17 +158,23 @@ def _drain_to_memory(
     def _put(batch, _bid):
         batch.write.mode(write_mode).parquet(out_dir)
 
+    # a fresh checkpoint per drain (no state carries over between
+    # drains), deleted once the query has terminated: nothing reads it
+    # afterwards, and a long-lived session would otherwise keep one
+    # checkpoint tree per drain until exit
     ckpt = tempfile.mkdtemp(prefix=f"drain_ckpt_{sink}_")
-    _STREAM_DIRS[f"__ckpt__{sink}_{os.path.basename(ckpt)}"] = ckpt
-    q = (
-        agg.writeStream.foreachBatch(_put)
-        .queryName(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            agg.writeStream.foreachBatch(_put)
+            .queryName(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     if any(n.endswith(".parquet") for n in os.listdir(out_dir)):
         out = spark.read.schema(agg.schema).parquet(out_dir)
     else:  # zero micro-batches (empty source): typed empty view
@@ -182,8 +188,7 @@ def stream_hourly_kpis(
     """Hourly counts + exact value sums per event_type, computed by a
     streaming query over the events table and returned as a DataFrame."""
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)  # events.ts is TIMESTAMP(NANOS); see schemas.load_table
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     # The file stream source lists a DIRECTORY (that's its contract —
     # new files appearing under it become new micro-batches).  The
     # testdata table is a single file, so stage a symlink to it inside
@@ -240,8 +245,7 @@ def stream_sessionize(
     window over the (small) finished aggregate, not the stream.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
     )
@@ -317,8 +321,7 @@ def stream_interval_join(
     the batch patch-up is the deterministic way to the same result.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     def _stream() -> DataFrame:
         s = _canon_ts(
             drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
@@ -417,8 +420,7 @@ def stream_enriched_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the batch dual — same DuckDB oracle.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src))
 
     from ..schemas import load_table
@@ -477,8 +479,7 @@ def stream_hourly_topk(
     from pyspark.sql import Window
 
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
     )
@@ -532,8 +533,7 @@ def stream_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked, not asserted.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)),
         schema,
@@ -593,8 +593,7 @@ def stream_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven stream/batch-dual by hash, not assertion.
     """
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)),
         schema,
@@ -659,8 +658,7 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)),
         schema,
@@ -724,8 +722,7 @@ def stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = f"{sf_dir}/events.parquet"
-    ensure_nanos_conf(spark)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _canon_ts(
         drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)),
         schema,
@@ -742,7 +739,7 @@ def stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as _W
 
     exact = (
-        spark.read.parquet(src)
+        read_parquet(spark, src)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("exact_n"))
     )

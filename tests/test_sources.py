@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.schemas import ORDERS_SCHEMA
@@ -63,10 +64,32 @@ def test_polymorphic_reader_dispatch(spark, tmp_path):
     assert "order_id" in from_pq.columns
 
 
-def test_schema_probe_reads_actual_header(spark, tmp_path):
+def test_schema_probe_reads_actual_header(tmp_path):
     p = str(tmp_path / "probe.csv")
     open(p, "w").write("colA,colB\n1,2\n")
-    assert schema_probe(spark, p) == ["colA", "colB"]
+    assert schema_probe(p) == ["colA", "colB"]
+
+
+def test_schema_probe_quoted_field_and_bom(tmp_path):
+    """A quoted header field keeps its comma; a UTF-8 BOM is not part
+    of the first column's name."""
+    p = str(tmp_path / "probe.csv")
+    open(p, "w", encoding="utf-8-sig").write('order_id,"user, id",status\n1,2,x\n')
+    assert schema_probe(p) == ["order_id", "user, id", "status"]
+
+
+def test_schema_probe_empty_file_fails_the_header_gate(spark, tmp_path):
+    from data_pipeline_for_e_commerce_shop_spark.pipeline import MedallionPipeline
+    from data_pipeline_for_e_commerce_shop_spark.quality.gates import (
+        DataValidationError,
+    )
+
+    p = tmp_path / "orders.csv"
+    p.write_text("")
+    assert schema_probe(str(p)) == []
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    with pytest.raises(DataValidationError, match="missing columns"):
+        pipe.validate_and_load("orders", [str(p)])
 
 
 def test_dynamic_partition_overwrite(spark, tmp_path):

@@ -365,6 +365,22 @@ def test_stream_drain_leaves_no_session_state(spark, sf_dir):
     assert not [q for q in spark.streams.active], "leaked active stream"
 
 
+def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch, capfd):
+    """Each drain deletes its checkpoint once the query has terminated:
+    three drains on one session leave no ``drain_ckpt_*`` tree behind,
+    and the state store logs no error about the deleted directories."""
+    import tempfile
+
+    from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(3):
+        assert QUERIES["events_stream_hourly"](spark, sf_dir).count() > 0
+    assert [d for d in os.listdir(tmp_path) if d.startswith("drain_ckpt_")] == []
+    err = capfd.readouterr().err.splitlines()
+    assert [ln for ln in err if "StateStore" in ln and ("WARN" in ln or "ERROR" in ln)] == []
+
+
 def test_streaming_dedup_drops_replayed_files(spark, tmp_path):
     """The same micro-batch replayed as a second file must not emit its
     keys twice (at-least-once upstream -> exactly-once downstream)."""
