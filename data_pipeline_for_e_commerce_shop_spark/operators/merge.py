@@ -138,8 +138,9 @@ def upsert_parquet_table(
     scripts/transformation.py:57-77).  Production: Delta MERGE INTO
     (reference scripts/helperfunction.py:110-208).  The medallion KPI
     serving tables stay plain parquet, so the merge is emulated here.
-    Returns nothing: a re-read of the merged table would cost a
-    schema-inference job per call, and callers read it when they need it.
+    The target is read with the source's schema, so a merge infers no
+    schema (a swap writes new files every time, so no footer memo could
+    serve it).  Returns nothing: callers read the table when they need it.
 
     ATOMICITY BOUNDARY (what the emulation does and does not give):
 
@@ -149,10 +150,13 @@ def upsert_parquet_table(
       complete copy at the primary path or at the ``__upsert_bak_*``
       sibling, and the next upsert puts a lone backup back in place
       before it reads the table.
-    - Single concurrent writer ONLY: there is no commit log, so two
-      simultaneous upserts race read-modify-write and the slower one
-      silently drops the faster one's rows (lost update), exactly the
-      anomaly Delta's optimistic concurrency rejects with a conflict.
+    - Single concurrent writer PER TABLE: swaps of sibling tables may
+      run at once (each clears only debris named after its own table;
+      the medallion KPI merges do), but there is no commit log, so two
+      simultaneous upserts of one table race read-modify-write and the
+      slower one silently drops the faster one's rows (lost update),
+      exactly the anomaly Delta's optimistic concurrency rejects with a
+      conflict.
       Callers must serialize writers per table (the streaming runner's
       single-flight FIFO claim, streaming/runner.py, is that lock) —
       or use :func:`upsert_versioned_table`, which closes this hole
@@ -162,7 +166,8 @@ def upsert_parquet_table(
 
     These limits are asserted by tests/test_merge.py
     (test_upsert_crash_window_keeps_a_copy,
-    test_upsert_concurrent_writer_boundary).
+    test_upsert_concurrent_writer_boundary,
+    test_concurrent_sibling_swaps_keep_every_key).
     """
     import os
 
@@ -174,7 +179,9 @@ def upsert_parquet_table(
         if os.path.isdir(table_path) and any(
             f.endswith(".parquet") for f in os.listdir(table_path)
         ):
-            target = spark.read.parquet(table_path)
+            # the table was written from a frame of the source's schema,
+            # and parquet resolves columns by name: no inference job
+            target = spark.read.schema(source.schema).parquet(table_path)
             return coalescing_merge(
                 target, source, keys, value_cols, provenance_col
             ).write

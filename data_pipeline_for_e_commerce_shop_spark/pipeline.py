@@ -13,6 +13,16 @@ serving tables.  Each gate tags a rejected row with its reason instead
 of branching on counts: one quarantine write per entity and stage,
 whose ``DataFrame.observe`` metrics are the gate counts.
 
+No write of a batch reads another's output, and at this size a
+write's cost is its fixed planning and commit time, so ``run_batch``
+runs them in three concurrent waves, each ending
+before the next starts: the gates of every entity, then (after the RI
+gate) the validated writes, then the two KPI merges.  A wave is safe
+because every write in it goes to its own path, each KPI table keeps
+a single writer (``sinks.swap_parquet`` only clears debris named after
+its own table), and a wave raises only after every sibling has ended,
+so nothing is unpersisted or retried under a running write.
+
 Differences from the reference, by design (SURVEY §4.3):
 - per-row ``dt = to_date(created_at)`` instead of one batch date from
   ``first()`` (reference scripts/validation.py:191);
@@ -23,10 +33,13 @@ Differences from the reference, by design (SURVEY §4.3):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from data_pipeline_for_e_commerce_shop_spark.functions.scalars import event_date, ratio
 from data_pipeline_for_e_commerce_shop_spark.operators.merge import upsert_parquet_table
@@ -292,17 +305,21 @@ class MedallionPipeline:
 
     def upsert_kpis(self, category_kpis, order_kpis) -> None:
         """Serving-zone coalescing merge (reference
-        helperfunction.py:53-208 -> operators/merge.py)."""
+        helperfunction.py:53-208 -> operators/merge.py); the category
+        and order tables merge at once."""
+        merges = []
         if category_kpis is not None:
-            upsert_parquet_table(
+            merges.append(partial(
+                upsert_parquet_table,
                 self.spark,
                 f"{self.base}/kpis/category",
                 category_kpis,
                 keys=["category", "order_date"],
                 value_cols=["daily_revenue", "avg_order_value", "avg_return_rate"],
-            )
+            ))
         if order_kpis is not None:
-            upsert_parquet_table(
+            merges.append(partial(
+                upsert_parquet_table,
                 self.spark,
                 f"{self.base}/kpis/order",
                 order_kpis,
@@ -314,7 +331,8 @@ class MedallionPipeline:
                     "return_rate",
                     "unique_customers",
                 ],
-            )
+            ))
+        _together(self.spark, merges)
 
     # ------------------------------------------------------ end-to-end
 
@@ -323,21 +341,30 @@ class MedallionPipeline:
         write validated zone, compute+merge KPIs from the gated batch
         (the reference's transformation input: its validated table
         holds exactly the batch).  Entities absent from ``paths``
-        exercise the reference's partial-source branches.  The batch's
-        cached frames are released on the way out, raised or not."""
+        exercise the reference's partial-source branches.
+
+        The writes run in three waves (module docstring): the gates of
+        every entity at once; the RI gate on this thread, then every
+        validated write at once; the two KPI merges at once.  Each
+        wave's writes go to distinct paths, and a wave ends only when
+        all of them have, raising the first error after that.  The
+        batch's cached frames are released on the way out, raised or
+        not, and never under a running write."""
         result = ValidationResult(status="SUCCESS")
         try:
+            gates = [partial(self.validate_and_load, e, p) for e, p in paths.items()]
             dfs: dict[str, DataFrame] = {}
-            for entity, entity_paths in paths.items():
-                dfs[entity], res = self.validate_and_load(entity, entity_paths)
+            for entity, (df, res) in zip(paths, _together(self.spark, gates)):
+                dfs[entity] = df
                 result.null_counts.update(
                     {f"{entity}.{c}": n for c, n in res.null_counts.items()}
                 )
             dfs, result.ri_violation_counts = self.enforce_referential_integrity(dfs)
-            for entity in dfs:
-                # the validated write fills the cache, the KPIs read it
-                dfs[entity] = self._cache(dfs[entity])
-                self.write_validated(entity, dfs[entity])
+            # the validated writes fill the cache, the KPIs read it
+            dfs = {entity: self._cache(df) for entity, df in dfs.items()}
+            _together(
+                self.spark, [partial(self.write_validated, e, df) for e, df in dfs.items()]
+            )
 
             orders, items, products = map(dfs.get, ("orders", "order_items", "products"))
             cat = (
@@ -361,3 +388,18 @@ class MedallionPipeline:
         """``df.cache()``, released when :meth:`run_batch` returns."""
         self._cached.append(df.cache())
         return df
+
+
+def _together(spark: SparkSession, thunks: list) -> list:
+    """Run ``thunks`` at once, each on a worker thread that carries the
+    caller's Spark local properties (its job group too, so jobs by
+    group stay complete), and return their results in order.  Returns
+    only when every thunk has ended, then raises the first error in
+    ``thunks`` order: a raise never leaves a sibling running."""
+    if not thunks:
+        return []
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 3)) as pool:
+        # one wrapper per thunk, so each thread gets its own copy of the
+        # properties: each write sets its SQL execution id in them
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

@@ -222,3 +222,37 @@ def test_upsert_concurrent_writer_boundary(spark, tmp_path):
     final = _as_map(spark.read.parquet(path))
     assert "kB" in final and "k0" in final
     assert "kA" not in final  # the documented lost update
+
+
+def test_concurrent_sibling_swaps_keep_every_key(spark, tmp_path):
+    """Upserts into sibling tables may run at once: each swap clears
+    only the staging and backup debris named after its own table, so
+    neither deletes the other's staged copy mid-swap."""
+    import os
+    import threading
+
+    from data_pipeline_for_e_commerce_shop_spark.operators.merge import (
+        upsert_parquet_table,
+    )
+
+    names, errors = ("category", "order"), []
+
+    def writer(name):
+        try:
+            for i in range(10):
+                src = _df(spark, [(f"{name}{i}", i, float(i), [name])])
+                upsert_parquet_table(spark, str(tmp_path / name), src, ["k"], ["a", "b"])
+        except Exception as e:  # surfaced on the test's thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in names]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for name in names:
+        got = _as_map(spark.read.parquet(str(tmp_path / name)))
+        assert sorted(got) == sorted(f"{name}{i}" for i in range(10))
+    assert sorted(os.listdir(tmp_path)) == list(names)

@@ -480,3 +480,70 @@ def test_kpis_read_only_the_batch_products(spark, tmp_path, raw_dir):
     rows = {(r["category"], str(r["order_date"])): r for r in cat.collect()}
     assert float(rows[("widgets", "2024-03-01")]["daily_revenue"]) == pytest.approx(39.98)
     assert float(rows[("gadgets", "2024-03-01")]["daily_revenue"]) == pytest.approx(5.50)
+
+
+def _next_job_id(spark) -> int:
+    """The id the scheduler gives the next job: ids are sequential, so
+    the jobs started between two reads are the range between them."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_batch_jobs_are_pinned_and_in_the_callers_group(spark, tmp_path, raw_dir):
+    """A warm batch into existing KPI tables runs a fixed number of
+    Spark jobs, and every one of them lands in the caller's job group:
+    the wave threads carry the caller's local properties."""
+    import uuid
+
+    sc = spark.sparkContext
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    pipe.run_batch(_defect_batch(raw_dir))  # creates the KPI tables
+    group = f"batch-{uuid.uuid4().hex}"
+    before = _next_job_id(spark)
+    sc.setJobGroup(group, group)
+    try:
+        pipe.run_batch(_defect_batch(raw_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    new = set(range(before, _next_job_id(spark)))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert new == set(sc.statusTracker().getJobIdsForGroup(group))
+    # 27 with the validated writes one at a time: run together, the
+    # order_items write joins the orders cache while it is being filled,
+    # and AQE materialises that cache in a job of its own
+    assert len(new) == 28
+
+
+def test_failed_merge_waits_for_its_sibling(spark, tmp_path, raw_dir, monkeypatch):
+    """A merge that raises inside the KPI wave: run_batch raises it only
+    after the other merge has ended, releases the cache, leaves no
+    staging debris, and a retry of the batch converges to one clean run."""
+    from data_pipeline_for_e_commerce_shop_spark import pipeline as pl
+
+    real_upsert = pl.upsert_parquet_table
+
+    def failing_upsert(spark_, table_path, *args, **kwargs):
+        if table_path.endswith("/kpis/category"):
+            raise RuntimeError("category merge failed")
+        return real_upsert(spark_, table_path, *args, **kwargs)
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    zones = str(tmp_path / "zones")
+    pipe = MedallionPipeline(spark, zones)
+    monkeypatch.setattr(pl, "upsert_parquet_table", failing_upsert)
+    with pytest.raises(RuntimeError, match="category merge failed"):
+        pipe.run_batch(_defect_batch(raw_dir))
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert cache.isEmpty()
+    assert os.listdir(f"{zones}/kpis") == ["order"]
+
+    monkeypatch.undo()
+    pipe.run_batch(_defect_batch(raw_dir))
+    clean = str(tmp_path / "clean")
+    MedallionPipeline(spark, clean).run_batch(_defect_batch(raw_dir))
+    for table in ("category", "order"):
+        retried = spark.read.parquet(f"{zones}/kpis/{table}").collect()
+        once = spark.read.parquet(f"{clean}/kpis/{table}").collect()
+        assert sorted(retried) == sorted(once), table
