@@ -7,15 +7,16 @@ Layout
 - ``session``    — tuned SparkSession factory (AQE, shuffle sizing, Arrow)
 - ``schemas``    — explicit StructTypes (the reference is stringly-typed;
                    see reference scripts/validation.py:64)
-- ``sources``    — scans/sinks (CSV/parquet readers, partitioned sinks,
-                   quarantine, manifests)
+- ``sources``    — scans/sinks (schema-first CSV reader, partitioned
+                   sinks, quarantine, the parquet swap, the Delta log
+                   reader/writer, the synthetic generator source)
 - ``quality``    — validation gates (schema / null / referential integrity)
 - ``operators``  — KPI queries, coalescing merge, window analytics,
                    dedup, similarity search, text analysis, multimodal
-- ``functions``  — scalar helpers (portable hashing, date/json utils)
-- ``streaming``  — Structured Streaming control plane (ingest, debounce,
+- ``functions``  — scalar helpers (integer-cents money, ratios, dates)
+- ``streaming``  — Structured Streaming control plane (debounce,
                    single-flight batch runner over a CAS-committed JSON
-                   state log)
+                   state log) and the streaming query operators
 - ``pipeline``   — medallion runner wiring raw -> validated -> KPIs
 """
 

@@ -1,7 +1,5 @@
 from data_pipeline_for_e_commerce_shop_spark.functions.scalars import (  # noqa: F401
     money_sum,
-    money_avg,
     ratio,
-    portable_hash64,
     event_date,
 )

@@ -13,9 +13,9 @@ bit-identical on any engine (this also makes the DuckDB oracle compare
 exact rather than epsilon-based).
 
 *Portable hashing.* Spark's ``hash``/``xxhash64`` don't exist in other
-engines; where a hash must be reproducible outside Spark (dedup
-fingerprints, minhash), we derive a 64-bit value from ``md5`` hex, which
-every engine computes identically.
+engines; where a hash must be reproducible outside Spark (bloom, CMS
+and HLL buckets, sampled draws), ``portable_hash32`` derives a 32-bit
+value from ``md5`` hex, which every engine computes identically.
 """
 
 from __future__ import annotations
@@ -33,26 +33,9 @@ def money_sum(col: Column | str) -> Column:
     return F.sum(F.floor(c * 100)) / F.lit(100.0)
 
 
-def money_avg(col: Column | str, count_col: Column) -> Column:
-    """Exact money average: cents-sum divided by an explicit count."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(F.floor(c * 100)) / F.lit(100.0) / count_col
-
-
 def ratio(num: Column, den: Column) -> Column:
     """NULL-safe ratio of two counts (double); avoids ANSI div-by-zero."""
     return F.when(den != 0, num / den)
-
-
-def portable_hash64(col: Column | str) -> Column:
-    """64-bit non-cryptographic hash reproducible across engines.
-
-    First 15 hex chars of md5 -> bigint (60 bits, positive).  DuckDB
-    equivalent: ``CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)`` or
-    arithmetic from_hex; used for dedup fingerprints and minhash perms.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def portable_hash32(col: Column | str, prefix: str | None = None) -> Column:

@@ -50,31 +50,6 @@ MIN_SUPPORT = 2
 SUPPORT_DENSITY_DIVISOR = 30
 
 
-def copurchase_support(
-    spark: SparkSession, sf_dir: str, floor: int = MIN_SUPPORT
-) -> DataFrame:
-    """1-row (s BIGINT) density-derived support threshold — see
-    SUPPORT_DENSITY_DIVISOR.  Broadcast-crossJoined by every consumer;
-    the SQL twin is queries._support_cte."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    occ = (
-        li.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_partkey").alias("c"))
-        .agg(F.expr("CAST(SUM(c * (c - 1) div 2) AS BIGINT)").alias("occ"))
-    )
-    np_ = load_table(spark, sf_dir, "part").agg(
-        F.count(F.lit(1)).alias("n_parts")
-    )
-    return occ.crossJoin(F.broadcast(np_)).select(
-        F.expr(
-            f"GREATEST(CAST({floor} AS BIGINT),"
-            f" (occ div n_parts) div {SUPPORT_DENSITY_DIVISOR})"
-        ).alias("s")
-    )
-
-
 def basket_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order sorted distinct part set ``(l_orderkey, ps)`` —
     persisted because every caller reads it at least twice (the pair
@@ -106,13 +81,13 @@ def support_from_baskets(
     baskets: DataFrame,
     floor: int = MIN_SUPPORT,
 ) -> DataFrame:
-    """1-row (s BIGINT) — the SAME law as :func:`copurchase_support`
-    (pair_occurrences div n_parts div divisor, floored), with occ
-    derived from the already-aggregated basket sets:
+    """1-row (s BIGINT) density-derived support threshold — see
+    SUPPORT_DENSITY_DIVISOR; the SQL twin is queries._support_scalar.
+    occ is derived from the already-aggregated basket sets:
     ``size(ps) == countDistinct(l_partkey)`` per order, so
-    ``SUM(size(ps)·(size(ps)−1) div 2)`` is bit-identical to the
-    countDistinct pipeline while reading the checkpointed baskets
-    instead of re-shuffling the fact."""
+    ``SUM(size(ps)·(size(ps)−1) div 2)`` is the pair-occurrence count
+    read off the persisted baskets instead of a re-shuffle of the
+    fact.  Broadcast-crossJoined by every consumer."""
     occ = baskets.agg(
         F.expr(
             "CAST(SUM(CAST(size(ps) AS BIGINT) * (size(ps) - 1) div 2)"

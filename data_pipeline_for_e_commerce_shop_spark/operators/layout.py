@@ -84,96 +84,6 @@ def morton_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def write_zordered(
-    df: DataFrame, path: str, a: str, b: str, n_files: int = 8
-) -> None:
-    """Write ``df`` Z-ordered on (a, b): range-partition then sort by
-    the Morton code, so each output file covers a compact rectangle of
-    the (a, b) key space and min/max stats prune on EITHER column.
-
-    Both columns are first SCALED into a common 16-bit range from
-    their global min/max: raw interleaving of keys with very different
-    cardinalities lets the wider key's high bits dominate the code and
-    the narrow dimension degenerates to full-width files (caught by
-    the layout test at sf0.001 — 13-bit orderkeys vs 8-bit partkeys).
-    Range-normalizing each dimension is the standard lakehouse
-    OPTIMIZE ZORDER mechanic.  The min/max agg is one tiny job whose
-    1-row result rides the plan as a broadcast crossJoin.
-
-    ``repartitionByRange`` samples range bounds — no single-partition
-    global sort; ``sortWithinPartitions`` orders rows inside each file
-    so row-group stats are tight too."""
-    stats = df.agg(
-        F.min(a).alias("_amin"),
-        F.max(a).alias("_amax"),
-        F.min(b).alias("_bmin"),
-        F.max(b).alias("_bmax"),
-    )
-
-    def _scaled(col: str, lo: str, hi: str) -> Column:
-        span = F.greatest(F.col(hi) - F.col(lo), F.lit(1))
-        return ((F.col(col) - F.col(lo)) * 65535 / span).cast("long")
-
-    coded = df.crossJoin(F.broadcast(stats)).withColumn(
-        "_z",
-        morton_code(
-            _scaled(a, "_amin", "_amax"), _scaled(b, "_bmin", "_bmax")
-        ),
-    )
-    (
-        coded.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z", "_amin", "_amax", "_bmin", "_bmax")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    path: str,
-) -> None:
-    """Persist a table hash-bucketed (and sorted) by a join key.
-
-    Bucketing is the storage-level answer to the repeated-join-shuffle
-    problem: two tables bucketed by the same key into the same bucket
-    count join with ZERO exchanges — each task reads matching bucket
-    files from both sides.  At 100 TB this turns every
-    orders⋈lineitem-style fact-fact join from a full network shuffle
-    into a local merge, amortising ONE write-time shuffle across every
-    subsequent join (the same trade Z-ordering makes for range
-    predicates at layout.py:71).
-
-    Uses the catalog (`saveAsTable`) because bucket metadata lives
-    there; the parquet files land at `path`.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left: str, right: str, left_key: str, right_key: str
-) -> DataFrame:
-    """Join two co-bucketed catalog tables on their bucket keys.
-
-    With matching bucket specs Catalyst plans a SortMergeJoin whose
-    BOTH children are bare file scans — no Exchange on either side
-    (asserted in tests/test_layout.py).
-    """
-    lt = spark.table(left)
-    rt = spark.table(right)
-    return lt.join(rt, lt[left_key] == rt[right_key])
-
-
 COMPACT_TARGET_BYTES = 50_000  # per-group byte target (demo-scaled)
 
 

@@ -67,55 +67,6 @@ def coalescing_merge(
     return joined.select(*out_cols)
 
 
-def additive_merge(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    sum_cols: list[str],
-    sketch_cols: list[str] | None = None,
-) -> DataFrame:
-    """Accumulating upsert: matched keys ADD the source partials to the
-    target's running totals (null-safe), unmatched keys insert/persist.
-
-    This is the merge flavor incremental (streaming) aggregation needs —
-    coalescing_merge's new-over-old overwrite is correct for the
-    reference's per-batch full recompute, but a micro-batch carries only
-    a DELTA, so totals must accumulate.  Only decomposable aggregates
-    (count/sum/min/max/HLL) can ride this path; averages and ratios are
-    derived from the accumulated terms at read time.
-
-    ``sketch_cols`` are binary HLL sketch columns (``hll_sketch_agg``
-    partials) merged with ``hll_union`` — the scale answer to exact
-    countDistinct, whose per-key state cannot accumulate (SURVEY §4.4):
-    a sketch column makes distinct-count maintenance as cheap as a sum.
-    """
-    t = target.alias("t")
-    s = source.alias("s")
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-    )
-    joined = t.join(s, cond, "full_outer")
-    out_cols = [
-        F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in keys
-    ] + [
-        (
-            F.coalesce(F.col(f"t.{c}"), F.lit(0))
-            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-        ).alias(c)
-        for c in sum_cols
-    ]
-    for c in sketch_cols or []:
-        tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
-        out_cols.append(
-            F.when(tc.isNull(), sc)
-            .when(sc.isNull(), tc)
-            .otherwise(F.hll_union(tc, sc))
-            .alias(c)
-        )
-    return joined.select(*out_cols)
-
-
 def _sorted_provenance(source: DataFrame, provenance_col: str | None) -> DataFrame:
     """A first write's provenance arrays, normalized as the merge's are."""
     if not provenance_col:
@@ -159,8 +110,10 @@ def upsert_parquet_table(
       conflict.
       Callers must serialize writers per table (the streaming runner's
       single-flight FIFO claim, streaming/runner.py, is that lock) —
-      or use :func:`upsert_versioned_table`, which closes this hole
-      with the Delta log's compare-and-swap and a loser-retries loop.
+      or keep the table on the Delta log and fold with
+      :func:`coalescing_merge` through
+      ``delta_writer.rewrite_delta_table``, whose compare-and-swap and
+      loser-retries loop close this hole.
     - Readers during the swap window can catch the path between the
       two renames and see a missing directory; Delta readers never do.
 
@@ -189,37 +142,3 @@ def upsert_parquet_table(
 
     swap_parquet(table_path, build, "upsert")
 
-
-def upsert_versioned_table(
-    spark,
-    table_path: str,
-    source: DataFrame,
-    keys: list[str],
-    value_cols: list[str],
-    provenance_col: str | None = "data_sources",
-) -> int:
-    """MULTI-WRITER-SAFE merge: the Delta MERGE INTO shape (reference
-    scripts/helperfunction.py:110-208) on the Delta log
-    (sources/delta_writer.py) instead of ``upsert_parquet_table``'s
-    single-writer parquet swap.
-
-    Optimistic concurrency, Delta-style: read the latest version,
-    merge, then commit an overwrite pinned to the version read
-    (``delta_writer.rewrite_delta_table``).  If another writer
-    committed in between, the commit raises ``ConcurrentWriteError``
-    WITHOUT publishing (exactly one writer wins each version — the
-    atomic ``os.link`` of the log entry is the arbiter), and this
-    writer re-reads the NEW latest version and re-merges, so no
-    committed row is ever lost — the lost-update anomaly the
-    plain-parquet emulation documents is closed here.  Returns the
-    committed version number (0 for the first commit)."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
-        rewrite_delta_table,
-    )
-
-    def fold(target: DataFrame | None) -> DataFrame:
-        if target is None:
-            return _sorted_provenance(source, provenance_col)
-        return coalescing_merge(target, source, keys, value_cols, provenance_col)
-
-    return rewrite_delta_table(spark, table_path, fold)

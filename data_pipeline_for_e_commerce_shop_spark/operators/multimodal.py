@@ -10,9 +10,9 @@ a real image/audio decoder would use at 100 TB.
 
 The actual codec step is STUBBED: the container ships no image/audio
 libraries, so ``decode_media`` computes deterministic fake features
-(byte stats) and ``decode_media_real`` raises NotImplementedError with
-the integration point documented.  Everything around the stub — the
-plumbing the judge grades — is real and tested.
+(byte stats); a real decoder is a ``mapInPandas`` stage with the
+same signature as ``extract_features`` and ``FEATURE_SCHEMA`` output.
+Everything around the stub is real and tested.
 """
 
 from __future__ import annotations
@@ -116,16 +116,6 @@ def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
     return media.mapInPandas(features, FEATURE_SCHEMA)
 
 
-def decode_media_real(media: DataFrame) -> DataFrame:
-    """Integration point for real codecs (PIL/torchaudio/pyav): swap
-    the body for a mapInPandas stage with the SAME signature as
-    extract_features.  Unavailable in this container."""
-    raise NotImplementedError(
-        "media codecs are not installed in this environment; "
-        "plug a mapInPandas decoder with FEATURE_SCHEMA output here"
-    )
-
-
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: synthesize media -> Arrow-batched features."""
     return extract_features(media_table(spark, sf_dir))
@@ -156,8 +146,8 @@ def sample_frames(media: DataFrame) -> DataFrame:
     No shuffle: frames inherit the scan partitioning, Python cost is
     amortized per Arrow batch, and downstream per-frame stages (CLIP
     embedding, OCR, ...) consume the exploded rows directly.  The
-    per-frame stats stand in for the decoded tensor (codecs are not in
-    this container — see decode_media_real).
+    per-frame stats stand in for the decoded tensor (the codec step is
+    stubbed — see the module docstring).
     """
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -201,8 +191,8 @@ def arrow_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay columnar Arrow end-to-end and all work is vectorized
     pyarrow.compute kernels (C++), so the Python layer only routes
     batches.  The right shape for byte-level media/codec work where
-    pandas object-dtype round-trips would dominate (the decode stage
-    at decode_media_real would sit exactly here).
+    pandas object-dtype round-trips would dominate (a real decode
+    stage would sit exactly here).
 
     Zero shuffle, scan-speed; oracle = plain length()/strlen().
     """

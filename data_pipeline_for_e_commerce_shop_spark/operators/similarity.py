@@ -50,13 +50,6 @@ def dot(a: str, b: str) -> Column:
     )
 
 
-def _cosine(a: str, b: str) -> Column:
-    """Full cosine for pre-doubled arrays; prefer precomputing norms on
-    each SIDE of a join (see brute_force_topk) so the O(pairs) work is
-    one dot product, not three."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def prepared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared (vec_id, emb, nrm) projection every index tier
     consumes: doubles + L2 norm computed ONCE.  Grading queries that
@@ -164,7 +157,7 @@ LSH_PLANES_MAX = 30
 def plane_signs(p: int, dim: int = 64) -> list[int]:
     """Hyperplane p as ±1 ints: component j is the parity of the FIRST
     hex digit of md5('plane-p-j').  THE single source of truth for the
-    plane construction — the Spark expression (_plane) and the DuckDB
+    plane construction — the Spark expression (_plane_sql) and the DuckDB
     oracle literals (queries._plane_literal) both derive from it, so
     the seed rule cannot drift between engines."""
     import hashlib
@@ -177,17 +170,12 @@ def plane_signs(p: int, dim: int = 64) -> list[int]:
     ]
 
 
-def _plane(dim: int, p: int) -> Column:
-    """Hyperplane p as a literal ±1.0 array (see plane_signs): the
-    constants are computed at plan-build time in Python — no per-row
-    md5 expressions for Catalyst to fold."""
-    return F.expr(_plane_sql(dim, p))
-
-
 def _plane_sql(dim: int, p: int) -> str:
-    """The same ±1.0 literal array as ONE SQL string (see lsh_bucket
-    for why strings: a 30-plane bucket built from per-literal Column
-    objects is ~2000 py4j round trips of pure plan-CONSTRUCTION time)."""
+    """Hyperplane p as a literal ±1.0 array in ONE SQL string, computed
+    at plan-build time in Python — no per-row md5 expressions for
+    Catalyst to fold (see lsh_bucket for why strings: a 30-plane
+    bucket built from per-literal Column objects is ~2000 py4j round
+    trips of pure plan-CONSTRUCTION time)."""
     return (
         "array("
         + ", ".join(f"{float(s):.1f}D" for s in plane_signs(p, dim))

@@ -143,34 +143,3 @@ def expectation_summary(spark, sf_dir: str) -> DataFrame:
     for p in per_table[1:]:
         out = out.unionByName(p)
     return out
-
-
-def load_with_observed_metrics(spark, sf_dir: str):
-    """Attach single-pass data-quality metrics to a load via
-    ``df.observe`` — the counters ride the SAME job as whatever action
-    consumes the DataFrame, so DQ dashboards cost zero extra scans
-    (the reference re-scans per null-check, validation.py:186-196;
-    the folded gate at null_gate fixed the k-scans problem, this fixes
-    the one-extra-scan problem).
-
-    Returns (df, observation); observation.get blocks until the first
-    action on df completes.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-
-    df = load_table(spark, sf_dir, "orders")
-    obs = Observation("dq_orders")
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("o_totalprice").isNull().cast("long")).alias(
-            "n_null_price"
-        ),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100).cast("long")
-        ).alias("sum_cents"),
-    )
-    return observed, obs

@@ -221,61 +221,6 @@ def t_closeness(
     )
 
 
-def erase_user(
-
-    spark,
-    table_path: str,
-    key_col: str,
-    key_value,
-) -> dict:
-    """Right-to-erasure (GDPR art. 17) for a parquet table: rewrite
-    without the subject's rows and return an audit record.
-
-    Read-modify-write with an explicit pre/post count, promoted with
-    ``sinks.swap_parquet`` like operators/merge.upsert_parquet_table; on
-    a Delta/Iceberg sink the body becomes a ``DELETE WHERE`` and the
-    audit record comes from the commit metrics.  The rewrite is
-    partition-preserving-in-spirit only (plain parquet has no row-level
-    delete); at 100 TB the erasure batch accumulates many subjects and
-    rewrites each affected file once, which is why the audit counts
-    matter: they prove the batch touched exactly what it claimed.
-    """
-    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
-        swap_parquet,
-    )
-
-    # null-safe: (NULL == v) is NULL and ~NULL is NULL, so a plain
-    # ~(col == v) would silently DROP every NULL-keyed row; eqNullSafe
-    # makes the subject predicate total
-    hit = F.col(key_col).eqNullSafe(F.lit(key_value))
-    counts = {}
-
-    def build():
-        df = spark.read.parquet(table_path)
-        # one aggregate pass for both audit counts (not two table scans)
-        counts.update(
-            df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(hit.cast("long")).alias("n_hit"),
-            ).collect()[0].asDict()
-        )
-        return df.where(~hit).write
-
-    # a plain overwrite would delete the only durable copy before the
-    # new one exists; the swap keeps a full copy at every step
-    swap_parquet(table_path, build, "erase")
-    n_before, n_erase = int(counts["n"]), int(counts["n_hit"] or 0)
-    n_after = spark.read.parquet(table_path).count()
-    return {
-        "table": table_path,
-        "key_col": key_col,
-        "n_before": n_before,
-        "n_erased": n_erase,
-        "n_after": n_after,
-        "consistent": n_after == n_before - n_erase,
-    }
-
-
 PSEUDO_SECRET = "pseudo-v1"  # key label; rotate to re-key the corpus
 
 
@@ -290,9 +235,9 @@ def pseudonymize_audit(spark, sf_dir: str) -> DataFrame:
     collision-free (distinct pseudonyms == distinct keys).
 
     This is the share-safe-extract shape (analytics on pseudonymized
-    copies, re-identification only with the key) — the step beyond
-    erase_user's hard deletion.  Keyed-hash mapping is a pure
-    row-local projection: zero extra shuffles over the plain join.
+    copies, re-identification only with the key).  Keyed-hash mapping
+    is a pure row-local projection: zero extra shuffles over the plain
+    join.
     """
     from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 

@@ -3,7 +3,10 @@ reverse of :mod:`delta_reader`, so the medallion zones this engine
 writes are readable by STOCK Delta readers (delta-spark, delta-rs,
 DuckDB's delta extension) and a user arriving with Delta tables (the
 reference's validated zone, scripts/validation.py:121-129) can keep
-appending to them in-protocol.
+appending to them in-protocol.  Tables are written without column
+mapping; an append to a table whose log declares column mapping
+(written by another engine) is refused before any file is staged,
+while ``delta_reader`` still reads such tables.
 
 What a commit is (PROTOCOL.md): stage parquet data files into the
 table directory under unique names, then atomically publish
@@ -18,8 +21,8 @@ read-modify-write), and a loser whose SetTransaction batch was
 committed by the winner skips itself.  A read-modify-write caller
 pins the version it read (``expected_version``) and re-folds on
 :class:`ConcurrentWriteError`; :func:`rewrite_delta_table` is that
-loop, and the package's versioned serving tables (the multi-writer
-KPI merge, the streaming KPI fold) commit through it.
+loop (no caller in the package yet: it is the commit path planned for
+the validated zone and the KPI tables).
 
 Checkpoints: every ``checkpoint_interval`` commits the writer emits a
 classic single-file checkpoint ``<v>.checkpoint.parquet`` — one row
@@ -212,34 +215,10 @@ def _drop_staged(table_path: str, adds: list[dict]) -> None:
             pass
 
 
-def _metadata_action(df: DataFrame, column_mapping: bool = False) -> dict:
-    """metaData action for a new table.  With ``column_mapping`` the
-    schemaString's fields carry ``delta.columnMapping.id`` /
-    ``.physicalName`` metadata, the configuration declares
-    ``delta.columnMapping.mode=name``, and data files store the
-    PHYSICAL ``col-<uuid>`` names (VERDICT r6 item 4: tables this
-    engine writes survive column renames and round-trip through both
-    this reader's v2/v3 unmapping and stock readers).  Nested struct /
-    array / map fields would need recursive physical naming — refused
-    loudly, mirroring the reader's nested-mapping refusal."""
+def _metadata_action(df: DataFrame) -> dict:
+    """metaData action for a new table: the frame's schema under its
+    own column names (no column mapping)."""
     fields = json.loads(df.schema.json())["fields"]
-    configuration: dict[str, str] = {}
-    if column_mapping:
-        for i, f in enumerate(fields, start=1):
-            if isinstance(f.get("type"), dict):
-                raise NotImplementedError(
-                    f"column mapping on nested field {f['name']!r} is"
-                    " unsupported; refusing a partial mapping"
-                )
-            f["metadata"] = {
-                **(f.get("metadata") or {}),
-                "delta.columnMapping.id": i,
-                "delta.columnMapping.physicalName": f"col-{uuid.uuid4()}",
-            }
-        configuration = {
-            "delta.columnMapping.mode": "name",
-            "delta.columnMapping.maxColumnId": str(len(fields)),
-        }
     return {
         "metaData": {
             "id": str(uuid.uuid4()),
@@ -248,7 +227,7 @@ def _metadata_action(df: DataFrame, column_mapping: bool = False) -> dict:
                 {"type": "struct", "fields": fields}
             ),
             "partitionColumns": [],
-            "configuration": configuration,
+            "configuration": {},
             "createdTime": int(time.time() * 1000),
         }
     }
@@ -263,89 +242,12 @@ def _mapping_mode(meta: dict | None) -> str:
     return cfg.get("delta.columnMapping.mode", "none")
 
 
-def _to_physical(df: DataFrame, meta: dict) -> DataFrame:
-    """Project ``df``'s LOGICAL columns onto the table's PHYSICAL
-    names per the metaData schemaString — the write-side twin of the
-    reader's ``_unmap_columns``.  A logical column missing from ``df``
-    fails the select loudly (schema mismatch must not silently write
-    nulls)."""
-    from pyspark.sql import functions as F
-
-    schema = json.loads(meta["schemaString"])
-    cols = []
-    for field in schema.get("fields", []):
-        fmeta = field.get("metadata") or {}
-        phys = fmeta.get("delta.columnMapping.physicalName", field["name"])
-        cols.append(F.col(f"`{field['name']}`").alias(phys))
-    return df.select(*cols)
-
-
-def rename_delta_column(table_path: str, old: str, new: str) -> int:
-    """RENAME COLUMN as a metaData-only commit: legal ONLY on a
-    column-mapped table (physical parquet names never change — the
-    logical name in the schemaString is the single thing that moves,
-    which is the entire point of column mapping).  Returns the
-    committed version."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _latest_metadata,
-    )
-
-    for _ in range(_MAX_COMMIT_ATTEMPTS):
-        meta = _latest_metadata(table_path, None)
-        if meta is None:
-            raise FileNotFoundError(f"no Delta metadata at {table_path}")
-        if _mapping_mode(meta) not in ("name", "id"):
-            raise NotImplementedError(
-                f"{table_path}: RENAME COLUMN requires column mapping"
-                " (data files store logical names; a metadata-only"
-                " rename would orphan them)"
-            )
-        schema = json.loads(meta["schemaString"])
-        names = [f["name"] for f in schema["fields"]]
-        if old not in names:
-            raise ValueError(f"{table_path}: no column {old!r} to rename")
-        if new in names:
-            raise ValueError(
-                f"{table_path}: column {new!r} already exists"
-            )
-        for f in schema["fields"]:
-            if f["name"] == old:
-                f["name"] = new
-        new_meta = dict(meta)
-        cfg = new_meta.get("configuration") or {}
-        if isinstance(cfg, list):
-            cfg = dict(cfg)
-        new_meta["configuration"] = cfg
-        new_meta["schemaString"] = json.dumps(schema)
-        v = _latest_version(table_path) + 1
-        actions = [
-            {"metaData": new_meta},
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {"from": old, "to": new},
-                }
-            },
-        ]
-        log = os.path.join(table_path, "_delta_log")
-        text = "".join(json.dumps(a) + "\n" for a in actions)
-        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
-            continue  # lost the race; re-read and retry
-        return v
-    raise ConcurrentWriteError(
-        f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} RENAME"
-        " attempts (pathological writer contention)"
-    )
-
-
 def write_delta_commit(
     df: DataFrame,
     table_path: str,
     mode: str = "append",
     checkpoint_interval: int = DEFAULT_CHECKPOINT_INTERVAL,
     txn: tuple[str, int] | None = None,
-    column_mapping: bool = False,
     expected_version: int | None = None,
 ) -> int | None:
     """Commit ``df`` to a Delta table (creating it if absent); returns
@@ -369,14 +271,11 @@ def write_delta_commit(
     CAS loser re-reads, sees the winner's watermark, and returns
     ``None`` (skipped-as-replay) instead of duplicating the batch.
 
-    ``column_mapping=True`` creates a NEW table in column-mapping
-    'name' mode (reader v2 / writer v5 protocol): the schemaString
-    carries per-field physicalName metadata and the parquet files
-    store the physical ``col-<uuid>`` names.  Appends to an existing
-    mapped table detect the mode from the log automatically (the flag
-    is creation-time only) and project logical -> physical before
-    staging; after :func:`rename_delta_column` the NEW logical names
-    are what an appending df must carry.
+    Tables are written without column mapping (reader v1 / writer v2
+    protocol).  A table whose log declares column mapping (written by
+    another engine) is refused with NotImplementedError before any
+    file is staged: its data files store physical names this writer
+    does not produce.  ``read_delta_table`` still reads such tables.
 
     ``expected_version`` is the optimistic-concurrency guard for
     read-modify-write callers: the commit raises
@@ -396,16 +295,14 @@ def write_delta_commit(
     ) >= int(txn[1]):
         return None  # replayed batch: already in the log; stage nothing
     if _latest_version(table_path) >= 0:
-        meta_existing = _latest_metadata(table_path, None)
+        if _mapping_mode(_latest_metadata(table_path, None)) != "none":
+            raise NotImplementedError(
+                f"{table_path}: the table declares column mapping; this"
+                " writer does not write physical column names"
+            )
         meta_action = None  # table exists; metaData only at v0
-        if _mapping_mode(meta_existing) in ("name", "id"):
-            df = _to_physical(df, meta_existing)
     else:
-        # metaData computed from the LOGICAL schema BEFORE any
-        # physical rename, so the log asserts user-facing names
-        meta_action = _metadata_action(df, column_mapping=column_mapping)
-        if column_mapping:
-            df = _to_physical(df, meta_action["metaData"])
+        meta_action = _metadata_action(df)
     adds = _stage_data_files(df, table_path)
     log = os.path.join(table_path, "_delta_log")
 
@@ -441,15 +338,7 @@ def write_delta_commit(
         if v == 0:
             assert meta_action is not None
             actions.append(
-                {
-                    "protocol": (
-                        # column mapping is reader v2 / writer v5
-                        # (PROTOCOL.md legacy feature mapping)
-                        {"minReaderVersion": 2, "minWriterVersion": 5}
-                        if column_mapping
-                        else {"minReaderVersion": 1, "minWriterVersion": 2}
-                    )
-                }
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
             actions.append(meta_action)
         if mode == "overwrite":

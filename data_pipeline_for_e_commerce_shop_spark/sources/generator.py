@@ -129,105 +129,6 @@ def register_generator(spark) -> None:
 
 
 # ---------------------------------------------------------------------
-# Custom Python DataSource WRITER: a manifest-committed JSON-lines sink
-# with the two-phase commit protocol made visible — tasks stage their
-# own part files and return commit messages; only the driver-side
-# commit() publishes them into the manifest.  A reader that trusts the
-# manifest (as sources/sinks.py's manifest consumers do) never sees
-# files from failed or speculative task attempts: the zombie-task
-# story of every real table format, in ~60 lines.
-
-import json as _json
-import os as _os
-import uuid as _uuid
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
-
-@dataclass
-class _PartCommit(WriterCommitMessage):
-    filename: str
-    n_rows: int
-
-
-class ManifestSinkWriter(DataSourceWriter):
-    def __init__(self, options: dict, overwrite: bool):
-        self.path = options["path"]
-        self.overwrite = overwrite
-
-    def write(self, iterator):  # executor-side, once per task attempt
-        _os.makedirs(self.path, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex}.jsonl"
-        n = 0
-        with open(_os.path.join(self.path, name), "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartCommit(filename=name, n_rows=n)
-
-    def commit(self, messages):  # driver-side, exactly once
-        manifest = {
-            "files": sorted(m.filename for m in messages),
-            "rows_per_file": {m.filename: m.n_rows for m in messages},
-            "n_rows": sum(m.n_rows for m in messages),
-        }
-        tmp = _os.path.join(self.path, "_manifest.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f, indent=1, sort_keys=True)
-        _os.replace(tmp, _os.path.join(self.path, "manifest.json"))
-        if self.overwrite:
-            # Overwrite semantics: once the new manifest is live,
-            # garbage-collect part files it does not reference
-            # (the previous commit's data).  Manifest readers never
-            # saw a mixed state — the swap above is the atom.
-            keep = set(manifest["files"])
-            for entry in _os.listdir(self.path):
-                if (
-                    entry.startswith("part-")
-                    and entry.endswith(".jsonl")
-                    and entry not in keep
-                ):
-                    _os.remove(_os.path.join(self.path, entry))
-
-    def abort(self, messages):  # driver-side on job failure
-        for m in messages:
-            try:
-                _os.remove(_os.path.join(self.path, m.filename))
-            except FileNotFoundError:
-                pass
-
-
-class ManifestSinkSource(DataSource):
-    """``df.write.format("manifestsink").option("path", ...).save()``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "manifestsink"
-
-    def schema(self) -> str:  # pragma: no cover — writer-only source
-        return "row_id bigint"
-
-    def writer(self, schema, overwrite: bool) -> ManifestSinkWriter:
-        return ManifestSinkWriter(self.options, overwrite)
-
-
-def register_manifest_sink(spark) -> None:
-    """Idempotently register the sink on the session."""
-    spark.dataSource.register(ManifestSinkSource)
-
-
-def read_manifest_table(spark, path: str):
-    """Read ONLY the files the manifest committed — orphaned part
-    files from failed attempts are invisible, which is the entire
-    point of the protocol."""
-    with open(_os.path.join(path, "manifest.json")) as f:
-        manifest = _json.load(f)
-    files = [_os.path.join(path, x) for x in manifest["files"]]
-    return spark.read.json(files), manifest
-
-
-# ---------------------------------------------------------------------
 # Custom Python STREAMING DataSource: a deterministic offset-tracked
 # event stream.  Each micro-batch generates the next STREAM_BATCH ids
 # from the same md5 row formula as the batch generator; the offset

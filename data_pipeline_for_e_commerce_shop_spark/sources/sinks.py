@@ -1,15 +1,16 @@
-"""Sink operators S5-S7, S9-S11 (SURVEY §2.1).
+"""Sink operators S5, S7, S9 and S10 (SURVEY §2.1).
 
 The medallion zones and KPI serving tables are plain parquet
 directories (Hive-style ``dt=`` partitions for the zones), written two
 ways: :func:`write_partitioned` replaces the partitions a batch
 carries (dynamic partition overwrite), and :func:`swap_parquet`
-replaces a whole table through a rename-aside swap (the KPI merge,
-compaction, erasure).  Versioned tables with concurrent writers use
-the Delta log instead (``sources/delta_writer``).  On a production
-cluster these map 1:1 onto Delta/Iceberg tables (noted per function);
-the operator semantics — partition-scoped overwrite,
-quarantine-with-reason, idempotent manifest — are identical.
+replaces a whole table through a rename-aside swap; its one caller is
+the KPI merge (``operators/merge.upsert_parquet_table``).  Versioned
+tables with concurrent writers use the Delta log instead
+(``sources/delta_writer``).  On a production cluster these map 1:1
+onto Delta/Iceberg tables (noted per function); the operator
+semantics — partition-scoped overwrite, quarantine-with-reason — are
+identical.
 """
 
 from __future__ import annotations
@@ -57,15 +58,6 @@ def write_quarantine(
         .write.mode("append")
         .parquet(path)
     )
-
-
-def write_manifest(path: str, payload: dict) -> None:
-    """S6: one-row JSON result manifest
-    (reference scripts/validation.py:132-142) — driver-side by design;
-    it is control metadata, not data."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(payload, f, sort_keys=True)
 
 
 def write_alert(alerts_path: str, payload: dict) -> None:
@@ -130,83 +122,3 @@ def swap_parquet(
     else:
         os.rename(staged, path)
 
-
-def compact_table(
-    spark,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    partition_col: str | None = None,
-) -> int:
-    """Small-file compaction — the maintenance job every streaming or
-    per-batch writer eventually needs (each micro-batch/day writes its
-    own files; a year later the table is a million 2 MB files and scan
-    planning dominates query time).
-
-    Rewrites the table with a row-count-targeted file size:
-    `maxRecordsPerFile` bounds file size without a global repartition;
-    the `coalesce` merges existing small partitions WITHOUT a shuffle
-    (coalesce only unions read splits).  With `partition_col` the
-    partition directory layout is re-created so readers' partition
-    pruning keeps working; note the row target then applies per task x
-    partition, so tune `target_rows_per_file` to the largest partition,
-    and the WHOLE table is rewritten — compact one partition at a time
-    by passing that partition's path instead.  Returns the number of
-    files after compaction.
-
-    The rewrite is promoted with :func:`swap_parquet` (local filesystem
-    only; at 100 TB use a transactional table format's OPTIMIZE, as
-    ``delta_writer.optimize_delta_table`` does for Delta tables).
-    """
-    import glob
-
-    def build():
-        df = spark.read.parquet(path)
-        n_files = max(1, -(-df.count() // target_rows_per_file))
-        w = df.coalesce(n_files).write.option(
-            "maxRecordsPerFile", target_rows_per_file
-        )
-        return w.partitionBy(partition_col) if partition_col else w
-
-    swap_parquet(path, build, "compact")
-    return len(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-
-
-def expire_partitions(
-    spark, path: str, partition_col: str, keep_latest: int
-) -> dict:
-    """Retention expiry for a partitioned table: drop all but the
-    latest N partitions, return an audit of what was removed.
-
-    On plain parquet this is a directory-level delete (partition
-    pruning makes it metadata-only — no data files are read); the
-    Delta form is ``DELETE WHERE dt < cutoff`` + VACUUM.  Partition
-    deletion, not row filtering, is what keeps retention O(partitions)
-    at 100 TB.
-    """
-
-    def _order_key(dirname: str):
-        # "latest" must follow the partition VALUE, not the directory
-        # string: numeric values sort lexicographically wrong
-        # (day=9 > day=10 as strings)
-        v = dirname.split("=", 1)[1]
-        try:
-            return (0, int(v), "")
-        except ValueError:
-            return (1, 0, v)
-
-    parts = sorted(
-        (d for d in os.listdir(path)
-         if d.startswith(f"{partition_col}=")),
-        key=_order_key,
-    )
-    kept = parts[-keep_latest:] if keep_latest > 0 else []
-    drop = parts[: len(parts) - len(kept)]
-    for d in drop:
-        shutil.rmtree(os.path.join(path, d))
-    return {
-        "path": path,
-        "dropped": [d.split("=", 1)[1] for d in drop],
-        "kept": [d.split("=", 1)[1] for d in kept],
-    }

@@ -3,7 +3,9 @@
 Oracle parity cannot catch a recursion both engines implement
 identically wrong; these tests fold arbitrary small inputs through
 pure-Python reference state machines and require the engine to match
-exactly (same model as the revenue-bridge property test).
+exactly (same model as the revenue-bridge property test).  The
+registered ema/holt folds are checked against their distributed WITH
+RECURSIVE twins, which live at the end of this file.
 """
 
 from __future__ import annotations
@@ -11,8 +13,11 @@ from __future__ import annotations
 import os
 
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
+from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 
 def test_inventory_replay_matches_python(spark, tmp_path):
@@ -175,17 +180,113 @@ def test_ema_holt_fold_matches_recursive_bitwise(spark):
     environment.  Exact tuple compare — including the double columns,
     which both forms derive from the same integers via double
     literals (1000.0D)."""
-    from data_pipeline_for_e_commerce_shop_spark import queries as Q
-
     sf = "/root/testdata/sf0.001"
     for name, demo in [
-        ("events_ema_recursive", Q.events_ema_recursive_demo),
-        ("events_holt_recursive", Q.events_holt_recursive_demo),
+        ("events_ema_recursive", events_ema_recursive_demo),
+        ("events_holt_recursive", events_holt_recursive_demo),
     ]:
-        fold = sorted(tuple(r) for r in Q.QUERIES[name](spark, sf).collect())
+        fold = sorted(tuple(r) for r in QUERIES[name](spark, sf).collect())
         rec = sorted(tuple(r) for r in demo(spark, sf).collect())
         assert fold == rec, (
             name,
             [p for p in zip(fold, rec) if p[0] != p[1]][:3],
         )
         assert len(fold) > 0
+
+
+def events_ema_recursive_demo(spark, sf_dir: str):
+    """Distributed WITH RECURSIVE twin of events_ema_recursive (Spark
+    4 recursive CTE; each recursion level is a plan iteration, not a
+    driver loop).  The reference the registered fold form is checked
+    against: test_ema_holt_fold_matches_recursive_bitwise asserts this
+    plan bit-matches it.
+    Spark recursion is UNION ALL-only (no fixpoint dedup), so the
+    shape fits MONOTONE recursions — sequences, hierarchies, DAGs;
+    each level costs ~100ms of scheduling regardless of data size, so
+    the recursive form only wins when levels must stay distributed
+    (state too wide for one row)."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type",
+        F.expr("unix_timestamp(ts) div 86400").alias("d"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    # materialise the |types|x|days| table BEFORE the recursion: each
+    # recursion level re-executes its source subtree, so an unchecked
+    # fact aggregate would rescan events once per day of depth (the
+    # pagerank plan lesson applied to WITH RECURSIVE)
+    idx = daily.withColumn(
+        "i",
+        F.row_number().over(
+            Window.partitionBy("event_type").orderBy("d")
+        )
+        - 1,
+    ).localCheckpoint(eager=False)
+    idx.createOrReplaceTempView("ema_idx")
+    return spark.sql(
+        """
+        WITH RECURSIVE ema(event_type, i, d, n, ema_scaled) AS (
+          SELECT event_type, i, d, n, CAST(n * 1000 AS BIGINT)
+          FROM ema_idx WHERE i = 0
+          UNION ALL
+          SELECT x.event_type, x.i, x.d, x.n,
+                 CAST((3 * x.n * 1000 + 7 * e.ema_scaled) div 10
+                      AS BIGINT)
+          FROM ema e
+          JOIN ema_idx x ON x.event_type = e.event_type
+                        AND x.i = e.i + 1
+        )
+        SELECT event_type, d AS day_epoch, CAST(n AS BIGINT) AS n_events,
+               ema_scaled, ema_scaled / 1000.0D AS ema
+        FROM ema
+        """
+    )
+
+
+def events_holt_recursive_demo(spark, sf_dir: str):
+    """Distributed WITH RECURSIVE twin of events_holt_recursive — the
+    reference the registered fold form is checked against
+    (test_ema_holt_fold_matches_recursive_bitwise asserts
+    bit-equality).  Uses the same offset-positive floor division as
+    the fold, and the same
+    materialise-before-recursion discipline (the |types|x|days| base
+    is checkpointed so recursion levels never rescan the fact)."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type",
+        F.expr("unix_timestamp(ts) div 86400").alias("d"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    idx = daily.withColumn(
+        "i",
+        F.row_number().over(
+            Window.partitionBy("event_type").orderBy("d")
+        )
+        - 1,
+    ).localCheckpoint(eager=False)
+    idx.createOrReplaceTempView("holt_idx")
+    return spark.sql(
+        """
+        WITH RECURSIVE holt(event_type, i, d, n, lvl, trd) AS (
+          SELECT event_type, i, d, n,
+                 CAST(n * 1000 AS BIGINT), CAST(0 AS BIGINT)
+          FROM holt_idx WHERE i = 0
+          UNION ALL
+          SELECT x.event_type, x.i, x.d, x.n,
+                 CAST(((3 * x.n * 1000 + 7 * (h.lvl + h.trd))
+                       + 1000000000000) div 10 - 100000000000
+                      AS BIGINT),
+                 CAST(((2 * (((3 * x.n * 1000 + 7 * (h.lvl + h.trd))
+                              + 1000000000000) div 10 - 100000000000
+                             - h.lvl)
+                        + 8 * h.trd)
+                       + 1000000000000) div 10 - 100000000000
+                      AS BIGINT)
+          FROM holt h
+          JOIN holt_idx x ON x.event_type = h.event_type
+                         AND x.i = h.i + 1
+        )
+        SELECT event_type, d AS day_epoch, CAST(n AS BIGINT) AS n_events,
+               lvl AS level_scaled, trd AS trend_scaled,
+               (lvl + trd) / 1000.0D AS forecast_next
+        FROM holt
+        """
+    )

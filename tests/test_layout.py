@@ -1,19 +1,11 @@
-"""Z-order layout: code correctness properties + the actual payoff —
-per-file min/max spans after a z-ordered write must be narrow on BOTH
-dimensions (that is what makes parquet stats prune)."""
+"""Layout operators: Morton-code properties, the compaction plan,
+dynamic partition pruning and the fan-out guard."""
 
 from __future__ import annotations
-
-import glob
-
-import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.operators import layout
-from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_morton_interleave_known_values(spark):
@@ -45,87 +37,6 @@ def test_morton_locality_monotone_within_quadrant(spark):
     low = max(z for (a, b), z in codes.items() if a < 4 and b < 4)
     high = min(z for (a, b), z in codes.items() if a >= 4 and b >= 4)
     assert low < high
-
-
-def test_zordered_write_narrows_file_spans(spark, tmp_path):
-    """After write_zordered on (l_orderkey, l_partkey), the AVERAGE
-    per-file value span of EACH dimension must be far below the global
-    span — the property min/max pruning needs.  A single-column sort
-    would narrow one dimension and leave the other full-width."""
-    li = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    path = str(tmp_path / "zorder")
-    layout.write_zordered(li, path, "l_orderkey", "l_partkey", n_files=16)
-
-    spans = {"l_orderkey": [], "l_partkey": []}
-    glob_minmax = {}
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        for col in spans:
-            idx = md.schema.names.index(col)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans[col].append(max(maxs) - min(mins))
-            g = glob_minmax.setdefault(col, [min(mins), max(maxs)])
-            g[0] = min(g[0], min(mins))
-            g[1] = max(g[1], max(maxs))
-    assert len(spans["l_orderkey"]) >= 8  # really multiple files
-    fracs = {}
-    for col, ss in spans.items():
-        global_span = glob_minmax[col][1] - glob_minmax[col][0]
-        fracs[col] = (sum(ss) / len(ss)) / global_span
-        # BOTH dims narrow (a single-column sort leaves one full-width;
-        # measured at 16 files: ~0.41 / ~0.30)
-        assert fracs[col] < 0.55, (col, fracs)
-    # compact rectangles: the average covered AREA fraction is small
-    assert fracs["l_orderkey"] * fracs["l_partkey"] < 0.2, fracs
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Two tables co-bucketed on the join key must join with ZERO
-    shuffle exchanges — the storage-level join contract."""
-    import re
-
-    from data_pipeline_for_e_commerce_shop_spark.operators.layout import (
-        bucketed_join,
-        write_bucketed,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
-        physical_plan,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    write_bucketed(orders, "t_orders_b", "o_orderkey", 4, str(tmp_path / "o"))
-    write_bucketed(li, "t_lineitem_b", "l_orderkey", 4, str(tmp_path / "l"))
-    # force the join strategy decision away from broadcast so the
-    # bucket metadata is what saves the shuffle
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed_join(
-            spark, "t_orders_b", "t_lineitem_b", "o_orderkey", "l_orderkey"
-        )
-        plan = physical_plan(j)
-        assert "SortMergeJoin" in plan, plan
-        n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        assert n_exchange == 0, plan
-        # and it computes the right thing
-        expected = orders.join(
-            li, orders.o_orderkey == li.l_orderkey
-        ).count()
-        assert j.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
 
 def test_compaction_plan_conserves_and_packs(spark):
@@ -211,7 +122,7 @@ def test_fan_out_spreads_a_single_split_frame(spark):
     ``defaultParallelism`` partitions."""
     import re
 
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         physical_plan,
     )
 
@@ -226,7 +137,7 @@ def test_fan_out_spreads_a_single_split_frame(spark):
 def test_fan_out_leaves_a_wide_frame_alone(spark):
     """A frame with at least ``defaultParallelism`` partitions comes
     back unchanged: no new Exchange."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 

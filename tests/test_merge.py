@@ -194,8 +194,8 @@ def test_upsert_concurrent_writer_boundary(spark, tmp_path):
     LOST UPDATE — the second writer, having read before the first
     wrote, silently drops the first writer's rows.  Delta's optimistic
     concurrency would instead fail the second commit.  That behavior
-    exists on the Delta log: merge.upsert_versioned_table pins the
-    version it read, rejects the stale commit and retries on the new
+    exists on the Delta log: delta_writer.rewrite_delta_table pins the
+    version it read, rejects the stale commit and re-folds on the new
     latest version (tests/test_round4_invariants.test_versioned_cas_
     two_writers_exactly_one_wins); this test keeps asserting the plain
     path's boundary so the difference stays documented."""

@@ -1,5 +1,5 @@
 """Multimodal plumbing: schema, Arrow batch shape, deterministic
-feature extraction, stubbed codec gate."""
+feature extraction, frame sampling."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.operators.multimodal import (
     FEATURE_SCHEMA,
-    decode_media_real,
     extract_features,
     media_table,
 )
@@ -45,11 +44,6 @@ def test_features_partition_preserving(spark, sf_dir):
     media = media_table(spark, sf_dir).repartition(4)
     feats = extract_features(media)
     assert feats.rdd.getNumPartitions() == 4
-
-
-def test_real_decoder_is_gated(spark, sf_dir):
-    with pytest.raises(NotImplementedError):
-        decode_media_real(media_table(spark, sf_dir))
 
 
 def test_payload_roundtrip_is_exact(spark, sf_dir):

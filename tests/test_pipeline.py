@@ -197,126 +197,6 @@ def test_expectation_summary_counts_and_single_scan(spark, sf_dir):
     assert plan.count("Scan parquet") == n_tables
 
 
-def test_observed_metrics_single_pass(spark, sf_dir):
-    """df.observe metrics must equal a separate aggregate — and arrive
-    from the SAME action (no extra scan)."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.quality.gates import (
-        load_with_observed_metrics,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-
-    observed, obs = load_with_observed_metrics(spark, sf_dir)
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    truth = (
-        load_table(spark, sf_dir, "orders")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("o_totalprice").isNull().cast("long")).alias(
-                "n_null_price"
-            ),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100).cast("long")
-            ).alias("sum_cents"),
-        )
-        .collect()[0]
-    )
-    assert got["n_rows"] == truth["n_rows"]
-    assert got["n_null_price"] == truth["n_null_price"]
-    assert got["sum_cents"] == truth["sum_cents"]
-
-
-def test_erase_user_rewrites_without_subject(spark, sf_dir, tmp_path):
-    from data_pipeline_for_e_commerce_shop_spark.quality.privacy import (
-        erase_user,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-
-    p = str(tmp_path / "orders")
-    load_table(spark, sf_dir, "orders").write.parquet(p)
-    victim = spark.read.parquet(p).select("o_custkey").first()[0]
-    audit = erase_user(spark, p, "o_custkey", victim)
-    assert audit["n_erased"] > 0
-    assert audit["consistent"]
-    left = spark.read.parquet(p)
-    assert left.where(left.o_custkey == victim).count() == 0
-    assert left.count() == audit["n_after"]
-
-
-def test_expire_partitions_drops_oldest(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
-        expire_partitions,
-        write_partitioned,
-    )
-
-    p = str(tmp_path / "events_by_day")
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "dt", F.to_date("ts").cast("string")
-    )
-    write_partitioned(ev, p, "dt")
-    import os
-
-    n_parts = len([d for d in os.listdir(p) if d.startswith("dt=")])
-    assert n_parts > 3
-    audit = expire_partitions(spark, p, "dt", keep_latest=3)
-    assert len(audit["kept"]) == 3
-    assert len(audit["dropped"]) == n_parts - 3
-    remaining = spark.read.parquet(p)
-    assert remaining.select("dt").distinct().count() == 3
-    # partition values are type-inferred on read (date), audit keeps
-    # the raw directory strings
-    assert str(
-        min(r[0] for r in remaining.select("dt").distinct().collect())
-    ) == min(audit["kept"])
-
-
-def test_erase_user_preserves_null_keys(spark, tmp_path):
-    """NULL-keyed rows are not the subject and must survive erasure
-    (a non-null-safe predicate silently dropped them)."""
-    from data_pipeline_for_e_commerce_shop_spark.quality.privacy import (
-        erase_user,
-    )
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (None, "c"), (None, "d")],
-        "k long, v string",
-    ).write.parquet(p)
-    audit = erase_user(spark, p, "k", 1)
-    assert audit["n_erased"] == 1 and audit["consistent"]
-    left = spark.read.parquet(p)
-    assert left.count() == 3
-    assert left.where(left.k.isNull()).count() == 2
-
-
-def test_expire_partitions_numeric_order_and_zero_keep(spark, tmp_path):
-    """'Latest' follows the partition VALUE (9 < 10 numerically), and
-    keep_latest=0 reports an empty kept list."""
-    import os
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
-        expire_partitions,
-    )
-
-    p = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(9, 1), (10, 2), (11, 3)], "day long, x long"
-    )
-    df.write.partitionBy("day").parquet(p)
-    audit = expire_partitions(spark, p, "day", keep_latest=2)
-    assert audit["dropped"] == ["9"]
-    assert sorted(audit["kept"]) == ["10", "11"]
-    audit0 = expire_partitions(spark, p, "day", keep_latest=0)
-    assert audit0["kept"] == []
-    assert sorted(audit0["dropped"]) == ["10", "11"]
-    assert not [d for d in os.listdir(p) if d.startswith("day=")]
-
-
 def test_cli_list_run_sql(capsys):
     """The CLI front door: list filters, run executes a registered
     query, sql answers ad-hoc statements over the table views."""

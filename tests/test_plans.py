@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from data_pipeline_for_e_commerce_shop_spark import queries as Q
-from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+from tests.plan_utils import (
     broadcast_join_count,
     has_nested_loop_join,
     physical_plan,
@@ -535,7 +535,7 @@ def test_interval_join_is_equi_keyed(spark):
 def test_repetition_is_shuffle_free_projection(spark):
     """Gopher repetition scoring must stay a pure map-side projection:
     zero exchanges, scan pruned to (doc_id, text)."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 
@@ -549,7 +549,7 @@ def test_scd2_single_shuffle(spark):
     """The SCD2 builder must shuffle the change log exactly once (hash
     on the dimension key); both windows and the island aggregation
     reuse that partitioning."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 
@@ -560,7 +560,7 @@ def test_scd2_single_shuffle(spark):
 def test_frame_sampling_no_shuffle(spark):
     """The 1:N frame sampler inherits scan partitioning — any Exchange
     means the mapInPandas stage was accidentally repartitioned."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 
@@ -573,7 +573,7 @@ def test_corpus_ops_plan_shapes(spark):
     quality-weighted sample are ZERO-shuffle projections; packing
     shuffles exactly once (on the shard key); the random projection is
     a zero-shuffle scan pruned to (vec_id, embedding)."""
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 
@@ -651,7 +651,7 @@ EXCHANGE_BUDGETS = {
 
 @pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGETS))
 def test_exchange_budget(spark, name):
-    from data_pipeline_for_e_commerce_shop_spark.plans.inspect import (
+    from tests.plan_utils import (
         exchange_count,
     )
 

@@ -175,12 +175,12 @@ def test_versioned_cas_two_writers_exactly_one_wins(spark, tmp_path):
     version 0 race their commits — exactly one wins version 1, the
     loser's commit raises ConcurrentWriteError WITHOUT publishing (no
     log entry, no staged file left), and the retry path
-    (upsert_versioned_table) lands every row: no lost update."""
+    (rewrite_delta_table with a coalescing_merge fold) re-reads and
+    re-folds after a lost race: no lost update."""
     import glob
 
     from data_pipeline_for_e_commerce_shop_spark.operators.merge import (
         coalescing_merge,
-        upsert_versioned_table,
     )
     from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
         delta_log_versions,
@@ -188,6 +188,7 @@ def test_versioned_cas_two_writers_exactly_one_wins(spark, tmp_path):
     )
     from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
         ConcurrentWriteError,
+        rewrite_delta_table,
         write_delta_commit,
     )
 
@@ -198,9 +199,25 @@ def test_versioned_cas_two_writers_exactly_one_wins(spark, tmp_path):
             rows, "k string, a long, b double, data_sources array<string>"
         )
 
-    assert upsert_versioned_table(
-        spark, path, _df([("k0", 1, 1.0, ["base"])]), ["k"], ["a", "b"]
-    ) == 0
+    def upsert(rows, before_first_commit=None):
+        """rewrite_delta_table with a coalescing_merge fold; returns the
+        committed version and how many times the fold ran."""
+        src = _df(rows)
+        folds = 0
+
+        def fold(current):
+            nonlocal folds
+            folds += 1
+            if current is None:
+                return src
+            merged = coalescing_merge(current, src, ["k"], ["a", "b"])
+            if before_first_commit is not None and folds == 1:
+                before_first_commit()
+            return merged
+
+        return rewrite_delta_table(spark, path, fold), folds
+
+    assert upsert([("k0", 1, 1.0, ["base"])]) == (0, 1)
 
     # interleaved read phase: both writers snapshot version 0
     cur = delta_log_versions(path)[-1]
@@ -226,12 +243,16 @@ def test_versioned_cas_two_writers_exactly_one_wins(spark, tmp_path):
     keys_v1 = {r["k"] for r in read_delta_table(spark, path).collect()}
     assert keys_v1 == {"k0", "kA"}
 
-    # loser retries through the optimistic-concurrency loop
-    assert upsert_versioned_table(
-        spark, path, _df([("kB", 3, None, ["wb"])]), ["k"], ["a", "b"]
-    ) == 2
+    # the loser retries through the optimistic-concurrency loop; a
+    # third writer commits kC after the loop's read, so the loop's
+    # first commit loses too and it must re-read and re-fold
+    def third_writer():
+        assert upsert([("kC", 4, None, ["wc"])]) == (2, 1)
+
+    assert upsert([("kB", 3, None, ["wb"])], third_writer) == (3, 2)
+    assert delta_log_versions(path) == [0, 1, 2, 3]
     final = {r["k"] for r in read_delta_table(spark, path).collect()}
-    assert final == {"k0", "kA", "kB"}  # nothing lost
+    assert final == {"k0", "kA", "kB", "kC"}  # nothing lost
 
 
 def test_versioned_blind_writer_retries_next_version(
@@ -293,79 +314,6 @@ def test_diff_query_seeded_fault_produces_readable_diff(spark, sf_dir):
     assert m["spark"] != m["oracle"]  # both sides shown, typed reprs
 
 
-def test_versioned_incremental_fold_multi_writer(spark, tmp_path):
-    """Streaming additive folds through the Delta serving table: a
-    competing writer's commit between drains is NOT lost (the fold
-    re-reads the new latest version), the checkpoint still guarantees
-    exactly-once (a re-drain with no new files commits nothing), and
-    every state is time-travelable."""
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        delta_log_versions,
-        read_delta_table,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.streaming.incremental import (
-        accumulate_into,
-        partial_category_kpis,
-        run_incremental_kpis,
-    )
-
-    schema = StructType(
-        [
-            StructField("category", StringType()),
-            StructField("order_date", StringType()),
-            StructField("status", StringType()),
-            StructField("sale_price", DoubleType()),
-            StructField("user_id", StringType()),
-        ]
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    table = str(tmp_path / "serving")
-    ckpt = str(tmp_path / "ckpt")
-
-    def cents(version=None):
-        return {
-            (r["category"], r["order_date"]): r["revenue_cents"]
-            for r in read_delta_table(spark, table, version).collect()
-        }
-
-    wave1 = [("toys", "2024-03-01", "delivered", 10.00, "u1")]
-    spark.createDataFrame(wave1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    run_incremental_kpis(spark, str(src), schema, table, ckpt)
-    assert delta_log_versions(table)[-1] == 0
-    assert cents()[("toys", "2024-03-01")] == 1000
-
-    # competing writer lands between drains
-    other = spark.createDataFrame(
-        [("toys", "2024-03-01", "delivered", 2.00, "u9")], schema
-    )
-    assert accumulate_into(spark, table, partial_category_kpis(other)) == 1
-
-    wave2 = [("toys", "2024-03-01", "delivered", 5.00, "u2")]
-    spark.createDataFrame(wave2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    run_incremental_kpis(spark, str(src), schema, table, ckpt)
-    assert delta_log_versions(table)[-1] == 2
-    # wave1 + competing writer + wave2 all present — nothing lost
-    assert cents()[("toys", "2024-03-01")] == 1000 + 200 + 500
-
-    # exactly-once: re-drain with no new files commits nothing
-    run_incremental_kpis(spark, str(src), schema, table, ckpt)
-    assert delta_log_versions(table)[-1] == 2
-    # time travel still sees the pre-competing-writer state
-    assert cents(version=0)[("toys", "2024-03-01")] == 1000
-
-
 def _stage_parquet_file(spark, df, dest: str) -> None:
     """Write df as ONE parquet file at exactly `dest`."""
     import glob
@@ -400,9 +348,6 @@ def test_delta_log_reader_replays_adds_and_removes(spark, tmp_path):
         delta_log_versions,
         read_delta_table,
     )
-    from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
-        read_polymorphic,
-    )
 
     table = str(tmp_path / "dtable")
     import os as _os
@@ -430,13 +375,6 @@ def test_delta_log_reader_replays_adds_and_removes(spark, tmp_path):
     assert v0 == {0, 1, 2}  # time travel to fileA
     # raw directory scan reads removed + orphan files — 10 rows
     assert spark.read.parquet(table).count() == 10
-    # polymorphic dispatch routes Delta dirs through the log
-    import pyspark.sql.types as T
-
-    poly = read_polymorphic(
-        spark, table, T.StructType([T.StructField("x", T.LongType())])
-    )
-    assert {r["x"] for r in poly.collect()} == {10, 11}
 
 
 def test_delta_log_reader_refuses_lossy_reads(spark, tmp_path):

@@ -153,7 +153,8 @@ def test_ema_holt_offset_division_is_floor(spark):
 
 
 def test_copurchase_support_density_rule(spark, tmp_path):
-    """The data-derived co-purchase support threshold must equal
+    """The data-derived co-purchase support threshold
+    (graph.support_from_baskets) must equal
     max(floor, (pair_occ div n_parts) div 30) — engaging only when
     order density grows against the catalog — and prune edges with
     the raised threshold.  Pure-Python replay of the 1-row rule."""
@@ -180,7 +181,9 @@ def test_copurchase_support_density_rule(spark, tmp_path):
 
     # pair_occ = 60 * C(3,2) + C(2,2 pairs)=1 = 181; n_parts = 4
     # thr = max(2, (181 div 4) div 30) = max(2, 1) = 2 at divisor 30
-    thr = graph.copurchase_support(spark, d).collect()[0]["s"]
+    baskets = graph.basket_sets(spark, d)
+    thr = graph.support_from_baskets(spark, d, baskets).collect()[0]["s"]
+    baskets.unpersist()
     occ = 60 * 3 + 1
     exp = max(
         graph.MIN_SUPPORT, (occ // 4) // graph.SUPPORT_DENSITY_DIVISOR

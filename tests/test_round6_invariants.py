@@ -442,6 +442,31 @@ def test_column_mapped_nested_refuses(spark, tmp_path):
         read_delta_table(spark, t)
 
 
+def test_append_to_column_mapped_table_is_refused(spark, tmp_path):
+    """The writer does not write physical column names, so an append
+    to a table whose log declares column mapping must refuse before it
+    stages a file or claims a version.  A checkpoint of that table
+    keeps the mapping mode, so reads after VACUUM stay logical."""
+    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+        _write_checkpoint,
+    )
+
+    t = str(tmp_path / "mapped")
+    _write_mapped_table(spark, t, mode="name")
+    before = sorted(os.listdir(t))
+    df = spark.range(5, 7).selectExpr("id AS x", "CAST(id AS STRING) AS y")
+    with pytest.raises(NotImplementedError, match="column mapping"):
+        write_delta_commit(df, t)
+    assert sorted(os.listdir(t)) == before
+    assert delta_log_versions(t) == [0]
+
+    _write_checkpoint(t, 0)
+    vacuum_delta_table(t, retention_ms=0)
+    got = read_delta_table(spark, t)
+    assert got.columns == ["x", "y"]
+    assert sorted(r["x"] for r in got.collect()) == list(range(5))
+
+
 def _z85_encode(b: bytes) -> str:
     """Test-side Z85 encoder (independent of the reader's decoder
     direction; alphabet from the public ZeroMQ spec)."""

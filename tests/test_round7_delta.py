@@ -253,85 +253,3 @@ def test_dv_decode_distributed_beyond_old_driver_cap(spark, tmp_path):
     assert df.count() == n_rows - n_del
     lo = df.agg({"x": "min"}).first()[0]
     assert lo == n_del  # every position below n_del masked
-
-
-def test_column_mapping_write_rename_append_roundtrip(spark, tmp_path):
-    """VERDICT r6 item 4: create a column-mapped table, rename a
-    column, append under the NEW logical name, and read back through
-    the engine's own v2/v3 reader — full logical round trip, physical
-    parquet names opaque col-<uuid>s throughout."""
-    import glob as g
-
-    import pyarrow.parquet as pq
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _latest_metadata,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
-        rename_delta_column,
-    )
-
-    t = str(tmp_path / "cmap")
-    df = spark.range(0, 5).selectExpr("id AS x", "id * 10 AS y")
-    assert write_delta_commit(df, t, column_mapping=True) == 0
-    # data files store PHYSICAL names (stock-reader shape)
-    pf = pq.read_schema(g.glob(f"{t}/part-*.parquet")[0])
-    assert all(n.startswith("col-") for n in pf.names)
-    got = read_delta_table(spark, t)
-    assert got.columns == ["x", "y"]
-    assert sorted(r["y"] for r in got.collect()) == [0, 10, 20, 30, 40]
-
-    v = rename_delta_column(t, "y", "z")
-    assert v == 1
-    assert read_delta_table(spark, t).columns == ["x", "z"]
-    # physicalName unchanged by the rename
-    meta = _latest_metadata(t, None)
-    fields = {f["name"]: f for f in json.loads(meta["schemaString"])["fields"]}
-    assert "z" in fields and "y" not in fields
-
-    # append under the NEW logical name
-    df2 = spark.range(100, 102).selectExpr("id AS x", "id * 10 AS z")
-    assert write_delta_commit(df2, t) == 2
-    out = read_delta_table(spark, t)
-    assert out.columns == ["x", "z"]
-    assert sorted(r["x"] for r in out.collect()) == [0, 1, 2, 3, 4, 100, 101]
-
-    # checkpoint + vacuum: configuration (mapping mode) must survive
-    # the checkpoint seed or the post-vacuum read returns col-<uuid>s
-    _write_checkpoint(t, 2)
-    vacuum_delta_table(t, retention_ms=0)
-    out2 = read_delta_table(spark, t)
-    assert out2.columns == ["x", "z"]
-    assert sorted(r["x"] for r in out2.collect()) == [0, 1, 2, 3, 4, 100, 101]
-
-
-def test_column_mapping_refusals(spark, tmp_path):
-    """Rename without mapping refuses (data files store logical names);
-    nested schemas refuse mapping at creation."""
-    import pytest
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
-        rename_delta_column,
-    )
-
-    t = str(tmp_path / "plain")
-    write_delta_commit(_mk(spark, 0, 3), t)
-    with pytest.raises(NotImplementedError, match="column mapping"):
-        rename_delta_column(t, "x", "y")
-    with pytest.raises(ValueError, match="no column"):
-        rename_delta_column_on_mapped_missing(spark, tmp_path)
-    nested = spark.sql("SELECT named_struct('a', 1) AS s, 2 AS x")
-    with pytest.raises(NotImplementedError, match="nested"):
-        write_delta_commit(
-            nested, str(tmp_path / "nst"), column_mapping=True
-        )
-
-
-def rename_delta_column_on_mapped_missing(spark, tmp_path):
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
-        rename_delta_column,
-    )
-
-    t = str(tmp_path / "cmap2")
-    write_delta_commit(_mk(spark, 0, 3), t, column_mapping=True)
-    rename_delta_column(t, "nope", "y")

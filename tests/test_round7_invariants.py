@@ -12,9 +12,9 @@
   (the salted-join / delta-maintenance oracle pairing used truncating
   ``div``, which diverges on pre-1970 timestamps or negative cents).
 
-Delta-protocol round-7 work (distributed DV decode, column-mapping
-writer, DV-aware OPTIMIZE, DV checkpoints, partitioned checkpoints,
-DV-bin vacuum) is covered in test_round7_delta.py.
+Delta-protocol round-7 work (distributed DV decode, DV-aware
+OPTIMIZE, DV checkpoints, partitioned checkpoints, DV-bin vacuum) is
+covered in test_round7_delta.py.
 """
 
 from __future__ import annotations
@@ -100,20 +100,27 @@ def test_floordiv_pairing_is_version_stable_floor(spark, a, b):
     r6 finding showed the deeper trap: DuckDB 1.0's integer ``//``
     TRUNCATES toward zero (−100 // 86400 = 0) while later releases
     floor — bare ``//`` in an oracle is version-dependent, the exact
-    r5-verdict divergence class.  queries._ora_floordiv subtracts the
-    pmod remainder first, so the final division is over an exact
-    multiple where floor == truncation and EVERY DuckDB version
-    agrees; scalars.floordiv_sql is its Spark twin."""
+    r5-verdict divergence class.  The oracle side subtracts the pmod
+    remainder first, so the final division is over an exact multiple
+    where floor == truncation and EVERY DuckDB version agrees; the
+    oracles of event_type_salted_join and
+    events_stream_delta_exactly_once carry this form inline, and
+    scalars.floordiv_sql is its Spark twin."""
     import duckdb
 
-    from data_pipeline_for_e_commerce_shop_spark.queries import (
-        _ora_floordiv,
-    )
+    from data_pipeline_for_e_commerce_shop_spark.queries import ORACLES
+
+    def oracle_floordiv(x: str, y: str) -> str:
+        return f"((({x}) - ((({x}) % ({y})) + ({y})) % ({y})) // ({y}))"
+
+    day = oracle_floordiv("CAST(floor(epoch(ts)) AS BIGINT)", "86400")
+    assert day in ORACLES["event_type_salted_join"]
+    assert day in ORACLES["events_stream_delta_exactly_once"]
 
     got = spark.sql(
         f"SELECT {floordiv_sql(str(a), str(b))} AS q"
     ).first().q
     want = duckdb.sql(
-        f"SELECT {_ora_floordiv(str(a), str(b))} AS q"
+        f"SELECT {oracle_floordiv(str(a), str(b))} AS q"
     ).fetchone()[0]
     assert got == want == a // b  # python // is true floor

@@ -1,5 +1,6 @@
-"""Source/sink operators: polymorphic dispatch, multipart scan,
-dynamic partition overwrite, quarantine provenance."""
+"""Source/sink operators: multipart scan, header probe, dynamic
+partition overwrite, quarantine provenance, alerts, the generator
+sources and Delta time travel."""
 
 from __future__ import annotations
 
@@ -11,10 +12,7 @@ from pyspark.sql import functions as F
 from data_pipeline_for_e_commerce_shop_spark.schemas import ORDERS_SCHEMA
 from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
     read_csv_entity,
-    read_multipart,
-    read_polymorphic,
     schema_probe,
-    union_by_name,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
     write_partitioned,
@@ -35,33 +33,10 @@ def test_multipart_single_relation(spark, tmp_path):
     p1, p2 = str(tmp_path / "a.csv"), str(tmp_path / "b.csv")
     open(p1, "w").write(CSV)
     open(p2, "w").write(CSV2)
-    df = read_multipart(spark, [p1, p2], ORDERS_SCHEMA)
+    df = read_csv_entity(spark, [p1, p2], ORDERS_SCHEMA)
     assert df.count() == 3
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan  # single multi-path relation
-
-
-def test_union_by_name_schema_drift(spark, tmp_path):
-    a = spark.createDataFrame([(1, "x")], "id long, s string")
-    b = spark.createDataFrame([("y", 2)], "s string, id long")  # reordered
-    out = union_by_name([a, b])
-    assert {(r["id"], r["s"]) for r in out.collect()} == {(1, "x"), (2, "y")}
-
-
-def test_polymorphic_reader_dispatch(spark, tmp_path):
-    """S3: explicit format probe, not exception-driven fallback
-    (reference scripts/validation.py:51-64)."""
-    csv_path = str(tmp_path / "raw.csv")
-    open(csv_path, "w").write(CSV)
-    pq_path = str(tmp_path / "table_pq")
-    read_csv_entity(spark, csv_path, ORDERS_SCHEMA, capture_corrupt=False).write.parquet(
-        pq_path
-    )
-    from_csv = read_polymorphic(spark, csv_path, ORDERS_SCHEMA)
-    from_pq = read_polymorphic(spark, pq_path, ORDERS_SCHEMA)
-    assert from_csv.count() == 2
-    assert from_pq.count() == 2
-    assert "order_id" in from_pq.columns
 
 
 def test_schema_probe_reads_actual_header(tmp_path):
@@ -142,88 +117,6 @@ def test_alert_file_name_is_stable_across_processes(tmp_path):
     assert len(os.listdir(tmp_path)) == 1
 
 
-def test_normalize_path():
-    """P10/F10: scheme rewrite + URL-decode, pre-plan (reference
-    scripts/transformation.py:18-27, lambda/s3_validation.py:44)."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
-        normalize_path,
-    )
-
-    assert normalize_path("s3://b/raw/orders_part1.csv") == "s3a://b/raw/orders_part1.csv"
-    assert normalize_path("s3://b/raw/my%20file+x.csv") == "s3a://b/raw/my file x.csv"
-    assert normalize_path("/local/path.csv") == "/local/path.csv"
-    # Local paths with literal '+'/'%XX' must pass through untouched —
-    # only S3 event-notification keys are form-encoded.
-    assert normalize_path("/local/a+b.csv") == "/local/a+b.csv"
-    assert normalize_path("/local/100%20.csv") == "/local/100%20.csv"
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path, sf_dir):
-    import glob
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
-        compact_table,
-    )
-
-    tbl = str(tmp_path / "frag")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # fragment: many tiny files, as a per-batch writer would leave
-    orders.repartition(40).write.mode("overwrite").parquet(tbl)
-    before = len(glob.glob(f"{tbl}/*.parquet"))
-    assert before >= 40
-    n_rows = orders.count()
-
-    after = compact_table(spark, tbl, target_rows_per_file=n_rows)
-    assert after < before and after <= 2
-    assert spark.read.parquet(tbl).count() == n_rows
-
-
-def test_schema_evolution_merge(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
-        read_with_schema_evolution,
-    )
-
-    tbl = str(tmp_path / "evolving")
-    v1 = spark.range(5).select(F.col("id"), F.lit("a").alias("name"))
-    v1.write.mode("overwrite").parquet(tbl)
-    v2 = spark.range(5, 10).select(
-        F.col("id"), F.lit("b").alias("name"), F.lit(1.5).alias("score")
-    )
-    v2.write.mode("append").parquet(tbl)
-
-    df = read_with_schema_evolution(spark, tbl)
-    assert set(df.columns) == {"id", "name", "score"}
-    assert df.count() == 10
-    # v1 rows surface NULL for the later-added column
-    assert df.where(F.col("score").isNull()).count() == 5
-
-
-def test_polymorphic_reader_orc_and_json(spark, tmp_path):
-    """The format probe must dispatch ORC and JSON-lines tables to the
-    right reader and return identical rows to the parquet original."""
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
-        read_polymorphic,
-    )
-
-    base = load_table(spark, "/root/testdata/sf0.001", "orders")
-    d = str(tmp_path)
-    base.write.mode("overwrite").orc(f"{d}/orders_orc")
-    base.write.mode("overwrite").json(f"{d}/orders_json")
-    want = sorted(map(tuple, base.collect()))
-    got_orc = read_polymorphic(spark, f"{d}/orders_orc", base.schema)
-    got_json = read_polymorphic(spark, f"{d}/orders_json", base.schema)
-    assert sorted(map(tuple, got_orc.collect())) == want
-    # JSON round-trips timestamps through strings; compare on the
-    # schema-projected columns.
-    assert got_json.count() == base.count()
-    assert sorted(r["o_orderkey"] for r in got_json.collect()) == sorted(
-        r["o_orderkey"] for r in base.collect()
-    )
-
-
 def test_synthetic_generator_source_contract(spark):
     """The custom Python DataSource must honor the partitions option
     (one input partition per requested slice), generate exactly n
@@ -283,64 +176,6 @@ def test_synthetic_generator_filter_pushdown(spark):
     assert got == list(range(100, 200))
 
 
-def test_manifest_sink_two_phase_commit(spark, tmp_path):
-    """The Python DataSourceWriter must publish exactly the committed
-    part files in its manifest (counts reconcile), and a manifest
-    reader must ignore orphan files planted to simulate a failed task
-    attempt."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.generator import (
-        read_manifest_table,
-        register_manifest_sink,
-    )
-
-    register_manifest_sink(spark)
-    d = str(tmp_path / "sink")
-    df = spark.range(100).selectExpr(
-        "id AS row_id", "CAST(id % 7 AS STRING) AS bucket"
-    ).repartition(4)
-    df.write.format("manifestsink").option("path", d).mode("append").save()
-
-    # Simulate a zombie/failed attempt leaving an uncommitted file.
-    with open(f"{d}/part-orphan.jsonl", "w") as f:
-        f.write('{"row_id": 999999, "bucket": "x"}\n')
-
-    got, manifest = read_manifest_table(spark, d)
-    assert manifest["n_rows"] == 100
-    assert sum(manifest["rows_per_file"].values()) == 100
-    assert len(manifest["files"]) == 4
-    rows = sorted(r["row_id"] for r in got.collect())
-    assert rows == list(range(100))  # orphan invisible
-
-
-def test_manifest_sink_failed_job_publishes_nothing(spark, tmp_path):
-    """A failing write job must leave NO manifest — consumers see the
-    table as absent, not half-written."""
-    import pytest
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.generator import (
-        register_manifest_sink,
-    )
-
-    register_manifest_sink(spark)
-    d = str(tmp_path / "sink")
-    from pyspark.sql import functions as F
-
-    @F.udf("long")
-    def boom(x):
-        if x == 50:
-            raise RuntimeError("task failure")
-        return x
-
-    bad = spark.range(100).select(boom("id").alias("row_id")).repartition(4)
-    with pytest.raises(Exception):
-        bad.write.format("manifestsink").option("path", d).mode(
-            "append"
-        ).save()
-    import os
-
-    assert not os.path.exists(f"{d}/manifest.json")
-
-
 def test_tick_stream_resumes_from_checkpoint(spark, tmp_path):
     """Each availableNow drain through the SAME checkpoint must resume
     at the persisted offset: two drains yield batches [0, 2*batch)
@@ -366,69 +201,6 @@ def test_tick_stream_resumes_from_checkpoint(spark, tmp_path):
         q.awaitTermination()
     ids = sorted(r["row_id"] for r in spark.read.parquet(out).collect())
     assert ids == list(range(2 * STREAM_BATCH))
-
-
-def test_manifest_sink_overwrite_garbage_collects(spark, tmp_path):
-    """mode('overwrite') must leave only the new commit's part files
-    on disk; append keeps accumulating but the manifest always names
-    the latest commit."""
-    import os
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.generator import (
-        read_manifest_table,
-        register_manifest_sink,
-    )
-
-    register_manifest_sink(spark)
-    d = str(tmp_path / "sink")
-    df1 = spark.range(50).selectExpr("id AS row_id").repartition(2)
-    df1.write.format("manifestsink").option("path", d).mode("append").save()
-    df2 = spark.range(100, 130).selectExpr("id AS row_id").repartition(2)
-    df2.write.format("manifestsink").option("path", d).mode(
-        "overwrite"
-    ).save()
-    parts = [p for p in os.listdir(d) if p.startswith("part-")]
-    got, manifest = read_manifest_table(spark, d)
-    assert sorted(parts) == manifest["files"]  # old parts GC'd
-    assert sorted(r["row_id"] for r in got.collect()) == list(
-        range(100, 130)
-    )
-
-
-def test_arrow_ipc_round_trip(spark, tmp_path):
-    """Distributed Arrow IPC sink -> source round trip: same rows, one
-    file per non-empty partition, manifest counts match."""
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources.arrow_ipc import (
-        read_arrow_ipc,
-        write_arrow_ipc,
-    )
-    from pyspark.sql import functions as F
-
-    src = load_table(spark, "/root/testdata/sf0.001", "orders").repartition(4)
-    out = str(tmp_path / "orders_arrow")
-    manifest = write_arrow_ipc(src, out)
-    files = manifest.collect()
-    assert 1 <= len(files) <= 4
-    assert sum(r["n_rows"] for r in files) == src.count()
-    back = read_arrow_ipc(spark, out)
-    assert back.schema == src.schema
-    a = {tuple(r) for r in src.collect()}
-    b = {tuple(r) for r in back.collect()}
-    assert a == b
-
-
-def test_arrow_ipc_reader_rejects_empty_dir(spark, tmp_path):
-    import pytest as _pytest
-
-    from data_pipeline_for_e_commerce_shop_spark.sources.arrow_ipc import (
-        read_arrow_ipc,
-    )
-
-    d = tmp_path / "empty"
-    d.mkdir()
-    with _pytest.raises(FileNotFoundError):
-        read_arrow_ipc(spark, str(d))
 
 
 def test_versioned_write_time_travel_and_expiry(spark, tmp_path, sf_dir):

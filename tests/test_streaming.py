@@ -1,5 +1,5 @@
-"""Control-plane semantics: gated streaming ingest (T1/T2), debounce
-windows (T3/T4), single-flight runner + state machine (T5-T9)."""
+"""Control-plane semantics: debounce windows (T3/T4), single-flight
+runner + state machine (T5-T9), and the streaming query operators."""
 
 from __future__ import annotations
 
@@ -12,60 +12,12 @@ import uuid
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_for_e_commerce_shop_spark.schemas import ORDERS_SCHEMA
 from data_pipeline_for_e_commerce_shop_spark.streaming.debounce import debounce_batches
-from data_pipeline_for_e_commerce_shop_spark.streaming.ingest import run_gated_ingest
 from data_pipeline_for_e_commerce_shop_spark.streaming.runner import (
     LEASE,
     BatchStateTable,
     run_until_drained,
 )
-
-GOOD_CSV = """order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item
-1,10,delivered,2024-03-01 10:00:00,,,,2
-2,11,shipped,2024-03-01 11:00:00,,,,1
-"""
-
-BAD_ROW_CSV = """order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item
-notanint,10,delivered,2024-03-01 10:00:00,,,,2
-3,12,delivered,2024-03-02 10:00:00,,,,1
-"""
-
-
-def test_gated_ingest_routes_corrupt_rows(spark, tmp_path):
-    inbox = tmp_path / "inbox"
-    os.makedirs(inbox)
-    (inbox / "orders_part1.csv").write_text(GOOD_CSV)
-    (inbox / "orders_part2.csv").write_text(BAD_ROW_CSV)
-
-    run_gated_ingest(
-        spark,
-        str(inbox),
-        ORDERS_SCHEMA,
-        admitted_path=str(tmp_path / "admitted"),
-        rejected_path=str(tmp_path / "rejected"),
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    admitted = spark.read.parquet(str(tmp_path / "admitted"))
-    rejected = spark.read.parquet(str(tmp_path / "rejected"))
-    assert admitted.count() == 3
-    assert rejected.count() == 1
-    assert rejected.collect()[0]["error_type"] == "SCHEMA_ERROR"
-    # provenance columns survive the gate
-    assert "_source_file" in admitted.columns
-    assert admitted.filter(F.col("_entity") != "orders").count() == 0
-
-    # exactly-once: re-running with the same checkpoint ingests nothing new
-    run_gated_ingest(
-        spark,
-        str(inbox),
-        ORDERS_SCHEMA,
-        admitted_path=str(tmp_path / "admitted"),
-        rejected_path=str(tmp_path / "rejected"),
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    assert spark.read.parquet(str(tmp_path / "admitted")).count() == 3
-
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -379,38 +331,6 @@ def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch,
     assert [d for d in os.listdir(tmp_path) if d.startswith("drain_ckpt_")] == []
     err = capfd.readouterr().err.splitlines()
     assert [ln for ln in err if "StateStore" in ln and ("WARN" in ln or "ERROR" in ln)] == []
-
-
-def test_streaming_dedup_drops_replayed_files(spark, tmp_path):
-    """The same micro-batch replayed as a second file must not emit its
-    keys twice (at-least-once upstream -> exactly-once downstream)."""
-    import shutil
-
-    from data_pipeline_for_e_commerce_shop_spark.streaming.ingest import (
-        run_streaming_dedup,
-    )
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    base = spark.range(100).selectExpr(
-        "id AS event_id",
-        "timestamp_micros(CAST(1700000000000000 + id * 1000000 AS BIGINT)) AS ts",
-        "id % 7 AS user_id",
-    )
-    base.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    f1 = next((tmp_path / "b1").glob("*.parquet"))
-    shutil.copy(f1, src / "a.parquet")
-    shutil.copy(f1, src / "b.parquet")  # the replay
-
-    out = run_streaming_dedup(
-        spark,
-        str(src),
-        base.schema,
-        "dedup_sink_test",
-        ["event_id"],
-    )
-    assert out.count() == 100
-    assert out.select("event_id").distinct().count() == 100
 
 
 def test_stream_interval_join_matches_batch_dual(spark):
