@@ -3,50 +3,39 @@ delta-spark needed.
 
 The reference's validated zone IS a Delta table (Delta 2.3.0 pinned in
 docker/dockerfile.validation:4,35; written by scripts/validation.py:
-121-129), so a user switching to this engine arrives with existing
-Delta directories.  The delta package is absent in this environment,
-but the transaction log is a PUBLIC protocol
+121-129).  With default table properties that version writes reader
+protocol 1, and so does :mod:`delta_writer`.  The transaction log is a
+PUBLIC protocol
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md): ordered
 JSON commits ``_delta_log/<20-digit version>.json`` whose ``add`` /
 ``remove`` actions define each version's live file set, with a parquet
 CHECKPOINT every ~10 commits compacting the state so older JSON can be
-vacuumed.  This module replays log + checkpoints — the file-set
-resolution Delta readers perform — and hands the live files to the
-stock parquet scan, with version pinning for time travel.
+vacuumed.
 
-Checkpoint support (r4 VERDICT item 6): classic checkpoints are read —
-``<v>.checkpoint.parquet`` and the multi-part
-``<v>.checkpoint.<i>.<n>.parquet`` form — by seeding the live set from
-the checkpoint's non-null ``add`` rows and replaying only the JSON
-commits after it, exactly Delta's own snapshot construction.
-``_last_checkpoint`` is treated as the hint the protocol says it is;
-the directory listing is authoritative.
+:func:`_snapshot` is the module's one fold of that log, and the only
+code in the package that opens a commit or checkpoint file.  It seeds
+from the newest classic checkpoint at/below the bound —
+``<v>.checkpoint.parquet`` or the complete multi-part
+``<v>.checkpoint.<i>.<n>.parquet`` set; ``_last_checkpoint`` is only
+the hint the protocol says it is — replays the JSON commits after it,
+and returns the version, the live adds with their ``partitionValues``,
+the metaData, the protocol and the per-app SetTransaction watermarks.
+The reader, the writer, the checkpoint writer, OPTIMIZE and VACUUM all
+read the log through it.
 
-Honest scope (documented, enforced loudly):
+Scope, enforced loudly: reader protocol 1 only.  A table that declares
+any other ``minReaderVersion`` (column mapping, deletion vectors, V2
+checkpoints, ...), an add action carrying a ``deletionVector``, or a
+UUID-named V2 checkpoint file raises ``NotImplementedError`` before any
+data file is read or staged: reading such a table as plain parquet
+would return wrong rows.  Time travel below the earliest checkpoint
+needs the JSON commits from version 0; if they were vacuumed the read
+raises instead of resolving a wrong file set.
 
-- Reader-protocol gate: column mapping (reader v2 / the
-  ``columnMapping`` feature) is SUPPORTED since round 6 — physical
-  parquet names are renamed back to the logical schema
-  (``_unmap_columns``) — and so are DELETION VECTORS (v3 feature):
-  each live file's roaring bitmap is decoded and its row positions
-  anti-joined out on ``_metadata`` columns
-  (``_apply_deletion_vectors``).  V2 CHECKPOINTS (UUID-named json or
-  parquet, add/remove actions in ``_sidecars/`` parquet files) read
-  through the same format-blind action iterator as classic
-  checkpoints (``checkpoint_actions``).  A v3 table is readable iff
-  every listed readerFeature is supported; anything else refuses.
-  The gate is applied to protocol actions found in BOTH the JSON
-  commits and checkpoint rows.
-- Time travel BEFORE the earliest available checkpoint requires the
-  JSON commits from version 0 — if they were vacuumed, the read
-  raises instead of resolving a wrong file set.
-- Scale: the log is metadata (KBs per commit, checkpoint rows ~ live
-  file count); resolution is a driver-side fold over it, exactly like
-  Delta's own snapshot construction (pyarrow for the checkpoint
-  parquet — at the multi-million-file scale where Delta itself
-  distributes checkpoint reads, swap the fold for a Spark scan of the
-  same columns).  The data scan is the ordinary distributed parquet
-  read of the resolved files.
+Scale: the log is metadata (KBs per commit, checkpoint rows ~ live file
+count), so the fold is driver-side, like Delta's own snapshot
+construction; the data scan is the ordinary distributed parquet read of
+the resolved files.
 """
 
 from __future__ import annotations
@@ -54,674 +43,205 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 _COMMIT_RE = re.compile(r"(\d{20})\.json\Z")
 _CP_SINGLE_RE = re.compile(r"(\d{20})\.checkpoint\.parquet\Z")
-_CP_PART_RE = re.compile(r"(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet\Z")
-# V2 checkpoints (PROTOCOL.md): UUID-named single file, json or parquet,
-# carrying checkpointMetadata + (sidecarFile refs | inline adds).
-_CP_V2_RE = re.compile(
-    r"(\d{20})\.checkpoint\.([0-9a-fA-F-]{36})\.(parquet|json)\Z"
+_CP_PART_RE = re.compile(
+    r"(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet\Z"
 )
+# V2 checkpoints (reader feature v2Checkpoint): recognised only to refuse
+_CP_V2_RE = re.compile(
+    r"\d{20}\.checkpoint\.[0-9a-fA-F-]{36}\.(parquet|json)\Z"
+)
+
+# The field that marks a checkpoint row's struct as present: a classic
+# checkpoint has one column per action kind, null in the other rows.
+_ACTION_KEYS = {
+    "txn": "appId",
+    "add": "path",
+    "remove": "path",
+    "metaData": "id",
+    "protocol": "minReaderVersion",
+}
+
+
+class Snapshot(NamedTuple):
+    version: int  # -1: the table has no commit yet
+    adds: dict[str, dict]  # live path (table-relative) -> partitionValues
+    meta: dict | None
+    protocol: dict | None
+    txns: dict[str, int]  # appId -> highest committed txn version
+    checkpoint: int | None  # the checkpoint version the fold seeded from
 
 
 def delta_log_versions(table_path: str) -> list[int]:
     """Commit versions present in the table's _delta_log."""
     log = os.path.join(table_path, "_delta_log")
     if not os.path.isdir(log):
-        raise FileNotFoundError(f"not a Delta table (no _delta_log): {table_path}")
-    out = []
-    for name in os.listdir(log):
-        m = _COMMIT_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+        raise FileNotFoundError(
+            f"not a Delta table (no _delta_log): {table_path}"
+        )
+    return sorted(
+        int(m.group(1))
+        for name in os.listdir(log)
+        if (m := _COMMIT_RE.match(name))
+    )
 
 
-def _checkpoints(log: str) -> dict[int, list[str]]:
-    """Checkpoint versions -> ordered part files, from the directory
-    listing (authoritative per PROTOCOL.md; _last_checkpoint is only a
-    hint).  Multi-part sets are validated complete."""
-    single: dict[int, str] = {}
+def _checkpoints(table_path: str) -> dict[int, list[str]]:
+    """Classic checkpoint versions -> ordered part files, from the
+    directory listing.  An incomplete multi-part set is an in-flight
+    checkpoint and is ignored; a V2 checkpoint refuses."""
+    log = os.path.join(table_path, "_delta_log")
+    out: dict[int, list[str]] = {}
     parts: dict[int, dict[int, tuple[int, str]]] = {}
     for name in os.listdir(log):
-        m = _CP_SINGLE_RE.match(name)
-        if m:
-            single[int(m.group(1))] = os.path.join(log, name)
-            continue
-        m = _CP_PART_RE.match(name)
-        if m:
+        if _CP_V2_RE.match(name):
+            raise NotImplementedError(
+                f"{table_path}: V2 checkpoint {name}; this reader reads"
+                " reader-protocol-1 tables only, refusing a lossy read"
+            )
+        if m := _CP_SINGLE_RE.match(name):
+            out[int(m.group(1))] = [os.path.join(log, name)]
+        elif m := _CP_PART_RE.match(name):
             v, i, n = int(m.group(1)), int(m.group(2)), int(m.group(3))
             parts.setdefault(v, {})[i] = (n, os.path.join(log, name))
-    out: dict[int, list[str]] = {v: [p] for v, p in single.items()}
     for v, got in parts.items():
         n = next(iter(got.values()))[0]
         if set(got) == set(range(1, n + 1)) and all(
             x[0] == n for x in got.values()
         ):
             out[v] = [got[i][1] for i in range(1, n + 1)]
-        # an incomplete part set is an in-flight checkpoint: ignore it
-    for name in os.listdir(log):
-        m = _CP_V2_RE.match(name)
-        # a classic checkpoint at the same version wins (no sidecar
-        # indirection); otherwise the v2 file IS the checkpoint
-        if m and int(m.group(1)) not in out:
-            out[int(m.group(1))] = [os.path.join(log, name)]
     return out
 
 
-# Reader features this module actually implements.  columnMapping is
-# the whole of reader protocol v2 (PROTOCOL.md); timestampNtz only
-# flags the presence of a type the stock parquet scan already reads;
-# deletionVectors decode through _apply_deletion_vectors (round 6).
-_SUPPORTED_READER_FEATURES = {
-    "columnMapping",
-    "timestampNtz",
-    "deletionVectors",
-    "v2Checkpoint",
-}
-
-
 def _protocol_gate(table_path: str, proto: dict) -> None:
-    """Refuse — loudly — any protocol requirement this reader does not
-    implement; pretending otherwise corrupts reads.  v1 is the base
-    protocol; v2 adds column mapping (supported since round 6, see
-    ``_unmap_columns``); v3 tables list their requirements explicitly
-    in ``readerFeatures`` — allowed iff every listed feature is
-    supported (deletion vectors decode via
-    ``_apply_deletion_vectors``; v2 checkpoints resolve through
-    ``checkpoint_actions``; anything NOT in
-    ``_SUPPORTED_READER_FEATURES`` refuses — a lossy read is silent
-    data corruption)."""
+    """Refuse every reader protocol but 1: column mapping (v2), and the
+    v3 features (deletion vectors, V2 checkpoints, ...) change what the
+    parquet files mean, so a plain scan of them is silent corruption."""
     mrv = proto.get("minReaderVersion", 1)
-    if mrv <= 2:
-        return
-    features = set(proto.get("readerFeatures") or [])
-    unsupported = features - _SUPPORTED_READER_FEATURES
-    if mrv > 3 or unsupported:
+    if mrv != 1:
         raise NotImplementedError(
             f"{table_path}: minReaderVersion={mrv}, readerFeatures="
-            f"{sorted(features)} — unsupported: {sorted(unsupported) or mrv};"
-            " refusing a lossy read"
+            f"{sorted(proto.get('readerFeatures') or [])}; this reader reads"
+            " protocol 1 only (no column mapping, deletion vectors or V2"
+            " checkpoints), refusing a lossy read"
         )
 
 
-_ACTION_KEYS = (
-    "txn",
-    "add",
-    "remove",
-    "metaData",
-    "protocol",
-    "sidecarFile",
-    "checkpointMetadata",
-)
-
-
-def checkpoint_actions(log: str, cp_files: list[str]):
-    """Yield (kind, action) pairs from a checkpoint in ANY of its
-    protocol forms — classic single/multi-part parquet, or a V2
-    checkpoint (UUID-named json or parquet) whose add/remove actions
-    may live in ``_sidecars/`` parquet files referenced by
-    ``sidecarFile`` actions.  Consumers stay format-blind."""
-    import pyarrow.parquet as pq
-
-    def rows_of(fp: str):
-        if fp.endswith(".json"):
-            with open(fp) as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        yield json.loads(line)
-        else:
-            for row in pq.read_table(fp).to_pylist():
-                yield row
-
-    def emit(row: dict):
-        for k in _ACTION_KEYS:
-            v = row.get(k)
-            if isinstance(v, dict):
-                yield k, v
-
-    for fp in cp_files:
-        for row in rows_of(fp):
-            for k, v in emit(row):
-                if k == "sidecarFile":
-                    if not v.get("path"):
-                        continue
-                    sp = os.path.join(
-                        log, "_sidecars", os.path.basename(v["path"])
-                    )
-                    for srow in rows_of(sp):
-                        for k2, v2 in emit(srow):
-                            yield k2, v2
-                else:
-                    yield k, v
-
-
-def _norm_pv(pv) -> dict:
-    """partitionValues as a plain dict regardless of source: JSON
-    commits carry a dict; checkpoint parquet MAP columns arrive from
-    pyarrow as a list of (key, value) tuples."""
-    if not pv:
-        return {}
-    if isinstance(pv, dict):
-        return dict(pv)
-    return dict(pv)  # list of pairs
-
-
-def _add_info(action: dict) -> dict:
-    """The per-file state ``_resolve_state`` tracks for one live add
-    action: the deletionVector descriptor (or None) plus the
-    partitionValues map.  Round 7 widened this from a bare dv value so
-    the checkpoint WRITER can assert real partitionValues (ADVICE r6
-    high: a checkpoint that writes ``partitionValues: []`` for a
-    partitioned table makes every post-checkpoint read silently drop
-    the partition columns) and carry live DV descriptors through."""
-    dv = action.get("deletionVector")
-    return {
-        "deletionVector": dict(dv) if dv and dv.get("storageType") else None,
-        "partitionValues": _norm_pv(action.get("partitionValues")),
-    }
-
-
-def _seed_from_checkpoint(
-    table_path: str, cp_files: list[str]
-) -> tuple[dict[str, dict], bool]:
-    """Live file set (+ partitioned flag) from a checkpoint: non-null
-    ``add`` actions ARE the live set at the checkpoint version (remove
-    rows are expired-tombstone bookkeeping, irrelevant to reads).
-    Values of the returned dict are ``_add_info`` dicts."""
-    log = os.path.join(table_path, "_delta_log")
-    live: dict[str, dict] = {}
-    partitioned = False
-    for kind, action in checkpoint_actions(log, cp_files):
-        if kind == "protocol" and action.get("minReaderVersion") is not None:
-            _protocol_gate(table_path, action)
-        elif kind == "add" and action.get("path") is not None:
-            info = _add_info(action)
-            live[action["path"]] = info
-            if info["partitionValues"]:
-                partitioned = True
-    return live, partitioned
-
-
-def _resolve_state(
-    table_path: str, version: int | None
-) -> tuple[dict[str, dict], bool]:
-    log = os.path.join(table_path, "_delta_log")
-    versions = delta_log_versions(table_path)
-    cps = _checkpoints(log) if os.path.isdir(log) else {}
-    if not versions and not cps:
-        raise FileNotFoundError(f"empty _delta_log at {table_path}")
-    latest = max(versions[-1] if versions else -1, max(cps, default=-1))
+def _snapshot(
+    table_path: str, version: int | None = None, seed_below: int | None = None
+) -> Snapshot:
+    """The table's state at ``version`` (latest if None): seeded from
+    the newest complete classic checkpoint at/below it — strictly below
+    ``seed_below`` when given, so the checkpoint writer rebuilds a
+    checkpoint without trusting it, and VACUUM checks one against the
+    log it replaces — then folded through the JSON commits after it.
+    A table with no log yet is version -1 with nothing live."""
+    try:
+        commits = delta_log_versions(table_path)
+    except FileNotFoundError:
+        return Snapshot(-1, {}, None, None, {}, None)
+    cps = _checkpoints(table_path)
+    latest = max(commits[-1] if commits else -1, max(cps, default=-1))
     if version is None:
         version = latest
     if version > latest:
         raise ValueError(
             f"version {version} beyond latest Delta version {latest}"
         )
-
-    # Start point: the newest complete checkpoint at/below the target,
-    # else JSON from version 0.
-    cp_v = max((v for v in cps if v <= version), default=None)
-    live: dict[str, dict] = {}
-    partitioned = False
-    if cp_v is not None:
-        live, partitioned = _seed_from_checkpoint(table_path, cps[cp_v])
-        replay = [v for v in versions if cp_v < v <= version]
-        expected = list(range(cp_v + 1, version + 1))
-    else:
-        replay = [v for v in versions if v <= version]
-        expected = list(range(0, version + 1))
-    if replay != expected:
+    bound = version if seed_below is None else min(version, seed_below - 1)
+    cp_v = max((v for v in cps if v <= bound), default=None)
+    start = 0 if cp_v is None else cp_v + 1
+    replay = [v for v in commits if start <= v <= version]
+    if replay != list(range(start, version + 1)):
         raise NotImplementedError(
-            f"{table_path}: cannot reconstruct version {version} — "
-            f"need JSON commits {expected[0] if expected else '-'}"
-            f"..{version}"
+            f"{table_path}: cannot reconstruct version {version} — need JSON"
+            f" commits {start}..{version}"
             + (f" after checkpoint {cp_v}" if cp_v is not None else "")
             + f", found {replay} (vacuumed commits / missing checkpoint)"
         )
-    for v in replay:
-        commit = os.path.join(log, f"{v:020d}.json")
-        with open(commit) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    _protocol_gate(table_path, action["protocol"])
-                elif "add" in action:
-                    add = action["add"]
-                    info = _add_info(add)
-                    live[add["path"]] = info
-                    if info["partitionValues"]:
-                        partitioned = True
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-    return live, partitioned
 
+    adds: dict[str, dict] = {}
+    state: dict = {"metaData": None, "protocol": None}
+    txns: dict[str, int] = {}
 
-def _resolve_files(
-    table_path: str, version: int | None
-) -> tuple[list[str], bool]:
-    """Live file paths (sorted, absolute) + partitioned flag — the
-    file-level view used by the writer and the plain-scan path.
-    Deletion vectors mask ROWS inside live files, not the file list,
-    so they are invisible here; ``read_delta_table`` consumes
-    ``_resolve_state`` directly to apply them."""
-    live, partitioned = _resolve_state(table_path, version)
-    return [os.path.join(table_path, p) for p in sorted(live)], partitioned
-
-
-# ---------------------------------------------------------------- deletion
-# vectors (reader protocol v3 feature `deletionVectors`, PROTOCOL.md).
-# A DV masks ROW POSITIONS inside a live parquet file; ignoring it
-# resurrects deleted rows, so it was refused until this round.  The
-# descriptor's bitmap is a "RoaringBitmapArray" (portable 64-bit
-# format: int32 LE magic 1681511377, int64 LE bitmap count, then that
-# many STANDARD 32-bit roaring bitmaps back-to-back — bitmap i holds
-# the low 32 bits of positions in [i*2^32, (i+1)*2^32)), stored inline
-# (storageType "i", Z85-encoded in the descriptor) or in a
-# `deletion_vector_<uuid>.bin` file (storageType "u"/"p": 1-byte
-# format version, then at `offset` an int32 BIG-endian length, the
-# bitmap bytes, and a CRC32 BE checksum).
-
-_Z85_ALPHABET = (
-    "0123456789abcdefghijklmnopqrstuvwxyz"
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZ.-:+=^!/*?&<>()[]{}@%$#"
-)
-_Z85_INDEX = {c: i for i, c in enumerate(_Z85_ALPHABET)}
-
-
-def _z85_decode(s: str) -> bytes:
-    """ZeroMQ Z85 (the alphabet Delta uses — NOT Python's b85decode,
-    whose RFC-1924 alphabet differs): 5 chars -> one big-endian
-    uint32."""
-    if len(s) % 5:
-        raise ValueError(f"Z85 length {len(s)} not a multiple of 5")
-    out = bytearray()
-    for i in range(0, len(s), 5):
-        acc = 0
-        for c in s[i : i + 5]:
-            acc = acc * 85 + _Z85_INDEX[c]
-        out.extend(acc.to_bytes(4, "big"))
-    return bytes(out)
-
-
-def _read_roaring32(buf: bytes, pos: int, base: int, out: list) -> int:
-    """One STANDARD-format 32-bit roaring bitmap starting at ``pos``;
-    appends base|value for every member; returns the end offset.
-    Container layout per the public RoaringFormatSpec: cookie 12347
-    (run-capable, container count in the high 16 bits, run-flag bitset
-    follows) or 12346 (+int32 count, offset header always present);
-    then per-container uint16 (key, cardinality-1) descriptors; then
-    array (uint16s) / bitmap (8 KiB) / run (uint16 pairs) containers."""
-    import struct
-
-    (cookie,) = struct.unpack_from("<i", buf, pos)
-    pos += 4
-    run_flags = b""
-    if (cookie & 0xFFFF) == 12347:
-        n_containers = (cookie >> 16) + 1
-        n_flag_bytes = (n_containers + 7) // 8
-        run_flags = buf[pos : pos + n_flag_bytes]
-        pos += n_flag_bytes
-        has_offsets = n_containers >= 4
-    elif cookie == 12346:
-        (n_containers,) = struct.unpack_from("<i", buf, pos)
-        pos += 4
-        has_offsets = True
-    else:
-        raise ValueError(f"unknown roaring cookie {cookie}")
-    keys_cards = struct.unpack_from(f"<{2 * n_containers}H", buf, pos)
-    pos += 4 * n_containers
-    if has_offsets:
-        pos += 4 * n_containers  # sequential read; offsets redundant
-    for ci in range(n_containers):
-        key = keys_cards[2 * ci]
-        card = keys_cards[2 * ci + 1] + 1
-        hi = base | (key << 16)
-        is_run = bool(run_flags and (run_flags[ci // 8] >> (ci % 8)) & 1)
-        if is_run:
-            (n_runs,) = struct.unpack_from("<H", buf, pos)
-            pos += 2
-            runs = struct.unpack_from(f"<{2 * n_runs}H", buf, pos)
-            pos += 4 * n_runs
-            for ri in range(n_runs):
-                start, length = runs[2 * ri], runs[2 * ri + 1]
-                out.extend(hi | v for v in range(start, start + length + 1))
-        elif card <= 4096:
-            vals = struct.unpack_from(f"<{card}H", buf, pos)
-            pos += 2 * card
-            out.extend(hi | v for v in vals)
+    def apply(kind: str, action) -> None:
+        if kind not in _ACTION_KEYS or not isinstance(action, dict):
+            return  # commitInfo, or a null struct in a checkpoint row
+        if action.get(_ACTION_KEYS[kind]) is None:
+            return
+        if kind == "add":
+            dv = action.get("deletionVector")
+            if dv and dv.get("storageType"):
+                raise NotImplementedError(
+                    f"{table_path}: {action['path']} carries a deletion"
+                    " vector; refusing a lossy read"
+                )
+            # checkpoint MAP columns arrive from pyarrow as (key, value) pairs
+            adds[action["path"]] = dict(action.get("partitionValues") or {})
+        elif kind == "remove":
+            adds.pop(action["path"], None)
+        elif kind == "txn":
+            txns[action["appId"]] = max(
+                txns.get(action["appId"], -1), int(action["version"])
+            )
         else:
-            words = struct.unpack_from("<1024Q", buf, pos)
-            pos += 8192
-            for wi, w in enumerate(words):
-                while w:
-                    b = w & -w
-                    out.append(hi | (wi << 6) | b.bit_length() - 1)
-                    w ^= b
-    return pos
+            if kind == "protocol":
+                _protocol_gate(table_path, action)
+            state[kind] = action
 
+    if cp_v is not None:
+        import pyarrow.parquet as pq
 
-def _roaring_array_positions(data: bytes) -> list[int]:
-    """Deleted row positions from a serialized RoaringBitmapArray."""
-    import struct
-
-    (magic,) = struct.unpack_from("<i", data, 0)
-    if magic != 1681511377:
-        raise ValueError(f"bad RoaringBitmapArray magic {magic}")
-    (n_bitmaps,) = struct.unpack_from("<q", data, 4)
-    pos = 12
-    out: list[int] = []
-    for i in range(n_bitmaps):
-        pos = _read_roaring32(data, pos, i << 32, out)
-    return out
-
-
-def _dv_bin_path(table_path: str, dv: dict) -> str | None:
-    """Absolute path of the ``deletion_vector_<uuid>.bin`` file a
-    file-stored descriptor points at (None for inline descriptors).
-    Shared by the decode path and VACUUM's live-DV census (ADVICE r6:
-    vacuum only reclaimed *.parquet, so orphaned DV bins accumulated
-    forever)."""
-    import uuid as _uuid
-
-    st = dv.get("storageType")
-    payload = dv.get("pathOrInlineDv", "")
-    if st == "u":
-        # optional random prefix chars precede the 20-char Z85 uuid
-        prefix, z = payload[:-20], payload[-20:]
-        u = _uuid.UUID(bytes=_z85_decode(z))
-        name = f"deletion_vector_{u}.bin"
-        return os.path.join(table_path, prefix, name) if prefix else (
-            os.path.join(table_path, name)
-        )
-    if st == "p":
-        return payload
-    return None
-
-
-def _dv_positions(table_path: str, dv: dict) -> list[int]:
-    """Deleted row positions for one file's deletionVector descriptor.
-    Pure function of (table_path, descriptor) — safe to run inside an
-    executor task (the distributed decode path maps it over the file
-    manifest; table_path must then be cluster-visible storage, which
-    is where a Delta table lives by construction)."""
-    import struct
-    import zlib
-
-    st = dv.get("storageType")
-    if st == "i":
-        data = _z85_decode(dv.get("pathOrInlineDv", ""))[
-            : int(dv["sizeInBytes"])
-        ]
-        return _roaring_array_positions(data)
-    if st in ("u", "p"):
-        fp = _dv_bin_path(table_path, dv)
-        with open(fp, "rb") as f:
-            raw = f.read()
-        off = int(dv.get("offset") or 1)  # after the 1-byte format version
-        (size,) = struct.unpack_from(">i", raw, off)
-        data = raw[off + 4 : off + 4 + size]
-        (crc,) = struct.unpack_from(">I", raw, off + 4 + size)
-        if zlib.crc32(data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"{fp}: deletion-vector CRC mismatch")
-        return _roaring_array_positions(data)
-    raise NotImplementedError(
-        f"{table_path}: deletionVector storageType {st!r} unsupported"
+        for fp in cps[cp_v]:
+            for row in pq.read_table(fp).to_pylist():
+                for kind, action in row.items():
+                    apply(kind, action)
+    log = os.path.join(table_path, "_delta_log")
+    for v in replay:
+        with open(os.path.join(log, f"{v:020d}.json")) as f:
+            for line in f:
+                if line.strip():
+                    for kind, action in json.loads(line).items():
+                        apply(kind, action)
+    return Snapshot(
+        version, adds, state["metaData"], state["protocol"], txns, cp_v
     )
 
 
-# Masks whose TOTAL descriptor-declared cardinality is at most this
-# broadcast to every task; larger deleted sets go through an ordinary
-# shuffled anti-join (an explicit broadcast hint would ship an
-# unbounded build side).  Decode itself is distributed either way.
-_DV_BROADCAST_MAX = 1_000_000
-
-
-def _latest_metadata(table_path: str, version: int | None) -> dict | None:
-    """The table's metaData action at ``version`` (latest if None):
-    seeded from the newest checkpoint at/below it, folded through the
-    JSON commits after — the same snapshot walk as ``_resolve_files``,
-    reading only the metaData actions."""
-    log = os.path.join(table_path, "_delta_log")
-    versions = delta_log_versions(table_path)
-    cps = _checkpoints(log) if os.path.isdir(log) else {}
-    latest = max(versions[-1] if versions else -1, max(cps, default=-1))
-    if version is None:
-        version = latest
-    meta = None
-    cp_v = max((v for v in cps if v <= version), default=None)
-    if cp_v is not None:
-        for kind, m in checkpoint_actions(log, cps[cp_v]):
-            if kind == "metaData" and m.get("id") is not None:
-                meta = dict(m)
-                cfg = meta.get("configuration")
-                if isinstance(cfg, list):  # pyarrow map -> pairs
-                    meta["configuration"] = dict(cfg)
-    for v in versions:
-        if v > version or (cp_v is not None and v <= cp_v):
-            continue
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
-    return meta
-
-
-def _unmap_columns(df: DataFrame, meta: dict, table_path: str) -> DataFrame:
-    """Column mapping (reader protocol v2, PROTOCOL.md): the parquet
-    files of a mapped table store PHYSICAL column names
-    (``col-<uuid>``); the logical names live in the metaData
-    schemaString's per-field ``delta.columnMapping.physicalName``.
-    Rename physical -> logical so the caller sees the table schema —
-    both 'name' and 'id' modes store physicalName, so one rename path
-    serves both.  Nested mapped fields (a struct member carrying its
-    own physicalName) would need a recursive rebuild — refused loudly
-    rather than returning misnamed nested data."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    schema = _json.loads(meta["schemaString"])
-    cols = []
-    for field in schema.get("fields", []):
-        fmeta = field.get("metadata") or {}
-        phys = fmeta.get("delta.columnMapping.physicalName", field["name"])
-        ftype = field.get("type")
-        if isinstance(ftype, dict) and _has_nested_mapping(ftype):
-            raise NotImplementedError(
-                f"{table_path}: nested column mapping on field"
-                f" {field['name']!r}; refusing a misnamed read"
-            )
-        cols.append(F.col(f"`{phys}`").alias(field["name"]))
-    return df.select(*cols)
-
-
-def _has_nested_mapping(ftype: dict) -> bool:
-    if ftype.get("type") == "struct":
-        for f in ftype.get("fields", []):
-            if (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName"
-            ):
-                return True
-            t = f.get("type")
-            if isinstance(t, dict) and _has_nested_mapping(t):
-                return True
-    for key in ("elementType", "valueType", "keyType"):
-        t = ftype.get(key)
-        if isinstance(t, dict) and _has_nested_mapping(t):
-            return True
-    return False
+def _scan(spark: SparkSession, table_path: str, snap: Snapshot) -> DataFrame:
+    """The snapshot's live files as one parquet scan.  Partition columns
+    live in the directory paths, not the files, so a partitioned table
+    is scanned with ``basePath`` at the table root; a plain multi-path
+    read would silently drop them."""
+    if not snap.adds:
+        raise FileNotFoundError(
+            f"{table_path}: version has an empty live file set"
+        )
+    reader = spark.read
+    if any(snap.adds.values()):
+        reader = reader.option("basePath", table_path)
+    return reader.parquet(
+        *(os.path.join(table_path, p) for p in sorted(snap.adds))
+    )
 
 
 def read_delta_table(
     spark: SparkSession, table_path: str, version: int | None = None
 ) -> DataFrame:
-    """Read a Delta table at its latest (or a pinned) version by
-    seeding from the newest checkpoint at/below that version and
-    replaying the JSON commits after it, then scanning exactly the
-    live file set — removed files and uncommitted stragglers in the
-    directory are invisible, which a raw ``spark.read.parquet`` over
-    the same directory gets wrong.
-
-    Partitioned tables (non-empty ``add.partitionValues``): the
-    partition columns live in the DIRECTORY PATHS, not the parquet
-    files, so the scan sets ``basePath`` to the table root — Spark's
-    partition discovery then reconstructs the columns for exactly the
-    live files.  Without this, a multi-path scan would silently DROP
-    every partition column."""
-    state, partitioned = _resolve_state(table_path, version)
-    if not state:
-        raise FileNotFoundError(
-            f"{table_path}: version has an empty live file set"
-        )
-    files = [os.path.join(table_path, p) for p in sorted(state)]
-    reader = spark.read
-    if partitioned:
-        reader = reader.option("basePath", table_path)
-    df = reader.parquet(*files)
-    dvs = {
-        p: info["deletionVector"]
-        for p, info in state.items()
-        if info["deletionVector"]
-    }
-    if dvs:
-        df = _apply_deletion_vectors(spark, df, table_path, dvs)
-    meta = _latest_metadata(table_path, version)
-    mode = (meta or {}).get("configuration", {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode in ("name", "id"):
-        df = _unmap_columns(df, meta, table_path)
-    return df
-
-
-def _dv_mask_df(
-    spark: SparkSession, table_path: str, dvs: dict
-) -> DataFrame:
-    """Deleted (file name, row position) rows for a set of live-file
-    DV descriptors, DECODED ON EXECUTORS: the driver ships only the
-    manifest (one row per DV'd file — file name + descriptor JSON),
-    ``mapInPandas`` decodes each file's roaring bitmap task-side, and
-    the result stays a distributed DataFrame end to end (VERDICT r6
-    item 3: the former driver-side decode was loudly capped at 10M
-    positions; this path has no cap — a billion-row deleted set is an
-    ordinary distributed dataset).  The per-file cardinality audit
-    (descriptor claim vs decoded count) runs inside the task and
-    fails the job loudly on mismatch."""
-    manifest = [
-        (os.path.basename(rel), json.dumps(dv), rel)
-        for rel, dv in sorted(dvs.items())
-    ]
-    mdf = spark.createDataFrame(
-        manifest, "_dv_fn STRING, _dv_json STRING, _dv_rel STRING"
-    )
-    if len(manifest) > 1:
-        # one task per file up to the session's parallelism: each DV
-        # decodes independently, and a single hot 2GB bitmap never
-        # serializes behind its neighbours
-        mdf = mdf.repartition(min(len(manifest), 256))
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for fn, dvj, rel in zip(
-                pdf["_dv_fn"], pdf["_dv_json"], pdf["_dv_rel"]
-            ):
-                dv = json.loads(dvj)
-                positions = _dv_positions(table_path, dv)
-                card = dv.get("cardinality")
-                if card is not None and int(card) != len(positions):
-                    raise ValueError(
-                        f"{table_path}/{rel}: deletionVector cardinality"
-                        f" {card} != decoded {len(positions)}"
-                    )
-                yield pd.DataFrame(
-                    {
-                        "_dv_fn": pd.Series([fn] * len(positions)),
-                        "_dv_ri": pd.array(positions, dtype="int64"),
-                    }
-                )
-
-    return mdf.mapInPandas(decode, "_dv_fn STRING, _dv_ri LONG")
-
-
-def _apply_deletion_vectors(
-    spark: SparkSession, df: DataFrame, table_path: str, dvs: dict
-) -> DataFrame:
-    """Mask DV'd row positions: decode each live file's bitmap into
-    (file name, row position) rows — executor-side, see
-    ``_dv_mask_df`` — and LEFT ANTI join on the scan's
-    ``_metadata.file_name`` / ``row_index`` columns; the deleted set
-    is DV-cardinality-sized, never a data-sized shuffle.  The metadata
-    columns are dropped again so the caller sees the table schema.
-    Files are keyed by NAME, not URI: Spark renders file: URIs
-    differently per scheme, while Delta data-file names are
-    uuid-unique within a table by construction."""
-    from pyspark.sql import functions as F
-
-    del_df = _dv_mask_df(spark, table_path, dvs)
-    total_card = sum(int(dv.get("cardinality") or 0) for dv in dvs.values())
-    if total_card <= _DV_BROADCAST_MAX:
-        # small masks broadcast (the common case: DVs are deltas); the
-        # decision reads the DESCRIPTOR's cardinality — metadata the
-        # log already holds — so no decode happens driver-side
-        del_df = F.broadcast(del_df)
-    out = (
-        df.withColumn("_dv_fn", F.col("_metadata.file_name"))
-        .withColumn("_dv_ri", F.col("_metadata.row_index"))
-        .join(del_df, ["_dv_fn", "_dv_ri"], "left_anti")
-        .drop("_dv_fn", "_dv_ri")
-    )
-    return out
+    """Read a Delta table at its latest (or a pinned) version: exactly
+    the live file set of :func:`_snapshot` — removed files and
+    uncommitted stragglers in the directory are invisible, which a raw
+    ``spark.read.parquet`` over the same directory gets wrong."""
+    return _scan(spark, table_path, _snapshot(table_path, version))
 
 
 def last_txn_versions(table_path: str) -> dict[str, int]:
-    """Per-application SetTransaction watermarks at the latest
-    version: max ``txn.version`` per ``txn.appId``, seeded from the
-    newest checkpoint's txn rows and folded through the JSON commits
-    after it — the exactly-once handshake a streaming sink consults
-    before (re)writing a micro-batch (PROTOCOL.md SetTransaction)."""
-    log = os.path.join(table_path, "_delta_log")
-    if not os.path.isdir(log):
-        return {}
-    versions = delta_log_versions(table_path)
-    cps = _checkpoints(log)
-    latest = max(versions[-1] if versions else -1, max(cps, default=-1))
-    if latest < 0:
-        return {}
-    cp_v = max(cps, default=None)
-    out: dict[str, int] = {}
-    if cp_v is not None:
-        for kind, t in checkpoint_actions(log, cps[cp_v]):
-            if kind == "txn" and t.get("appId") is not None:
-                out[t["appId"]] = max(
-                    out.get(t["appId"], -1), int(t["version"])
-                )
-        replay = [v for v in versions if v > cp_v]
-    else:
-        replay = versions
-    for v in replay:
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "txn" in action:
-                    t = action["txn"]
-                    out[t["appId"]] = max(
-                        out.get(t["appId"], -1), int(t["version"])
-                    )
-    return out
+    """Per-application SetTransaction watermarks at the latest version
+    (PROTOCOL.md): the exactly-once handshake's state, which
+    ``write_delta_commit(txn=...)`` consults before it commits."""
+    return _snapshot(table_path).txns

@@ -1,35 +1,36 @@
 """Delta Lake TABLE WRITER over the open _delta_log protocol — the
 reverse of :mod:`delta_reader`, so the medallion zones this engine
 writes are readable by STOCK Delta readers (delta-spark, delta-rs,
-DuckDB's delta extension) and a user arriving with Delta tables (the
-reference's validated zone, scripts/validation.py:121-129) can keep
-appending to them in-protocol.  Tables are written without column
-mapping; an append to a table whose log declares column mapping
-(written by another engine) is refused before any file is staged,
-while ``delta_reader`` still reads such tables.
+DuckDB's delta extension), and a reader-protocol-1 Delta table (what
+the reference's Delta 2.3.0 writes with default table properties,
+scripts/validation.py:121-129) can keep taking appends in-protocol.
+Tables are written at reader v1 / writer v2 without column mapping; a
+table whose log asks for more is refused by the reader's protocol gate
+before any file is staged.
 
 What a commit is (PROTOCOL.md): stage parquet data files into the
 table directory under unique names, then atomically publish
-``_delta_log/<20-digit version>.json`` containing the protocol /
-metaData actions (first commit only) and one ``add`` action per staged
-file (plus ``remove`` actions for an overwrite).  The atomic publish
-is :func:`publish_once`, the package's one ``os.link``
-compare-and-swap — two racing writers cannot both claim a version;
-the loser retries with a FRESH read of the log (for overwrite that
-re-read includes the live file set, so the retry is a sound
-read-modify-write), and a loser whose SetTransaction batch was
-committed by the winner skips itself.  A read-modify-write caller
-pins the version it read (``expected_version``) and re-folds on
-:class:`ConcurrentWriteError`; :func:`rewrite_delta_table` is that
-loop (no caller in the package yet: it is the commit path planned for
-the validated zone and the KPI tables).
+``_delta_log/<20-digit version>.json`` holding the protocol / metaData
+actions (first commit only), one ``add`` action per staged file, and
+``remove`` actions for an overwrite or an OPTIMIZE.  :func:`_commit` is
+the one compare-and-swap loop every writer here goes through: each
+attempt takes one :func:`delta_reader._snapshot`, skips a batch whose
+SetTransaction watermark is already in the log, checks the caller's
+conflict rule, builds the actions from that snapshot and publishes them
+with :func:`publish_once`, the package's one ``os.link`` CAS.  A lost
+race re-reads the log and retries, so an overwrite's removes always
+name the files live at the version it claims.  A read-modify-write
+caller pins the version it read (``expected_version``) and re-folds on
+:class:`ConcurrentWriteError`; :func:`rewrite_delta_table` is that loop
+(no caller in the package yet: it is the commit path planned for the
+validated zone and the KPI tables).
 
-Checkpoints: every ``checkpoint_interval`` commits the writer emits a
+Checkpoints: every ``checkpoint_interval`` commits the loop writes a
 classic single-file checkpoint ``<v>.checkpoint.parquet`` — one row
-per live action with the canonical five top-level structs (txn, add,
-remove, metaData, protocol) — and updates ``_last_checkpoint``.  That
-is exactly the artifact delta_reader's checkpoint path consumes, and
-it lets stock readers drop the early JSON.
+per live add plus the protocol, metaData and txn rows, in the canonical
+five top-level structs (txn, add, remove, metaData, protocol) — and
+updates ``_last_checkpoint``.  That is the artifact the reader's fold
+seeds from, and it lets stock readers drop the early JSON.
 
 Scale: the log fold and checkpoint write are driver-side metadata work
 (KBs per commit; checkpoint rows = live-file count), identical in
@@ -50,16 +51,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-    _checkpoints,
-    _resolve_files,
-    checkpoint_actions,
+    Snapshot,
+    _scan,
+    _snapshot,
     delta_log_versions,
-    last_txn_versions,
-    read_delta_table,
 )
 
 _MAX_COMMIT_ATTEMPTS = 20
 DEFAULT_CHECKPOINT_INTERVAL = 10
+# OPTIMIZE bin-packs live files below this size into files of about it
+_OPTIMIZE_TARGET_BYTES = 128 * 1024 * 1024
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -85,90 +86,6 @@ def publish_once(path: str, text: str) -> bool:
         return False
     finally:
         os.unlink(tmp)
-
-
-def _latest_version(table_path: str) -> int:
-    """Latest committed version = max over BOTH the JSON commits and
-    the checkpoint files (a vacuumed log may hold ONLY a checkpoint —
-    the protocol requires nothing more), mirroring the reader's
-    ``latest`` calculation.  -1 for a brand-new table."""
-    log = os.path.join(table_path, "_delta_log")
-    try:
-        versions = delta_log_versions(table_path)
-    except FileNotFoundError:
-        return -1
-    cps = _checkpoints(log) if os.path.isdir(log) else {}
-    return max(versions[-1] if versions else -1, max(cps, default=-1))
-
-
-def _log_state(
-    table_path: str, version: int, include_cp_at_version: bool = True
-) -> tuple[dict | None, dict | None, dict[str, int]]:
-    """(metaData, protocol, per-app txn watermarks) at ``version``:
-    seeded from the newest checkpoint at/below it, then folded through
-    the JSON commits after it — the same snapshot construction the
-    reader performs.  Scanning JSON alone would silently DROP the
-    prior checkpoint's metaData/protocol rows and SetTransaction
-    watermarks once early JSON is vacuumed (resetting the streaming
-    exactly-once guard), so the checkpoint seed is load-bearing.
-
-    ``include_cp_at_version=False`` seeds only from checkpoints
-    STRICTLY below ``version`` — the checkpoint WRITER's mode, so
-    rewriting a damaged checkpoint at v rebuilds from the prior
-    checkpoint + JSON instead of trusting the artifact it is meant to
-    replace."""
-    log = os.path.join(table_path, "_delta_log")
-    meta = proto = None
-    txns: dict[str, int] = {}
-    cps = _checkpoints(log) if os.path.isdir(log) else {}
-    bound = version if include_cp_at_version else version - 1
-    cp_v = max((v for v in cps if v <= bound), default=None)
-    if cp_v is not None:
-        for kind, action in checkpoint_actions(log, cps[cp_v]):
-            if kind == "metaData" and action.get("id") is not None:
-                meta = action
-            elif kind == "protocol" and action.get(
-                "minReaderVersion"
-            ) is not None:
-                proto = action
-            elif kind == "txn" and action.get("appId") is not None:
-                txns[action["appId"]] = max(
-                    txns.get(action["appId"], -1), int(action["version"])
-                )
-    for v in delta_log_versions(table_path):
-        if v > version or (cp_v is not None and v <= cp_v):
-            continue
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    proto = action["protocol"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-    return meta, proto, txns
-
-
-def _hive_partition_values(part_dir: str) -> dict[str, str | None]:
-    """partitionValues from a hive-style ``k=v/k2=v2`` directory path
-    (values URL-decoded; the hive null sentinel maps to None — exactly
-    what the add action's map must assert for the files inside)."""
-    from urllib.parse import unquote
-
-    out: dict[str, str | None] = {}
-    for seg in part_dir.split(os.sep):
-        if not seg or "=" not in seg:
-            continue
-        k, _, v = seg.partition("=")
-        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return out
 
 
 def _stage_data_files(
@@ -223,9 +140,7 @@ def _metadata_action(df: DataFrame) -> dict:
         "metaData": {
             "id": str(uuid.uuid4()),
             "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(
-                {"type": "struct", "fields": fields}
-            ),
+            "schemaString": json.dumps({"type": "struct", "fields": fields}),
             "partitionColumns": [],
             "configuration": {},
             "createdTime": int(time.time() * 1000),
@@ -233,13 +148,82 @@ def _metadata_action(df: DataFrame) -> dict:
     }
 
 
-def _mapping_mode(meta: dict | None) -> str:
-    if not meta:
-        return "none"
-    cfg = meta.get("configuration") or {}
-    if isinstance(cfg, list):  # pyarrow map -> pairs
-        cfg = dict(cfg)
-    return cfg.get("delta.columnMapping.mode", "none")
+def _removes(paths, data_change: bool) -> list[dict]:
+    ts = int(time.time() * 1000)
+    return [
+        {
+            "remove": {
+                "path": p,
+                "deletionTimestamp": ts,
+                "dataChange": data_change,
+            }
+        }
+        for p in paths
+    ]
+
+
+def _replayed(
+    table_path: str,
+    snap: Snapshot,
+    txn: tuple[str, int] | None,
+    expected_version: int | None,
+) -> bool:
+    """True when ``txn``'s batch is already in ``snap``; raises
+    :class:`ConcurrentWriteError` when the table has moved past
+    ``expected_version``."""
+    if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+        return True
+    if expected_version not in (None, snap.version):
+        raise ConcurrentWriteError(
+            f"{table_path}: expected version {expected_version},"
+            f" found {snap.version}"
+        )
+    return False
+
+
+def _commit(
+    table_path: str,
+    adds: list[dict],
+    actions_for: Callable[[Snapshot], list[dict]],
+    checkpoint_interval: int,
+    txn: tuple[str, int] | None = None,
+    expected_version: int | None = None,
+) -> int | None:
+    """Publish the staged ``adds`` as the next version: the one CAS
+    loop.  Each attempt folds the log once; returns None (the batch is
+    a replay) when ``txn``'s watermark is already there, raises
+    :class:`ConcurrentWriteError` when the table moved past
+    ``expected_version`` or ``actions_for`` finds the commit no longer
+    consistent with the log, and otherwise publishes ``actions_for``'s
+    actions at the snapshot's version + 1, retrying on a lost race.
+    The staged files are deleted whenever nothing is published.  Every
+    ``checkpoint_interval`` versions the commit is checkpointed."""
+    log = os.path.join(table_path, "_delta_log")
+    try:
+        for _ in range(_MAX_COMMIT_ATTEMPTS):
+            snap = _snapshot(table_path)
+            if _replayed(table_path, snap, txn, expected_version):
+                _drop_staged(table_path, adds)
+                return None
+            v = snap.version + 1
+            actions = []
+            if txn is not None:
+                actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
+            actions += actions_for(snap)
+            text = "".join(json.dumps(a) + "\n" for a in actions)
+            if publish_once(os.path.join(log, f"{v:020d}.json"), text):
+                break
+        else:
+            raise ConcurrentWriteError(
+                f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} Delta"
+                " commit attempts (pathological writer contention)"
+            )
+    except BaseException:
+        _drop_staged(table_path, adds)
+        raise
+    if checkpoint_interval and (v + 1) % checkpoint_interval == 0:
+        _write_checkpoint(table_path, v)
+    return v
 
 
 def write_delta_commit(
@@ -252,108 +236,44 @@ def write_delta_commit(
 ) -> int | None:
     """Commit ``df`` to a Delta table (creating it if absent); returns
     the committed version.  ``mode``: 'append' adds files; 'overwrite'
-    also removes every previously-live file.  A lost CAS race (another
-    writer claimed the version first) is retried with a FRESH read of
-    the log — for overwrite that re-read includes the live file set,
-    so the retry is a sound read-modify-write, not a blind replay.
-    Emits a classic checkpoint whenever
-    (version + 1) % checkpoint_interval == 0.
+    also removes every file live at the version the commit claims.
 
     ``txn=(app_id, version)`` emits a SetTransaction action
     (PROTOCOL.md) recording that this application has committed up to
-    ``version`` — the exactly-once handshake streaming sinks use: a
-    retried micro-batch consults :func:`delta_reader.last_txn_versions`
-    and skips itself if its version was already recorded.  The
-    watermark is ALSO re-checked here inside the CAS retry loop on the
-    freshly-read log, so two concurrent writers sharing an appId (a
-    zombie driver racing its restarted successor — the scenario
-    SetTransaction exists for) cannot both commit the same batch: the
-    CAS loser re-reads, sees the winner's watermark, and returns
-    ``None`` (skipped-as-replay) instead of duplicating the batch.
-
-    Tables are written without column mapping (reader v1 / writer v2
-    protocol).  A table whose log declares column mapping (written by
-    another engine) is refused with NotImplementedError before any
-    file is staged: its data files store physical names this writer
-    does not produce.  ``read_delta_table`` still reads such tables.
+    ``version`` — the exactly-once handshake streaming sinks use.  The
+    watermark is checked before anything is staged and again on every
+    attempt of the CAS loop, so two writers sharing an appId (a zombie
+    driver racing its restarted successor) cannot both commit one
+    batch: the one that finds its batch in the log returns ``None``.
 
     ``expected_version`` is the optimistic-concurrency guard for
     read-modify-write callers: the commit raises
     :class:`ConcurrentWriteError`, publishing nothing and deleting its
     staged files, unless the table's latest version is still this one
     (-1: the table must not exist yet).  ``None`` commits blindly at
-    whatever version is next."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _latest_metadata,
-    )
+    whatever version is next.
 
+    A table the reader's protocol gate refuses raises
+    ``NotImplementedError`` before any file is staged."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    if txn is not None:
+        txn = (txn[0], int(txn[1]))
+    if _replayed(table_path, _snapshot(table_path), txn, expected_version):
+        return None  # already in the log; stage nothing
     os.makedirs(os.path.join(table_path, "_delta_log"), exist_ok=True)
-    if txn is not None and last_txn_versions(table_path).get(
-        txn[0], -1
-    ) >= int(txn[1]):
-        return None  # replayed batch: already in the log; stage nothing
-    if _latest_version(table_path) >= 0:
-        if _mapping_mode(_latest_metadata(table_path, None)) != "none":
-            raise NotImplementedError(
-                f"{table_path}: the table declares column mapping; this"
-                " writer does not write physical column names"
-            )
-        meta_action = None  # table exists; metaData only at v0
-    else:
-        meta_action = _metadata_action(df)
     adds = _stage_data_files(df, table_path)
-    log = os.path.join(table_path, "_delta_log")
 
-    for _attempt in range(_MAX_COMMIT_ATTEMPTS):
-        # Re-check the SetTransaction watermark on EVERY iteration, on
-        # a fresh log read: a same-appId writer may have committed this
-        # very batch while we were staging (no link collision needed —
-        # we'd simply allocate the next version and duplicate it).
-        if txn is not None and last_txn_versions(table_path).get(
-            txn[0], -1
-        ) >= int(txn[1]):
-            # this batch is already in the log: drop the staged files,
-            # report the skip
-            _drop_staged(table_path, adds)
-            return None
-        cur = _latest_version(table_path)
-        if expected_version is not None and cur != expected_version:
-            _drop_staged(table_path, adds)
-            raise ConcurrentWriteError(
-                f"{table_path}: expected version {expected_version},"
-                f" found {cur}"
-            )
-        try:
-            live_before, _ = _resolve_files(table_path, None)
-        except FileNotFoundError:
-            live_before = []
-        v = cur + 1
+    def actions_for(now: Snapshot) -> list[dict]:
         actions: list[dict] = []
-        if txn is not None:
-            actions.append(
-                {"txn": {"appId": txn[0], "version": int(txn[1])}}
-            )
-        if v == 0:
-            assert meta_action is not None
+        if now.version < 0:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
-            actions.append(meta_action)
+            actions.append(_metadata_action(df))
         if mode == "overwrite":
-            ts = int(time.time() * 1000)
-            for fp in live_before:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": os.path.relpath(fp, table_path),
-                            "deletionTimestamp": ts,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        actions.extend({"add": a} for a in adds)
+            actions += _removes(sorted(now.adds), data_change=True)
+        actions += [{"add": a} for a in adds]
         actions.append(
             {
                 "commitInfo": {
@@ -363,15 +283,15 @@ def write_delta_commit(
                 }
             }
         )
-        text = "".join(json.dumps(a) + "\n" for a in actions)
-        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
-            continue  # lost the race; re-read the log and retry
-        if checkpoint_interval and (v + 1) % checkpoint_interval == 0:
-            _write_checkpoint(table_path, v)
-        return v
-    raise ConcurrentWriteError(
-        f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} Delta"
-        " commit attempts (pathological writer contention)"
+        return actions
+
+    return _commit(
+        table_path,
+        adds,
+        actions_for,
+        checkpoint_interval,
+        txn,
+        expected_version,
     )
 
 
@@ -390,15 +310,15 @@ def rewrite_delta_table(
     and None returned.  Returns the committed version."""
     last: Exception | None = None
     for _ in range(_MAX_COMMIT_ATTEMPTS):
-        cur = _latest_version(table_path)
-        current = read_delta_table(spark, table_path, cur) if cur >= 0 else None
+        snap = _snapshot(table_path)
+        current = _scan(spark, table_path, snap) if snap.version >= 0 else None
         try:
             return write_delta_commit(
                 fold(current),
                 table_path,
                 mode="overwrite",
                 txn=txn,
-                expected_version=cur,
+                expected_version=snap.version,
             )
         except ConcurrentWriteError as e:
             last = e
@@ -409,470 +329,273 @@ def rewrite_delta_table(
 
 
 def _write_checkpoint(table_path: str, version: int) -> None:
-    """Classic single-file checkpoint at ``version``: one row per live
-    add action plus the protocol and metaData rows, in the canonical
-    five-struct schema; then point _last_checkpoint at it.
-
-    Round 7 closed three fidelity gaps against the live state:
-
-    - add rows carry the REAL ``partitionValues`` (ADVICE r6 high: the
-      old ``[]`` made ``_resolve_state`` seed ``partitioned=False``
-      after any checkpoint, so every later read silently DROPPED the
-      partition columns — and handed stock readers corrupt partition
-      metadata);
-    - live ``deletionVector`` descriptors are carried through
-      (VERDICT r6 item 6: checkpointing a DV'd table used to refuse,
-      so its JSON replay grew unboundedly);
-    - the metaData row keeps ``configuration`` (a column-mapped
-      table's ``delta.columnMapping.mode`` lives there; dropping it
-      made post-checkpoint reads return physical column names)."""
+    """Classic single-file checkpoint at ``version``: the protocol and
+    metaData rows, one txn row per application and one row per live add
+    (with its real ``partitionValues``), in the canonical five-struct
+    schema; then point _last_checkpoint at it.  The state is rebuilt
+    from the checkpoints strictly below ``version`` and the JSON after
+    them, so rewriting a damaged checkpoint never trusts the artifact
+    it replaces, and txn rows carry over from checkpoint to checkpoint
+    (a vacuum of the early JSON must not reset the exactly-once
+    watermarks)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    log = os.path.join(table_path, "_delta_log")
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _resolve_state,
-    )
-
-    state, _ = _resolve_state(table_path, version)
-    live = [os.path.join(table_path, p) for p in sorted(state)]
-    # latest metaData + protocol + per-app txn watermarks, seeded from
-    # the newest prior checkpoint and folded through the JSON commits
-    # after it (txn rows MUST survive checkpoint-to-checkpoint or a
-    # vacuum of the early JSON would reset the streaming exactly-once
-    # state and drop the protocol-required metaData/protocol rows)
-    meta, proto, txns = _log_state(
-        table_path, version, include_cp_at_version=False
-    )
-    if meta is None or proto is None:
-        # a checkpoint missing these rows is protocol-invalid and
-        # would brick stock readers once the JSON is vacuumed —
-        # refuse (reachable only on an externally-damaged log)
+    snap = _snapshot(table_path, version, seed_below=version)
+    if snap.meta is None or snap.protocol is None:
+        # a checkpoint missing these rows is protocol-invalid and would
+        # brick stock readers once the JSON is vacuumed
         raise ConcurrentWriteError(
-            f"{table_path}: cannot checkpoint at {version} — the"
-            " metaData/protocol state is unreconstructable from prior"
-            " checkpoints + JSON (damaged or over-vacuumed log)"
+            f"{table_path}: cannot checkpoint at {version} — the log holds"
+            " no metaData/protocol state (damaged or over-vacuumed log)"
         )
-
-    dv_t = pa.struct(
-        [
-            ("storageType", pa.string()),
-            ("pathOrInlineDv", pa.string()),
-            ("offset", pa.int32()),
-            ("sizeInBytes", pa.int32()),
-            ("cardinality", pa.int64()),
-        ]
-    )
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", pa.map_(pa.string(), pa.string())),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("deletionVector", dv_t),
-        ]
-    )
-    remove_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("deletionTimestamp", pa.int64()),
-            ("dataChange", pa.bool_()),
-        ]
-    )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct([("provider", pa.string())])),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-            ("configuration", pa.map_(pa.string(), pa.string())),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    proto_t = pa.struct(
-        [("minReaderVersion", pa.int32()), ("minWriterVersion", pa.int32())]
-    )
-    txn_t = pa.struct(
-        [("appId", pa.string()), ("version", pa.int64())]
-    )
-
-    rows_add: list = []
-    rows_meta: list = []
-    rows_proto: list = []
-    rows_txn: list = []
-    if proto is not None:
-        rows_add.append(None)
-        rows_meta.append(None)
-        rows_txn.append(None)
-        rows_proto.append(
-            {
-                "minReaderVersion": proto.get("minReaderVersion", 1),
-                "minWriterVersion": proto.get("minWriterVersion", 2),
+    schema = {
+        "txn": pa.struct([("appId", pa.string()), ("version", pa.int64())]),
+        "add": pa.struct(
+            [
+                ("path", pa.string()),
+                ("partitionValues", pa.map_(pa.string(), pa.string())),
+                ("size", pa.int64()),
+                ("modificationTime", pa.int64()),
+                ("dataChange", pa.bool_()),
+            ]
+        ),
+        "remove": pa.struct(
+            [
+                ("path", pa.string()),
+                ("deletionTimestamp", pa.int64()),
+                ("dataChange", pa.bool_()),
+            ]
+        ),
+        "metaData": pa.struct(
+            [
+                ("id", pa.string()),
+                ("format", pa.struct([("provider", pa.string())])),
+                ("schemaString", pa.string()),
+                ("partitionColumns", pa.list_(pa.string())),
+                ("configuration", pa.map_(pa.string(), pa.string())),
+                ("createdTime", pa.int64()),
+            ]
+        ),
+        "protocol": pa.struct(
+            [
+                ("minReaderVersion", pa.int32()),
+                ("minWriterVersion", pa.int32()),
+            ]
+        ),
+    }
+    meta = snap.meta
+    rows: list[dict] = [
+        {
+            "protocol": {
+                "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
+                "minWriterVersion": snap.protocol.get("minWriterVersion", 2),
             }
-        )
-    if meta is not None:
-        cfg = meta.get("configuration") or {}
-        if isinstance(cfg, list):  # pyarrow map -> pairs round trip
-            cfg = dict(cfg)
-        rows_add.append(None)
-        rows_meta.append(
-            {
+        },
+        {
+            "metaData": {
                 "id": meta.get("id"),
                 "format": {"provider": "parquet"},
                 "schemaString": meta.get("schemaString"),
                 "partitionColumns": meta.get("partitionColumns", []),
-                "configuration": cfg,
+                # a checkpoint-seeded map arrives as (key, value) pairs
+                "configuration": dict(meta.get("configuration") or {}),
                 "createdTime": meta.get("createdTime"),
             }
-        )
-        rows_proto.append(None)
-        rows_txn.append(None)
-    for app_id, tv in sorted(txns.items()):
-        rows_add.append(None)
-        rows_meta.append(None)
-        rows_proto.append(None)
-        rows_txn.append({"appId": app_id, "version": tv})
-    for fp in live:
-        rel = os.path.relpath(fp, table_path)
-        info = state[rel]
-        dv = info["deletionVector"]
-        rows_add.append(
+        },
+    ]
+    rows += [
+        {"txn": {"appId": app, "version": tv}}
+        for app, tv in sorted(snap.txns.items())
+    ]
+    for rel, pv in sorted(snap.adds.items()):
+        fp = os.path.join(table_path, rel)
+        rows.append(
             {
-                "path": rel,
-                "partitionValues": info["partitionValues"],
-                "size": os.path.getsize(fp),
-                "modificationTime": int(os.path.getmtime(fp) * 1000),
-                "dataChange": False,
-                "deletionVector": (
-                    {
-                        "storageType": dv.get("storageType"),
-                        "pathOrInlineDv": dv.get("pathOrInlineDv"),
-                        "offset": dv.get("offset"),
-                        "sizeInBytes": dv.get("sizeInBytes"),
-                        "cardinality": dv.get("cardinality"),
-                    }
-                    if dv
-                    else None
-                ),
+                "add": {
+                    "path": rel,
+                    "partitionValues": pv,
+                    "size": os.path.getsize(fp),
+                    "modificationTime": int(os.path.getmtime(fp) * 1000),
+                    "dataChange": False,
+                }
             }
         )
-        rows_meta.append(None)
-        rows_proto.append(None)
-        rows_txn.append(None)
-    n = len(rows_add)
     table = pa.table(
         {
-            "txn": pa.array(rows_txn, type=txn_t),
-            "add": pa.array(rows_add, type=add_t),
-            "remove": pa.array([None] * n, type=remove_t),
-            "metaData": pa.array(rows_meta, type=meta_t),
-            "protocol": pa.array(rows_proto, type=proto_t),
+            k: pa.array([r.get(k) for r in rows], type=t)
+            for k, t in schema.items()
         }
     )
+    log = os.path.join(table_path, "_delta_log")
     cp_path = os.path.join(log, f"{version:020d}.checkpoint.parquet")
     tmp = cp_path + f".tmp{uuid.uuid4().hex}"
     pq.write_table(table, tmp)
     os.rename(tmp, cp_path)
     with open(os.path.join(log, "_last_checkpoint"), "w") as f:
-        json.dump({"version": version, "size": n}, f)
-
-
-DEFAULT_OPTIMIZE_TARGET_BYTES = 128 * 1024 * 1024
+        json.dump({"version": version, "size": len(rows)}, f)
 
 
 def optimize_delta_table(
     spark,
     table_path: str,
-    target_bytes: int = DEFAULT_OPTIMIZE_TARGET_BYTES,
     checkpoint_interval: int = DEFAULT_CHECKPOINT_INTERVAL,
 ) -> int | None:
-    """OPTIMIZE-style bin-packing compaction THROUGH the protocol: the
-    linear-partitioning plan of operators/layout.compaction_plan
-    applied to the table's own live file manifest, published as ONE
-    atomic commit whose add+remove actions all carry
+    """OPTIMIZE-style bin-packing compaction THROUGH the protocol,
+    published as ONE atomic commit whose add+remove actions all carry
     ``dataChange=false`` (layout-only rewrite: table state unchanged,
     change-feed consumers skip it — PROTOCOL.md's OPTIMIZE shape).
 
-    Small live files (< target_bytes) sort by path and group by the
-    running byte total (the same deterministic linear partitioning as
-    compaction_plan); each >=2-file group is read back and rewritten
-    as one file.  Returns the committed version, or None when nothing
-    qualifies (no-op — no commit is appended).
+    Live files below the 128 MiB target, sorted by path, are grouped
+    by their running byte total (the deterministic linear partitioning
+    of operators/layout.compaction_plan); each group of two or more is
+    read back and rewritten as one file.  Returns the committed
+    version, or None when nothing qualifies (no commit is appended).
 
-    Partitioned tables compact WITHIN each partition directory: files
-    never merge across partition boundaries (that would change the
-    partitionValues the log asserts), compacted files land back in
-    their hive-style ``k=v`` directory, and each rewrite add-action
-    carries the partitionValues parsed from that path — so partition
-    pruning and the basePath read reconstruction keep working.
+    Files group within one partition directory and one set of
+    ``partitionValues``, never across: the compacted file lands back in
+    that directory and its add action carries the same values, so the
+    basePath read keeps reconstructing the partition columns.
 
-    Scale: the plan runs over the file MANIFEST (metadata rows); the
-    rewrites are ordinary distributed parquet jobs per group.  A CAS
-    loss re-reads the log; if a concurrent writer removed any file
-    this plan compacts, the staged files are deleted and
-    ConcurrentWriteError raised (the caller re-plans — OPTIMIZE is a
-    maintenance pass, not a data write, so give-up-and-replan is the
-    correct conflict semantic)."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _resolve_state,
-    )
-
-    state, partitioned = _resolve_state(table_path, None)
-    # A DV'd file is MATERIALIZED by OPTIMIZE (VERDICT r6 item 5; the
-    # real OPTIMIZE/PURGE contract): its rewrite reads the file MINUS
-    # the deleted positions and the rewrite add carries no DV — the
-    # logical table state is unchanged (those rows were already
-    # invisible), so dataChange=false still holds, and the orphaned
-    # deletion_vector_*.bin becomes a vacuum candidate.  DV'd files
-    # qualify regardless of size (rewriting is what sheds the DV), and
-    # a group with a DV'd member qualifies even as a singleton.
-    # Partition boundaries are grouping boundaries: bin-pack per
-    # partition DIRECTORY, never across.
-    dv_by_path: dict[str, dict] = {}
-    by_dir: dict[str, list[tuple[str, int]]] = {}
-    for rel, info in sorted(state.items()):
-        fp = os.path.join(table_path, rel)
-        if info["deletionVector"] is not None:
-            dv_by_path[fp] = info["deletionVector"]
-        by_dir.setdefault(os.path.dirname(rel), []).append(
-            (fp, os.path.getsize(fp))
+    The plan runs over the live-file manifest; the rewrites are ordinary
+    distributed parquet jobs per group.  If a concurrent writer removed
+    any file this plan compacts, the staged files are deleted and
+    ConcurrentWriteError raised: OPTIMIZE is a maintenance pass, so the
+    caller re-plans rather than the loop retrying."""
+    snap = _snapshot(table_path)
+    by_part: dict[tuple, list[tuple[str, int]]] = {}
+    for rel, pv in sorted(snap.adds.items()):
+        key = (os.path.dirname(rel), tuple(sorted(pv.items())))
+        by_part.setdefault(key, []).append(
+            (rel, os.path.getsize(os.path.join(table_path, rel)))
         )
-    groups: list[tuple[str, list[str]]] = []
-    for part_dir in sorted(by_dir):
+    groups: list[tuple[tuple, list[str]]] = []
+    for key, files in by_part.items():
         cur: list[str] = []
         cur_bytes = 0
-        for fp, sz in by_dir[part_dir]:
-            if sz >= target_bytes and fp not in dv_by_path:
+        for rel, sz in files:
+            if sz >= _OPTIMIZE_TARGET_BYTES:
                 continue  # already at target; leave in place
-            if cur and cur_bytes + sz > target_bytes:
-                groups.append((part_dir, cur))
+            if cur and cur_bytes + sz > _OPTIMIZE_TARGET_BYTES:
+                groups.append((key, cur))
                 cur, cur_bytes = [], 0
-            cur.append(fp)
+            cur.append(rel)
             cur_bytes += sz
         if cur:
-            groups.append((part_dir, cur))
-    groups = [
-        (d, g)
-        for d, g in groups
-        if len(g) >= 2 or any(fp in dv_by_path for fp in g)
-    ]
+            groups.append((key, cur))
+    groups = [(key, g) for key, g in groups if len(g) >= 2]
     if not groups:
         return None
 
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _apply_deletion_vectors,
-    )
-
     adds: list[dict] = []
     removes: list[str] = []
-    n_dv_materialized = 0
-    for part_dir, g in groups:
-        compacted = spark.read.parquet(*g)
-        group_dvs = {
-            os.path.relpath(fp, table_path): dv_by_path[fp]
-            for fp in g
-            if fp in dv_by_path
-        }
-        if group_dvs:
-            compacted = _apply_deletion_vectors(
-                spark, compacted, table_path, group_dvs
-            )
-            n_dv_materialized += len(group_dvs)
-        compacted = compacted.coalesce(1)
-        adds.extend(
-            _stage_data_files(
-                compacted,
-                table_path,
-                data_change=False,
-                subdir=part_dir,
-                partition_values=_hive_partition_values(part_dir),
-            )
+    for (part_dir, pv), g in groups:
+        compacted = spark.read.parquet(
+            *(os.path.join(table_path, r) for r in g)
         )
-        removes.extend(g)
-    remove_rel = [os.path.relpath(fp, table_path) for fp in removes]
+        adds += _stage_data_files(
+            compacted.coalesce(1),
+            table_path,
+            data_change=False,
+            subdir=part_dir,
+            partition_values=dict(pv),
+        )
+        removes += g
 
-    log = os.path.join(table_path, "_delta_log")
-    for _ in range(_MAX_COMMIT_ATTEMPTS):
-        live_now, _ = _resolve_files(table_path, None)
-        live_rel = {os.path.relpath(fp, table_path) for fp in live_now}
-        if not set(remove_rel) <= live_rel:
-            _drop_staged(table_path, adds)
+    def actions_for(now: Snapshot) -> list[dict]:
+        if not set(removes) <= set(now.adds):
             raise ConcurrentWriteError(
                 f"{table_path}: OPTIMIZE lost a conflict — a concurrent"
                 " writer removed a file this plan compacts; re-plan"
             )
-        v = _latest_version(table_path) + 1
-        ts = int(time.time() * 1000)
-        actions: list[dict] = []
-        for rel in remove_rel:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        "dataChange": False,
-                    }
-                }
-            )
-        actions.extend({"add": a} for a in adds)
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetBytes": int(target_bytes),
-                        "numRemovedFiles": len(remove_rel),
-                        "numAddedFiles": len(adds),
-                        "numDeletionVectorsMaterialized": n_dv_materialized,
-                    },
-                }
-            }
+        commit_info = {
+            "timestamp": int(time.time() * 1000),
+            "operation": "OPTIMIZE",
+            "operationParameters": {
+                "targetBytes": _OPTIMIZE_TARGET_BYTES,
+                "numRemovedFiles": len(removes),
+                "numAddedFiles": len(adds),
+            },
+        }
+        return (
+            _removes(removes, data_change=False)
+            + [{"add": a} for a in adds]
+            + [{"commitInfo": commit_info}]
         )
-        text = "".join(json.dumps(a) + "\n" for a in actions)
-        if not publish_once(os.path.join(log, f"{v:020d}.json"), text):
-            continue  # lost the race; re-read the log and retry
-        if checkpoint_interval and (v + 1) % checkpoint_interval == 0:
-            _write_checkpoint(table_path, v)
-        return v
-    raise ConcurrentWriteError(
-        f"{table_path}: gave up after {_MAX_COMMIT_ATTEMPTS} OPTIMIZE"
-        " commit attempts (pathological writer contention)"
-    )
+
+    return _commit(table_path, adds, actions_for, checkpoint_interval)
 
 
 def vacuum_delta_table(
     table_path: str,
     retention_ms: int = 7 * 24 * 3600 * 1000,
-    dry_run: bool = False,
 ) -> dict:
     """Protocol VACUUM: physically delete (a) data files no longer
-    live at the LATEST version whose tombstone age exceeds
-    ``retention_ms``, and (b) JSON commits at/below the newest
-    checkpoint (stock Delta's log cleanup).  Returns counts
+    live at the LATEST version whose age exceeds ``retention_ms``, and
+    (b) JSON commits at/below the newest checkpoint (stock Delta's log
+    cleanup).  Returns counts
     ``{"data_files_deleted": n, "log_commits_deleted": m}``.
 
-    Retention guards (all refuse loudly rather than corrupt):
+    Guards (each refuses rather than corrupts):
 
     - Live-set safety: only files ABSENT from the latest live set are
-      candidates; a concurrent reader pinned at an older version loses
-      time travel below the checkpoint (the reader raises on such
-      reads — delta_reader's honest-scope contract), never sees a
-      half-deleted snapshot.
-    - SetTransaction watermark seeding: JSON cleanup is REFUSED unless
-      the surviving state (checkpoint seed + later JSON) preserves
-      every per-app txn watermark, the metaData, and the protocol rows
-      that a full-log fold produces — a checkpoint written before this
-      module seeded txn rows would otherwise silently reset the
-      streaming exactly-once guard.
+      candidates; a reader pinned at an older version loses time travel
+      below the checkpoint (the reader raises on such reads), never
+      sees a half-deleted snapshot.
+    - State preservation: JSON cleanup is REFUSED unless the newest
+      checkpoint carries the metaData, the protocol and every per-app
+      txn watermark that the log rebuilt without it holds — a
+      checkpoint that dropped txn rows would otherwise silently reset
+      the streaming exactly-once guard.
     - Age: data files must be older than ``retention_ms`` (mtime),
       matching Delta's default 7-day guard against deleting files an
       in-flight query may still read."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _dv_bin_path,
-        _resolve_state,
-    )
-
-    state, _ = _resolve_state(table_path, None)
-    live_rel = set(state)
-    # a deletion_vector_*.bin is live ONLY while an add action carrying
-    # its descriptor is live (ADVICE r6: vacuum previously reclaimed
-    # only *.parquet, so bins owned by removed/rewritten files
-    # accumulated in the table directory forever)
-    live_dv_bins = {
-        os.path.abspath(p)
-        for info in state.values()
-        if info["deletionVector"]
-        if (p := _dv_bin_path(table_path, info["deletionVector"]))
-    }
+    snap = _snapshot(table_path)
+    if snap.version < 0:
+        raise FileNotFoundError(
+            f"not a Delta table (no commits): {table_path}"
+        )
     now = time.time()
     data_deleted = 0
     for dirpath, dirnames, filenames in os.walk(table_path):
         # never descend into the log or in-flight staging dirs
         dirnames[:] = [
-            d for d in dirnames
+            d
+            for d in dirnames
             if d != "_delta_log" and not d.startswith("_staging_")
         ]
         for name in filenames:
             fp = os.path.join(dirpath, name)
-            rel = os.path.relpath(fp, table_path)
-            if name.endswith(".parquet"):
-                if rel in live_rel:
-                    continue
-            elif name.startswith("deletion_vector_") and name.endswith(
-                ".bin"
+            if (
+                not name.endswith(".parquet")
+                or os.path.relpath(fp, table_path) in snap.adds
+                or (now - os.path.getmtime(fp)) * 1000 <= retention_ms
             ):
-                if os.path.abspath(fp) in live_dv_bins:
-                    continue
-            else:
                 continue
-            if (now - os.path.getmtime(fp)) * 1000 <= retention_ms:
-                continue
-            if not dry_run:
-                os.unlink(fp)
+            os.unlink(fp)
             data_deleted += 1
 
-    log = os.path.join(table_path, "_delta_log")
-    cps = _checkpoints(log)
-    log_deleted = 0
-    if cps:
-        cp_v = max(cps)
-        latest = _latest_version(table_path)
-        full = _full_json_state(table_path, latest)
-        survive = _log_state(table_path, latest)
-        ok = (
-            survive[0] is not None
-            and survive[1] is not None
-            and all(
-                survive[2].get(app, -1) >= v for app, v in full[2].items()
-            )
-        )
-        if not ok and not dry_run:
+    cp_v = snap.checkpoint
+    doomed = []
+    if cp_v is not None:
+        doomed = [v for v in delta_log_versions(table_path) if v <= cp_v]
+    if doomed:
+        ref = _snapshot(table_path, seed_below=cp_v)
+        if (
+            snap.meta is None
+            or snap.protocol is None
+            or any(snap.txns.get(app, -1) < v for app, v in ref.txns.items())
+        ):
             raise ConcurrentWriteError(
-                f"{table_path}: refusing log VACUUM — the newest"
-                f" checkpoint ({cp_v}) does not preserve the"
-                " metaData/protocol/SetTransaction state of the JSON"
-                " commits it would replace (pre-seeding checkpoint?);"
+                f"{table_path}: refusing log VACUUM — the newest checkpoint"
+                f" ({cp_v}) does not preserve the metaData/protocol/"
+                "SetTransaction state of the JSON commits it would replace;"
                 " rewrite the checkpoint first"
             )
-        if ok:
-            for v in delta_log_versions(table_path):
-                if v > cp_v:
-                    continue
-                if not dry_run:
-                    os.unlink(os.path.join(log, f"{v:020d}.json"))
-                log_deleted += 1
+        log = os.path.join(table_path, "_delta_log")
+        for v in doomed:
+            os.unlink(os.path.join(log, f"{v:020d}.json"))
     return {
         "data_files_deleted": data_deleted,
-        "log_commits_deleted": log_deleted,
+        "log_commits_deleted": len(doomed),
     }
-
-
-def _full_json_state(
-    table_path: str, version: int
-) -> tuple[dict | None, dict | None, dict[str, int]]:
-    """(metaData, protocol, txns) folded from the JSON commits ALONE —
-    the vacuum guard's reference answer for what state must survive."""
-    log = os.path.join(table_path, "_delta_log")
-    meta = proto = None
-    txns: dict[str, int] = {}
-    for v in delta_log_versions(table_path):
-        if v > version:
-            break
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    proto = action["protocol"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-    return meta, proto, txns

@@ -4,13 +4,14 @@ Structured Streaming's foreachBatch gives at-least-once delivery: a
 crashed-and-restarted query re-runs its last micro-batch, so a naive
 sink duplicates it.  Delta's SetTransaction action (PROTOCOL.md) is
 the standard fix — every committed batch records (appId, batchId) in
-the log, and a retried batch first consults the table's per-app
-watermark and skips itself if already applied.  The txn action, the
-data files, and the add actions land in ONE atomic commit (the
-os.link CAS in sources/delta_writer), so the dedup decision and the
-data are never separable — exactly-once by construction, surviving
-checkpoints/vacuum because the checkpoint writer persists txn
-watermarks.
+the log.  The handler here is one call: it hands each micro-batch to
+``delta_writer.write_delta_commit(txn=(app_id, batch_id))``, which
+skips a batch whose watermark the log already holds (checked before it
+stages anything and again on every attempt of its CAS loop) and
+otherwise commits the txn action, the data files and the add actions
+in ONE atomic commit (the os.link CAS), so the dedup decision and the
+data are never separable.  Checkpoints carry the txn watermarks, so a
+vacuum of the early JSON cannot reset them.
 
 At 100 TB this is the idempotence scheme Delta's own streaming sink
 uses; the micro-batch write itself is the ordinary distributed
@@ -25,9 +26,6 @@ from data_pipeline_for_e_commerce_shop_spark.functions.scalars import (
     floordiv_sql,
 )
 
-from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-    last_txn_versions,
-)
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
     write_delta_commit,
 )
@@ -44,9 +42,6 @@ def delta_exactly_once_sink(table_path: str, app_id: str):
     when the batch was recognized as a replay and skipped."""
 
     def handle(batch_df: DataFrame, batch_id: int):
-        seen = last_txn_versions(table_path).get(app_id, -1)
-        if batch_id <= seen:
-            return None  # replayed batch: already in the log
         return write_delta_commit(
             batch_df, table_path, txn=(app_id, int(batch_id))
         )

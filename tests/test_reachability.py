@@ -45,6 +45,10 @@ ALLOWED = {
     ("sources.delta_writer", "rewrite_delta_table"):
         "ROADMAP directions 1 and 3 commit the validated zone and the "
         "KPIs through this optimistic read-modify-write loop",
+    ("sources.delta_reader", "last_txn_versions"):
+        "the SetTransaction watermark query (PROTOCOL.md) for a caller "
+        "that drives its own foreachBatch; a projection of _snapshot, "
+        "which the writer reads directly",
     ("sources.sinks", "write_alert"):
         "ROADMAP direction 2 wires it to failed batches (SURVEY S10/T10)",
 }

@@ -378,44 +378,84 @@ def test_delta_log_reader_replays_adds_and_removes(spark, tmp_path):
 
 
 def test_delta_log_reader_refuses_lossy_reads(spark, tmp_path):
-    """Checkpointed logs and reader-protocol features this reader
-    cannot honor must raise, never silently misread."""
+    """Reader-protocol features this reader does not implement must
+    raise on read, never silently misread, and an append to such a
+    table must raise before it stages a file or claims a version.
+    Checkpointed logs it cannot reconstruct must raise too."""
+    import json as _json
     import os as _os
+    import uuid as _uuid
 
     import pytest as _pytest
 
     from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
         read_delta_table,
     )
+    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+        write_delta_commit,
+    )
 
-    # Reader v2 (column mapping) became SUPPORTED in round 6 — a v2
-    # table with no mapped columns now reads as plain parquet.  The
-    # refusal surface moved to protocol versions/features this reader
-    # genuinely cannot honor: assert v4 still raises.
-    table = str(tmp_path / "dt2")
-    _os.makedirs(table)
-    _stage_parquet_file(
-        spark, spark.range(3).selectExpr("id AS x"), f"{table}/f.parquet"
-    )
-    _write_commit(table, 0, [
-        {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
-        {"add": {"path": "f.parquet", "dataChange": True}},
-    ])
-    assert {r["x"] for r in read_delta_table(spark, table).collect()} == {
-        0, 1, 2,
+    def v3(feature):
+        return {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                             "readerFeatures": [feature],
+                             "writerFeatures": [feature]}}
+
+    v1 = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+    meta = {"metaData": {"id": "t", "format": {"provider": "parquet"},
+                         "partitionColumns": [], "configuration": {}}}
+    mapped_meta = {"metaData": {
+        "id": "t", "format": {"provider": "parquet"},
+        "partitionColumns": [],
+        "configuration": {"delta.columnMapping.mode": "name"}}}
+    add = {"add": {"path": "f.parquet", "partitionValues": {},
+                   "dataChange": True}}
+    # the descriptor shape of PROTOCOL.md's deletion-vector example
+    dv_add = {"add": dict(add["add"], deletionVector={
+        "storageType": "u", "pathOrInlineDv": "ab^-aqEH.-t@S}K{vb[*k^",
+        "offset": 4, "sizeInBytes": 40, "cardinality": 6})}
+    cases = {
+        "column_mapped_v2": [
+            {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+            mapped_meta, add,
+        ],
+        "deletion_vectors_v3": [v3("deletionVectors"), meta, dv_add],
+        "v2_checkpoint_v3": [v3("v2Checkpoint"), meta, add],
+        "dv_descriptor_on_v1": [v1, meta, dv_add],
+        "reader_v4": [
+            {"protocol": {"minReaderVersion": 4, "minWriterVersion": 7,
+                          "readerFeatures": ["columnMapping"]}},
+            add,
+        ],
     }
-    table_v4 = str(tmp_path / "dt2v4")
-    _os.makedirs(table_v4)
-    _stage_parquet_file(
-        spark, spark.range(3).selectExpr("id AS x"), f"{table_v4}/f.parquet"
-    )
-    _write_commit(table_v4, 0, [
-        {"protocol": {"minReaderVersion": 4, "minWriterVersion": 7,
-                      "readerFeatures": ["columnMapping"]}},
-        {"add": {"path": "f.parquet", "dataChange": True}},
-    ])
-    with _pytest.raises(NotImplementedError, match="minReaderVersion"):
-        read_delta_table(spark, table_v4)
+    for name, actions in cases.items():
+        table = str(tmp_path / name)
+        _os.makedirs(table)
+        _stage_parquet_file(
+            spark, spark.range(3).selectExpr("id AS x"), f"{table}/f.parquet"
+        )
+        _write_commit(table, 0, actions)
+        if name == "v2_checkpoint_v3":
+            # the UUID-named V2 checkpoint is all that is left of the log
+            log = f"{table}/_delta_log"
+            with open(f"{log}/{0:020d}.checkpoint.{_uuid.uuid4()}.json",
+                      "w") as f:
+                f.write(_json.dumps({"checkpointMetadata": {"version": 0}})
+                        + "\n")
+                for a in actions:
+                    f.write(_json.dumps(a) + "\n")
+            _os.unlink(f"{log}/{0:020d}.json")
+
+        def listing():
+            return sorted(_os.listdir(table)), sorted(
+                _os.listdir(f"{table}/_delta_log")
+            )
+
+        before = listing()
+        with _pytest.raises(NotImplementedError):
+            read_delta_table(spark, table)
+        with _pytest.raises(NotImplementedError):
+            write_delta_commit(spark.range(2).selectExpr("id AS x"), table)
+        assert listing() == before, name  # nothing staged, no version
 
     # Since r5 checkpoints are READ, a _last_checkpoint HINT with no
     # actual checkpoint file and a contiguous JSON log must not block

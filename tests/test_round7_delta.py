@@ -1,49 +1,23 @@
-"""Round-7 Delta protocol invariants (VERDICT r6 items 3-6 + the
-ADVICE r6 high finding):
-
-- Checkpoints assert REAL partitionValues — the old ``[]`` rows made
-  every post-checkpoint read of a partitioned table silently DROP the
-  partition columns (ADVICE high), and corrupted stock readers'
-  partition metadata.
-- Checkpoints carry live deletionVector descriptors through, so a
-  long-lived DV'd table can drop its JSON replay (vacuum) without
-  resurrecting deleted rows.
-- OPTIMIZE MATERIALIZES DV'd files: rewrite = file minus deleted
-  positions, rewrite add carries no DV, dataChange stays false
-  (logical state unchanged), orphaned DV bin becomes vacuumable.
-- VACUUM reclaims orphaned deletion_vector_*.bin files (live DVs — a
-  descriptor on a live add — are kept).
-- DV decode is DISTRIBUTED (mapInPandas over the file manifest): a
-  table whose deleted-position count exceeds the old 10M driver-side
-  cap reads correctly.
+"""Round-7 Delta protocol invariant (the ADVICE r6 high finding):
+checkpoints assert REAL partitionValues — the old ``[]`` rows made
+every post-checkpoint read of a partitioned table silently DROP the
+partition columns, and corrupted stock readers' partition metadata.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import struct
-import uuid as _uuid
-import zlib
 
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-    delta_log_versions,
     read_delta_table,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
     _write_checkpoint,
-    optimize_delta_table,
     vacuum_delta_table,
-    write_delta_commit,
 )
 
-from tests.test_round6_invariants import (  # reuse spec-literal helpers
-    _dv_table,
-    _mk,
-    _spec_roaring_array,
-    _stage_one_file,
-    _z85_encode,
-)
+from tests.test_round6_invariants import _stage_one_file
 
 
 def _mk_partitioned(spark, t: str) -> list:
@@ -110,146 +84,3 @@ def test_checkpoint_preserves_partition_values(spark, tmp_path):
         (r["x"], r["cat"]) for r in read_delta_table(spark, t).collect()
     )
     assert after == before
-
-
-def test_checkpoint_carries_deletion_vectors(spark, tmp_path):
-    """VERDICT r6 item 6: checkpoint a DV'd table, vacuum the JSON,
-    and the checkpoint-seeded read must still mask the deleted
-    positions — the checkpoint add row carries the descriptor."""
-    import pyarrow.parquet as pq
-
-    t = str(tmp_path / "dvcp")
-    _dv_table(spark, t, inline=True)  # 100 rows, DV deletes {1,3,97}
-    write_delta_commit(_mk(spark, 1000, 1002), t, checkpoint_interval=0)
-    masked = sorted(r["x"] for r in read_delta_table(spark, t).collect())
-    assert masked == [x for x in range(100) if x not in (1, 3, 97)] + [
-        1000,
-        1001,
-    ]
-    _write_checkpoint(t, 1)
-    cp = pq.read_table(f"{t}/_delta_log/{1:020d}.checkpoint.parquet")
-    dv_rows = [
-        r["add"]["deletionVector"]
-        for r in cp.to_pylist()
-        if r["add"] is not None and r["add"]["deletionVector"] is not None
-    ]
-    assert len(dv_rows) == 1
-    assert dv_rows[0]["storageType"] == "i"
-    assert dv_rows[0]["cardinality"] == 3
-    stats = vacuum_delta_table(t, retention_ms=0)
-    assert stats["log_commits_deleted"] == 2
-    assert sorted(
-        r["x"] for r in read_delta_table(spark, t).collect()
-    ) == masked
-
-
-def test_optimize_materializes_dv_files(spark, tmp_path):
-    """VERDICT r6 item 5: OPTIMIZE on a DV'd table rewrites the file
-    MINUS its deleted positions and drops the DV — read-back identical
-    to the pre-OPTIMIZE masked read, live state carries no DV, history
-    intact, and the commit is still dataChange=false layout-only."""
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        _resolve_state,
-    )
-
-    t = str(tmp_path / "dvopt")
-    _dv_table(spark, t, inline=True)
-    write_delta_commit(_mk(spark, 1000, 1002), t, checkpoint_interval=0)
-    before = sorted(r["x"] for r in read_delta_table(spark, t).collect())
-    v = optimize_delta_table(spark, t, target_bytes=1 << 30)
-    assert v == 2
-    after = sorted(r["x"] for r in read_delta_table(spark, t).collect())
-    assert after == before
-    state, _ = _resolve_state(t, None)
-    assert all(i["deletionVector"] is None for i in state.values())
-    with open(f"{t}/_delta_log/{2:020d}.json") as f:
-        acts = [json.loads(l) for l in f if l.strip()]
-    ci = next(a["commitInfo"] for a in acts if "commitInfo" in a)
-    assert ci["operation"] == "OPTIMIZE"
-    assert ci["operationParameters"]["numDeletionVectorsMaterialized"] == 1
-    for a in acts:
-        if "add" in a:
-            assert a["add"]["dataChange"] is False
-            assert a["add"].get("deletionVector") is None
-    assert delta_log_versions(t) == [0, 1, 2]
-
-
-def test_vacuum_reclaims_orphaned_dv_bins(spark, tmp_path):
-    """ADVICE r6 low: a deletion_vector_*.bin whose owning add action
-    is no longer live must be vacuumed past retention; a LIVE DV's bin
-    must survive any vacuum."""
-    import glob as g
-
-    t = str(tmp_path / "dvvac")
-    _dv_table(spark, t, inline=False)  # file-stored DV
-    (bin_live,) = g.glob(f"{t}/deletion_vector_*.bin")
-    # live DV: vacuum must keep the bin
-    vacuum_delta_table(t, retention_ms=0)
-    assert os.path.exists(bin_live)
-    masked = sorted(r["x"] for r in read_delta_table(spark, t).collect())
-    # OPTIMIZE materializes -> the bin is now orphaned -> reclaimed
-    assert optimize_delta_table(spark, t, target_bytes=1 << 30) == 1
-    stats = vacuum_delta_table(t, retention_ms=0)
-    assert not os.path.exists(bin_live)
-    assert stats["data_files_deleted"] >= 2  # old parquet + DV bin
-    assert sorted(
-        r["x"] for r in read_delta_table(spark, t).collect()
-    ) == masked
-
-
-def test_dv_decode_distributed_beyond_old_driver_cap(spark, tmp_path):
-    """VERDICT r6 item 3: a DV with 10.5M deleted positions — beyond
-    the removed 10M driver-side cap — must decode (executor-side) and
-    mask correctly.  RUN containers keep the synthetic bitmap small;
-    the masked count and the surviving boundary rows pin the result."""
-    t = str(tmp_path / "dvhuge")
-    os.makedirs(f"{t}/_delta_log", exist_ok=True)
-    n_rows, n_del = 11_000_000, 10_500_000
-    _stage_one_file(spark, t, "big.parquet", 0, n_rows)
-
-    full, rem = divmod(n_del, 1 << 16)
-    n_containers = full + (1 if rem else 0)
-    blob = struct.pack("<iq", 1681511377, 1)
-    blob += struct.pack("<i", 12347 | ((n_containers - 1) << 16))
-    blob += b"\xff" * ((n_containers + 7) // 8)  # all containers RUN
-    for i in range(full):
-        blob += struct.pack("<HH", i, 0xFFFF)
-    if rem:
-        blob += struct.pack("<HH", full, rem - 1)
-    blob += b"\x00" * (4 * n_containers)  # offset header (skipped)
-    for _ in range(full):
-        blob += struct.pack("<HHH", 1, 0, 0xFFFF)  # one full run
-    if rem:
-        blob += struct.pack("<HHH", 1, 0, rem - 1)
-    u = _uuid.uuid4()
-    body = (b"\x01" + struct.pack(">i", len(blob)) + blob
-            + struct.pack(">I", zlib.crc32(blob) & 0xFFFFFFFF))
-    with open(f"{t}/deletion_vector_{u}.bin", "wb") as f:
-        f.write(body)
-    schema = {"type": "struct", "fields": [
-        {"name": "x", "type": "long", "nullable": True, "metadata": {}}]}
-    actions = [
-        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
-                      "readerFeatures": ["deletionVectors"],
-                      "writerFeatures": ["deletionVectors"]}},
-        {"metaData": {"id": "m-huge",
-                      "format": {"provider": "parquet", "options": {}},
-                      "schemaString": json.dumps(schema),
-                      "partitionColumns": [], "configuration": {},
-                      "createdTime": 0}},
-        {"add": {"path": "big.parquet", "partitionValues": {},
-                 "size": os.path.getsize(f"{t}/big.parquet"),
-                 "modificationTime": 0, "dataChange": True,
-                 "deletionVector": {
-                     "storageType": "u",
-                     "pathOrInlineDv": _z85_encode(u.bytes),
-                     "offset": 1, "sizeInBytes": len(blob),
-                     "cardinality": n_del}}},
-    ]
-    with open(f"{t}/_delta_log/{0:020d}.json", "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    df = read_delta_table(spark, t)
-    assert df.count() == n_rows - n_del
-    lo = df.agg({"x": "min"}).first()[0]
-    assert lo == n_del  # every position below n_del masked
