@@ -209,19 +209,33 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     return entry.rows
 
 
-def load_table(spark, sf_dir: str, name: str):
-    """Parquet scan for a driver testdata table (column-pruned and
-    filter-pushed automatically by Catalyst), with the schema inferred
-    once per file version (:func:`parquet_schema`).
+def canonical_ts(df):
+    """``df`` with the events ``ts`` column as the session TIMESTAMP
+    type, whichever parquet vintage it was read from.
 
     ``events.ts`` has shipped in two parquet vintages: TIMESTAMP(NANOS)
     (arrives as long nanos under legacy.parquet.nanosAsLong; converted
     here by integer division to microseconds — the same truncation
     DuckDB's ``CAST(ts AS TIMESTAMP)`` applies) and plain timestamp[us]
-    (arrives as TIMESTAMP_NTZ).  Both are normalised to the session
-    TIMESTAMP type so every downstream operator sees ONE canonical
-    column type regardless of which files are on disk.  Sessions run
-    UTC (session.get_spark) so the NTZ→LTZ cast is value-preserving.
+    (arrives as TIMESTAMP_NTZ).  Both are normalised so every downstream
+    operator, batch or streaming, sees ONE canonical column type
+    regardless of which files are on disk.  Sessions run UTC
+    (session.get_spark) so the NTZ→LTZ cast is value-preserving."""
+    from pyspark.sql import functions as F
+
+    dt = dict(df.dtypes).get("ts")
+    if dt == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if dt == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def load_table(spark, sf_dir: str, name: str):
+    """Parquet scan for a driver testdata table (column-pruned and
+    filter-pushed automatically by Catalyst), with the schema inferred
+    once per file version (:func:`parquet_schema`) and ``events.ts``
+    canonicalised by :func:`canonical_ts`.
 
     The conf is set at runtime (by :func:`parquet_schema`), not only in
     ``session.get_spark``:
@@ -230,12 +244,4 @@ def load_table(spark, sf_dir: str, name: str):
     set unconditionally.
     """
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        dt = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
-        if dt == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif dt == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return canonical_ts(df) if name == "events" else df

@@ -29,8 +29,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import parquet_schema, read_parquet
-from .windowed import drain_session, _STREAM_DIRS, _canon_ts, _drain_to_memory
+from ..schemas import read_parquet
+from .windowed import _STREAM_DIRS, drained, events_stream
 
 DUP_EVERY = 20  # every DUP_EVERY-th event_id is delivered twice
 
@@ -75,30 +75,22 @@ def stream_dedup_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens batch-side on the drained output.
     """
     src = f"{sf_dir}/events.parquet"
-    schema = parquet_schema(spark, src)
-    d = _dup_stream_dir(spark, src)
-    stream = _canon_ts(
-        drain_session(spark).readStream.schema(schema).parquet(d), schema
-    )
+    stream = events_stream(spark, src, stream_dir=_dup_stream_dir(spark, src))
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = "stream_dedup_sink"
     # Stateful-shuffle partition count becomes the state-store count;
     # the stream runs on drain_session(spark)'s scoped SQLConf (8
     # partitions), invisible to the caller's session.
-    _drain_to_memory(spark, deduped, sink, output_mode="append")
-    out = (
-        spark.table(sink)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            (F.sum(F.floor(F.col("value") * 100)) / 100.0).alias(
-                "total_value"
-            ),
+    with drained(spark, deduped, "append") as d:
+        return (
+            d.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.countDistinct("user_id").alias("n_users"),
+                (F.sum(F.floor(F.col("value") * 100)) / 100.0).alias(
+                    "total_value"
+                ),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out

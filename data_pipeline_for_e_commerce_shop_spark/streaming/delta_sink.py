@@ -16,18 +16,36 @@ vacuum of the early JSON cannot reset them.
 At 100 TB this is the idempotence scheme Delta's own streaming sink
 uses; the micro-batch write itself is the ordinary distributed
 parquet job.
+
+The two registry ops here (``stream_events_to_delta`` and
+``events_delta_maintenance``) each build their Delta table, and the
+stream checkpoints, in one ``TemporaryDirectory`` and return an
+eagerly checkpointed aggregate of it, so nothing they write outlives
+the call.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from data_pipeline_for_e_commerce_shop_spark.functions.scalars import (
     floordiv_sql,
 )
-
+from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
+from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
+    read_delta_table,
+)
 from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
+    optimize_delta_table,
+    vacuum_delta_table,
     write_delta_commit,
+)
+from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import (
+    events_stream,
 )
 
 
@@ -49,21 +67,17 @@ def delta_exactly_once_sink(table_path: str, app_id: str):
     return handle
 
 
-_TMP_DIRS: list[str] = []
-
-
-def _tmpdir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _TMP_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(x, ignore_errors=True) for x in _TMP_DIRS]
+def _daily_totals(events: DataFrame) -> DataFrame:
+    """Daily event counts and exact cents per event type, as both
+    Delta ops' oracles compute them."""
+    return (
+        events.groupBy("event_type", "day_epoch")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.sum("cents").cast("long").alias("value_cents"),
         )
-    _TMP_DIRS.append(d)
-    return d
+        .orderBy("event_type", "day_epoch")
+    )
 
 
 def stream_events_to_delta(spark, sf_dir: str) -> DataFrame:
@@ -75,51 +89,27 @@ def stream_events_to_delta(spark, sf_dir: str) -> DataFrame:
     cents.  If the SetTransaction guard failed, every count would
     double and the oracle hash would catch it — idempotence is part
     of the checked semantics, not just a unit test."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.schemas import parquet_schema
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        read_delta_table,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import (
-        _as_stream_dir,
-        _canon_ts,
-    )
-
-    src = f"{sf_dir}/events.parquet"
-    schema = parquet_schema(spark, src)
-    table = os.path.join(_tmpdir("delta_eo_"), "events_delta")
-    sink = delta_exactly_once_sink(table, "events-ingest")
-    for _ in range(2):  # second pass = replay; txn guard skips it
-        stream = _canon_ts(
-            spark.readStream.schema(schema).parquet(_as_stream_dir(src)),
-            schema,
+    with tempfile.TemporaryDirectory(prefix="delta_eo_") as work:
+        table = os.path.join(work, "events_delta")
+        sink = delta_exactly_once_sink(table, "events-ingest")
+        for attempt in range(2):  # second pass = replay; txn guard skips it
+            proj = events_stream(spark, f"{sf_dir}/events.parquet").select(
+                "event_type",
+                F.expr(floordiv_sql("unix_timestamp(ts)", "86400")).alias(
+                    "day_epoch"
+                ),
+                F.expr("CAST(floor(value * 100) AS BIGINT)").alias("cents"),
+            )
+            q = (
+                proj.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", os.path.join(work, f"ckpt{attempt}"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return _daily_totals(read_delta_table(spark, table)).localCheckpoint(
+            eager=True
         )
-        proj = stream.select(
-            "event_type",
-            F.expr(floordiv_sql("unix_timestamp(ts)", "86400")).alias(
-            "day_epoch"
-        ),
-            F.expr("CAST(floor(value * 100) AS BIGINT)").alias("cents"),
-        )
-        q = (
-            proj.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", _tmpdir("delta_eo_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        read_delta_table(spark, table)
-        .groupBy("event_type", "day_epoch")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("cents").cast("long").alias("value_cents"),
-        )
-        .orderBy("event_type", "day_epoch")
-    )
 
 
 def events_delta_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -135,21 +125,6 @@ def events_delta_maintenance(spark, sf_dir: str) -> DataFrame:
     damage that breaks the post-vacuum read — flips the hash.  A
     maintenance pass that can't survive this round trip would corrupt a
     real lakehouse zone the same way."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_reader import (
-        read_delta_table,
-    )
-    from data_pipeline_for_e_commerce_shop_spark.sources.delta_writer import (
-        optimize_delta_table,
-        vacuum_delta_table,
-        write_delta_commit,
-    )
-
-    table = os.path.join(_tmpdir("delta_maint_"), "events_delta")
     proj = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -158,23 +133,19 @@ def events_delta_maintenance(spark, sf_dir: str) -> DataFrame:
         ),
         F.expr("CAST(floor(value * 100) AS BIGINT)").alias("cents"),
     )
-    for i in range(6):
-        write_delta_commit(
-            proj.where(F.col("event_id") % 6 == i),
-            table,
-            checkpoint_interval=7,
-            txn=("maint-ingest", i) if i % 3 == 0 else None,
+    with tempfile.TemporaryDirectory(prefix="delta_maint_") as work:
+        table = os.path.join(work, "events_delta")
+        for i in range(6):
+            write_delta_commit(
+                proj.where(F.col("event_id") % 6 == i),
+                table,
+                checkpoint_interval=7,
+                txn=("maint-ingest", i) if i % 3 == 0 else None,
+            )
+        # v6 = the OPTIMIZE commit; (6+1) % 7 == 0 emits the checkpoint
+        # the vacuum then relies on
+        optimize_delta_table(spark, table, checkpoint_interval=7)
+        vacuum_delta_table(table, retention_ms=0)
+        return _daily_totals(read_delta_table(spark, table)).localCheckpoint(
+            eager=True
         )
-    # v6 = the OPTIMIZE commit; (6+1) % 7 == 0 emits the checkpoint
-    # the vacuum then relies on
-    optimize_delta_table(spark, table, checkpoint_interval=7)
-    vacuum_delta_table(table, retention_ms=0)
-    return (
-        read_delta_table(spark, table)
-        .groupBy("event_type", "day_epoch")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("cents").cast("long").alias("value_cents"),
-        )
-        .orderBy("event_type", "day_epoch")
-    )

@@ -28,9 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windowed import drain_session, _as_stream_dir, _canon_ts, _drain_to_memory
-
-GAP_SECONDS = 90
+from .windowed import GAP_SECONDS, drained, events_stream
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -161,13 +159,7 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning.  The pandas fold is O(batch) per user with integer
     arithmetic only.
     """
-    src = f"{sf_dir}/events.parquet"
-    from ..schemas import parquet_schema
-
-    schema = parquet_schema(spark, src)
-    stream = _canon_ts(
-        drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
-    )
+    stream = events_stream(spark, f"{sf_dir}/events.parquet")
     prepared = stream.select(
         "user_id",
         "event_id",
@@ -181,32 +173,28 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    sink = "stateful_session_sink"
-    _drain_to_memory(spark, sessions, sink, output_mode="update")
-    drained = spark.table(sink)
     # Finalize: per (user, session) keep the WIDEST emission — n_events
     # grows monotonically as batches extend a session, so max_by the
     # event count (session_end tiebreak is redundant but explicit).
-    out = (
-        drained.groupBy("user_id", "session_no")
-        .agg(
-            F.max_by(
-                F.struct("session_start", "session_end", "n_events", "cents"),
-                F.struct("n_events", "session_end"),
-            ).alias("s")
+    with drained(spark, sessions, "update") as emitted:
+        return (
+            emitted.groupBy("user_id", "session_no")
+            .agg(
+                F.max_by(
+                    F.struct("session_start", "session_end", "n_events", "cents"),
+                    F.struct("n_events", "session_end"),
+                ).alias("s")
+            )
+            .select(
+                "user_id",
+                "session_no",
+                F.col("s.session_start").alias("session_start"),
+                F.col("s.session_end").alias("session_end"),
+                F.col("s.n_events").alias("n_events"),
+                (F.col("s.cents") / 100.0).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .select(
-            "user_id",
-            "session_no",
-            F.col("s.session_start").alias("session_start"),
-            F.col("s.session_end").alias("session_end"),
-            F.col("s.n_events").alias("n_events"),
-            (F.col("s.cents") / 100.0).alias("total_value"),
-        )
-    )
-    out = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -265,13 +253,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain batch GROUP BY oracle — the stream/batch duality gate
     for the modern stateful API.
     """
-    src = f"{sf_dir}/events.parquet"
-    from ..schemas import parquet_schema
-
-    schema = parquet_schema(spark, src)
-    stream = _canon_ts(
-        drain_session(spark).readStream.schema(schema).parquet(_as_stream_dir(src)), schema
-    )
+    stream = events_stream(spark, f"{sf_dir}/events.parquet")
     prepared = stream.select(
         "user_id",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
@@ -282,20 +264,16 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    sink = "stateful_totals_sink"
-    _drain_to_memory(spark, totals, sink, output_mode="update")
-    drained = spark.table(sink)
-    out = (
-        drained.groupBy("user_id")
-        .agg(
-            F.max(F.struct("n_events", "total_cents")).alias("s")
+    with drained(spark, totals, "update") as emitted:
+        return (
+            emitted.groupBy("user_id")
+            .agg(
+                F.max(F.struct("n_events", "total_cents")).alias("s")
+            )
+            .select(
+                "user_id",
+                F.col("s.n_events").alias("n_events"),
+                (F.col("s.total_cents") / 100.0).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .select(
-            "user_id",
-            F.col("s.n_events").alias("n_events"),
-            (F.col("s.total_cents") / 100.0).alias("total_value"),
-        )
-    )
-    out = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out

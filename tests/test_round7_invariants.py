@@ -69,7 +69,7 @@ def test_drain_session_cache_is_weak_and_resyncs_tz(spark):
         windowed._DRAIN_SESSIONS, __import__("weakref").WeakKeyDictionary
     )
     tz0 = spark.conf.get("spark.sql.session.timeZone")
-    ds1 = windowed.drain_session(spark, shuffle_partitions=3)
+    ds1 = windowed.drain_session(spark)
     assert ds1 is windowed.drain_session(spark)  # cached, same object
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")

@@ -318,19 +318,39 @@ def test_stream_drain_leaves_no_session_state(spark, sf_dir):
 
 
 def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch, capfd):
-    """Each drain deletes its checkpoint once the query has terminated:
-    three drains on one session leave no ``drain_ckpt_*`` tree behind,
-    and the state store logs no error about the deleted directories."""
+    """Each drain deletes its output and checkpoint once the op has
+    materialised its result: three drains on one session leave no
+    ``drain_*`` tree behind, and the state store logs no error about the
+    deleted directories.  Then every streaming registry op and the Delta
+    maintenance op run once: all they leave are the per-source stream
+    directories (``stream_src_*``, ``stream_dup_*``), with no Delta
+    table, no active query and no temp view."""
     import tempfile
 
     from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
+    from data_pipeline_for_e_commerce_shop_spark.streaming import dedup, windowed
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream_dirs: dict[str, str] = {}  # staged afresh under tmp_path
+    monkeypatch.setattr(windowed, "_STREAM_DIRS", stream_dirs)
+    monkeypatch.setattr(dedup, "_STREAM_DIRS", stream_dirs)
+    views = {v.name for v in spark.catalog.listTables()}
     for _ in range(3):
         assert QUERIES["events_stream_hourly"](spark, sf_dir).count() > 0
-    assert [d for d in os.listdir(tmp_path) if d.startswith("drain_ckpt_")] == []
+    assert [d for d in os.listdir(tmp_path) if d.startswith("drain_")] == []
     err = capfd.readouterr().err.splitlines()
     assert [ln for ln in err if "StateStore" in ln and ("WARN" in ln or "ERROR" in ln)] == []
+
+    ops = [n for n in QUERIES if "stream" in n or "stateful" in n]
+    assert len(ops) >= 13
+    for name in ops + ["events_delta_optimize_vacuum"]:
+        assert QUERIES[name](spark, sf_dir).count() > 0, name
+    left = sorted(os.listdir(tmp_path))
+    assert [d for d in left if not d.startswith(("stream_src_", "stream_dup_"))] == []
+    assert sorted(stream_dirs.values()) == sorted(str(tmp_path / d) for d in left)
+    assert spark.streams.active == []
+    assert windowed.drain_session(spark).streams.active == []
+    assert {v.name for v in spark.catalog.listTables()} == views
 
 
 def test_stream_interval_join_matches_batch_dual(spark):
