@@ -118,14 +118,10 @@ def purchases_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 ASOF_TOLERANCE_SECONDS = 600  # match only clicks within 10 minutes
 
 
-def purchases_last_click_tolerance(
-    spark: SparkSession,
-    sf_dir: str,
-    tolerance: int = ASOF_TOLERANCE_SECONDS,
-) -> DataFrame:
+def purchases_last_click_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join WITH TOLERANCE (pandas merge_asof's `tolerance`, kdb
     wj's window): a purchase matches its most recent prior click only
-    if the click happened within `tolerance` seconds — stale context
+    if the click happened within `ASOF_TOLERANCE_SECONDS` seconds — stale context
     is worse than no context for attribution and feature generation.
 
     Same single-shuffle union+carry-forward plan as asof_join; the
@@ -154,7 +150,7 @@ def purchases_last_click_tolerance(
     p_epoch = F.unix_timestamp("ts").cast("long")
     in_window = (
         F.col("asof_click_epoch").isNotNull()
-        & (p_epoch - F.col("asof_click_epoch") <= tolerance)
+        & (p_epoch - F.col("asof_click_epoch") <= ASOF_TOLERANCE_SECONDS)
     )
     return joined.select(
         "event_id",

@@ -52,11 +52,9 @@ def _hash_mod(prefix: str, key, mod: int) -> F.Column:
     )
 
 
-def pack_sequences(
-    spark: SparkSession, sf_dir: str, ctx: int = CTX_TOKENS
-) -> DataFrame:
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-then-chunk sequence packing: documents are laid head to
-    tail per source shard in doc_id order and cut every ``ctx`` tokens
+    tail per source shard in doc_id order and cut every ``CTX_TOKENS`` tokens
     — the standard packing used to build fixed-length training
     contexts without padding waste.
 
@@ -84,8 +82,8 @@ def pack_sequences(
         "doc_id",
         "n_tokens",
         off.alias("offset_in_shard"),
-        F.floor(off / ctx).cast("long").alias("pack_id"),
-        (F.floor((F.col("cum") - 1) / ctx) - F.floor(off / ctx) + 1)
+        F.floor(off / CTX_TOKENS).cast("long").alias("pack_id"),
+        (F.floor((F.col("cum") - 1) / CTX_TOKENS) - F.floor(off / CTX_TOKENS) + 1)
         .cast("long")
         .alias("n_packs_spanned"),
     )
@@ -528,9 +526,7 @@ def datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_BUDGET = 20_000  # selection budget (tokens)
 
 
-def budget_selection(
-    spark: SparkSession, sf_dir: str, budget: int = TOKEN_BUDGET
-) -> DataFrame:
+def budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Select the best documents that fit a token budget — the data-
     selection step of corpus curation (train on the top-quality slice
     the compute budget affords), in the SCALABLE two-phase form:
@@ -568,15 +564,15 @@ def budget_selection(
         F.coalesce(F.sum("bucket_tokens").over(ws), F.lit(0)).alias(
             "cum_before"
         ),
-    ).where(F.col("cum_before") < budget)
+    ).where(F.col("cum_before") < TOKEN_BUDGET)
     full = buckets.where(
-        F.col("cum_before") + F.col("bucket_tokens") <= budget
+        F.col("cum_before") + F.col("bucket_tokens") <= TOKEN_BUDGET
     ).select("score_ppm", F.lit("full").alias("decision"))
     boundary = buckets.where(
-        F.col("cum_before") + F.col("bucket_tokens") > budget
+        F.col("cum_before") + F.col("bucket_tokens") > TOKEN_BUDGET
     ).select(
         "score_ppm",
-        (F.lit(budget) - F.col("cum_before")).alias("remaining"),
+        (F.lit(TOKEN_BUDGET) - F.col("cum_before")).alias("remaining"),
     )
     kept_full = scored.join(F.broadcast(full), "score_ppm")
     wb = Window.partitionBy("score_ppm").orderBy("doc_id").rowsBetween(

@@ -193,9 +193,7 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs_from_bands(_band_rows(minhash_signatures(spark, sf_dir)))
 
 
-def duplicate_clusters(
-    spark: SparkSession, sf_dir: str, max_iter: int = 20
-) -> DataFrame:
+def duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup GROUPS: connected components over the LSH candidate-pair
     graph — the step that turns pairwise matches into keep-one-per-
     cluster decisions (cluster_id = smallest doc_id in the component,
@@ -228,7 +226,7 @@ def duplicate_clusters(
     # Materialize the LSH lineage ONCE: everything below reuses it.
     # connected_components checkpoints its input itself
     pairs = lsh_candidate_pairs(spark, sf_dir)
-    return connected_components(spark, pairs, max_iter=max_iter)
+    return connected_components(spark, pairs)
 
 
 def connected_components(
@@ -381,9 +379,10 @@ def connected_components(
     )
 
 
-def near_duplicates_jaccard(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+JACCARD_THRESHOLD = 0.5
+
+
+def near_duplicates_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidates verified with EXACT shingle-set Jaccard.
 
     The candidate set is small (banding prunes the corpus), so the
@@ -412,7 +411,7 @@ def near_duplicates_jaccard(
             "doc_b",
             (inter / union).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -631,12 +630,13 @@ def simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr("doc_id", *chunk_exprs)
 
 
-def simhash_near_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3
-) -> DataFrame:
+SIMHASH_MAX_HAMMING = 3
+
+
+def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by 112-bit simhash Hamming distance, blocked on
     the four 28-bit signature chunks (a pair with distance <=
-    max_hamming = 3 dirties at most 3 chunks, so at least one chunk —
+    SIMHASH_MAX_HAMMING = 3 dirties at most 3 chunks, so at least one chunk —
     and hence its block key — matches: the standard pigeonhole
     blocking, Manku et al. WWW'07, widened from 64 to the full md5).
 
@@ -724,7 +724,7 @@ def simhash_near_pairs(
             F.col("b.doc_id").alias("doc_b"),
             ham.alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
@@ -1111,12 +1111,10 @@ def semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("tau_pct")
 
 
-def semantic_dedup(
-    spark: SparkSession, sf_dir: str, tau: float = SEMDEDUP_TAU
-) -> DataFrame:
+def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication: k-means-cluster the
     embedding corpus, then mark as duplicates the within-cluster pairs
-    whose cosine similarity reaches ``tau``, keeping the member CLOSEST
+    whose cosine similarity reaches ``SEMDEDUP_TAU``, keeping the member CLOSEST
     TO ITS CENTROID (sq_dist asc, vec_id asc tie-break) — the cluster
     medoid-ish representative survives, paraphrases of it are dropped.
     Returns the FULL corpus labeled: (vec_id, cluster_id, sq_dist,
@@ -1136,7 +1134,7 @@ def semantic_dedup(
     and an oversized cluster can be sub-blocked with the hyperplane
     LSH of embedding_near_duplicates — the same verify runs per
     (cluster, bucket) instead of per cluster.  A doc is dropped iff a
-    HIGHER-PRIORITY doc in its cluster is within tau — the greedy
+    HIGHER-PRIORITY doc in its cluster is within SEMDEDUP_TAU — the greedy
     priority sweep, evaluated set-wise (no sequential scan).
     """
     from data_pipeline_for_e_commerce_shop_spark.operators.similarity import (
@@ -1149,7 +1147,7 @@ def semantic_dedup(
     # JVM/DuckDB-parity rounding happens here on the Spark side, and
     # the loser is decided set-wise below.
     pairs = semantic_pair_scan(spark, sf_dir, assign=assign).where(
-        F.round("cosine", 9) >= tau
+        F.round("cosine", 9) >= SEMDEDUP_TAU
     )
     # Priority (sq_dist asc, vec_id asc): the closer-to-centroid end
     # wins; the other end is dropped.
@@ -1169,9 +1167,10 @@ def semantic_dedup(
     )
 
 
-def benchmark_contamination(
-    spark: SparkSession, sf_dir: str, flag_at: float = 0.5
-) -> DataFrame:
+CONTAMINATION_FLAG_AT = 0.5
+
+
+def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination check: what fraction of each candidate document's
     3-gram shingles also occur in the held-out BENCHMARK set (here the
     deterministic doc_id % 20 == 0 slice plays the benchmark — in
@@ -1209,7 +1208,7 @@ def benchmark_contamination(
             "n_shingles",
             F.coalesce("n_contaminated", F.lit(0)).alias("n_contaminated"),
             contamination.alias("contamination"),
-            (contamination >= flag_at).alias("flagged"),
+            (contamination >= CONTAMINATION_FLAG_AT).alias("flagged"),
         )
     )
 
@@ -1267,9 +1266,9 @@ def chunk_level_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .text import CHUNK_TOKENS, chunk_documents
 
-    chunks = chunk_documents(
-        spark, sf_dir, tokens=CHUNK_TOKENS, stride=CHUNK_TOKENS
-    ).select("doc_id", F.md5("chunk_text").alias("fp"))
+    chunks = chunk_documents(spark, sf_dir, stride=CHUNK_TOKENS).select(
+        "doc_id", F.md5("chunk_text").alias("fp")
+    )
     freq = chunks.groupBy("fp").agg(F.count(F.lit(1)).alias("n_occurrences"))
     dup = F.col("n_occurrences") > 1
     return (
@@ -1290,9 +1289,7 @@ def chunk_level_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 PREFIX_FILTER_TAU_PCT = 80
 
 
-def prefix_filter_pairs(
-    spark: SparkSession, sf_dir: str, tau_pct: int = PREFIX_FILTER_TAU_PCT
-) -> DataFrame:
+def prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT shingle-set similarity join via prefix filtering (the
     PPJoin family) — the no-false-negative complement to MinHash-LSH.
 
@@ -1344,7 +1341,7 @@ def prefix_filter_pairs(
         .select("doc_id", "toks", F.size("toks").alias("s"))
         .persist()  # three consumers: prefix explode + both verify sides
     )
-    plen = F.expr(f"s - ((({tau_pct} * s) + 99) div 100) + 1")
+    plen = F.expr(f"s - ((({PREFIX_FILTER_TAU_PCT} * s) + 99) div 100) + 1")
     prefix = lists.select(
         "doc_id", "s", F.explode(F.slice("toks", 1, plen)).alias("ptok")
     )
@@ -1357,8 +1354,8 @@ def prefix_filter_pairs(
         .join(prefix.alias("b"), "ptok")
         .where(
             (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.s") * 100 >= tau_pct * F.col("a.s"))
-            & (F.col("a.s") * 100 >= tau_pct * F.col("b.s"))
+            & (F.col("b.s") * 100 >= PREFIX_FILTER_TAU_PCT * F.col("a.s"))
+            & (F.col("a.s") * 100 >= PREFIX_FILTER_TAU_PCT * F.col("b.s"))
         )
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -1386,7 +1383,7 @@ def prefix_filter_pairs(
             inter.alias("n_inter"),
             (F.col("s_a") + F.col("s_b") - inter).alias("n_union"),
         )
-        .where(F.col("n_inter") * 100 >= tau_pct * F.col("n_union"))
+        .where(F.col("n_inter") * 100 >= PREFIX_FILTER_TAU_PCT * F.col("n_union"))
     )
     return verified.select(
         "doc_a",
@@ -1401,18 +1398,14 @@ SPAN_TOKENS = 8        # rolling window width for exact-span dedup
 SPAN_MIN_OCCURRENCES = 2  # window is "duplicated" at >= this many copies
 
 
-def duplicated_spans(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = SPAN_TOKENS,
-    min_occurrences: int = SPAN_MIN_OCCURRENCES,
-) -> DataFrame:
+def duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-SPAN detection (the suffix-array-dedup shape of
     Lee et al., "Deduplicating Training Data Makes Language Models
-    Better"): every OVERLAPPING k-token window is hashed (stride 1, so
-    any repeated passage of >= k tokens is caught at every offset), a
-    window is duplicated when its hash occurs >= min_occurrences times
-    anywhere in the corpus (cross-doc or within-doc), and per document
+    Better"): every OVERLAPPING k-token window (k = SPAN_TOKENS) is
+    hashed (stride 1, so any repeated passage of >= k tokens is caught
+    at every offset), a window is duplicated when its hash occurs >=
+    SPAN_MIN_OCCURRENCES times anywhere in the corpus (cross-doc or
+    within-doc), and per document
     the duplicated windows are merged into MAXIMAL spans by
     gaps-and-islands over the start index — two windows merge when
     their covered token ranges touch (start gap <= k).
@@ -1446,10 +1439,10 @@ def duplicated_spans(
         F.size("t").alias("n_tokens"),
         F.explode(
             F.expr(
-                f"case when size(t) >= {k} then"
-                f" transform(sequence(1, size(t) - {k - 1}),"
+                f"case when size(t) >= {SPAN_TOKENS} then"
+                f" transform(sequence(1, size(t) - {SPAN_TOKENS - 1}),"
                 f" i -> struct(i AS i,"
-                f" md5(array_join(slice(t, i, {k}), ' ')) AS h))"
+                f" md5(array_join(slice(t, i, {SPAN_TOKENS}), ' ')) AS h))"
                 f" else cast(array() as"
                 f" array<struct<i: int, h: string>>) end"
             )
@@ -1463,7 +1456,7 @@ def duplicated_spans(
     dup_h = (
         wins.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_occ"))
-        .where(F.col("n_occ") >= min_occurrences)
+        .where(F.col("n_occ") >= SPAN_MIN_OCCURRENCES)
         .select("h")
     )
     d = wins.join(dup_h, "h").select("doc_id", "n_tokens", "i")
@@ -1472,7 +1465,7 @@ def duplicated_spans(
     # touch iff i - lag(i) <= k.
     by_doc = Window.partitionBy("doc_id").orderBy("i")
     brk = F.when(
-        F.col("i") - F.lag("i").over(by_doc) <= k, F.lit(0)
+        F.col("i") - F.lag("i").over(by_doc) <= SPAN_TOKENS, F.lit(0)
     ).otherwise(F.lit(1))
     grp = d.withColumn(
         "g",
@@ -1482,7 +1475,7 @@ def duplicated_spans(
     )
     spans = grp.groupBy("doc_id", "n_tokens", "g").agg(
         F.min("i").alias("span_start"),
-        (F.max("i") + F.lit(k - 1)).alias("span_end"),
+        (F.max("i") + F.lit(SPAN_TOKENS - 1)).alias("span_end"),
     )
     return (
         spans.groupBy("doc_id", "n_tokens")
@@ -1550,9 +1543,7 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_PCT = 70  # max-direction containment gate (integer pct)
 
 
-def containment_pairs(
-    spark: SparkSession, sf_dir: str, pct: int = CONTAINMENT_PCT
-) -> DataFrame:
+def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidates verified with ASYMMETRIC containment
     |A∩B|/|A| — the subset/quote detector Jaccard misses: a short doc
     wholly embedded in a long one has tiny Jaccard (union is huge) but
@@ -1588,8 +1579,8 @@ def containment_pairs(
             F.size("set_b").alias("n_b"),
         )
         .where(
-            (F.lit(100) * F.col("n_inter") >= F.lit(pct) * F.col("n_a"))
-            | (F.lit(100) * F.col("n_inter") >= F.lit(pct) * F.col("n_b"))
+            (F.lit(100) * F.col("n_inter") >= F.lit(CONTAINMENT_PCT) * F.col("n_a"))
+            | (F.lit(100) * F.col("n_inter") >= F.lit(CONTAINMENT_PCT) * F.col("n_b"))
         )
         .select(
             "doc_a",

@@ -44,7 +44,7 @@ def hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize(spark: SparkSession, sf_dir: str, gap_seconds: int = DEBOUNCE_GAP_SECONDS) -> DataFrame:
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization per user (the reference's debounce
     window T3: an event more than 90 s after the previous one opens a
     NEW session — lambda/s3_validation.py:64-71).
@@ -67,7 +67,7 @@ def sessionize(spark: SparkSession, sf_dir: str, gap_seconds: int = DEBOUNCE_GAP
         "value",
         sec.alias("epoch_sec"),
         F.when(
-            (sec - F.lag(sec, 1).over(w)) > gap_seconds, F.lit(1)
+            (sec - F.lag(sec, 1).over(w)) > DEBOUNCE_GAP_SECONDS, F.lit(1)
         )
         .otherwise(F.lit(0))
         .alias("new_session"),
@@ -91,9 +91,10 @@ def sessionize(spark: SparkSession, sf_dir: str, gap_seconds: int = DEBOUNCE_GAP
     )
 
 
-def purchase_click_window(
-    spark: SparkSession, sf_dir: str, lookback_seconds: int = 3600
-) -> DataFrame:
+LOOKBACK_SECONDS = 3600  # interval-join lookback
+
+
+def purchase_click_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (range) join: for each purchase, the count and value of
     the same user's clicks in the preceding hour — conversion-context
     attribution.
@@ -119,7 +120,7 @@ def purchase_click_window(
     joined = purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_sec") >= F.col("p_sec") - lookback_seconds)
+        & (F.col("c_sec") >= F.col("p_sec") - LOOKBACK_SECONDS)
         & (F.col("c_sec") < F.col("p_sec")),
         "left",
     )
@@ -234,16 +235,15 @@ def ordered_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rate_anomaly(
-    spark: SparkSession,
-    sf_dir: str,
-    trail: int = 24,
-    min_trail: int = 12,
-    z_cut: float = 3.0,
-) -> DataFrame:
+RATE_TRAIL = 24  # trailing hours in the baseline
+RATE_MIN_TRAIL = 12  # fewest trailing hours that give a z-score
+RATE_Z_CUT = 3.0  # |z| at which an hour is flagged
+
+
+def rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-rate anomaly detection: per event_type, each hour's count
-    is z-scored against the TRAILING `trail`-hour window (current hour
-    excluded) and flagged when |z| >= z_cut — the traffic-spike /
+    is z-scored against the TRAILING `RATE_TRAIL`-hour window (current hour
+    excluded) and flagged when |z| >= RATE_Z_CUT — the traffic-spike /
     outage monitor an ops dashboard runs over the event stream.
 
     Determinism contract: the trailing variance is computed from
@@ -251,7 +251,7 @@ def rate_anomaly(
     numerator and ONE double division — then std = sqrt, z =
     (cnt·n − Σn) / (cnt·std); identical IEEE ops in Spark and DuckDB,
     with the final z rounded to 9 decimals (the tfidf device).  Hours
-    with fewer than `min_trail` trailing rows or zero variance emit a
+    with fewer than `RATE_MIN_TRAIL` trailing rows or zero variance emit a
     NULL z and no flag (warm-up / constant-rate guard).
 
     Scale: one fact scan → hourly aggregate (tiny: |hours|·|types|
@@ -272,7 +272,7 @@ def rate_anomaly(
     w = (
         Window.partitionBy("event_type")
         .orderBy("hour_epoch")
-        .rowsBetween(-trail, -1)
+        .rowsBetween(-RATE_TRAIL, -1)
     )
     n = F.col("n_events")
     s1 = F.sum("n_events").over(w)
@@ -296,7 +296,7 @@ def rate_anomaly(
         / (F.col("trail_cnt") * std),
         9,
     )
-    ok = (F.col("trail_cnt") >= min_trail) & (var_num > 0)
+    ok = (F.col("trail_cnt") >= RATE_MIN_TRAIL) & (var_num > 0)
     return stats.select(
         "event_type",
         "hour_epoch",
@@ -304,7 +304,7 @@ def rate_anomaly(
         "trail_cnt",
         F.when(ok, z).alias("z_score"),
         F.coalesce(
-            F.when(ok, F.abs(z) >= z_cut), F.lit(False)
+            F.when(ok, F.abs(z) >= RATE_Z_CUT), F.lit(False)
         ).alias("is_anomaly"),
     )
 
@@ -349,12 +349,10 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 GAP_FILL_MIN_VALUE = 4.0
 
 
-def gap_fill_hourly(
-    spark: SparkSession, sf_dir: str, min_value: float = GAP_FILL_MIN_VALUE
-) -> DataFrame:
+def gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly time-series resample with forward-fill imputation.
 
-    High-value events (value >= min_value) are sparse, so their hourly
+    High-value events (value >= GAP_FILL_MIN_VALUE) are sparse, so their hourly
     counts have holes.  A dense hour spine is generated from the FULL
     table's min/max hour (one-row aggregate, sequence + explode — no
     driver round-trip), cross-joined with the distinct event types
@@ -370,7 +368,7 @@ def gap_fill_hourly(
     ev = load_table(spark, sf_dir, "events")
     he = F.floor(F.unix_timestamp("ts") / 3600).cast("long")
     observed = (
-        ev.where(F.col("value") >= min_value)
+        ev.where(F.col("value") >= GAP_FILL_MIN_VALUE)
         .groupBy(F.col("event_type"), he.alias("hour_epoch"))
         .agg(F.count(F.lit(1)).alias("n_observed"))
     )
@@ -431,9 +429,7 @@ def out_of_order_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_attribution(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = DEBOUNCE_GAP_SECONDS
-) -> DataFrame:
+def session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marketing attribution over gap sessions: every purchase's value
     is credited to (a) the session's FIRST event type (first-touch)
     and (b) the event type immediately PRECEDING the purchase
@@ -456,7 +452,7 @@ def session_attribution(
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
         sec.alias("epoch_sec"),
         F.when(
-            (sec - F.lag(sec, 1).over(w)) > gap_seconds, F.lit(1)
+            (sec - F.lag(sec, 1).over(w)) > DEBOUNCE_GAP_SECONDS, F.lit(1)
         )
         .otherwise(F.lit(0))
         .alias("new_session"),

@@ -124,19 +124,14 @@ def basket_pairs(baskets: DataFrame, with_order: bool = False) -> DataFrame:
 
 
 def supported_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    min_support: int = MIN_SUPPORT,
-    baskets: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, min_support: int = MIN_SUPPORT
 ) -> DataFrame:
     """Support-pruned undirected co-purchase pairs
     ``(part_a < part_b, w)`` — the shared prefix of the whole graph
     family.  ONE lineitem pass: both the pair expansion and the
     density-derived support threshold read the same checkpointed
-    basket sets (pass ``baskets`` to share it with further consumers
-    such as degree tables)."""
-    if baskets is None:
-        baskets = basket_sets(spark, sf_dir)
+    basket sets."""
+    baskets = basket_sets(spark, sf_dir)
     return (
         basket_pairs(baskets)
         .groupBy("part_a", "part_b")
@@ -151,12 +146,10 @@ def supported_pairs(
     )
 
 
-def copurchase_edges(
-    spark: SparkSession, sf_dir: str, min_support: int = MIN_SUPPORT
-) -> DataFrame:
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed edge list (src, dst, w) — both directions of the
     undirected co-purchase pair, w = number of orders containing both
-    parts, pruned to pairs seen in at least `min_support` orders.  Same
+    parts, pruned to pairs seen in at least `MIN_SUPPORT` orders.  Same
     in-bucket expansion as basket.part_pair_topk: one scan, no fact
     self-join.
 
@@ -173,9 +166,7 @@ def copurchase_edges(
     eager-checkpointed BEFORE the direction union so the aggregation
     runs once however many consumer jobs (incl. concurrent broadcast
     jobs) scan the edge list."""
-    und = supported_pairs(spark, sf_dir, min_support).localCheckpoint(
-        eager=True
-    )
+    und = supported_pairs(spark, sf_dir).localCheckpoint(eager=True)
     fwd = und.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst"), "w"
     )
@@ -185,10 +176,8 @@ def copurchase_edges(
     return fwd.unionByName(rev)
 
 
-def part_pagerank(
-    spark: SparkSession, sf_dir: str, n_iter: int = PR_ITER
-) -> DataFrame:
-    """Weighted PageRank over the co-purchase graph, `n_iter` damped
+def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted PageRank over the co-purchase graph, `PR_ITER` damped
     rounds from a uniform SCALE start.  Every node has out-edges (both
     directions are materialized), so there is no dangling mass.
 
@@ -217,7 +206,7 @@ def part_pagerank(
 
     base = (PR_D_DEN - PR_D_NUM) * PR_SCALE // PR_D_DEN
     pr = nodes.select("part_id", F.lit(PR_SCALE).cast("long").alias("pr"))
-    for _ in range(n_iter):
+    for _ in range(PR_ITER):
         contrib = (
             edges.join(
                 F.broadcast(pr.select(F.col("part_id").alias("src"), "pr")),
@@ -251,9 +240,7 @@ def part_pagerank(
     return pr
 
 
-def triangle_count(
-    spark: SparkSession, sf_dir: str, min_support: int = MIN_SUPPORT
-) -> DataFrame:
+def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle participation over the co-purchase graph.
 
     Classic ordered-edge triangle enumeration: with every edge stored
@@ -263,7 +250,7 @@ def triangle_count(
 
     Scale shape: both joins are equi-joins on vertex keys, so the
     whole pipeline hash-partitions; the wedge count is bounded by
-    sum(deg^2) of the SUPPORT-PRUNED graph (the min_support gate is
+    sum(deg^2) of the SUPPORT-PRUNED graph (the MIN_SUPPORT gate is
     what keeps hub degrees sane — same rationale as pagerank's edge
     gate at graph.py:45-50).  The edge list is materialised once
     (localCheckpoint) because three plan mentions would otherwise
@@ -271,7 +258,7 @@ def triangle_count(
     lesson, BASELINE.md round-2 notes).
     """
     e = (
-        copurchase_edges(spark, sf_dir, min_support)
+        copurchase_edges(spark, sf_dir)
         .where(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .localCheckpoint(eager=False)
@@ -297,9 +284,7 @@ def triangle_count(
     )
 
 
-def clustering_coefficient(
-    spark: SparkSession, sf_dir: str, min_support: int = MIN_SUPPORT
-) -> DataFrame:
+def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node of the support-pruned
     co-purchase graph: cc = 2·T(v) / (deg(v)·(deg(v)−1)) as an exact
     ppm integer — how much of each part's neighborhood buys TOGETHER
@@ -317,7 +302,7 @@ def clustering_coefficient(
     signal, not absence.
     """
     e = (
-        copurchase_edges(spark, sf_dir, min_support)
+        copurchase_edges(spark, sf_dir)
         .where(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .localCheckpoint(eager=False)
@@ -372,12 +357,10 @@ def clustering_coefficient(
 HYPERBALL_HOPS = 3  # interpolated into the registered oracle SQL
 
 
-def hyperball_reach(
-    spark: SparkSession, sf_dir: str, hops: int = HYPERBALL_HOPS
-) -> DataFrame:
+def hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperBall (Boldi-Vigna) neighborhood function on the
     co-purchase graph: per part, an HLL estimate of how many parts sit
-    within ``hops`` hops, computed by iterating MERGEABLE register
+    within ``HYPERBALL_HOPS`` hops, computed by iterating MERGEABLE register
     state over edges — never materializing any ball.
 
     Registers are ROWS (node, bucket, m_reg), the same deterministic
@@ -423,7 +406,7 @@ def hyperball_reach(
         rho.alias("m_reg"),
     )
     ball = nodes.select("node", F.col("node").alias("member"))
-    for _ in range(hops):
+    for _ in range(HYPERBALL_HOPS):
         contrib = e.join(
             regs, e.dst == regs.node
         ).select(F.col("src").alias("node"), "bucket", "m_reg")

@@ -151,7 +151,10 @@ def monthly_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_reconciliation(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+RECON_TOPK = 20  # largest gaps reported
+
+
+def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-table audit: booked order totals vs the amount recomputed
     from line items (extendedprice * (1-discount) * (1+tax)), top-k by
     absolute drift — the reconciliation report a finance pipeline runs
@@ -195,7 +198,7 @@ def order_reconciliation(spark: SparkSession, sf_dir: str, k: int = 20) -> DataF
         F.abs(diff).alias("abs_cents"),
     )
     order = [F.col("abs_cents").desc(), F.col("o_orderkey").asc()]
-    top = scored.orderBy(*order).limit(k)
+    top = scored.orderBy(*order).limit(RECON_TOPK)
     from pyspark.sql import Window
 
     w = Window.orderBy(*order)
@@ -240,12 +243,13 @@ def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def incremental_kpi_refresh(
-    spark: SparkSession, sf_dir: str, split: str = "1996-01-01"
-) -> DataFrame:
+KPI_REFRESH_SPLIT = "1996-01-01"  # base/delta boundary
+
+
+def incremental_kpi_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-view maintenance for a decomposable KPI aggregate.
 
-    The base partition (orders before `split`) and the delta partition
+    The base partition (orders before `KPI_REFRESH_SPLIT`) and the delta partition
     (orders at/after it) are each reduced to PARTIAL aggregates
     (count, integer-cent sum — both algebraic), then combined by a
     second vocabulary-sized groupBy; avg is finalized from the merged
@@ -261,7 +265,7 @@ def incremental_kpi_refresh(
     """
     orders = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    cut = F.lit(split).cast("timestamp")
+    cut = F.lit(KPI_REFRESH_SPLIT).cast("timestamp")
 
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
@@ -291,9 +295,10 @@ def incremental_kpi_refresh(
     )
 
 
-def price_histogram(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 10
-) -> DataFrame:
+PRICE_BUCKETS = 10
+
+
+def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width retail-price histogram per category, integer-exact.
 
     Bucket edges come from the GLOBAL min/max (a one-row aggregate
@@ -318,7 +323,7 @@ def price_histogram(
         "lo",
         "hi",
         F.expr(
-            f"(cents - lo) * {n_buckets} div (hi - lo + 1)"
+            f"(cents - lo) * {PRICE_BUCKETS} div (hi - lo + 1)"
         ).alias("bucket"),
     )
     return bucketed.groupBy("p_type", "bucket").agg(

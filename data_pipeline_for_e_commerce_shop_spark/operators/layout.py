@@ -87,11 +87,7 @@ def morton_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 COMPACT_TARGET_BYTES = 50_000  # per-group byte target (demo-scaled)
 
 
-def compaction_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    target_bytes: int = COMPACT_TARGET_BYTES,
-) -> DataFrame:
+def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic small-partition compaction planner — the
     maintenance pass every parquet/Delta lake runs (OPTIMIZE /
     bin-packing): group undersized partitions into write groups of
@@ -134,7 +130,7 @@ def compaction_plan(
         F.expr(
             f"coalesce(sum(bytes) over (order by part_key"
             f" rows between unbounded preceding and 1 preceding), 0)"
-            f" div {target_bytes}"
+            f" div {COMPACT_TARGET_BYTES}"
         ).alias("group_id"),
     )
     return (
@@ -152,7 +148,7 @@ def compaction_plan(
             "last_part",
             "total_bytes",
             F.expr(
-                f"total_bytes * 1000000 div {target_bytes}"
+                f"total_bytes * 1000000 div {COMPACT_TARGET_BYTES}"
             ).alias("fill_ppm"),
         )
         .orderBy("group_id")

@@ -26,15 +26,13 @@ from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 FUZZY_MAX_DIST = 4
 
 
-def fuzzy_name_pairs(
-    spark: SparkSession, sf_dir: str, max_dist: int = FUZZY_MAX_DIST
-) -> DataFrame:
+def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-identical product-name pairs by blocked edit distance.
 
     Pipeline: distinct p_name with part counts (fact-sized shuffle,
     vocabulary-sized output) -> self-join blocked on the first name
     token (broadcast — the vocabulary side is small by construction)
-    -> keep ordered pairs with 0 < levenshtein <= max_dist.
+    -> keep ordered pairs with 0 < levenshtein <= FUZZY_MAX_DIST.
 
     At 100 TB: the only fact-sized operation is the name groupBy; the
     quadratic stage runs on |vocabulary|^2 / |blocks| pairs.  If the
@@ -62,7 +60,7 @@ def fuzzy_name_pairs(
     return (
         a.join(F.broadcast(b), "blk")
         .where(F.col("name_a") < F.col("name_b"))
-        .where(dist <= max_dist)
+        .where(dist <= FUZZY_MAX_DIST)
         .select(
             "name_a",
             "name_b",

@@ -28,18 +28,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+PROVENANCE_COL = "data_sources"
+
+
 def coalescing_merge(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    value_cols: list[str],
-    provenance_col: str | None = "data_sources",
+    target: DataFrame, source: DataFrame, keys: list[str], value_cols: list[str]
 ) -> DataFrame:
     """New-over-old coalescing upsert, set-based.
 
     Returns the merged table: matched keys take source values where
     non-null (preserving target values where the source is a partial
-    batch), unmatched source keys insert, unmatched target keys persist.
+    batch), unmatched source keys insert, unmatched target keys persist;
+    the ``PROVENANCE_COL`` arrays union.
     """
     t = target.alias("t")
     s = source.alias("s")
@@ -48,31 +48,24 @@ def coalescing_merge(
         [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
     )
     joined = t.join(s, cond, "full_outer")
-    out_cols = [
-        F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in keys
-    ] + [
-        F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in value_cols
-    ]
-    if provenance_col:
-        out_cols.append(
-            F.array_sort(
-                F.array_distinct(
-                    F.concat(
-                        F.coalesce(F.col(f"t.{provenance_col}"), F.array()),
-                        F.coalesce(F.col(f"s.{provenance_col}"), F.array()),
-                    )
+    return joined.select(
+        *[F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in keys],
+        *[F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in value_cols],
+        F.array_sort(
+            F.array_distinct(
+                F.concat(
+                    F.coalesce(F.col(f"t.{PROVENANCE_COL}"), F.array()),
+                    F.coalesce(F.col(f"s.{PROVENANCE_COL}"), F.array()),
                 )
-            ).alias(provenance_col)
-        )
-    return joined.select(*out_cols)
+            )
+        ).alias(PROVENANCE_COL),
+    )
 
 
-def _sorted_provenance(source: DataFrame, provenance_col: str | None) -> DataFrame:
+def _sorted_provenance(source: DataFrame) -> DataFrame:
     """A first write's provenance arrays, normalized as the merge's are."""
-    if not provenance_col:
-        return source
     return source.withColumn(
-        provenance_col, F.array_sort(F.array_distinct(F.col(provenance_col)))
+        PROVENANCE_COL, F.array_sort(F.array_distinct(F.col(PROVENANCE_COL)))
     )
 
 
@@ -82,7 +75,6 @@ def upsert_parquet_table(
     source: DataFrame,
     keys: list[str],
     value_cols: list[str],
-    provenance_col: str | None = "data_sources",
 ) -> None:
     """S7/S11: merge into a parquet-backed serving table, creating it if
     absent (reference table autovivification,
@@ -135,10 +127,8 @@ def upsert_parquet_table(
             # the table was written from a frame of the source's schema,
             # and parquet resolves columns by name: no inference job
             target = spark.read.schema(source.schema).parquet(table_path)
-            return coalescing_merge(
-                target, source, keys, value_cols, provenance_col
-            ).write
-        return _sorted_provenance(source, provenance_col).write
+            return coalescing_merge(target, source, keys, value_cols).write
+        return _sorted_provenance(source).write
 
     swap_parquet(table_path, build, "upsert")
 

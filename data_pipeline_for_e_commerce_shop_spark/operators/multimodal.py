@@ -79,7 +79,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     ``mapInPandas`` streams column batches; each batch computes

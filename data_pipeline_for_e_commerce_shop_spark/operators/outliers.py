@@ -17,11 +17,12 @@ from pyspark.sql import functions as F
 from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
 
 
-def price_outliers(
-    spark: SparkSession, sf_dir: str, z_threshold: float = 1.7
-) -> DataFrame:
-    """Orders whose total price sits >= z_threshold standard deviations
-    from their market segment's mean.  (Default 1.7: the synthetic
+Z_THRESHOLD = 1.7  # |z| at which a price is an outlier
+
+
+def price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders whose total price sits >= Z_THRESHOLD standard deviations
+    from their market segment's mean.  (1.7: the synthetic
     prices are near-uniform, whose |z| maxes at sqrt(3) ~ 1.73 — a 2.0
     threshold would be vacuously empty; real long-tailed money data
     would use 3+.)
@@ -69,5 +70,5 @@ def price_outliers(
             (F.col("cents") / 100.0).alias("price"),
             F.round(z, 6).alias("z"),
         )
-        .where(F.abs(F.col("z")) >= z_threshold)
+        .where(F.abs(F.col("z")) >= Z_THRESHOLD)
     )

@@ -71,9 +71,10 @@ def cumulative_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rolling_active_users(
-    spark: SparkSession, sf_dir: str, window_days: int = 7
-) -> DataFrame:
+ACTIVE_WINDOW_DAYS = 7
+
+
+def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event day: distinct users active in the trailing 7-day
     window — EXACT, decomposed so it scales.
 
@@ -92,7 +93,7 @@ def rolling_active_users(
     contrib = du.select(
         "user_id",
         F.explode(
-            F.sequence("day", F.date_add("day", window_days - 1))
+            F.sequence("day", F.date_add("day", ACTIVE_WINDOW_DAYS - 1))
         ).alias("day"),
     )
     return (

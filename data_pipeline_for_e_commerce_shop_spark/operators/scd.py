@@ -248,11 +248,7 @@ def timeline_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 SCD2_DELTA_CUTOFF = "1999-01-01"  # delta batch = orders on/after this
 
 
-def incremental_apply(
-    spark: SparkSession,
-    sf_dir: str,
-    cutoff: str = SCD2_DELTA_CUTOFF,
-) -> DataFrame:
+def incremental_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold a NEW change batch into an existing SCD2 history without
     rebuilding untouched keys — the production delta path (the full
     rebuild is the oracle: the two must be bit-identical).
@@ -279,7 +275,7 @@ def incremental_apply(
         "o_orderkey",
         "o_orderpriority",
     )
-    cut = F.lit(cutoff).cast("date")
+    cut = F.lit(SCD2_DELTA_CUTOFF).cast("date")
     old = orders.where(F.col("odate") < cut)
     delta = orders.where(F.col("odate") >= cut).localCheckpoint(eager=False)
     old_hist = scd2_history(

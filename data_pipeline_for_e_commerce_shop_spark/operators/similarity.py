@@ -50,17 +50,18 @@ def dot(a: str, b: str) -> Column:
     )
 
 
+DIM = 64  # embedding width
+# The ANN query panel: the first ANN_QUERIES vec_ids, top ANN_K each;
+# the IVF tiers sample IVF_CENTROIDS lists and probe IVF_PROBE of them.
+ANN_QUERIES = 5
+ANN_K = 5
+IVF_CENTROIDS = 8
+IVF_PROBE = 2
+
+
 def prepared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared (vec_id, emb, nrm) projection every index tier
-    consumes: doubles + L2 norm computed ONCE.  Grading queries that
-    run several index scans over the same corpus (ann_mrr's
-    brute/lsh/ivf panel, the n_probe curve) build this once,
-    ``localCheckpoint(eager=False)`` it, and pass it to each scan via
-    the ``emb=`` parameter — VERDICT r6 item 7: the scans' repeated
-    load+normalize stages were the measured cost at sf0.1 (the corpus
-    itself is small; the stages aren't free), and at 100 TB sharing
-    the normalized projection is exactly what an index build pipeline
-    does anyway."""
+    """The (vec_id, emb, nrm) projection every index tier consumes:
+    doubles + L2 norm computed once per scan."""
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("emb"))
@@ -68,22 +69,14 @@ def prepared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = 5,
-    k: int = 5,
-    emb: DataFrame | None = None,
-) -> DataFrame:
-    """Exact cosine top-k: first `n_queries` vec_ids as queries vs the
+def brute_force_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
+    """Exact cosine top-k: first `ANN_QUERIES` vec_ids as queries vs the
     whole corpus.  Query side is broadcast; ranking is a per-query
-    window with deterministic tie-break on corpus vec_id.
-    ``emb`` accepts a shared :func:`prepared_embeddings` frame."""
-    if emb is None:
-        emb = prepared_embeddings(spark, sf_dir)
-    # Norms computed ONCE per side (O(n)), so the O(n_queries * n)
+    window with deterministic tie-break on corpus vec_id."""
+    emb = prepared_embeddings(spark, sf_dir)
+    # Norms computed ONCE per side (O(n)), so the O(ANN_QUERIES * n)
     # pair stage is a single dot product per pair.
-    queries = emb.where(F.col("vec_id") < n_queries).select(
+    queries = emb.where(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
         F.col("nrm").alias("q_norm"),
@@ -154,7 +147,7 @@ N_PLANES = 4  # 4 sign bits -> 16 buckets (query-side LSH index)
 LSH_PLANES_MAX = 30
 
 
-def plane_signs(p: int, dim: int = 64) -> list[int]:
+def plane_signs(p: int) -> list[int]:
     """Hyperplane p as ±1 ints: component j is the parity of the FIRST
     hex digit of md5('plane-p-j').  THE single source of truth for the
     plane construction — the Spark expression (_plane_sql) and the DuckDB
@@ -166,11 +159,11 @@ def plane_signs(p: int, dim: int = 64) -> list[int]:
         1
         if int(hashlib.md5(f"plane-{p}-{j}".encode()).hexdigest()[0], 16) % 2
         else -1
-        for j in range(dim)
+        for j in range(DIM)
     ]
 
 
-def _plane_sql(dim: int, p: int) -> str:
+def _plane_sql(p: int) -> str:
     """Hyperplane p as a literal ±1.0 array in ONE SQL string, computed
     at plan-build time in Python — no per-row md5 expressions for
     Catalyst to fold (see lsh_bucket for why strings: a 30-plane
@@ -178,28 +171,26 @@ def _plane_sql(dim: int, p: int) -> str:
     trips of pure plan-CONSTRUCTION time)."""
     return (
         "array("
-        + ", ".join(f"{float(s):.1f}D" for s in plane_signs(p, dim))
+        + ", ".join(f"{float(s):.1f}D" for s in plane_signs(p))
         + ")"
     )
 
 
-def lsh_bucket(
-    emb_col: str, dim: int = 64, n_planes: int = N_PLANES
-) -> Column:
+def lsh_bucket(emb_col: str, n_planes: int = N_PLANES) -> Column:
     """Bucket id = concatenated sign bits of ``n_planes`` projections.
     Plane p's bit lands at position p, so the ``n_planes = k`` bucket
     equals the ``n_planes = m > k`` bucket modulo 2^k — masking a wide
     bucket down is exactly evaluating a narrower one.
 
     Built as ONE SQL expression string: the per-Column form cost
-    n_planes x dim py4j round trips of plan-construction latency
+    n_planes x DIM py4j round trips of plan-construction latency
     (~2 s of pure driver time at 30 planes — round-6 finding; the
     EXECUTED plan is identical either way, so no recorded hash
     moves)."""
     terms = []
     for p in range(n_planes):
         proj = (
-            f"aggregate(zip_with({emb_col}, {_plane_sql(dim, p)},"
+            f"aggregate(zip_with({emb_col}, {_plane_sql(p)},"
             " (x, pl) -> CAST(x AS DOUBLE) * pl),"
             " 0.0D, (acc, v) -> acc + v)"
         )
@@ -209,7 +200,7 @@ def lsh_bucket(
     return F.expr("(0 + " + " + ".join(terms) + ")")
 
 
-def knuth_order(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def knuth_order(df: DataFrame) -> DataFrame:
     """Order rows by the Knuth multiplicative hash of their id (tie
     -> id asc) — THE deterministic "training sample" rule, defined
     once: ivf_topk's centroids, ivf_incremental_add's frozen index,
@@ -229,12 +220,12 @@ def knuth_order(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     return df.withColumn(
         "_h",
         F.expr(
-            f"pmod(pmod((pmod({id_col}, 4294967296) div 65536)"
+            "pmod(pmod((pmod(vec_id, 4294967296) div 65536)"
             "           * 2654435761, 4294967296) * 65536"
-            f"      + pmod({id_col}, 65536) * 2654435761,"
+            "      + pmod(vec_id, 65536) * 2654435761,"
             "      4294967296)"
         ),
-    ).orderBy("_h", id_col)
+    ).orderBy("_h", "vec_id")
 
 
 def _assign_nearest(
@@ -242,16 +233,12 @@ def _assign_nearest(
     centroids: DataFrame,
     id_col: str,
     n_probe: int,
-    keep_rank: bool = False,
 ) -> DataFrame:
     """Assign each vector to its `n_probe` nearest centroids by cosine.
 
     Centroids are model-sized (k rows) -> broadcast; the cross join is
     O(n * k) with one dot product per pair (norms precomputed on both
-    sides).  Returns (id_col, emb, nrm, cluster_id); with
-    ``keep_rank`` also the 1-based ``probe_rank`` (the n_probe-curve
-    consumer slices one ranked assignment instead of re-assigning per
-    probe setting).
+    sides).  Returns (id_col, emb, nrm, cluster_id).
 
     The ``n_probe == 1`` fast path (the CORPUS assignment — every
     IVF build runs it over the whole table) is a ``max_by`` hash
@@ -270,7 +257,7 @@ def _assign_nearest(
             ),
         )
     )
-    if n_probe == 1 and not keep_rank:
+    if n_probe == 1:
         best = scored.groupBy(id_col).agg(
             F.max_by(
                 F.struct("emb", "nrm", "cluster_id"),
@@ -288,44 +275,31 @@ def _assign_nearest(
     w = Window.partitionBy(id_col).orderBy(
         F.col("cent_cos").desc(), F.col("cluster_id").asc()
     )
-    ranked = (
+    return (
         scored.withColumn("probe_rank", F.row_number().over(w))
         .where(F.col("probe_rank") <= n_probe)
+        .select(id_col, "emb", "nrm", "cluster_id")
     )
-    cols = [id_col, "emb", "nrm", "cluster_id"]
-    if keep_rank:
-        cols.append("probe_rank")
-    return ranked.select(*cols)
 
 
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = 5,
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    emb: DataFrame | None = None,
-) -> DataFrame:
+def ivf_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
     """IVF-style approximate top-k: the corpus is inverted into
-    `n_centroids` cosine-nearest-centroid lists; each query exactly
-    re-scores only its `n_probe` nearest lists.
+    `IVF_CENTROIDS` cosine-nearest-centroid lists; each query exactly
+    re-scores only its `IVF_PROBE` nearest lists.
 
     Centroids here are a deterministic sample (smallest multiplicative
     hash of vec_id — engine-portable, no RNG); a production build would
     k-means them, which only changes the centroid table, not the plan.
     At 100 TB: corpus hash-partitioned (or Delta ZORDERed) by
-    cluster_id, so a probe reads n_probe/n_centroids of the data —
+    cluster_id, so a probe reads IVF_PROBE/IVF_CENTROIDS of the data —
     IVF's whole point; the assignment pass is one broadcast cross join
     against a model-sized centroid table.
-    ``emb`` accepts a shared :func:`prepared_embeddings` frame.
     """
-    if emb is None:
-        emb = prepared_embeddings(spark, sf_dir)
+    emb = prepared_embeddings(spark, sf_dir)
     # Deterministic "training" sample: the shared knuth_order rule.
     centroids = (
         knuth_order(emb)
-        .limit(n_centroids)
+        .limit(IVF_CENTROIDS)
         .select(
             F.col("vec_id").alias("cluster_id"),
             F.col("emb").alias("cent_emb"),
@@ -342,12 +316,12 @@ def ivf_topk(
         "cluster_id",
     )
     queries = _assign_nearest(
-        emb.where(F.col("vec_id") < n_queries).select(
+        emb.where(F.col("vec_id") < ANN_QUERIES).select(
             F.col("vec_id").alias("query_id"), "emb", "nrm"
         ),
         centroids,
         "query_id",
-        n_probe=n_probe,
+        n_probe=IVF_PROBE,
     ).select(
         "query_id", F.col("emb").alias("q_emb"), F.col("nrm").alias("q_norm"),
         "cluster_id",
@@ -379,10 +353,8 @@ def ivf_topk(
 def lsh_topk(
     spark: SparkSession,
     sf_dir: str,
-    n_queries: int = 5,
-    k: int = 5,
+    k: int = ANN_K,
     multi_probe: bool = True,
-    emb: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact re-scoring restricted to the query's
     LSH bucket.  At scale the corpus is hash-partitioned by bucket, so
@@ -393,13 +365,11 @@ def lsh_topk(
     land just across one hyperplane are recovered at the cost of
     scanning (1 + N_PLANES)/2^N_PLANES of the corpus instead of
     1/2^N_PLANES — still a fixed fraction, and only the QUERY side
-    fans out (corpus is stored once, no extra shuffle).
-    ``emb`` accepts a shared :func:`prepared_embeddings` frame; the
-    bucket bits are computed on top of it either way."""
-    if emb is None:
-        emb = prepared_embeddings(spark, sf_dir)
-    emb = emb.withColumn("bucket", lsh_bucket("emb"))
-    queries = emb.where(F.col("vec_id") < n_queries).select(
+    fans out (corpus is stored once, no extra shuffle)."""
+    emb = prepared_embeddings(spark, sf_dir).withColumn(
+        "bucket", lsh_bucket("emb")
+    )
+    queries = emb.where(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
         F.col("bucket").alias("q_bucket"),
@@ -525,7 +495,7 @@ def label_centroids_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.groupBy("label").applyInPandas(centroid, CENTROID_SCHEMA)
 
 
-def ann_recall(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the two approximate indexes against the exact brute
     scan — the quality dial next to ANN's latency dial.
 
@@ -534,7 +504,7 @@ def ann_recall(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     recall is an exact, hash-checkable number, not a statistic.
 
     Scale: the joins are equi-joins on (query_id, corpus_id) over
-    n_queries×k rows — tiny relative to the index scans that feed them;
+    ANN_QUERIES×ANN_K rows — tiny relative to the index scans that feed them;
     at 100 TB the cost is the two approximate scans themselves, which
     is the point of measuring them against brute only on a small query
     panel.  Round 7: all three tiers come from the ONE-pass
@@ -542,7 +512,7 @@ def ann_recall(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     same oracles) instead of three separate pipelines.
     """
     panel = (
-        ann_method_panel(spark, sf_dir, k=k)
+        ann_method_panel(spark, sf_dir)
         .select("method", "query_id", "corpus_id")
         .localCheckpoint(eager=False)
     )
@@ -561,12 +531,12 @@ def ann_recall(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     l_rec = (
         brute.join(lsh, keys, "left")
         .groupBy("query_id")
-        .agg((F.count("hit") / float(k)).alias("lsh_recall"))
+        .agg((F.count("hit") / float(ANN_K)).alias("lsh_recall"))
     )
     v_rec = (
         brute.join(ivf, keys, "left")
         .groupBy("query_id")
-        .agg((F.count("hit") / float(k)).alias("ivf_recall"))
+        .agg((F.count("hit") / float(ANN_K)).alias("ivf_recall"))
     )
     return l_rec.join(v_rec, "query_id").select(
         "query_id", "lsh_recall", "ivf_recall"
@@ -606,7 +576,7 @@ def random_projection_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps = [
         "aggregate(zip_with(q, array("
         + ", ".join(
-            str(int(s)) for s in plane_signs(PROJ_PLANE_BASE + j, dim=64)
+            str(int(s)) for s in plane_signs(PROJ_PLANE_BASE + j)
         )
         + "), (x, s) -> x * s), CAST(0 AS BIGINT),"
         f" (acc, v) -> acc + v) AS r{j}"
@@ -640,9 +610,7 @@ MICRO = 1_000_000
 KMEANS_DRIVER_MAX = 20_000
 
 
-def _kmeans_driver(
-    spark: SparkSession, pdf, k: int, n_iter: int, dim: int
-) -> DataFrame:
+def _kmeans_driver(spark: SparkSession, pdf) -> DataFrame:
     """Driver-side Lloyd on the collected quantized corpus — numpy
     int64 throughout; float division only inside floor(mean), exact
     because |sum| < 2^53 (mirrors the SQL oracle's arithmetic)."""
@@ -651,7 +619,7 @@ def _kmeans_driver(
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     vecs = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["v"]])
     order = np.lexsort((ids, (ids * 2654435761) % 4294967296))
-    seed_ids = ids[order[:k]]
+    seed_ids = ids[order[:KMEANS_K]]
     # centroid columns ordered by cluster_id ASC so argmin's
     # first-match tie-break picks the smallest cid, like the oracle
     cid_order = np.sort(seed_ids)
@@ -665,9 +633,9 @@ def _kmeans_driver(
             ((vecs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
         )
 
-    for _ in range(n_iter):
+    for _ in range(KMEANS_ITER):
         assign = dists(cents).argmin(axis=1)
-        for j in range(k):
+        for j in range(KMEANS_K):
             members = vecs[assign == j]
             if len(members):
                 cents[j] = np.floor(
@@ -690,11 +658,7 @@ def _kmeans_driver(
 
 
 def kmeans_lloyd(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    n_iter: int = KMEANS_ITER,
-    driver_max: int = KMEANS_DRIVER_MAX,
+    spark: SparkSession, sf_dir: str, driver_max: int = KMEANS_DRIVER_MAX
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus, every iteration
     bit-exact: vectors are micro-unit quantized (floor(x·1e6) as int64)
@@ -704,7 +668,7 @@ def kmeans_lloyd(
     ML algorithm value-hash-checkable end-to-end (same idea as the
     connected-components oracle, but with dense vector state).
 
-    Seeding matches ivf_topk: the k seeds are the corpus rows with the
+    Seeding matches ivf_topk: the KMEANS_K seeds are the corpus rows with the
     smallest Knuth multiplicative hash of vec_id (cluster_id = seed's
     vec_id — stable across iterations).  A cluster that loses all
     members keeps its previous centroid (standard Lloyd fallback),
@@ -721,12 +685,11 @@ def kmeans_lloyd(
     map-side partials shrink the shuffle to k rows per partition.  Per
     iteration the working set — localCheckpoint'ed once, spread to
     cluster parallelism if the scan arrived under-partitioned — is
-    read ONCE.  n_iter is fixed, so the job graph is statically
-    n_iter+2 jobs.
+    read ONCE.  KMEANS_ITER is fixed, so the job graph is statically
+    KMEANS_ITER+2 jobs.
 
     Returns the final assignment: (vec_id, cluster_id, sq_dist).
     """
-    dim = 64
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -745,11 +708,11 @@ def kmeans_lloyd(
         )
 
         if table_rowcount(sf_dir, "embeddings") <= driver_max:
-            return _kmeans_driver(spark, emb.toPandas(), k, n_iter, dim)
+            return _kmeans_driver(spark, emb.toPandas())
 
     emb = fan_out(emb, "vec_id").localCheckpoint(eager=True)
 
-    seeds = knuth_order(emb).limit(k).drop("_h").collect()
+    seeds = knuth_order(emb).limit(KMEANS_K).drop("_h").collect()
     centroids: dict[int, list[int]] = {r["vec_id"]: list(r["v"]) for r in seeds}
 
     def _assigned(cent: dict[int, list[int]]) -> DataFrame:
@@ -796,7 +759,7 @@ def kmeans_lloyd(
             best["d"].alias("sq_dist"),
         )
 
-    for _ in range(n_iter):
+    for _ in range(KMEANS_ITER):
         means = (
             _assigned(centroids)
             .groupBy("cluster_id")
@@ -808,13 +771,13 @@ def kmeans_lloyd(
                     )
                     .cast("long")
                     .alias(f"m{i}")
-                    for i in range(dim)
+                    for i in range(DIM)
                 ]
             )
             .collect()
         )
         upd = {
-            r["cluster_id"]: [r[f"m{i}"] for i in range(dim)] for r in means
+            r["cluster_id"]: [r[f"m{i}"] for i in range(DIM)] for r in means
         }
         centroids = {
             cid: upd.get(cid, prev) for cid, prev in centroids.items()
@@ -853,12 +816,7 @@ def _lloyd_np(vecs, k: int, n_iter: int):
     return cents
 
 
-def pq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = 5,
-    k: int = 5,
-) -> DataFrame:
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC approximate top-k: vectors compress to PQ_M codebook
     codes (4 bytes each); queries score candidates through the
     asymmetric distance — sum over subspaces of the exact distance
@@ -874,7 +832,7 @@ def pq_topk(
     size, the standard PQ practice); the encode pass is a pure
     projection against the broadcast one-row codebook table (zero
     shuffle, the plan-stable model-shipping device from kmeans_lloyd);
-    ADC scoring broadcasts the n_queries query vectors and reads each
+    ADC scoring broadcasts the ANN_QUERIES query vectors and reads each
     corpus row once; the final top-k is a per-query window over
     candidate-sized input.  In production the 4-byte codes column is
     what you PERSIST — a 64x compression of the float corpus — and
@@ -907,7 +865,7 @@ def pq_topk(
         for s in range(PQ_M)
     ]
     q_pdf = (
-        emb.where(F.col("vec_id") < n_queries)
+        emb.where(F.col("vec_id") < ANN_QUERIES)
         .select("vec_id", "v")
         .toPandas()
     )
@@ -994,7 +952,7 @@ def pq_topk(
     return (
         pairs.where(F.col("query_id") != F.col("corpus_id"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "corpus_id", "approx_sq_dist", "rank")
     )
 
@@ -1003,11 +961,7 @@ IVF_ADD_MOD = 10  # vec_id % MOD == 0 is the "arriving" batch
 IVF_ADD_CENTROIDS = 8
 
 
-def ivf_incremental_add(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = IVF_ADD_CENTROIDS,
-) -> DataFrame:
+def ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index MAINTENANCE: assign an arriving embedding batch to a
     FROZEN centroid table (no retrain) and report per-list growth and
     balance — the operational question every incremental ANN
@@ -1018,7 +972,7 @@ def ivf_incremental_add(
     ivf_topk; the arriving batch (vec_id % IVF_ADD_MOD == 0) is
     assigned by ONE broadcast crossJoin against the model-sized
     centroid table.  Output per cluster: list size before/added/after,
-    post-add share, and balance_ppm = size_after * n_centroids / total
+    post-add share, and balance_ppm = size_after * IVF_ADD_CENTROIDS / total
     (1e6 = perfectly balanced) — the retrain trigger.
 
     Scale: both assignment passes are broadcast-model map work; the
@@ -1035,7 +989,7 @@ def ivf_incremental_add(
     new = emb.where(F.col("vec_id") % IVF_ADD_MOD == 0)
     centroids = (
         knuth_order(old)
-        .limit(n_centroids)
+        .limit(IVF_ADD_CENTROIDS)
         .select(
             F.col("vec_id").alias("cluster_id"),
             F.col("emb").alias("cent_emb"),
@@ -1085,7 +1039,7 @@ def ivf_incremental_add(
             "n_after",
             F.expr("n_after * 1000000 div total_after").alias("share_ppm"),
             F.expr(
-                f"n_after * {n_centroids} * 1000000 div total_after"
+                f"n_after * {IVF_ADD_CENTROIDS} * 1000000 div total_after"
             ).alias("balance_ppm"),
         )
         .orderBy("cluster_id")
@@ -1096,9 +1050,7 @@ MRL_DIMS = (64, 32, 16, 8)  # prefix lengths; 64 = full (recall 1.0 row)
 MRL_K = 5
 
 
-def matryoshka_recall(
-    spark: SparkSession, sf_dir: str, n_queries: int = 5, k: int = MRL_K
-) -> DataFrame:
+def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (MRL) dimension-ablation gauge: top-k retrieval with
     PREFIX-truncated embeddings at several widths, graded as recall
     against the full-dimension exact top-k — the measurement that
@@ -1115,7 +1067,7 @@ def matryoshka_recall(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("emb"))
     )
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     dims = F.array(*[F.lit(d) for d in MRL_DIMS])
@@ -1152,7 +1104,7 @@ def matryoshka_recall(
     )
     topk = (
         pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= MRL_K)
         .select("query_id", "dim", "corpus_id")
         .localCheckpoint(eager=False)  # self-joined below
     )
@@ -1179,7 +1131,7 @@ def matryoshka_recall(
             "query_id",
             "dim",
             F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)) / F.lit(float(k))).alias(
+            (F.coalesce("n_hits", F.lit(0)) / F.lit(float(MRL_K))).alias(
                 "recall"
             ),
         )
@@ -1292,14 +1244,7 @@ def mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-def ann_method_panel(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = 5,
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-) -> DataFrame:
+def ann_method_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(method, query_id, corpus_id, cosine, rank) for the THREE index
     tiers — brute / lsh / ivf — from ONE pair-scoring pass (VERDICT r6
     item 7: grading queries that union three standalone index scans
@@ -1312,7 +1257,7 @@ def ann_method_panel(
     join once, mark candidacy per tier with pure expressions/metadata
     (LSH: popcount(q_bucket XOR c_bucket) <= 1, exactly the
     multi-probe Hamming-1 bucket set; IVF: corpus top-1 centroid in
-    the query's n_probe probed centroids), explode the method tags,
+    the query's IVF_PROBE probed centroids), explode the method tags,
     and rank all three tiers in ONE window.  Row-for-row identical to
     the standalone ``brute_force_topk`` / ``lsh_topk`` / ``ivf_topk``
     outputs (same candidate sets, same cosine expression, same
@@ -1329,7 +1274,7 @@ def ann_method_panel(
     — centroids are a small model evaluated at the scan, never a
     join."""
     emb = prepared_embeddings(spark, sf_dir)
-    cent_df = _centroid_model(spark, emb, n_centroids)
+    cent_df = _centroid_model(spark, emb)
     corpus = (
         emb.crossJoin(F.broadcast(cent_df))
         .select(
@@ -1341,14 +1286,14 @@ def ann_method_panel(
         )
     )
     queries = (
-        emb.where(F.col("vec_id") < n_queries)
+        emb.where(F.col("vec_id") < ANN_QUERIES)
         .crossJoin(F.broadcast(cent_df))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("emb").alias("q_emb"),
             F.col("nrm").alias("q_norm"),
             lsh_bucket("emb").alias("q_bucket"),
-            F.expr(f"slice({_RANKED_CIDS}, 1, {n_probe})").alias(
+            F.expr(f"slice({_RANKED_CIDS}, 1, {IVF_PROBE})").alias(
                 "q_clusters"
             ),
         )
@@ -1391,21 +1336,19 @@ def ann_method_panel(
     )
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("method", "query_id", "corpus_id", "cosine", "rank")
     )
 
 
-def _centroid_model(
-    spark: SparkSession, emb: DataFrame, n_centroids: int
-) -> DataFrame:
+def _centroid_model(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """The IVF centroid sample as a broadcast ONE-ROW model table
     (``cents array<struct<cid, c, n>>``, cid-ascending) — the same
     ship-the-model shape embedding_kmeans uses.  The collect is the
     bounded k-row model-state read the repo's collect policy allows;
     the doubles round-trip driver-side exactly (IEEE), so expression
     scoring reproduces the join-based scoring bit-for-bit."""
-    seeds = knuth_order(emb).limit(n_centroids).collect()
+    seeds = knuth_order(emb).limit(IVF_CENTROIDS).collect()
     rows = sorted(
         (int(r["vec_id"]), list(r["emb"]), float(r["nrm"])) for r in seeds
     )
@@ -1442,12 +1385,7 @@ _RANKED_CIDS = (
 IVF_CURVE_PROBES = (1, 2, 4)  # interpolated into the oracle SQL
 
 
-def ivf_nprobe_curve(
-    spark: SparkSession,
-    sf_dir: str,
-    probes: tuple = IVF_CURVE_PROBES,
-    k: int = 5,
-) -> DataFrame:
+def ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k as a function of n_probe for the IVF index — the
     accuracy-vs-cost tuning curve every IVF deployment reads before
     fixing its probe count (the dedup_lsh_tuning_curve counterpart on
@@ -1460,7 +1398,7 @@ def ivf_nprobe_curve(
     deliberate broadcast-NL ground-truth pass shared with ann_recall.
 
     Round 7 (VERDICT r6 item 7): the curve is ONE plan, not
-    ``len(probes)`` independent IVF scans.  Every (query, corpus)
+    ``len(IVF_CURVE_PROBES)`` independent IVF scans.  Every (query, corpus)
     pair is scored ONCE with its ``probe_rank`` (the rank of the
     corpus vector's centroid in the query's centroid ordering,
     computed from the broadcast 1-row centroid model — zero
@@ -1470,9 +1408,8 @@ def ivf_nprobe_curve(
     per-(p, query) top-k window.  Identical rows to the per-probe
     form (a corpus vector lives in exactly one inverted list, so a
     pair's probe_rank is unique)."""
-    n_centroids = 8
     emb = prepared_embeddings(spark, sf_dir)
-    cent_df = _centroid_model(spark, emb, n_centroids)
+    cent_df = _centroid_model(spark, emb)
     corpus = (
         emb.crossJoin(F.broadcast(cent_df))
         .select(
@@ -1483,7 +1420,7 @@ def ivf_nprobe_curve(
         )
     )
     queries = (
-        emb.where(F.col("vec_id") < 5)
+        emb.where(F.col("vec_id") < ANN_QUERIES)
         .crossJoin(F.broadcast(cent_df))
         .select(
             F.col("vec_id").alias("query_id"),
@@ -1516,12 +1453,12 @@ def ivf_nprobe_curve(
     )
     brute = (
         scored.withColumn("rank", F.row_number().over(wb))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "corpus_id")
     )
     qids = scored.select("query_id").distinct()
     probes_df = spark.createDataFrame(
-        [(int(p),) for p in probes], "n_probe long"
+        [(int(p),) for p in IVF_CURVE_PROBES], "n_probe long"
     )
     cand = scored.join(
         F.broadcast(probes_df), F.col("probe_rank") <= F.col("n_probe")
@@ -1531,7 +1468,7 @@ def ivf_nprobe_curve(
     )
     ivf_all = (
         cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("n_probe", "query_id", "corpus_id")
     )
     hits = (
@@ -1547,7 +1484,7 @@ def ivf_nprobe_curve(
             "query_id",
             F.coalesce(F.col("hits"), F.lit(0).cast("long")).alias("hits"),
             F.expr(
-                f"CAST(COALESCE(hits, 0) * 1000000 div {k} AS BIGINT)"
+                f"CAST(COALESCE(hits, 0) * 1000000 div {ANN_K} AS BIGINT)"
             ).alias("recall_ppm"),
         )
         .orderBy("n_probe", "query_id")
@@ -1739,14 +1676,12 @@ def mahalanobis_ood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("m2_milli"), "vec_id").limit(MAHA_TOPK)
 
 
-def embedding_covariance(
-    spark: SparkSession, sf_dir: str, scale: int = 1_000_000
-) -> DataFrame:
+def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact population covariance matrix of the embedding corpus
     (upper triangle), the whitening / feature-decorrelation prep step
     of an embedding pipeline.
 
-    Determinism: components quantize to integers (floor(x * scale),
+    Determinism: components quantize to integers (floor(x * MICRO),
     float32 -> float64 promotion is exact and floor matches DuckDB),
     so the two moment tables are ORDER-FREE integer sums —
     cov = P_ij/n - (S_i/n)(S_j/n) is then a fixed sequence of
@@ -1757,7 +1692,7 @@ def embedding_covariance(
     join), then a d^2-key groupBy sums partials — map-side combine
     makes the shuffle O(partitions * d^2), independent of corpus
     size.  The first-moment table S rides a plain posexplode groupBy
-    (64 keys).  |q| <= ~scale and P entries stay inside int64 through
+    (64 keys).  |q| <= ~MICRO and P entries stay inside int64 through
     ~1e6 rows per batch at this scale; the batch matmul is int64 and
     ANSI-summed afterwards, so overflow fails loudly."""
     emb = load_table(spark, sf_dir, "embeddings").select("embedding")
@@ -1769,7 +1704,7 @@ def embedding_covariance(
         .select(
             (F.col("pos") + 1).alias("i"),
             F.expr(
-                f"CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT)"
+                f"CAST(floor(CAST(x AS DOUBLE) * {MICRO}) AS BIGINT)"
             ).alias("q"),
         )
         .groupBy("i")
@@ -1789,7 +1724,7 @@ def embedding_covariance(
             q = np.stack(
                 [
                     np.floor(
-                        np.asarray(e, dtype=np.float64) * scale
+                        np.asarray(e, dtype=np.float64) * MICRO
                     ).astype(np.int64)
                     for e in pdf["embedding"]
                 ]

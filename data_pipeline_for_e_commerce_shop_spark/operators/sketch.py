@@ -45,9 +45,7 @@ def _cms_pos(row: Column, key: Column, width: int = CMS_WIDTH) -> Column:
 CMS_TOPK = 20
 
 
-def cms_heavy_hitters(
-    spark: SparkSession, sf_dir: str, k: int = CMS_TOPK
-) -> DataFrame:
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimate the top-k part frequencies in lineitem via a 4x1024
     count-min sketch, audited against the exact counts.
 
@@ -86,7 +84,7 @@ def cms_heavy_hitters(
     ).agg(F.sum("exact_n").alias("cnt"))
     w = Window.orderBy(F.desc("exact_n"), F.asc("l_partkey"))
     topk = exact.withColumn("rk", F.row_number().over(w)).where(
-        F.col("rk") <= k
+        F.col("rk") <= CMS_TOPK
     )
 
     probes = topk.select(
@@ -349,12 +347,11 @@ def hll_merge_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_overlap_estimate(
-    spark: SparkSession,
-    sf_dir: str,
-    type_a: str = "click",
-    type_b: str = "purchase",
-) -> DataFrame:
+OVERLAP_TYPE_A = "click"
+OVERLAP_TYPE_B = "purchase"
+
+
+def hll_overlap_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch SET ALGEBRA: estimate the user overlap of two event
     types by inclusion-exclusion over three deterministic HLLs —
     |A∩B| ≈ E(A) + E(B) - E(A∪B).  Unions are free for HLL (register
@@ -367,14 +364,14 @@ def hll_overlap_estimate(
     distinct.
     """
     ev = load_table(spark, sf_dir, "events")
-    a = ev.where(F.col("event_type") == type_a).select(
+    a = ev.where(F.col("event_type") == OVERLAP_TYPE_A).select(
         F.lit("a").alias("event_type"), "user_id"
     )
-    b = ev.where(F.col("event_type") == type_b).select(
+    b = ev.where(F.col("event_type") == OVERLAP_TYPE_B).select(
         F.lit("b").alias("event_type"), "user_id"
     )
     u = ev.where(
-        F.col("event_type").isin(type_a, type_b)
+        F.col("event_type").isin(OVERLAP_TYPE_A, OVERLAP_TYPE_B)
     ).select(F.lit("u").alias("event_type"), "user_id")
     regs = _hll_registers(a.unionByName(b).unionByName(u))
     sums = regs.groupBy("event_type").agg(
@@ -392,10 +389,10 @@ def hll_overlap_estimate(
         .pivot("event_type", ["a", "b", "u"])
         .agg(F.max("e"))
     )
-    a_users = ev.where(F.col("event_type") == type_a).select(
+    a_users = ev.where(F.col("event_type") == OVERLAP_TYPE_A).select(
         "user_id"
     ).distinct()
-    b_users = ev.where(F.col("event_type") == type_b).select(
+    b_users = ev.where(F.col("event_type") == OVERLAP_TYPE_B).select(
         "user_id"
     ).distinct()
     exact = a_users.join(b_users, "user_id").agg(
@@ -557,9 +554,7 @@ def hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_rolling_users(
-    spark: SparkSession, sf_dir: str, window_days: int = HLL_ROLLING_DAYS
-) -> DataFrame:
+def hll_rolling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct users from DAILY HLL registers — the
     sliding-sketch pattern: per-day registers are built once; each
     day's trailing window is answered by max-merging seven
@@ -568,7 +563,7 @@ def hll_rolling_users(
     serving job reads.
 
     The register fan-out (each day contributes to the next
-    window_days target days) is sketch-sized, not fact-sized; target
+    HLL_ROLLING_DAYS target days) is sketch-sized, not fact-sized; target
     days are restricted to observed days.  The exact trailing
     distinct count (user fan-out + countDistinct) rides along as the
     audit.
@@ -584,7 +579,7 @@ def hll_rolling_users(
 
     fan = daily_regs.select(
         F.explode(
-            F.sequence(F.col("d"), F.col("d") + (window_days - 1))
+            F.sequence(F.col("d"), F.col("d") + (HLL_ROLLING_DAYS - 1))
         ).alias("td"),
         "bucket",
         "m_reg",
@@ -601,7 +596,7 @@ def hll_rolling_users(
     exact = (
         du.select(
             F.explode(
-                F.sequence(F.col("d"), F.col("d") + (window_days - 1))
+                F.sequence(F.col("d"), F.col("d") + (HLL_ROLLING_DAYS - 1))
             ).alias("td"),
             "user_id",
         )

@@ -35,7 +35,6 @@ def salted_agg(
     df: DataFrame,
     key: str,
     salt_source: str,
-    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Two-phase count/sum/distinct-merge aggregation over a skewed key.
 
@@ -53,7 +52,7 @@ def salted_agg(
     re-assembled the full per-key user set in one reducer — the exact
     OOM salting exists to prevent).
     """
-    salt = (F.abs(F.hash(F.col(salt_source))) % n_salts).alias("_salt")
+    salt = (F.abs(F.hash(F.col(salt_source))) % N_SALTS).alias("_salt")
     partial = (
         df.groupBy(F.col(key), salt)
         .agg(
@@ -85,41 +84,40 @@ def salted_join(
     build: DataFrame,
     key: str,
     salt_source: str,
-    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Two-phase salted EQUI-JOIN for a skewed key (SURVEY §4.4's join
     story at 100 TB): the probe/fact side gets a deterministic salt
     from a high-cardinality column, the build side is replicated
-    ``n_salts``× (one copy per salt value), and the join runs on
-    (key, salt) — so a hot key's rows fan over ``n_salts`` shuffle
+    ``N_SALTS``× (one copy per salt value), and the join runs on
+    (key, salt) — so a hot key's rows fan over ``N_SALTS`` shuffle
     partitions instead of one straggler task.  Row-identical to the
     plain ``fact JOIN build ON key`` (every fact row finds exactly the
     one replica of its match carrying its salt), which is what the
     DuckDB oracle checks.
 
-    Salt is ``pmod(hash(salt_source), n_salts)`` — NOT abs(hash)%n
+    Salt is ``pmod(hash(salt_source), N_SALTS)`` — NOT abs(hash)%n
     (abs(Int.MinValue) stays negative and would miss every build-side
     replica, silently dropping rows) and NOT rand() (a task retry at
     100 TB must re-derive the same salt or the retry loses rows).
     NULL ``salt_source`` values are safe: Spark's Murmur3 ``hash``
     skips null inputs and returns the SEED (42), never NULL — so a
     null-salt row lands deterministically in salt bucket
-    ``pmod(42, n_salts)`` and still finds its build replica
+    ``pmod(42, N_SALTS)`` and still finds its build replica
     (round-7 regression test pins this; an earlier review guessed
     ``hash(NULL)`` was NULL, which would have dropped rows).
 
     The build side is hinted ``shuffle_hash``: replicating a build
-    table n_salts× only makes sense when it was too big (or the key
+    table N_SALTS× only makes sense when it was too big (or the key
     too hot) for plain broadcast, and the demo should exercise the
     shuffle path it claims to fix.  AQE's skew-join split
     (``spark.sql.adaptive.skewJoin``) solves the same problem
     transparently for sort-merge joins; this operator is the explicit
     form for engines/paths AQE doesn't cover (stateful streaming
     joins, deterministic replays) and for pre-partitioned writes."""
-    salt = F.pmod(F.hash(F.col(salt_source)), F.lit(n_salts)).cast("int")
+    salt = F.pmod(F.hash(F.col(salt_source)), F.lit(N_SALTS)).cast("int")
     probe = fact.withColumn("_salt", salt)
     replicas = build.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)))
     ).withColumn("_salt", F.col("_salt").cast("int"))
     return probe.join(replicas.hint("shuffle_hash"), [key, "_salt"]).drop(
         "_salt"
@@ -168,9 +166,10 @@ def event_type_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def key_skew_report(
-    df: DataFrame, key: str, top: int = 5
-) -> DataFrame:
+SKEW_TOP = 5  # hottest keys reported
+
+
+def key_skew_report(df: DataFrame, key: str) -> DataFrame:
     """Shuffle-key skew diagnostic — the measurement that decides
     whether a join/agg on `key` needs salting, AQE skew splitting, or
     nothing (SURVEY §4.4: "salting only if skew observed").
@@ -178,13 +177,13 @@ def key_skew_report(
     One pass builds the per-key frequency table (the same map-side
     partial combine the real aggregation would use); a second
     vocabulary-sized pass reduces it to ONE summary row per key rank:
-    the `top` hottest keys with their share of all rows in ppm
+    the `SKEW_TOP` hottest keys with their share of all rows in ppm
     (integer arithmetic — exact), against the key count and a
     perfectly-uniform share for contrast.  A key whose ppm is orders
     of magnitude above uniform_ppm is the straggler-maker.
 
     Scale: the frequency table is |keys|-sized, the result is
-    `top` rows; nothing here shuffles more than the aggregation under
+    `SKEW_TOP` rows; nothing here shuffles more than the aggregation under
     diagnosis would.
     """
     freq = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
@@ -195,7 +194,7 @@ def key_skew_report(
     w = Window.orderBy(F.col("n").desc(), F.col(key).asc())
     return (
         freq.orderBy(F.col("n").desc(), F.col(key).asc())
-        .limit(top)
+        .limit(SKEW_TOP)
         .withColumn("rank", F.row_number().over(w))
         .crossJoin(F.broadcast(totals))
         .select(

@@ -119,7 +119,10 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+TFIDF_TOPK = 3
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k TF-IDF terms per document.
 
     Three aggregates over ONE tokenized explode: term frequency per
@@ -160,7 +163,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_TOPK)
         .select("doc_id", "term", "tf", "tfidf", "rank")
     )
 
@@ -236,7 +239,10 @@ def zipf_top_terms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     )
 
 
-def bigram_top_terms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+BIGRAM_TOPK = 20
+
+
+def bigram_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide bigram frequencies, top-k — the n-gram statistics a
     tokenizer-training / contamination-check pipeline pulls.
 
@@ -259,7 +265,7 @@ def bigram_top_terms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n"))
     )
     order = [F.col("n").desc(), F.col("bigram").asc()]
-    top = freq.orderBy(*order).limit(k)
+    top = freq.orderBy(*order).limit(BIGRAM_TOPK)
     w = Window.orderBy(*order)
     return top.withColumn("rank", F.row_number().over(w)).select(
         "bigram", "n", "rank"
@@ -539,15 +545,11 @@ WINNOW_W = 4
 WINNOW_MAX_DF = 100
 
 
-def winnow_fingerprints(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
+def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style winnowing fingerprints: hash every word k-gram, then
     keep the MINIMUM hash of each sliding window of w consecutive
-    k-gram hashes.  Guarantees: any shared substring of at least
+    k-gram hashes (k = WINNOW_K, w = WINNOW_W).  Guarantees: any
+    shared substring of at least
     k + w - 1 words produces at least one shared fingerprint, and the
     selected set is position-independent — the local-similarity
     detector exact-hash dedup misses and shingle-Jaccard only
@@ -566,17 +568,17 @@ def winnow_fingerprints(
     docs = fan_out(docs, "doc_id")
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     grams = F.expr(
-        f"case when size(toks) >= {k} then"
-        f" transform(sequence(1, size(toks) - {k - 1}),"
+        f"case when size(toks) >= {WINNOW_K} then"
+        f" transform(sequence(1, size(toks) - {WINNOW_K - 1}),"
         f" i -> CAST(conv(substring(md5(concat_ws(' ',"
-        f" slice(toks, i, {k}))), 1, 8), 16, 10) AS BIGINT))"
+        f" slice(toks, i, {WINNOW_K}))), 1, 8), 16, 10) AS BIGINT))"
         f" else array() end"
     )
     hashed = toks.select("doc_id", grams.alias("hs"))
     fps = F.expr(
-        f"case when size(hs) >= {w} then"
-        f" transform(sequence(1, size(hs) - {w - 1}),"
-        f" i -> array_min(slice(hs, i, {w})))"
+        f"case when size(hs) >= {WINNOW_W} then"
+        f" transform(sequence(1, size(hs) - {WINNOW_W - 1}),"
+        f" i -> array_min(slice(hs, i, {WINNOW_W})))"
         f" when size(hs) > 0 then array(array_min(hs))"
         f" else array() end"
     )
@@ -586,9 +588,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_pairs(
-    spark: SparkSession, sf_dir: str, max_df: int = WINNOW_MAX_DF
-) -> DataFrame:
+def winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-similarity pairs from shared winnowing fingerprints: docs
     sharing >= 2 selected fingerprints, scored by exact fingerprint
     Jaccard in ppm — catches COPIED PASSAGES between otherwise
@@ -597,7 +597,7 @@ def winnow_pairs(
 
     Scale shape: candidate generation is a fingerprint-keyed equi
     self-join (hash-partitioned); boilerplate fingerprints (document
-    frequency > max_df) are dropped first — both the precision filter
+    frequency > WINNOW_MAX_DF) are dropped first — both the precision filter
     and the skew guard, same device as the TF-IDF rare-token cut.  The
     per-doc fingerprint totals reuse one aggregation.
     """
@@ -609,7 +609,7 @@ def winnow_pairs(
     keep = (
         fp.groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_df)
+        .where(F.col("df") <= WINNOW_MAX_DF)
         .select("fingerprint")
     )
     fp = fp.join(keep, "fingerprint").localCheckpoint(eager=False)
@@ -668,9 +668,7 @@ def bm25_score_sql() -> str:
     return " + ".join(terms)
 
 
-def bm25_topk(
-    spark: SparkSession, sf_dir: str, topk: int = BM25_TOPK
-) -> DataFrame:
+def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranking of the document corpus against a fixed query —
     the lexical-retrieval scorer every RAG/recall pipeline runs next
     to the ANN tier (its embedding counterpart is ann_brute_topk).
@@ -718,7 +716,7 @@ def bm25_topk(
     return (
         scored.where(F.col("bm25") > 0)
         .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= topk)
+        .where(F.col("rk") <= BM25_TOPK)
         .drop("rk")
     )
 
@@ -789,11 +787,7 @@ def unigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 PHRASE_QUERY = ("slow", "hash", "batch")  # contiguous-token phrase
 
 
-def phrase_search(
-    spark: SparkSession,
-    sf_dir: str,
-    phrase: tuple[str, ...] = PHRASE_QUERY,
-) -> DataFrame:
+def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional inverted-index phrase search: docs containing the
     query words CONTIGUOUSLY, with the exact occurrence count.
 
@@ -811,14 +805,14 @@ def phrase_search(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos", "term"),
     )
-    postings = toks.where(F.col("term").isin(*phrase))
+    postings = toks.where(F.col("term").isin(*PHRASE_QUERY))
     per_term = [
         F.sort_array(
             F.collect_list(
                 F.when(F.col("term") == w, F.col("pos"))
             )
         ).alias(f"p{i}")
-        for i, w in enumerate(phrase)
+        for i, w in enumerate(PHRASE_QUERY)
     ]
     grouped = postings.groupBy("doc_id").agg(*per_term)
     def _shift_by(d: int):
@@ -828,7 +822,7 @@ def phrase_search(
         return lambda x: x - d
 
     hits = F.col("p0")
-    for i in range(1, len(phrase)):
+    for i in range(1, len(PHRASE_QUERY)):
         hits = F.array_intersect(
             hits, F.transform(F.col(f"p{i}"), _shift_by(i))
         )

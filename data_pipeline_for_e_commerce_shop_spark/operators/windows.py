@@ -35,7 +35,10 @@ def revenue_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def topk_per_group(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+GROUP_TOPK = 3
+
+
+def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k parts by revenue within each part type (row_number).
 
     Deterministic tie-break on p_partkey.  At scale row_number over a
@@ -53,7 +56,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
     return (
         revenue.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= GROUP_TOPK)
         .select("p_type", "p_partkey", "revenue", "rank")
     )
 
@@ -144,8 +147,11 @@ def grouping_sets_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ordered_head(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
-    """O1: FIFO head — oldest-n pending-like rows, deterministic
+HEAD_N = 10
+
+
+def ordered_head(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O1: FIFO head — oldest-HEAD_N pending-like rows, deterministic
     tie-break (reference controller GSI query ScanIndexForward Limit=1,
     lambda/controller.py:64-69).  TakeOrderedAndProject physically: no
     global sort, each partition keeps n, driver merges n*p rows."""
@@ -153,7 +159,7 @@ def ordered_head(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
     return (
         orders.filter(F.col("o_orderstatus") == "O")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-        .limit(n)
+        .limit(HEAD_N)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
     )
 
@@ -217,13 +223,15 @@ def segment_balance_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return annotated.where(F.col("rk") <= 3)
 
 
+RANK_BUCKETS = 4096  # range buckets of the two-phase rank
+
+
 def bucketed_global_rank(
     df: DataFrame,
     lead_expr: str,
     order_cols: list,
     out_col: str = "rn",
     n_col: str | None = None,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY order_cols)`` without
     a single-partition sort (the WindowExec "No Partition Defined"
@@ -232,10 +240,10 @@ def bucketed_global_rank(
     ``lead_expr`` is a SQL expression for the LEADING integer sort key
     (negate it for a descending lead, e.g. ``"-cents"``); the rest of
     ``order_cols`` break ties so the ordering is total.  Strategy:
-    range-bucket the lead key adaptively into <= ``n_buckets`` buckets
+    range-bucket the lead key adaptively into <= ``RANK_BUCKETS`` buckets
     (min/max come from a 1-row broadcast agg, so bucket count is bound
     regardless of data scale), compute each bucket's exclusive prefix
-    count with a window over the BOUNDED bucket table (<= n_buckets
+    count with a window over the BOUNDED bucket table (<= RANK_BUCKETS
     rows — the whitelisted bounded-window class), then rank inside
     each bucket with a partitioned window and add the offset.  The
     result is bit-identical to the global window because integer
@@ -254,11 +262,11 @@ def bucketed_global_rank(
         "_bk",
         F.expr(
             f"(({lead_expr}) - _bwlo)"
-            f" div (((_bwhi - _bwlo) div {n_buckets}) + 1L)"
+            f" div (((_bwhi - _bwlo) div {RANK_BUCKETS}) + 1L)"
         ),
     )
     bcounts = bucketed.groupBy("_bk").agg(F.count(F.lit(1)).alias("_cnt"))
-    # exclusive prefix over the <= n_buckets-row bucket table: bounded
+    # exclusive prefix over the <= RANK_BUCKETS-row bucket table: bounded
     # input, so the single-partition window here is safe by design
     w_prev = Window.orderBy("_bk").rowsBetween(
         Window.unboundedPreceding, -1
@@ -284,7 +292,6 @@ def bucketed_running_sum(
     lead_expr: str,
     order_cols: list,
     out_col: str = "cum",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Exact inclusive running ``SUM(sum_col) OVER (ORDER BY
     order_cols ROWS UNBOUNDED PRECEDING)`` without a single-partition
@@ -303,7 +310,7 @@ def bucketed_running_sum(
         "_bk",
         F.expr(
             f"(({lead_expr}) - _bwlo)"
-            f" div (((_bwhi - _bwlo) div {n_buckets}) + 1L)"
+            f" div (((_bwhi - _bwlo) div {RANK_BUCKETS}) + 1L)"
         ),
     )
     bsums = bucketed.groupBy("_bk").agg(F.sum(sum_col).alias("_bsum"))
@@ -669,7 +676,6 @@ def bucketed_rank_running_sum(
     rank_col: str = "rn",
     cum_cols: list | None = None,
     n_col: str | None = None,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """:func:`bucketed_global_rank` and :func:`bucketed_running_sum`
     fused over ONE bucketing pass — for plans that need the exact
@@ -692,7 +698,7 @@ def bucketed_rank_running_sum(
         "_bk",
         F.expr(
             f"(({lead_expr}) - _bwlo)"
-            f" div (((_bwhi - _bwlo) div {n_buckets}) + 1L)"
+            f" div (((_bwhi - _bwlo) div {RANK_BUCKETS}) + 1L)"
         ),
     )
     bstats = bucketed.groupBy("_bk").agg(

@@ -200,7 +200,7 @@ class MedallionPipeline:
             .observe(obs, *metrics)
         )
         path = f"{self.base}/rejected/{entity}"
-        write_quarantine(rejects, path, F.col("reason"), F.col("error_type"))
+        write_quarantine(rejects, path)
         passed = tagged.where(F.col("error_type").isNull()).select(*cols)
         return passed, {k: int(v) for k, v in obs.get.items()}
 
@@ -213,7 +213,7 @@ class MedallionPipeline:
             event_date(ts_col) if ts_col else F.current_date(),
         )
         path = f"{self.base}/validated/{entity}"
-        write_partitioned(out, path, "dt")
+        write_partitioned(out, path)
         return path
 
     # ------------------------------------------------ transformation

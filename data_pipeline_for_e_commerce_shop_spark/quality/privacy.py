@@ -60,12 +60,13 @@ def pii_scan(df: DataFrame, text_col: str) -> DataFrame:
     return df.select("*", *counts, redacted(text_col).alias("redacted_text"))
 
 
-def k_anonymity(
-    df: DataFrame, quasi_ids: list[str], k: int = 5
-) -> DataFrame:
+K_ANON = 5  # smallest equivalence class that is not flagged
+
+
+def k_anonymity(df: DataFrame, quasi_ids: list[str]) -> DataFrame:
     """k-anonymity audit over a quasi-identifier combination: the size
     of every equivalence class, flagged when it re-identifies to fewer
-    than `k` rows.  The release gate a privacy review runs before a
+    than `K_ANON` rows.  The release gate a privacy review runs before a
     table with demographic columns ships.
 
     One groupBy on the quasi-ids (map-side partials; equivalence
@@ -78,7 +79,7 @@ def k_anonymity(
         .select(
             *quasi_ids,
             "class_size",
-            (F.col("class_size") < k).alias("below_k"),
+            (F.col("class_size") < K_ANON).alias("below_k"),
         )
     )
 

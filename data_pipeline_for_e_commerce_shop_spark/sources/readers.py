@@ -26,14 +26,11 @@ CORRUPT_COL = "_corrupt_record"
 
 
 def read_csv_entity(
-    spark: SparkSession,
-    paths: list[str] | str,
-    schema: T.StructType,
-    capture_corrupt: bool = True,
+    spark: SparkSession, paths: list[str] | str, schema: T.StructType
 ) -> DataFrame:
     """S1: schema-first CSV scan with corrupt-record capture."""
     read_schema = schema
-    if capture_corrupt and CORRUPT_COL not in [f.name for f in schema.fields]:
+    if CORRUPT_COL not in [f.name for f in schema.fields]:
         read_schema = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
         )

@@ -23,38 +23,35 @@ import shutil
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, DataFrameWriter
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> None:
+def write_partitioned(df: DataFrame, path: str) -> None:
     """S5: partitioned table write with DYNAMIC partition overwrite.
 
     The reference's ``mode('overwrite')`` on the whole table
     (scripts/validation.py:121-129) deletes every previous day each
-    batch — SURVEY §4.3.  Dynamic overwrite replaces only the partitions
-    present in this batch (Delta equivalent: ``replaceWhere``).
+    batch — SURVEY §4.3.  Dynamic overwrite replaces only the ``dt``
+    partitions present in this batch (Delta equivalent:
+    ``replaceWhere``).
     """
     (
         df.write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy("dt")
         .parquet(path)
     )
 
 
-def write_quarantine(
-    bad_rows: DataFrame, path: str, reason: str | Column, error_type: str | Column
-) -> None:
-    """S9: quarantine failing rows with reason/provenance columns —
-    replaces the copy-to-rejected/-plus-JSON flow
-    (reference lambda/s3_validation.py:138-157).  ``reason`` and
-    ``error_type`` are a value or a per-row column.  Nothing is counted
-    first: an empty ``bad_rows`` may leave one zero-row file."""
+def write_quarantine(bad_rows: DataFrame, path: str) -> None:
+    """S9: quarantine failing rows, which carry their ``reason`` and
+    ``error_type`` columns, stamped with ``rejected_at`` — replaces the
+    copy-to-rejected/-plus-JSON flow (reference
+    lambda/s3_validation.py:138-157).  Nothing is counted first: an
+    empty ``bad_rows`` may leave one zero-row file."""
     (
-        bad_rows.withColumn("reason", F.lit(reason))
-        .withColumn("error_type", F.lit(error_type))
-        .withColumn("rejected_at", F.current_timestamp())
+        bad_rows.withColumn("rejected_at", F.current_timestamp())
         .write.mode("append")
         .parquet(path)
     )

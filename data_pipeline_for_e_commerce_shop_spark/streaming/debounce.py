@@ -21,16 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_GAP = "90 seconds"  # reference BATCH_WINDOW_SECONDS
-                            # (lambda/s3_validation.py:23)
+from ..operators.events import DEBOUNCE_GAP_SECONDS
 
 
 def debounce_batches(
-    file_events: DataFrame,
-    gap: str = DEFAULT_GAP,
-    event_ts: str = "event_ts",
-    group_key: str = "group_key",
-    watermark: str | None = "10 minutes",
+    file_events: DataFrame, watermark: str | None = "10 minutes"
 ) -> DataFrame:
     """Collapse a stream of file-arrival events into batch rows.
 
@@ -45,21 +40,21 @@ def debounce_batches(
     """
     df = file_events
     if df.isStreaming and watermark:
-        df = df.withWatermark(event_ts, watermark)
+        df = df.withWatermark("event_ts", watermark)
     sess = df.groupBy(
-        F.session_window(F.col(event_ts), gap).alias("w"),
-        F.col(group_key),
+        F.session_window("event_ts", f"{DEBOUNCE_GAP_SECONDS} seconds").alias("w"),
+        "group_key",
     ).agg(
         F.array_sort(F.collect_list("file_path")).alias("file_paths"),
         F.count(F.lit(1)).alias("n_files"),
     )
     return sess.select(
-        F.col(group_key),
+        "group_key",
         F.col("w.start").alias("batch_start"),
         F.col("w.end").alias("batch_end"),
         "file_paths",
         "n_files",
         F.md5(
-            F.concat_ws("|", F.col(group_key), F.col("w.start").cast("string"))
+            F.concat_ws("|", "group_key", F.col("w.start").cast("string"))
         ).alias("batch_id"),
     ).withColumn("status", F.lit("pending"))

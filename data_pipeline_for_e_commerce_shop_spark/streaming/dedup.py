@@ -24,13 +24,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import read_parquet
-from .windowed import _STREAM_DIRS, drained, events_stream
+from .windowed import cached_stream_dir, drained, events_stream
 
 DUP_EVERY = 20  # every DUP_EVERY-th event_id is delivered twice
 
@@ -38,30 +37,27 @@ DUP_EVERY = 20  # every DUP_EVERY-th event_id is delivered twice
 def _dup_stream_dir(spark: SparkSession, src: str) -> str:
     """Stage ``src`` plus a duplicated subset (event_id % DUP_EVERY
     == 0) as a streamable directory.  Cached per source file and
-    cleaned at exit via the shared stream-dir registry."""
-    key = f"{src}::dup"
-    d = _STREAM_DIRS.get(key)
-    if d is not None and os.path.isdir(d):
-        return d
-    d = tempfile.mkdtemp(prefix="stream_dup_")
-    os.symlink(src, os.path.join(d, "batch0-original.parquet"))
-    stage = os.path.join(d, "_stage")
-    (
-        read_parquet(spark, src)
-        .where(F.col("event_id") % DUP_EVERY == 0)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    parts = [p for p in os.listdir(stage) if p.endswith(".parquet")]
-    assert len(parts) == 1, parts
-    shutil.move(
-        os.path.join(stage, parts[0]),
-        os.path.join(d, "batch1-redelivered.parquet"),
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    _STREAM_DIRS[key] = d
-    return d
+    cleaned at exit (:func:`windowed.cached_stream_dir`)."""
+
+    def stage_into(d: str) -> None:
+        os.symlink(src, os.path.join(d, "batch0-original.parquet"))
+        stage = os.path.join(d, "_stage")
+        (
+            read_parquet(spark, src)
+            .where(F.col("event_id") % DUP_EVERY == 0)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(stage)
+        )
+        parts = [p for p in os.listdir(stage) if p.endswith(".parquet")]
+        assert len(parts) == 1, parts
+        shutil.move(
+            os.path.join(stage, parts[0]),
+            os.path.join(d, "batch1-redelivered.parquet"),
+        )
+        shutil.rmtree(stage, ignore_errors=True)
+
+    return cached_stream_dir(f"{src}::dup", "stream_dup_", stage_into)
 
 
 def stream_dedup_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -202,11 +202,13 @@ class BatchStateTable:
         return self._commit(requeue)
 
 
+DRAIN_MAX_ITERATIONS = 1000  # claims per drain, a bound on a retry loop
+
+
 def run_until_drained(
     table: BatchStateTable,
     process: Callable[[Row], None],
     max_attempts: int = 3,
-    max_iterations: int = 1000,
 ) -> dict[str, int]:
     """The controller loop (reference lambda/controller.py:38-133 +
     Step Functions retry): claim oldest pending, run, stamp
@@ -214,7 +216,7 @@ def run_until_drained(
 
     Returns {'done': n, 'failed': n} terminal counts.
     """
-    for _ in range(max_iterations):
+    for _ in range(DRAIN_MAX_ITERATIONS):
         row = table.claim_next()
         if row is None:
             if table.requeue_failed(max_attempts) == 0:

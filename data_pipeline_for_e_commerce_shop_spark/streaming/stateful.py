@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windowed import GAP_SECONDS, drained, events_stream
+from ..operators.events import DEBOUNCE_GAP_SECONDS
+from .windowed import drained, events_stream
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -105,8 +106,10 @@ def _sessionize_group(
     # breaks, cumsum to segment ids, reduce per segment.  Cent sums go
     # through bincount's float64 — exact (per-session cents << 2^53).
     breaks = np.ones(len(es), dtype=bool)
-    breaks[1:] = (es[1:] - es[:-1]) > GAP_SECONDS
-    extend_first = c_start is not None and (es[0] - c_last) <= GAP_SECONDS
+    breaks[1:] = (es[1:] - es[:-1]) > DEBOUNCE_GAP_SECONDS
+    extend_first = (
+        c_start is not None and (es[0] - c_last) <= DEBOUNCE_GAP_SECONDS
+    )
     seg = np.cumsum(breaks) - 1
     first_idx = np.nonzero(breaks)[0]
     last_idx = np.append(first_idx[1:] - 1, len(es) - 1)

@@ -30,10 +30,12 @@ import os
 import shutil
 import tempfile
 import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.events import DEBOUNCE_GAP_SECONDS, LOOKBACK_SECONDS
 from ..schemas import canonical_ts, ensure_nanos_conf, parquet_schema, read_parquet
 
 # per-source stream directories (the single-file symlink dirs here and
@@ -44,8 +46,6 @@ _STREAM_DIRS: dict[str, str] = {}
 # count, fixed at query start
 _STATE_PARTITIONS = 8
 
-GAP_SECONDS = 90  # session gap: the reference debounce window
-LOOKBACK_SECONDS = 3600  # interval join: clicks in the hour before a purchase
 TOPK = 3  # event types ranked per hour
 
 
@@ -56,6 +56,18 @@ def _cleanup_stream_dirs() -> None:
 
 
 atexit.register(_cleanup_stream_dirs)
+
+
+def cached_stream_dir(key: str, prefix: str, fill: Callable[[str], None]) -> str:
+    """The stream directory cached under ``key``: made once as a fresh
+    ``mkdtemp`` that ``fill`` populates, reused across calls while it
+    exists, removed at exit."""
+    d = _STREAM_DIRS.get(key)
+    if d is None or not os.path.isdir(d):
+        d = tempfile.mkdtemp(prefix=prefix)
+        fill(d)
+        _STREAM_DIRS[key] = d
+    return d
 
 
 def _as_stream_dir(file_path: str) -> str:
@@ -69,12 +81,11 @@ def _as_stream_dir(file_path: str) -> str:
     source file; nothing is copied; removed at exit)."""
     if os.path.isdir(file_path):
         return file_path
-    d = _STREAM_DIRS.get(file_path)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="stream_src_")
-        os.symlink(file_path, os.path.join(d, os.path.basename(file_path)))
-        _STREAM_DIRS[file_path] = d
-    return d
+    return cached_stream_dir(
+        file_path,
+        "stream_src_",
+        lambda d: os.symlink(file_path, os.path.join(d, os.path.basename(file_path))),
+    )
 
 
 _DRAIN_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
@@ -212,12 +223,13 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/events.sessionize), held to the SAME DuckDB oracle.
 
     Semantics alignment (the subtle part): the batch form opens a new
-    session when the integer-second gap is STRICTLY > GAP_SECONDS;
-    ``session_window`` merges events whose windows overlap OR TOUCH
-    (verified empirically: two events exactly window-length apart
-    merge).  Streaming on second-truncated timestamps with a window of
-    exactly GAP_SECONDS therefore merges iff diff <= GAP_SECONDS —
-    identical partitions to the batch form.
+    session when the integer-second gap is STRICTLY >
+    DEBOUNCE_GAP_SECONDS; ``session_window`` merges events whose
+    windows overlap OR TOUCH (verified empirically: two events exactly
+    window-length apart merge).  Streaming on second-truncated
+    timestamps with a window of exactly DEBOUNCE_GAP_SECONDS therefore
+    merges iff diff <= DEBOUNCE_GAP_SECONDS — identical partitions to
+    the batch form.
 
     session_no / session_start / session_end are recovered from the
     drained windows: start = window.start, last event = window.end -
@@ -227,7 +239,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     stream = events_stream(spark, f"{sf_dir}/events.parquet")
-    win = f"{GAP_SECONDS} seconds"
+    win = f"{DEBOUNCE_GAP_SECONDS} seconds"
     agg = (
         stream.withColumn(
             "tsec", F.timestamp_seconds(F.unix_timestamp("ts"))
@@ -245,9 +257,10 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess = d.select(
             "user_id",
             F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
-            (F.unix_timestamp(F.col("w.end")).cast("long") - GAP_SECONDS).alias(
-                "session_end"
-            ),
+            (
+                F.unix_timestamp(F.col("w.end")).cast("long")
+                - DEBOUNCE_GAP_SECONDS
+            ).alias("session_end"),
             "n_events",
             "total_value",
         )

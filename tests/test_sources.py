@@ -84,8 +84,11 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
 
 def test_quarantine_provenance_columns(spark, tmp_path):
     path = str(tmp_path / "rejected")
-    bad = spark.createDataFrame([(1, "junk")], "id long, raw string")
-    write_quarantine(bad, path, reason="bad row", error_type="SCHEMA_ERROR")
+    bad = spark.createDataFrame(
+        [(1, "junk", "bad row", "SCHEMA_ERROR")],
+        "id long, raw string, reason string, error_type string",
+    )
+    write_quarantine(bad, path)
     out = spark.read.parquet(path).collect()[0]
     assert out["reason"] == "bad row"
     assert out["error_type"] == "SCHEMA_ERROR"

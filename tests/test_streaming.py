@@ -328,12 +328,11 @@ def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch,
     import tempfile
 
     from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
-    from data_pipeline_for_e_commerce_shop_spark.streaming import dedup, windowed
+    from data_pipeline_for_e_commerce_shop_spark.streaming import windowed
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     stream_dirs: dict[str, str] = {}  # staged afresh under tmp_path
     monkeypatch.setattr(windowed, "_STREAM_DIRS", stream_dirs)
-    monkeypatch.setattr(dedup, "_STREAM_DIRS", stream_dirs)
     views = {v.name for v in spark.catalog.listTables()}
     for _ in range(3):
         assert QUERIES["events_stream_hourly"](spark, sf_dir).count() > 0
