@@ -380,10 +380,9 @@ def hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash32,
     )
     from data_pipeline_for_e_commerce_shop_spark.operators.sketch import (
-        HLL_M,
-        HLL_REM_BITS,
-        HLL_RHO_MAX,
-        _hll_estimate_sql,
+        HLL_P,
+        _hll_fold,
+        _hll_registers,
     )
 
     e = (
@@ -392,18 +391,14 @@ def hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # reused every hop, both branches
     )
     nodes = e.select(F.col("src").alias("node")).distinct()
-    hashed = nodes.select(
-        "node", portable_hash32("node", prefix="hb-").alias("h")
-    )
-    rho = F.when(
-        F.expr(f"h % {1 << HLL_REM_BITS}") == 0, F.lit(HLL_RHO_MAX)
-    ).otherwise(
-        HLL_RHO_MAX - F.length(F.bin(F.expr(f"h % {1 << HLL_REM_BITS}")))
-    )
-    regs = hashed.select(
-        "node",
-        F.expr(f"h div {1 << HLL_REM_BITS}").alias("bucket"),
-        rho.alias("m_reg"),
+    # one register per node: the groupBy runs on the distinct's node
+    # partitioning, so it adds no exchange
+    regs = _hll_registers(
+        nodes.select(
+            "node", portable_hash32("node", prefix="hb-").alias("h")
+        ),
+        ["node"],
+        HLL_P,
     )
     ball = nodes.select("node", F.col("node").alias("member"))
     for _ in range(HYPERBALL_HOPS):
@@ -425,25 +420,14 @@ def hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ball.groupBy("node").agg(
         F.count(F.lit(1)).alias("exact_reach")
     )
-    per_node = regs.groupBy("node").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)")
-        ).alias("present_scaled"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
-    sum_expr = (
-        f"present_scaled + ({HLL_M} - n_buckets) * {1 << HLL_RHO_MAX}"
-    )
     return (
-        per_node.join(exact, "node")
+        _hll_fold(regs, ["node"], HLL_P)
+        .join(exact, "node")
         .select(
             F.col("node").alias("part_id"),
             "exact_reach",
-            (
-                F.col("present_scaled")
-                + (HLL_M - F.col("n_buckets")) * (1 << HLL_RHO_MAX)
-            ).alias("sum_scaled"),
-            F.expr(_hll_estimate_sql(sum_expr)).alias("hll_estimate"),
+            "sum_scaled",
+            "hll_estimate",
         )
         .orderBy("part_id")
     )

@@ -69,8 +69,8 @@ def prepared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def brute_force_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
-    """Exact cosine top-k: first `ANN_QUERIES` vec_ids as queries vs the
+def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-`ANN_K`: first `ANN_QUERIES` vec_ids as queries vs the
     whole corpus.  Query side is broadcast; ranking is a per-query
     window with deterministic tie-break on corpus vec_id."""
     emb = prepared_embeddings(spark, sf_dir)
@@ -105,7 +105,7 @@ def brute_force_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFr
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "corpus_id", "cosine", "rank")
     )
 
@@ -228,62 +228,8 @@ def knuth_order(df: DataFrame) -> DataFrame:
     ).orderBy("_h", "vec_id")
 
 
-def _assign_nearest(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    n_probe: int,
-) -> DataFrame:
-    """Assign each vector to its `n_probe` nearest centroids by cosine.
-
-    Centroids are model-sized (k rows) -> broadcast; the cross join is
-    O(n * k) with one dot product per pair (norms precomputed on both
-    sides).  Returns (id_col, emb, nrm, cluster_id).
-
-    The ``n_probe == 1`` fast path (the CORPUS assignment — every
-    IVF build runs it over the whole table) is a ``max_by`` hash
-    aggregation: map-side combinable, no row_number sort shuffle —
-    same rows (cluster_id is unique, so the (cos, -cluster_id) key is
-    a total order and ties are impossible)."""
-    scored = (
-        vectors.crossJoin(F.broadcast(centroids))
-        .select(
-            id_col,
-            "emb",
-            "nrm",
-            "cluster_id",
-            (dot("emb", "cent_emb") / (F.col("nrm") * F.col("cent_nrm"))).alias(
-                "cent_cos"
-            ),
-        )
-    )
-    if n_probe == 1:
-        best = scored.groupBy(id_col).agg(
-            F.max_by(
-                F.struct("emb", "nrm", "cluster_id"),
-                F.struct(
-                    F.col("cent_cos").alias("c"),
-                    (-F.col("cluster_id")).alias("nc"),
-                ),
-            ).alias("_best")
-        )
-        return best.select(
-            id_col, "_best.emb", "_best.nrm", "_best.cluster_id"
-        )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cent_cos").desc(), F.col("cluster_id").asc()
-    )
-    return (
-        scored.withColumn("probe_rank", F.row_number().over(w))
-        .where(F.col("probe_rank") <= n_probe)
-        .select(id_col, "emb", "nrm", "cluster_id")
-    )
-
-
-def ivf_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
-    """IVF-style approximate top-k: the corpus is inverted into
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style approximate top-`ANN_K`: the corpus is inverted into
     `IVF_CENTROIDS` cosine-nearest-centroid lists; each query exactly
     re-scores only its `IVF_PROBE` nearest lists.
 
@@ -292,39 +238,30 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
     k-means them, which only changes the centroid table, not the plan.
     At 100 TB: corpus hash-partitioned (or Delta ZORDERed) by
     cluster_id, so a probe reads IVF_PROBE/IVF_CENTROIDS of the data —
-    IVF's whole point; the assignment pass is one broadcast cross join
-    against a model-sized centroid table.
+    IVF's whole point.  Assignment scores each vector against the
+    one-row centroid model at the scan (``_centroid_model``, zero
+    assignment shuffles): the corpus keeps its nearest centroid, each
+    query its IVF_PROBE nearest.
     """
     emb = prepared_embeddings(spark, sf_dir)
-    # Deterministic "training" sample: the shared knuth_order rule.
-    centroids = (
-        knuth_order(emb)
-        .limit(IVF_CENTROIDS)
+    cent_df = _centroid_model(spark, emb)
+    corpus = emb.crossJoin(F.broadcast(cent_df)).select(
+        F.col("vec_id").alias("corpus_id"),
+        F.col("emb").alias("c_emb"),
+        F.col("nrm").alias("c_norm"),
+        F.expr(_NEAREST_CID).alias("cluster_id"),
+    )
+    queries = (
+        emb.where(F.col("vec_id") < ANN_QUERIES)
+        .crossJoin(F.broadcast(cent_df))
         .select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("emb").alias("cent_emb"),
-            F.col("nrm").alias("cent_nrm"),
+            F.col("vec_id").alias("query_id"),
+            F.col("emb").alias("q_emb"),
+            F.col("nrm").alias("q_norm"),
+            F.explode(
+                F.expr(f"slice({_RANKED_CIDS}, 1, {IVF_PROBE})")
+            ).alias("cluster_id"),
         )
-    )
-    corpus = _assign_nearest(
-        emb.select(F.col("vec_id").alias("corpus_id"), "emb", "nrm"),
-        centroids,
-        "corpus_id",
-        n_probe=1,
-    ).select(
-        "corpus_id", F.col("emb").alias("c_emb"), F.col("nrm").alias("c_norm"),
-        "cluster_id",
-    )
-    queries = _assign_nearest(
-        emb.where(F.col("vec_id") < ANN_QUERIES).select(
-            F.col("vec_id").alias("query_id"), "emb", "nrm"
-        ),
-        centroids,
-        "query_id",
-        n_probe=IVF_PROBE,
-    ).select(
-        "query_id", F.col("emb").alias("q_emb"), F.col("nrm").alias("q_norm"),
-        "cluster_id",
     )
     scored = (
         F.broadcast(queries)
@@ -345,18 +282,15 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = ANN_K) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "corpus_id", "cosine", "rank")
     )
 
 
 def lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = ANN_K,
-    multi_probe: bool = True,
+    spark: SparkSession, sf_dir: str, multi_probe: bool = True
 ) -> DataFrame:
-    """Approximate top-k: exact re-scoring restricted to the query's
+    """Approximate top-`ANN_K`: exact re-scoring restricted to the query's
     LSH bucket.  At scale the corpus is hash-partitioned by bucket, so
     each query probes one partition group instead of the full corpus.
 
@@ -411,7 +345,7 @@ def lsh_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "corpus_id", "cosine", "rank")
     )
 
@@ -611,49 +545,58 @@ KMEANS_DRIVER_MAX = 20_000
 
 
 def _kmeans_driver(spark: SparkSession, pdf) -> DataFrame:
-    """Driver-side Lloyd on the collected quantized corpus — numpy
-    int64 throughout; float division only inside floor(mean), exact
-    because |sum| < 2^53 (mirrors the SQL oracle's arithmetic)."""
+    """Driver-side Lloyd on the collected quantized corpus through
+    `_lloyd_np`: the KMEANS_K seeds go first, in cluster_id order, so
+    its row-index cids map back to the seeds' vec_ids and its
+    lowest-index tie-break is the oracle's lowest-cid tie-break."""
     import numpy as np
+    import pandas as pd
 
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     vecs = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["v"]])
-    order = np.lexsort((ids, (ids * 2654435761) % 4294967296))
-    seed_ids = ids[order[:KMEANS_K]]
-    # centroid columns ordered by cluster_id ASC so argmin's
-    # first-match tie-break picks the smallest cid, like the oracle
-    cid_order = np.sort(seed_ids)
-    id_to_row = {int(i): j for j, i in enumerate(ids)}
-    cents = np.stack([vecs[id_to_row[int(c)]] for c in cid_order])
-
-    def dists(c):
-        # (n, k): int64 exact; peak memory n*k*8 bytes — bounded by the
-        # size gate
-        return (
-            ((vecs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        )
-
-    for _ in range(KMEANS_ITER):
-        assign = dists(cents).argmin(axis=1)
-        for j in range(KMEANS_K):
-            members = vecs[assign == j]
-            if len(members):
-                cents[j] = np.floor(
-                    members.sum(axis=0) / len(members)
-                ).astype(np.int64)
-    import pandas as pd
-
-    d = dists(cents)
-    assign = d.argmin(axis=1)
+    seeds = np.lexsort((ids, (ids * 2654435761) % 4294967296))[:KMEANS_K]
+    seeds = seeds[np.argsort(ids[seeds])]
+    order = np.concatenate(
+        [seeds, np.setdiff1d(np.arange(len(ids)), seeds)]
+    )
+    _, assign, sq_dist = _lloyd_np(vecs[order], KMEANS_K, KMEANS_ITER)
     out = pd.DataFrame(
         {
-            "vec_id": ids,
-            "cluster_id": cid_order[assign],
-            "sq_dist": d[np.arange(len(ids)), assign],
+            "vec_id": ids[order],
+            "cluster_id": ids[seeds][assign],
+            "sq_dist": sq_dist,
         }
     )
     return spark.createDataFrame(
         out, "vec_id bigint, cluster_id bigint, sq_dist bigint"
+    )
+
+
+def _sq_dist(a, b) -> Column:
+    """Integer squared L2 distance of two array<bigint> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _argmin(scored: Column, key: str, key_type: str) -> Column:
+    """The argmin over a shipped model as a higher-order fold:
+    ``scored`` is the model's array of ``(key, d)`` structs in model
+    order, and the fold keeps the struct with the smallest ``d``.
+    Strict < keeps the first entry on ties (the smallest cid / code) —
+    the oracles' (dist ASC, id ASC) row_number."""
+    init = F.struct(
+        F.lit(None).cast(key_type).alias(key),
+        F.lit(None).cast("long").alias("d"),
+    )
+    return F.aggregate(
+        scored,
+        init,
+        lambda acc, s: F.when(
+            acc["d"].isNull() | (s["d"] < acc["d"]), s
+        ).otherwise(acc),
     )
 
 
@@ -724,33 +667,19 @@ def kmeans_lloyd(
         # transform scores each centroid once, aggregate folds to the
         # min — expression size O(1) in k and dim, zero shuffle (the
         # 1-row broadcast crossJoin is the scalar-subquery shape).
-        # Strict < keeps the first (smallest cid) on ties — same order
-        # as the oracle's (dist ASC, cluster_id ASC) row_number.
         cent_df = spark.createDataFrame(
             [([(cid, cent[cid]) for cid in sorted(cent)],)],
             "cents array<struct<cid:bigint,c:array<bigint>>>",
         )
-        scored = F.transform(
-            F.col("cents"),
-            lambda ce: F.struct(
-                ce["cid"].alias("cid"),
-                F.aggregate(
-                    F.zip_with("v", ce["c"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
+        best = _argmin(
+            F.transform(
+                F.col("cents"),
+                lambda ce: F.struct(
+                    ce["cid"].alias("cid"), _sq_dist("v", ce["c"]).alias("d")
+                ),
             ),
-        )
-        init = F.struct(
-            F.lit(None).cast("long").alias("cid"),
-            F.lit(None).cast("long").alias("d"),
-        )
-        best = F.aggregate(
-            scored,
-            init,
-            lambda acc, s: F.when(
-                acc["d"].isNull() | (s["d"] < acc["d"]), s
-            ).otherwise(acc),
+            "cid",
+            "long",
         )
         return emb.crossJoin(F.broadcast(cent_df)).select(
             "vec_id",
@@ -800,20 +729,31 @@ def _lloyd_np(vecs, k: int, n_iter: int):
     """Integer Lloyd on a numpy (n, d) int64 matrix: centroids start at
     the first k rows (caller pre-orders), cid = row index, argmin ties
     break to the lowest cid, updates floor the mean, empty clusters
-    keep their centroid.  Bit-identical to the unrolled SQL."""
+    keep their centroid.  int64 throughout; float division only inside
+    floor(mean), exact because |sum| < 2^53 — bit-identical to the
+    unrolled SQL.  Returns
+    the final centroids, each row's cid against them and its squared
+    distance."""
     import numpy as np
 
     cents = vecs[:k].copy()
-    for _ in range(n_iter):
+
+    def assigned():
+        # (n, k): int64 exact; peak memory n*k*d*8 bytes — bounded by
+        # the callers' size gate / training sample
         d = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
+        a = d.argmin(axis=1)
+        return a, d[np.arange(len(vecs)), a]
+
+    for _ in range(n_iter):
+        assign, _ = assigned()
         for j in range(k):
             members = vecs[assign == j]
             if len(members):
                 cents[j] = np.floor(
                     members.sum(axis=0) / len(members)
                 ).astype(np.int64)
-    return cents
+    return (cents, *assigned())
 
 
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -861,7 +801,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks = [
         _lloyd_np(
             samp[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM], PQ_KSUB, PQ_ITER
-        )
+        )[0]
         for s in range(PQ_M)
     ]
     q_pdf = (
@@ -884,31 +824,19 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qs array<struct<qid:bigint,q:array<bigint>>>",
     )
 
-    def sqd(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     # Encode: per subspace, HOF argmin over the 16 codebook entries —
     # ties to the lowest code (transform exposes the index).
     def code(s: int):
         sub = F.slice("v", s * PQ_SUBDIM + 1, PQ_SUBDIM)
-        scored = F.transform(
-            F.element_at("cb", s + 1),
-            lambda c, i: F.struct(i.alias("code"), sqd(sub, c).alias("d")),
-        )
-        init = F.struct(
-            F.lit(None).cast("integer").alias("code"),
-            F.lit(None).cast("long").alias("d"),
-        )
-        best = F.aggregate(
-            scored,
-            init,
-            lambda acc, e: F.when(
-                acc["d"].isNull() | (e["d"] < acc["d"]), e
-            ).otherwise(acc),
+        best = _argmin(
+            F.transform(
+                F.element_at("cb", s + 1),
+                lambda c, i: F.struct(
+                    i.alias("code"), _sq_dist(sub, c).alias("d")
+                ),
+            ),
+            "code",
+            "integer",
         )
         return best["code"].alias(f"c{s}")
 
@@ -922,7 +850,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions in their own projection).
     def adc(qcol):
         return sum(
-            sqd(
+            _sq_dist(
                 F.slice(qcol, s * PQ_SUBDIM + 1, PQ_SUBDIM),
                 F.element_at(
                     F.element_at("cb", s + 1), F.col(f"c{s}") + 1
@@ -958,7 +886,6 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 IVF_ADD_MOD = 10  # vec_id % MOD == 0 is the "arriving" batch
-IVF_ADD_CENTROIDS = 8
 
 
 def ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -970,57 +897,35 @@ def ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     The existing index is built from the old corpus (vec_id %
     IVF_ADD_MOD != 0) with the same deterministic centroid sample as
     ivf_topk; the arriving batch (vec_id % IVF_ADD_MOD == 0) is
-    assigned by ONE broadcast crossJoin against the model-sized
-    centroid table.  Output per cluster: list size before/added/after,
-    post-add share, and balance_ppm = size_after * IVF_ADD_CENTROIDS / total
-    (1e6 = perfectly balanced) — the retrain trigger.
+    assigned against the same frozen one-row centroid model.  Output
+    per cluster: list size before/added/after, post-add share, and
+    balance_ppm = size_after * IVF_CENTROIDS / total (1e6 = perfectly
+    balanced) — the retrain trigger.
 
-    Scale: both assignment passes are broadcast-model map work; the
-    rollups are k-row aggregates; the totals ride back as a 1-row
-    broadcast.  Nothing rescans the corpus twice (shared assignment
-    lineage is checkpointed).
+    Scale: one scan scores old and arriving vectors against the
+    broadcast model (``_centroid_model``, map work, zero assignment
+    shuffles) and counts both per cluster in one k-row aggregate; the
+    totals ride back as a 1-row broadcast.
     """
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm("emb"))
+    emb = prepared_embeddings(spark, sf_dir)
+    cent_df = _centroid_model(
+        spark, emb.where(F.col("vec_id") % IVF_ADD_MOD != 0)
     )
-    old = emb.where(F.col("vec_id") % IVF_ADD_MOD != 0)
-    new = emb.where(F.col("vec_id") % IVF_ADD_MOD == 0)
-    centroids = (
-        knuth_order(old)
-        .limit(IVF_ADD_CENTROIDS)
+    counts = (
+        emb.crossJoin(F.broadcast(cent_df))
         .select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("emb").alias("cent_emb"),
-            F.col("nrm").alias("cent_nrm"),
-        )
-        .localCheckpoint(eager=False)  # shared by both assignment passes
-    )
-    before = (
-        _assign_nearest(
-            old.select(F.col("vec_id").alias("corpus_id"), "emb", "nrm"),
-            centroids,
-            "corpus_id",
-            n_probe=1,
+            F.expr(_NEAREST_CID).alias("cluster_id"),
+            (F.col("vec_id") % IVF_ADD_MOD == 0).alias("_new"),
         )
         .groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n_before"))
-    )
-    added = (
-        _assign_nearest(
-            new.select(F.col("vec_id").alias("corpus_id"), "emb", "nrm"),
-            centroids,
-            "corpus_id",
-            n_probe=1,
+        .agg(
+            F.count_if(~F.col("_new")).alias("n_before"),
+            F.count_if(F.col("_new")).alias("n_added"),
         )
-        .groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n_added"))
     )
     lists = (
-        centroids.select("cluster_id")
-        .join(F.broadcast(before), "cluster_id", "left")
-        .join(F.broadcast(added), "cluster_id", "left")
+        cent_df.select(F.explode("cents.cid").alias("cluster_id"))
+        .join(F.broadcast(counts), "cluster_id", "left")
         .select(
             "cluster_id",
             F.coalesce("n_before", F.lit(0)).alias("n_before"),
@@ -1039,7 +944,7 @@ def ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_after",
             F.expr("n_after * 1000000 div total_after").alias("share_ppm"),
             F.expr(
-                f"n_after * {IVF_ADD_CENTROIDS} * 1000000 div total_after"
+                f"n_after * {IVF_CENTROIDS} * 1000000 div total_after"
             ).alias("balance_ppm"),
         )
         .orderBy("cluster_id")
@@ -1363,7 +1268,7 @@ def _centroid_model(spark: SparkSession, emb: DataFrame) -> DataFrame:
 # scores every centroid once; `_NEAREST_CID` keep-first argmax ties
 # break to the smallest cid (cents is cid-ascending) and
 # `_RANKED_CIDS` sorts by (cos DESC, cid ASC) — both exactly the
-# `_assign_nearest` window's ORDER BY.
+# IVF oracle's (cosine DESC, cluster_id ASC) row_number ORDER BY.
 _CENT_COS = (
     "transform(cents, ce -> named_struct("
     "'cid', ce.cid,"

@@ -202,24 +202,82 @@ def cms_width_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HLL_P = 10  # 2^10 = 1024 registers
-HLL_M = 1 << HLL_P
-HLL_REM_BITS = 32 - HLL_P  # 22-bit remainder per hash
-HLL_RHO_MAX = HLL_REM_BITS + 1  # rho when the remainder is all zeros
 HLL_ROLLING_DAYS = 7  # trailing window of the rolling-users sketch
 # (interpolated into the registered oracle SQL — keep in sync by import)
 
 
-def _hll_estimate_sql(sum_scaled_expr: str) -> str:
-    """The raw-HLL closed-form estimate as a SQL expression over a
-    scaled harmonic sum — ONE definition for every sketch operator
-    (every literal explicitly DOUBLE; bare decimal literals parse as
-    DECIMAL in both engines with engine-specific rounding)."""
+def _user_hashes(ev: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., h): the distinct (keys, user) pairs of an event slice,
+    each user hashed to its 32-bit md5 prefix."""
     return (
-        f"CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-        f" + CAST(1.079 AS DOUBLE) / CAST({HLL_M} AS DOUBLE))"
-        f" * CAST({HLL_M} AS DOUBLE) * CAST({HLL_M} AS DOUBLE)"
-        f" * CAST({1 << HLL_RHO_MAX} AS DOUBLE)"
-        f" / CAST({sum_scaled_expr} AS DOUBLE)"
+        ev.select(*keys, "user_id")
+        .distinct()
+        .select(*keys, portable_hash32("user_id").alias("h"))
+    )
+
+
+def _hll_registers(
+    hashed: DataFrame, keys: list[str], p: int, *aggs: Column
+) -> DataFrame:
+    """(keys..., bucket, m_reg, *aggs) registers at precision ``p``
+    over a frame holding a 32-bit hash ``h`` — the mergeable partial
+    state, and the SINGLE definition of the bucket/rho law (every HLL
+    operator, the streaming one and HyperBall consume it, so the law
+    cannot drift): the top ``p`` hash bits pick the bucket, and rho is
+    the leading-zero count of the ``32 - p``-bit remainder + 1, via
+    length(bin(rem)) — identical in both engines.  ``aggs`` ride the
+    same groupBy (the estimator's per-bucket counts)."""
+    rem_bits = 32 - p
+    rho_max = rem_bits + 1
+    rho = F.when(F.col("rem") == 0, F.lit(rho_max)).otherwise(
+        rho_max - F.length(F.bin("rem"))
+    )
+    return (
+        hashed.select(
+            *keys,
+            F.expr(f"h div {1 << rem_bits}").alias("bucket"),
+            F.expr(f"h % {1 << rem_bits}").alias("rem"),
+        )
+        .groupBy(*keys, "bucket")
+        .agg(F.max(rho).alias("m_reg"), *aggs)
+    )
+
+
+def _hll_fold(
+    regs: DataFrame, keys: list[str], p: int, *aggs: Column
+) -> DataFrame:
+    """Registers at precision ``p`` -> one row per ``keys`` group with
+    ``present_scaled`` (the scaled harmonic sum of the present
+    registers), ``sum_scaled`` (plus 2^rho_max for each of the
+    ``2^p - n_buckets`` missing ones), the raw ``hll_estimate`` and
+    ``aggs`` — the ONE fold from registers to an estimate.
+
+    The harmonic sum is kept SCALED, sum(2^(rho_max - M)) as int64
+    (every term integral because M <= rho_max), so the only float op
+    is the one final division of the closed-form estimate (every
+    literal explicitly DOUBLE; bare decimal literals parse as DECIMAL
+    in both engines with engine-specific rounding)."""
+    m = 1 << p
+    rho_max = 32 - p + 1  # rho of an all-zero remainder
+    sums = regs.groupBy(*keys).agg(
+        F.sum(
+            F.expr(f"shiftleft(CAST(1 AS BIGINT), {rho_max} - m_reg)")
+        ).alias("present_scaled"),
+        F.count(F.lit(1)).alias("n_buckets"),
+        *aggs,
+    )
+    return sums.withColumn(
+        "sum_scaled",
+        F.col("present_scaled") + (m - F.col("n_buckets")) * (1 << rho_max),
+    ).withColumn(
+        "hll_estimate",
+        F.expr(
+            f"CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
+            f" + CAST(1.079 AS DOUBLE) / CAST({m} AS DOUBLE))"
+            f" * CAST({m} AS DOUBLE) * CAST({m} AS DOUBLE)"
+            f" * CAST({1 << rho_max} AS DOUBLE)"
+            f" / CAST(sum_scaled AS DOUBLE)"
+        ),
     )
 
 
@@ -230,11 +288,11 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Construction stays integer-exact end to end: h = first 32 md5
     bits; bucket = top p bits; rho = leading-zero count of the 22-bit
-    remainder + 1 (via length(bin(rem)) — identical in both engines);
-    registers = max(rho) per bucket; and the harmonic sum is kept
-    SCALED, sum(2^(23-M)) as int64 (every term integral because
-    M <= 23), so the only float op is the one final division of the
-    closed-form estimate.  Missing buckets contribute 2^23 each.
+    remainder + 1 (``_hll_registers``); registers = max(rho) per
+    bucket; and the harmonic sum is kept SCALED, sum(2^(23-M)) as
+    int64, so the only float op is the one final division of the
+    closed-form estimate (``_hll_fold``).  Missing buckets contribute
+    2^23 each.
 
     The exact distinct count rides along from the same deduped
     (type, user) set, so the error is visible per row.  The raw
@@ -251,57 +309,16 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the audit count rides the SAME lineage: register rows come from
     # the distinct (type, user) pairs, so per-bucket counts sum to the
     # exact distinct — no second branch, no join, three exchanges
-    regs = _hll_registers(ev, with_counts=True)
-    per_type = regs.groupBy("event_type").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)")
-        ).alias("present_scaled"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum("n_in_bucket").alias("n_exact"),
+    keys = ["event_type"]
+    regs = _hll_registers(
+        _user_hashes(ev, keys),
+        keys,
+        HLL_P,
+        F.count(F.lit(1)).alias("n_in_bucket"),
     )
-    sum_expr = (
-        f"present_scaled + ({HLL_M} - n_buckets) * {1 << HLL_RHO_MAX}"
-    )
-    return per_type.select(
-        "event_type",
-        "n_exact",
-        (
-            F.col("present_scaled")
-            + (HLL_M - F.col("n_buckets"))
-            * (1 << HLL_RHO_MAX)
-        ).alias("sum_scaled"),
-        F.expr(_hll_estimate_sql(sum_expr)).alias("hll_estimate"),
-    )
-
-
-def _hll_registers(
-    ev: DataFrame,
-    with_counts: bool = False,
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """(keys..., bucket, m_reg) registers of the distinct-user HLL
-    over an event slice — the mergeable partial state; the SINGLE
-    definition of the hash/bucket/rho pipeline (estimator,
-    merge-identity, rollup, and rolling window all consume it, so the
-    register law cannot drift).  `keys` defaults to [event_type];
-    with_counts adds n_in_bucket (bucket counts sum to the exact
-    distinct because the input rows are the deduped pairs)."""
-    keys = keys or ["event_type"]
-    d = ev.select(*keys, "user_id").distinct()
-    hashed = d.select(
-        *keys, portable_hash32("user_id").alias("h")
-    ).select(
-        *keys,
-        F.expr(f"h div {1 << HLL_REM_BITS}").alias("bucket"),
-        F.expr(f"h % {1 << HLL_REM_BITS}").alias("rem"),
-    )
-    rho = F.when(F.col("rem") == 0, F.lit(HLL_RHO_MAX)).otherwise(
-        HLL_RHO_MAX - F.length(F.bin("rem"))
-    )
-    aggs = [F.max(rho).alias("m_reg")]
-    if with_counts:
-        aggs.append(F.count(F.lit(1)).alias("n_in_bucket"))
-    return hashed.groupBy(*keys, "bucket").agg(*aggs)
+    return _hll_fold(
+        regs, keys, HLL_P, F.sum("n_in_bucket").alias("n_exact")
+    ).select("event_type", "n_exact", "sum_scaled", "hll_estimate")
 
 
 def hll_merge_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,24 +333,24 @@ def hll_merge_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     cut = F.dayofmonth("ts") <= 15
-    left = _hll_registers(ev.where(cut))
-    right = _hll_registers(ev.where(~cut))
+    keys = ["event_type"]
+
+    def registers(slice_: DataFrame) -> DataFrame:
+        return _hll_registers(_user_hashes(slice_, keys), keys, HLL_P)
+
     merged = (
-        left.unionByName(right)
+        registers(ev.where(cut))
+        .unionByName(registers(ev.where(~cut)))
         .groupBy("event_type", "bucket")
         .agg(F.max("m_reg").alias("m_reg"))
     )
 
     def summarise(regs: DataFrame, out: str) -> DataFrame:
-        return regs.groupBy("event_type").agg(
-            F.sum(
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)"
-                )
-            ).alias(out)
+        return _hll_fold(regs, keys, HLL_P).select(
+            "event_type", F.col("present_scaled").alias(out)
         )
 
-    direct = summarise(_hll_registers(ev), "sum_scaled_direct")
+    direct = summarise(registers(ev), "sum_scaled_direct")
     both = summarise(merged, "sum_scaled_merged").join(
         F.broadcast(direct), "event_type"
     )
@@ -373,21 +390,15 @@ def hll_overlap_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = ev.where(
         F.col("event_type").isin(OVERLAP_TYPE_A, OVERLAP_TYPE_B)
     ).select(F.lit("u").alias("event_type"), "user_id")
-    regs = _hll_registers(a.unionByName(b).unionByName(u))
-    sums = regs.groupBy("event_type").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)")
-        ).alias("present_scaled"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
-    est = _hll_estimate_sql(
-        f"present_scaled + ({HLL_M} - n_buckets) * {1 << HLL_RHO_MAX}"
+    keys = ["event_type"]
+    regs = _hll_registers(
+        _user_hashes(a.unionByName(b).unionByName(u), keys), keys, HLL_P
     )
     wide = (
-        sums.withColumn("e", F.expr(est))
+        _hll_fold(regs, keys, HLL_P)
         .groupBy()
         .pivot("event_type", ["a", "b", "u"])
-        .agg(F.max("e"))
+        .agg(F.max("hll_estimate"))
     )
     a_users = ev.where(F.col("event_type") == OVERLAP_TYPE_A).select(
         "user_id"
@@ -491,41 +502,33 @@ def hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_timestamp(ts) div 86400").alias("day_epoch"),
         "user_id",
     )
+    leaf_keys = ["event_type", "day_epoch"]
     leaf_regs = _hll_registers(
-        ev, with_counts=True, keys=["event_type", "day_epoch"]
+        _user_hashes(ev, leaf_keys),
+        leaf_keys,
+        HLL_P,
+        F.count(F.lit(1)).alias("n_in_bucket"),
     ).localCheckpoint(eager=False)
 
-    scaled = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)"
-    )
-
-    def summarise(regs: DataFrame, keys: list[str], exact: bool) -> DataFrame:
-        aggs = [
-            F.sum(scaled).alias("present_scaled"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        ]
-        if exact:
-            aggs.append(F.sum("n_in_bucket").alias("n_exact"))
-        out = regs.groupBy(*keys).agg(*aggs)
-        if not exact:
-            out = out.withColumn("n_exact", F.lit(None).cast("long"))
-        return out
-
-    leaf = summarise(leaf_regs, ["event_type", "day_epoch"], True)
-    by_type = summarise(
-        leaf_regs.groupBy("event_type", "bucket").agg(
+    def summarise(keys: list[str]) -> DataFrame:
+        # a coarser level max-merges the leaf registers and is
+        # estimate-only
+        merged = leaf_regs.groupBy(*keys, "bucket").agg(
             F.max("m_reg").alias("m_reg")
-        ),
-        ["event_type"],
-        False,
-    ).withColumn("day_epoch", F.lit(None).cast("long"))
-    top = summarise(
-        leaf_regs.groupBy("bucket").agg(F.max("m_reg").alias("m_reg")),
-        [],
-        False,
-    ).withColumn("day_epoch", F.lit(None).cast("long")).withColumn(
-        "event_type", F.lit(None).cast("string")
+        )
+        return _hll_fold(merged, keys, HLL_P).withColumn(
+            "n_exact", F.lit(None).cast("long")
+        )
+
+    leaf = _hll_fold(
+        leaf_regs, leaf_keys, HLL_P, F.sum("n_in_bucket").alias("n_exact")
     )
+    by_type = summarise(["event_type"]).withColumn(
+        "day_epoch", F.lit(None).cast("long")
+    )
+    top = summarise([]).withColumn(
+        "day_epoch", F.lit(None).cast("long")
+    ).withColumn("event_type", F.lit(None).cast("string"))
 
     def finish(df: DataFrame, level: str) -> DataFrame:
         # -1 sentinels at rolled-up levels: NULL-bearing BIGINT columns
@@ -538,12 +541,7 @@ def hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("day_epoch", F.lit(-1).cast("long")).alias(
                 "day_epoch"
             ),
-            F.expr(
-                _hll_estimate_sql(
-                    f"present_scaled + ({HLL_M} - n_buckets)"
-                    f" * {1 << HLL_RHO_MAX}"
-                )
-            ).alias("hll_estimate"),
+            "hll_estimate",
             F.coalesce("n_exact", F.lit(-1).cast("long")).alias("n_exact"),
         )
 
@@ -574,7 +572,9 @@ def hll_rolling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         day.alias("d"), "user_id"
     ).distinct().localCheckpoint(eager=False)
 
-    daily_regs = _hll_registers(du, keys=["d"])
+    daily_regs = _hll_registers(
+        du.select("d", portable_hash32("user_id").alias("h")), ["d"], HLL_P
+    )
     days = du.select("d").distinct()
 
     fan = daily_regs.select(
@@ -587,12 +587,7 @@ def hll_rolling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = fan.groupBy("td", "bucket").agg(
         F.max("m_reg").alias("m_reg")
     )
-    sums = merged.groupBy("td").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)")
-        ).alias("present_scaled"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
+    sums = _hll_fold(merged, ["td"], HLL_P)
     exact = (
         du.select(
             F.explode(
@@ -605,14 +600,7 @@ def hll_rolling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("n_exact"))
     )
     return sums.join(exact, "td").select(
-        F.col("td").alias("day_epoch"),
-        F.expr(
-            _hll_estimate_sql(
-                f"present_scaled + ({HLL_M} - n_buckets)"
-                f" * {1 << HLL_RHO_MAX}"
-            )
-        ).alias("hll_estimate"),
-        "n_exact",
+        F.col("td").alias("day_epoch"), "hll_estimate", "n_exact"
     )
 
 
@@ -630,58 +618,21 @@ def hll_precision_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented simplification — parity over small-m bias tweaks).
     """
     ev = load_table(spark, sf_dir, "events")
-    d = ev.select("event_type", "user_id").distinct()
-    hashed = d.select(
-        "event_type", portable_hash32("user_id").alias("h")
-    ).localCheckpoint(eager=False)
+    keys = ["event_type"]
+    hashed = _user_hashes(ev, keys).localCheckpoint(eager=False)
     exact = hashed.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
     )
-    outs = []
-    for p in HLL_SWEEP_PS:
-        m = 1 << p
-        rem_bits = 32 - p
-        rho_max = rem_bits + 1
-        regs = (
-            hashed.select(
-                "event_type",
-                F.expr(f"h div {1 << rem_bits}").alias("bucket"),
-                F.expr(f"h % {1 << rem_bits}").alias("rem"),
-            )
-            .groupBy("event_type", "bucket")
-            .agg(
-                F.max(
-                    F.when(F.col("rem") == 0, F.lit(rho_max)).otherwise(
-                        rho_max - F.length(F.bin("rem"))
-                    )
-                ).alias("m_reg")
-            )
+    outs = [
+        _hll_fold(_hll_registers(hashed, keys, p), keys, p).select(
+            F.lit(p).cast("long").alias("p"),
+            "event_type",
+            F.expr("CAST(floor(hll_estimate) AS BIGINT)").alias(
+                "hll_estimate"
+            ),
         )
-        per_type = regs.groupBy("event_type").agg(
-            F.sum(
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), {rho_max} - m_reg)"
-                )
-            ).alias("present_scaled"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        )
-        est = (
-            f"CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-            f" + CAST(1.079 AS DOUBLE) / CAST({m} AS DOUBLE))"
-            f" * CAST({m} AS DOUBLE) * CAST({m} AS DOUBLE)"
-            f" * CAST({1 << rho_max} AS DOUBLE)"
-            f" / CAST(present_scaled + ({m} - n_buckets)"
-            f"        * {1 << rho_max} AS DOUBLE)"
-        )
-        outs.append(
-            per_type.select(
-                F.lit(p).cast("long").alias("p"),
-                "event_type",
-                F.expr(f"CAST(floor({est}) AS BIGINT)").alias(
-                    "hll_estimate"
-                ),
-            )
-        )
+        for p in HLL_SWEEP_PS
+    ]
     cur = outs[0]
     for o in outs[1:]:
         cur = cur.unionByName(o)

@@ -92,7 +92,7 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ntile/percent_rank need a total order over the whole frame; the
     customer count is unbounded at 100x, so the rank comes from the
-    bucket-walk (:func:`bucketed_global_rank` on the integer cents
+    bucket-walk (:func:`bucketed_rank_running_sum` on the integer cents
     lead — monotone in the double total_spend) and both functions are
     recomputed from it: ntile via :func:`ntile_from_rank`, and
     percent_rank = (rn-1)/(n-1) (the ordering is total — custkey
@@ -106,11 +106,12 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_cents"
         ),
     )
-    ranked = bucketed_global_rank(
+    ranked = bucketed_rank_running_sum(
         spend,
+        [],
         "-_cents",
         [F.desc("_cents"), F.col("o_custkey").asc()],
-        out_col="_rn",
+        rank_col="_rn",
         n_col="_n",
     )
     return ranked.select(
@@ -226,118 +227,12 @@ def segment_balance_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 RANK_BUCKETS = 4096  # range buckets of the two-phase rank
 
 
-def bucketed_global_rank(
-    df: DataFrame,
-    lead_expr: str,
-    order_cols: list,
-    out_col: str = "rn",
-    n_col: str | None = None,
-) -> DataFrame:
-    """Exact global ``row_number() OVER (ORDER BY order_cols)`` without
-    a single-partition sort (the WindowExec "No Partition Defined"
-    plan that dies at 100x).
-
-    ``lead_expr`` is a SQL expression for the LEADING integer sort key
-    (negate it for a descending lead, e.g. ``"-cents"``); the rest of
-    ``order_cols`` break ties so the ordering is total.  Strategy:
-    range-bucket the lead key adaptively into <= ``RANK_BUCKETS`` buckets
-    (min/max come from a 1-row broadcast agg, so bucket count is bound
-    regardless of data scale), compute each bucket's exclusive prefix
-    count with a window over the BOUNDED bucket table (<= RANK_BUCKETS
-    rows — the whitelisted bounded-window class), then rank inside
-    each bucket with a partitioned window and add the offset.  The
-    result is bit-identical to the global window because integer
-    division by a positive scale is monotone in the lead key.
-
-    Returns ``df`` plus ``out_col`` (long, 1-based global rank) and,
-    when ``n_col`` is given, the total row count as a column.
-    """
-    src = df.localCheckpoint(eager=False)  # feeds bounds AND bucketing
-    bounds = src.agg(
-        F.expr(f"min({lead_expr})").alias("_bwlo"),
-        F.expr(f"max({lead_expr})").alias("_bwhi"),
-        F.count(F.lit(1)).alias("_bwn"),
-    )
-    bucketed = src.crossJoin(F.broadcast(bounds)).withColumn(
-        "_bk",
-        F.expr(
-            f"(({lead_expr}) - _bwlo)"
-            f" div (((_bwhi - _bwlo) div {RANK_BUCKETS}) + 1L)"
-        ),
-    )
-    bcounts = bucketed.groupBy("_bk").agg(F.count(F.lit(1)).alias("_cnt"))
-    # exclusive prefix over the <= RANK_BUCKETS-row bucket table: bounded
-    # input, so the single-partition window here is safe by design
-    w_prev = Window.orderBy("_bk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bcounts.select(
-        "_bk",
-        F.coalesce(F.sum("_cnt").over(w_prev), F.lit(0)).alias("_boff"),
-    )
-    w_in = Window.partitionBy("_bk").orderBy(*order_cols)
-    ranked = bucketed.join(F.broadcast(offsets), "_bk").withColumn(
-        out_col,
-        (F.col("_boff") + F.row_number().over(w_in)).cast("long"),
-    )
-    keep = df.columns + [out_col] + ([n_col] if n_col else [])
-    if n_col:
-        ranked = ranked.withColumn(n_col, F.col("_bwn"))
-    return ranked.select(*keep)
-
-
-def bucketed_running_sum(
-    df: DataFrame,
-    sum_col: str,
-    lead_expr: str,
-    order_cols: list,
-    out_col: str = "cum",
-) -> DataFrame:
-    """Exact inclusive running ``SUM(sum_col) OVER (ORDER BY
-    order_cols ROWS UNBOUNDED PRECEDING)`` without a single-partition
-    sort — same adaptive range-bucketing as :func:`bucketed_global_rank`
-    (see there for the monotonicity argument): per-bucket totals give
-    each bucket's exclusive prefix sum via a window over the BOUNDED
-    bucket table, and the within-bucket running sum is a partitioned
-    window.  Integer sums only (the repo's exact-cents discipline), so
-    the split into prefix + local sum is associative and bit-exact."""
-    src = df.localCheckpoint(eager=False)
-    bounds = src.agg(
-        F.expr(f"min({lead_expr})").alias("_bwlo"),
-        F.expr(f"max({lead_expr})").alias("_bwhi"),
-    )
-    bucketed = src.crossJoin(F.broadcast(bounds)).withColumn(
-        "_bk",
-        F.expr(
-            f"(({lead_expr}) - _bwlo)"
-            f" div (((_bwhi - _bwlo) div {RANK_BUCKETS}) + 1L)"
-        ),
-    )
-    bsums = bucketed.groupBy("_bk").agg(F.sum(sum_col).alias("_bsum"))
-    w_prev = Window.orderBy("_bk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bsums.select(
-        "_bk",
-        F.coalesce(F.sum("_bsum").over(w_prev), F.lit(0)).alias("_soff"),
-    )
-    w_in = (
-        Window.partitionBy("_bk")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    summed = bucketed.join(F.broadcast(offsets), "_bk").withColumn(
-        out_col, F.col("_soff") + F.sum(sum_col).over(w_in)
-    )
-    return summed.select(*(df.columns + [out_col]))
-
-
 def ntile_from_rank(rank_col: str, n_col: str, k: int):
     """NTILE(k) recomputed from an exact global rank: the first
     ``n % k`` tiles get ``n div k + 1`` rows, the rest ``n div k`` —
     SQL-standard NTILE's exact assignment (the binning commit 94e7d6c
     pinned).  Pure expression over (rank, n); pairs with
-    :func:`bucketed_global_rank` to replace a global-sort ntile.
+    :func:`bucketed_rank_running_sum` to replace a global-sort ntile.
     Returns an int column matching ``F.ntile(k)``'s type."""
     q = f"({n_col} div {k})"
     m = f"({n_col} % {k})"
@@ -349,12 +244,13 @@ def ntile_from_rank(rank_col: str, n_col: str, k: int):
     )
 
 
+_INTEGRAL_DTYPES = {"tinyint", "smallint", "int", "bigint"}
+
+
 def positional_boundary_structs(
     df: DataFrame,
-    value_col: str,
-    tiebreak_cols: list[str],
+    specs: list,
     ranks_expr: str,
-    bucket_scale: int,
 ) -> DataFrame:
     """The distributed replacement for a GLOBAL ntile/row_number sort:
     the exact (value, *tiebreaks) tuples sitting at the given global
@@ -370,152 +266,25 @@ def positional_boundary_structs(
     ``Window.orderBy(...)`` (WindowExec, "No Partition Defined")
     does not.
 
-    ``ranks_expr`` is a SQL expression over ``n`` (the total row
-    count) producing an ARRAY of target ranks, e.g. quintile
-    boundaries ``array(...)``.  Returns a 1-row DataFrame with column
-    ``bounds``: array<struct<value, *tiebreaks>> sorted by rank,
-    ready to broadcast-crossJoin onto the data for binning via struct
-    comparison.
-    """
-    from pyspark.sql import Window
-
-    cols = [value_col, *tiebreak_cols]
-    bucketed = df.select(
-        *cols,
-        F.expr(f"{value_col} div {bucket_scale}").alias("_bk"),
-    ).localCheckpoint(eager=False)  # feeds counts AND the rank picks
-    bcounts = bucketed.groupBy("_bk").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_cum = Window.orderBy("_bk").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = bcounts.select(
-        "_bk",
-        "_cnt",
-        F.sum("_cnt").over(w_cum).alias("_cum"),
-        F.sum("_cnt").over(w_all).alias("n"),
-    )
-    # one row per (target rank x its bucket): rank r lands in the
-    # bucket where cum >= r and cum - cnt < r, at in-bucket offset
-    # r - (cum - cnt).  Each target rank r is paired with its NEIGHBOR
-    # rank r+1 (tag 1): binning via strict struct comparison matches
-    # ntile ONLY when the tuple at r differs from the tuple at r+1 —
-    # a duplicate run straddling a boundary would silently bin the
-    # whole run below — so the neighbor's tuple is fetched in the same
-    # pass and equality raises loudly instead of diverging.
-    targets = (
-        cum.select(
-            "_bk",
-            "_cnt",
-            "_cum",
-            F.explode(
-                F.expr(
-                    f"flatten(transform({ranks_expr}, r -> array("
-                    "named_struct('rr', r, 'tg', 0),"
-                    "named_struct('rr', r + 1, 'tg', 1))))"
-                )
-            ).alias("_rt"),
-        )
-        .select(
-            "_bk",
-            "_cnt",
-            "_cum",
-            F.col("_rt.rr").alias("_r"),
-            F.col("_rt.tg").alias("_tg"),
-        )
-        .where(
-            (F.col("_cum") >= F.col("_r"))
-            & (F.col("_cum") - F.col("_cnt") < F.col("_r"))
-        )
-        .select(
-            "_bk",
-            "_r",
-            "_tg",
-            (F.col("_r") - (F.col("_cum") - F.col("_cnt"))).alias("_off"),
-        )
-    )
-    struct_expr = "struct(" + ", ".join(cols) + ")"
-    # one join row per hit bucket (targets collected into an array),
-    # so the within-bucket ranking window is computed ONCE per bucket
-    # however many target ranks (and their tie-check neighbors) land
-    # in it — per-target join duplication would multiply the sort.
-    tgrp = targets.groupBy("_bk").agg(
-        F.expr(
-            "collect_list(named_struct('r', _r, 'tg', _tg, 'off', _off))"
-        ).alias("_tgs")
-    )
-    picked = (
-        bucketed.join(F.broadcast(tgrp), "_bk")
-        .select(
-            "_tgs",
-            *cols,
-            F.row_number()
-            .over(Window.partitionBy("_bk").orderBy(*cols))
-            .alias("_rn"),
-        )
-        .select(
-            F.explode(F.expr("filter(_tgs, t -> t.off = _rn)")).alias(
-                "_t"
-            ),
-            *cols,
-        )
-        .select(
-            F.col("_t.r").alias("_r"),
-            F.col("_t.tg").alias("_tg"),
-            *cols,
-        )
-    )
-    # neighbor entries re-keyed to their base rank (r-1) so the tie
-    # check is a per-rank struct comparison; a missing neighbor
-    # (boundary at rank n) simply doesn't appear and can't match.
-    return picked.agg(
-        F.expr(
-            "array_sort(collect_list(CASE WHEN _tg = 0 THEN"
-            f" named_struct('r', _r, 's', {struct_expr}) END))"
-        ).alias("_bmain"),
-        F.expr(
-            "array_sort(collect_list(CASE WHEN _tg = 1 THEN"
-            f" named_struct('r', _r - 1, 's', {struct_expr}) END))"
-        ).alias("_bnext"),
-    ).select(
-        F.expr(
-            "CASE WHEN exists(_bnext, nb -> exists(_bmain,"
-            " mb -> mb.r = nb.r AND mb.s = nb.s))"
-            " THEN raise_error('positional_boundary_structs: duplicate"
-            " (value, tiebreak) tuple straddles a boundary rank;"
-            " extend tiebreak_cols to a strict total order')"
-            " ELSE transform(_bmain, x -> x.s) END"
-        ).alias("bounds")
-    )
-
-
-_INTEGRAL_DTYPES = {"tinyint", "smallint", "int", "bigint"}
-
-
-def positional_boundary_structs_multi(
-    df: DataFrame,
-    specs: list,
-    ranks_expr: str,
-) -> DataFrame:
-    """K boundary walks fused into ONE stacked pass (r7 opt, guide
-    §2.4 — two operations keyed the same way share one pass): each
-    ``spec = (out_col, value_col, tiebreak_cols, bucket_scale)``
-    produces a ``bounds`` array bit-identical to
-    :func:`positional_boundary_structs` on the same arguments, but the
+    Each ``spec = (out_col, value_col, tiebreak_cols, bucket_scale)``
+    is one walk, and K walks share ONE stacked pass (r7 opt — two
+    operations keyed the same way share one pass): the
     data is read once (rows exploded K ways into narrow integer key
     structs), the bucket bookkeeping/cumulative window runs once
     partitioned by dimension, the within-bucket ranking window runs
     once partitioned by (dimension, bucket), and the caller broadcasts
     ONE 1-row result instead of K.
 
-    Every value/tiebreak column must be integral (the keys travel as
-    BIGINT and are cast back to their original Spark types in the
-    output structs — lossless, and struct comparison is positional so
-    ordering and binning are unchanged).  Returns one row with one
-    array<struct<value, *tiebreaks>> column per spec, named
-    ``out_col``.
+    ``ranks_expr`` is a SQL expression over ``n`` (the total row
+    count) producing an ARRAY of target ranks, e.g. quintile
+    boundaries ``array(...)``.  Every value/tiebreak column must be
+    integral (the keys travel as BIGINT and are cast back to their
+    original Spark types in the output structs — lossless, and struct
+    comparison is positional so ordering and binning are unchanged).
+    Returns one row with one column per spec, named ``out_col``:
+    array<struct<value, *tiebreaks>> sorted by rank, ready to
+    broadcast-crossJoin onto the data for binning via struct
+    comparison.
     """
     dtypes = dict(df.dtypes)
     arities = []
@@ -523,7 +292,7 @@ def positional_boundary_structs_multi(
         for c in [vcol, *tcols]:
             if dtypes[c] not in _INTEGRAL_DTYPES:
                 raise ValueError(
-                    f"positional_boundary_structs_multi: non-integral"
+                    f"positional_boundary_structs: non-integral"
                     f" column {c} ({dtypes[c]})"
                 )
         arities.append(1 + len(tcols))
@@ -571,6 +340,14 @@ def positional_boundary_structs_multi(
         F.sum("_cnt").over(w_cum).alias("_cum"),
         F.sum("_cnt").over(w_all).alias("n"),
     )
+    # one row per (target rank x its bucket): rank r lands in the
+    # bucket where cum >= r and cum - cnt < r, at in-bucket offset
+    # r - (cum - cnt).  Each target rank r is paired with its NEIGHBOR
+    # rank r+1 (tag 1): binning via strict struct comparison matches
+    # ntile ONLY when the tuple at r differs from the tuple at r+1 —
+    # a duplicate run straddling a boundary would silently bin the
+    # whole run below — so the neighbor's tuple is fetched in the same
+    # pass and equality raises loudly instead of diverging.
     targets = (
         cum.select(
             "d",
@@ -605,6 +382,10 @@ def positional_boundary_structs_multi(
             (F.col("_r") - (F.col("_cum") - F.col("_cnt"))).alias("_off"),
         )
     )
+    # one join row per hit bucket (targets collected into an array),
+    # so the within-bucket ranking window is computed ONCE per bucket
+    # however many target ranks (and their tie-check neighbors) land
+    # in it — per-target join duplication would multiply the sort.
     tgrp = targets.groupBy("d", "_bk").agg(
         F.expr(
             "collect_list(named_struct('r', _r, 'tg', _tg, 'off', _off))"
@@ -634,6 +415,9 @@ def positional_boundary_structs_multi(
             "key",
         )
     )
+    # neighbor entries re-keyed to their base rank (r-1) so the tie
+    # check is a per-rank struct comparison; a missing neighbor
+    # (boundary at rank n) simply doesn't appear and can't match.
     mains, nexts, outs = [], [], []
     for j, (out, vcol, tcols, _) in enumerate(specs):
         mains.append(
@@ -674,19 +458,35 @@ def bucketed_rank_running_sum(
     lead_expr: str,
     order_cols: list,
     rank_col: str = "rn",
-    cum_cols: list | None = None,
+    cum_cols: list = (),
     n_col: str | None = None,
 ) -> DataFrame:
-    """:func:`bucketed_global_rank` and :func:`bucketed_running_sum`
-    fused over ONE bucketing pass — for plans that need the exact
-    global position plus one or more exact inclusive running sums
-    under the same total order (Pareto/share-curve and prefix-moment
-    shapes).  Same adaptive range buckets, same bounded-bucket-table
-    prefix windows, one partitioned within-bucket window computing
-    row_number and every local running sum together."""
-    if isinstance(sum_cols, str):
-        sum_cols = [sum_cols]
-    cum_cols = cum_cols or [f"cum_{c}" for c in sum_cols]
+    """Exact global ``row_number() OVER (ORDER BY order_cols)`` and
+    exact inclusive running ``SUM(c) OVER (ORDER BY order_cols ROWS
+    UNBOUNDED PRECEDING)`` for each ``c`` in ``sum_cols`` (none for a
+    rank alone), without a single-partition sort (the WindowExec "No
+    Partition Defined" plan that dies at 100x).
+
+    ``lead_expr`` is a SQL expression for the LEADING integer sort key
+    (negate it for a descending lead, e.g. ``"-cents"``); the rest of
+    ``order_cols`` break ties so the ordering is total.  Strategy:
+    range-bucket the lead key adaptively into <= ``RANK_BUCKETS`` buckets
+    (min/max come from a 1-row broadcast agg, so bucket count is bound
+    regardless of data scale), compute each bucket's exclusive prefix
+    count and prefix sums with a window over the BOUNDED bucket table
+    (<= RANK_BUCKETS rows — the whitelisted bounded-window class), then
+    rank and sum inside each bucket with ONE partitioned window and add
+    the offsets.  The result is bit-identical to the global window
+    because integer division by a positive scale is monotone in the
+    lead key.  Integer sums only (the repo's exact-cents discipline),
+    so the split into prefix + local sum is associative and bit-exact.
+
+    Returns ``df`` plus ``rank_col`` (long, 1-based global rank), one
+    running sum per ``sum_cols`` entry named by ``cum_cols``, and, when
+    ``n_col`` is given, the total row count as a column.  A caller that
+    reads only the sums leaves the rank unread, and Catalyst prunes it.
+    """
+    cum_cols = list(cum_cols)
     assert len(cum_cols) == len(sum_cols)
     src = df.localCheckpoint(eager=False)
     bounds = src.agg(
@@ -705,6 +505,8 @@ def bucketed_rank_running_sum(
         F.count(F.lit(1)).alias("_cnt"),
         *[F.sum(c).alias(f"_bsum{i}") for i, c in enumerate(sum_cols)],
     )
+    # exclusive prefix over the <= RANK_BUCKETS-row bucket table: bounded
+    # input, so the single-partition window here is safe by design
     w_prev = Window.orderBy("_bk").rowsBetween(
         Window.unboundedPreceding, -1
     )

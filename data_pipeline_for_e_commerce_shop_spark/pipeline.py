@@ -71,8 +71,6 @@ from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
 @dataclass
 class ValidationResult:
     status: str                      # 'SUCCESS' | 'FAILED'
-    error_type: str | None = None
-    message: str | None = None
     null_counts: dict = field(default_factory=dict)
     ri_violation_counts: dict = field(default_factory=dict)
 

@@ -56,6 +56,9 @@ _TIMESTAMPS = ("created_at", "processing_started_at", "completed_at")
 # A claim older than this belongs to a dead driver.  Illustrative: one
 # batch takes 8-17 s, so any value far above that works.
 LEASE = dt.timedelta(minutes=30)
+# Attempts a batch gets before it stays failed (reference Step
+# Functions Retry 3x).
+MAX_ATTEMPTS = 3
 # A superseded snapshot is deleted only once this old, so a writer that
 # read it cannot link its successor into a name already freed.
 _PRUNE_AFTER_S = 60.0
@@ -187,14 +190,14 @@ class BatchStateTable:
 
         self._commit(stamp)
 
-    def requeue_failed(self, max_attempts: int = 3) -> int:
-        """T9: failed batches under the attempt budget go back to
-        pending (reference Step Functions Retry 3x,
-        stepfunction.json:71-79)."""
+    def requeue_failed(self) -> int:
+        """T9: failed batches under the attempt budget
+        (:data:`MAX_ATTEMPTS`) go back to pending (reference Step
+        Functions Retry 3x, stepfunction.json:71-79)."""
 
         def requeue(records):
             retry = [r for r in records
-                     if r["status"] == "failed" and r["attempts"] < max_attempts]
+                     if r["status"] == "failed" and r["attempts"] < MAX_ATTEMPTS]
             for r in retry:
                 r["status"] = "pending"
             return len(retry)
@@ -206,9 +209,7 @@ DRAIN_MAX_ITERATIONS = 1000  # claims per drain, a bound on a retry loop
 
 
 def run_until_drained(
-    table: BatchStateTable,
-    process: Callable[[Row], None],
-    max_attempts: int = 3,
+    table: BatchStateTable, process: Callable[[Row], None]
 ) -> dict[str, int]:
     """The controller loop (reference lambda/controller.py:38-133 +
     Step Functions retry): claim oldest pending, run, stamp
@@ -219,7 +220,7 @@ def run_until_drained(
     for _ in range(DRAIN_MAX_ITERATIONS):
         row = table.claim_next()
         if row is None:
-            if table.requeue_failed(max_attempts) == 0:
+            if table.requeue_failed() == 0:
                 break
             continue
         try:

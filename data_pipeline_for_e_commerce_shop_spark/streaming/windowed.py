@@ -585,48 +585,30 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash32,
     )
     from data_pipeline_for_e_commerce_shop_spark.operators.sketch import (
-        HLL_M,
-        HLL_REM_BITS,
-        HLL_RHO_MAX,
+        HLL_P,
+        _hll_fold,
+        _hll_registers,
     )
 
     stream = events_stream(spark, f"{sf_dir}/events.parquet")
-    hashed = stream.select(
-        "event_type", portable_hash32("user_id").alias("h")
-    ).select(
-        "event_type",
-        F.expr(f"h div {1 << HLL_REM_BITS}").alias("bucket"),
-        F.expr(f"h % {1 << HLL_REM_BITS}").alias("rem"),
-    )
-    rho = F.when(F.col("rem") == 0, F.lit(HLL_RHO_MAX)).otherwise(
-        HLL_RHO_MAX - F.length(F.bin("rem"))
-    )
-    regs = hashed.groupBy("event_type", "bucket").agg(
-        F.max(rho).alias("m_reg")
-    )
-    est = (
-        f"CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-        f" + CAST(1.079 AS DOUBLE) / CAST({HLL_M} AS DOUBLE))"
-        f" * CAST({HLL_M} AS DOUBLE) * CAST({HLL_M} AS DOUBLE)"
-        f" * CAST({1 << HLL_RHO_MAX} AS DOUBLE)"
-        f" / CAST(present_scaled + ({HLL_M} - n_buckets)"
-        f"        * {1 << HLL_RHO_MAX} AS DOUBLE)"
+    regs = _hll_registers(
+        stream.select("event_type", portable_hash32("user_id").alias("h")),
+        ["event_type"],
+        HLL_P,
     )
     with drained(spark, regs) as d:
-        per_type = d.groupBy("event_type").agg(
-            F.sum(
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m_reg)")
-            ).alias("present_scaled"),
-            F.count(F.lit(1)).alias("n_buckets"),
+        return (
+            _hll_fold(d, ["event_type"], HLL_P)
+            .select(
+                "event_type",
+                "sum_scaled",
+                F.expr("CAST(floor(hll_estimate) AS BIGINT)").alias(
+                    "hll_estimate"
+                ),
+            )
+            .orderBy("event_type")
+            .localCheckpoint(eager=True)
         )
-        return per_type.select(
-            "event_type",
-            (
-                F.col("present_scaled")
-                + (HLL_M - F.col("n_buckets")) * (1 << HLL_RHO_MAX)
-            ).cast("long").alias("sum_scaled"),
-            F.expr(f"CAST(floor({est}) AS BIGINT)").alias("hll_estimate"),
-        ).orderBy("event_type").localCheckpoint(eager=True)
 
 
 def stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -362,7 +362,7 @@ NESTED_LOOP_OK = {"ann_brute_topk", "ann_ivf_topk", "text_tfidf_topk",
                   # ntile binning — scalar-subquery shape)
                   "customer_rfm",
                   # 1-row adaptive-bucket-bounds crossJoin inside
-                  # bucketed_global_rank (scalar-subquery shape)
+                  # bucketed_rank_running_sum (scalar-subquery shape)
                   "revenue_gini",
                   # two chained bucket-walk ranks: 1-row bounds
                   # crossJoins (scalar-subquery shape)

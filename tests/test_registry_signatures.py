@@ -15,15 +15,8 @@ import inspect
 from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
 
 EXTRA = {
-    "ann_brute_topk": (
-        ("k",), "test_similarity.test_topk_shape sets k on every ANN tier"
-    ),
     "ann_lsh_topk": (
-        ("k", "multi_probe"),
-        "test_topk_shape sets k; the multi-probe tests switch the probe off",
-    ),
-    "ann_ivf_topk": (
-        ("k",), "test_similarity.test_topk_shape sets k on every ANN tier"
+        ("multi_probe",), "the multi-probe tests switch the probe off"
     ),
     "text_zipf_topk": (("k",), "test_extensions reads a longer Zipf head"),
     "basket_pairs": (("k",), "test_extensions reads a longer pair list"),

@@ -164,7 +164,7 @@ def test_positional_boundary_structs_match_ntile(spark, sf_dir):
         " i -> i * (n div 5) + least(CAST(i AS BIGINT), n % 5))"
     )
     b = positional_boundary_structs(
-        pts, "v", ["l_orderkey", "l_linenumber"], ranks, 10000
+        pts, [("bounds", "v", ["l_orderkey", "l_linenumber"], 10000)], ranks
     )
     got = pts.crossJoin(F.broadcast(b)).select(
         "v",

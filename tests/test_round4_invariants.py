@@ -23,16 +23,17 @@ def _synth(spark, n=501):
 
 
 def test_bucketed_global_rank_matches_window_asc_and_desc(spark):
+    """The rank walk (``bucketed_rank_running_sum`` with no sums)."""
     from data_pipeline_for_e_commerce_shop_spark.operators.windows import (
-        bucketed_global_rank,
+        bucketed_rank_running_sum,
     )
 
     df = _synth(spark)
-    got = bucketed_global_rank(
-        df, "v", ["v", "k"], out_col="rn_asc", n_col="n"
+    got = bucketed_rank_running_sum(
+        df, [], "v", ["v", "k"], rank_col="rn_asc", n_col="n"
     )
-    got = bucketed_global_rank(
-        got, "-v", [F.desc("v"), "k"], out_col="rn_desc"
+    got = bucketed_rank_running_sum(
+        got, [], "-v", [F.desc("v"), "k"], rank_col="rn_desc"
     )
     ref = df.select(
         "k",
@@ -53,19 +54,21 @@ def test_bucketed_global_rank_matches_window_asc_and_desc(spark):
 
 
 def test_bucketed_global_rank_tiny_and_constant_lead(spark):
-    """Degenerate shapes: fewer rows than buckets, and a constant lead
-    key (all rows one bucket — the documented worst case, still
-    correct)."""
+    """Degenerate shapes of the rank walk: fewer rows than buckets, and
+    a constant lead key (all rows one bucket — the documented worst
+    case, still correct)."""
     from data_pipeline_for_e_commerce_shop_spark.operators.windows import (
-        bucketed_global_rank,
+        bucketed_rank_running_sum,
     )
 
     tiny = _synth(spark, n=3)
-    got = bucketed_global_rank(tiny, "v", ["v", "k"], out_col="rn")
+    got = bucketed_rank_running_sum(tiny, [], "v", ["v", "k"], rank_col="rn")
     assert sorted(r["rn"] for r in got.collect()) == [1, 2, 3]
 
     const = tiny.withColumn("v", F.lit(7))
-    got2 = bucketed_global_rank(const, "v", ["v", "k"], out_col="rn")
+    got2 = bucketed_rank_running_sum(
+        const, [], "v", ["v", "k"], rank_col="rn"
+    )
     ref2 = {
         r["k"]: r["rn"]
         for r in const.select(
@@ -76,13 +79,15 @@ def test_bucketed_global_rank_tiny_and_constant_lead(spark):
 
 
 def test_bucketed_running_sum_matches_window(spark):
+    """The prefix-sum walk (``bucketed_rank_running_sum`` read for its
+    sum alone)."""
     from data_pipeline_for_e_commerce_shop_spark.operators.windows import (
-        bucketed_running_sum,
+        bucketed_rank_running_sum,
     )
 
     df = _synth(spark)
-    got = bucketed_running_sum(
-        df, "w", "-v", [F.desc("v"), "k"], out_col="cum"
+    got = bucketed_rank_running_sum(
+        df, ["w"], "-v", [F.desc("v"), "k"], cum_cols=["cum"]
     )
     ref = df.select(
         "k",
@@ -139,7 +144,7 @@ def test_positional_boundary_structs_raises_on_boundary_tie(spark):
         "transform(sequence(1, 4),"
         " i -> i * (n div 5) + least(CAST(i AS BIGINT), n % 5))"
     )
-    b = positional_boundary_structs(df, "v", ["tb"], ranks, 2)
+    b = positional_boundary_structs(df, [("bounds", "v", ["tb"], 2)], ranks)
     with pytest.raises(Exception, match="straddles a boundary"):
         b.collect()
 
@@ -165,7 +170,7 @@ def test_positional_boundary_structs_clean_when_ties_off_boundary(spark):
         "transform(sequence(1, 4),"
         " i -> i * (n div 5) + least(CAST(i AS BIGINT), n % 5))"
     )
-    b = positional_boundary_structs(df, "v", ["tb"], ranks, 2)
+    b = positional_boundary_structs(df, [("bounds", "v", ["tb"], 2)], ranks)
     bounds = b.first()["bounds"]
     assert len(bounds) == 4  # all four quintile boundaries resolved
 

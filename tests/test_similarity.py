@@ -45,19 +45,19 @@ def test_ivf_recall(spark, sf_dir, brute):
 
 
 def test_topk_shape(spark, sf_dir):
-    """Each path returns <= k rows per query with rank 1..k and
-    monotonically non-increasing cosine."""
+    """Each path returns <= ANN_K rows per query with rank 1..ANN_K
+    and monotonically non-increasing cosine."""
     for fn in (
         similarity.brute_force_topk,
         similarity.lsh_topk,
         similarity.ivf_topk,
     ):
-        rows = fn(spark, sf_dir, k=5).collect()
+        rows = fn(spark, sf_dir).collect()
         by_q: dict[int, list] = {}
         for r in rows:
             by_q.setdefault(r.query_id, []).append(r)
         for q, rs in by_q.items():
-            assert len(rs) <= 5
+            assert len(rs) <= similarity.ANN_K
             rs.sort(key=lambda r: r.rank)
             assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
             cosines = [r.cosine for r in rs]
@@ -177,8 +177,8 @@ def test_ivf_incremental_add_conserves_and_balances(spark):
     from pyspark.sql import functions as F
 
     from data_pipeline_for_e_commerce_shop_spark.operators.similarity import (
-        IVF_ADD_CENTROIDS,
         IVF_ADD_MOD,
+        IVF_CENTROIDS,
         ivf_incremental_add,
     )
     from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
@@ -188,13 +188,13 @@ def test_ivf_incremental_add_conserves_and_balances(spark):
     emb = load_table(spark, sf, "embeddings")
     n_old = emb.where(F.col("vec_id") % IVF_ADD_MOD != 0).count()
     n_new = emb.where(F.col("vec_id") % IVF_ADD_MOD == 0).count()
-    assert len(rows) == IVF_ADD_CENTROIDS
+    assert len(rows) == IVF_CENTROIDS
     assert sum(r["n_before"] for r in rows) == n_old
     assert sum(r["n_added"] for r in rows) == n_new
     assert all(r["n_after"] == r["n_before"] + r["n_added"] for r in rows)
     total = sum(r["n_after"] for r in rows)
     assert all(
-        r["balance_ppm"] == r["n_after"] * IVF_ADD_CENTROIDS * 1_000_000 // total
+        r["balance_ppm"] == r["n_after"] * IVF_CENTROIDS * 1_000_000 // total
         for r in rows
     )
 
@@ -207,11 +207,11 @@ def test_ivf_index_persists_as_tables(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_for_e_commerce_shop_spark.operators.similarity import (
+        _NEAREST_CID,
         IVF_ADD_MOD,
-        _assign_nearest,
+        _centroid_model,
         as_double,
         ivf_incremental_add,
-        knuth_order,
         norm,
     )
     from data_pipeline_for_e_commerce_shop_spark.schemas import load_table
@@ -223,21 +223,12 @@ def test_ivf_index_persists_as_tables(spark, tmp_path):
         .withColumn("nrm", norm("emb"))
     )
     old = emb.where(F.col("vec_id") % IVF_ADD_MOD != 0)
-    centroids = (
-        knuth_order(old)
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("emb").alias("cent_emb"),
-            F.col("nrm").alias("cent_nrm"),
-        )
+    model = _centroid_model(spark, old)
+    centroids = model.select(F.inline("cents"))  # one row per centroid
+    lists = old.crossJoin(F.broadcast(model)).select(
+        F.col("vec_id").alias("corpus_id"),
+        F.expr(_NEAREST_CID).alias("cluster_id"),
     )
-    lists = _assign_nearest(
-        old.select(F.col("vec_id").alias("corpus_id"), "emb", "nrm"),
-        centroids,
-        "corpus_id",
-        n_probe=1,
-    ).select("corpus_id", "cluster_id")
     d = str(tmp_path)
     centroids.write.mode("overwrite").parquet(f"{d}/ivf_centroids")
     lists.write.mode("overwrite").parquet(f"{d}/ivf_lists")

@@ -115,10 +115,13 @@ def test_hll_registers_match_python_model(spark):
     from hypothesis import strategies as st
 
     from data_pipeline_for_e_commerce_shop_spark.operators.sketch import (
-        HLL_REM_BITS,
-        HLL_RHO_MAX,
+        HLL_P,
         _hll_registers,
+        _user_hashes,
     )
+
+    rem_bits = 32 - HLL_P
+    rho_max = rem_bits + 1
 
     @settings(max_examples=10, deadline=None)
     @given(
@@ -135,14 +138,16 @@ def test_hll_registers_match_python_model(spark):
         )
         got = {
             (r["bucket"], r["m_reg"])
-            for r in _hll_registers(df).collect()
+            for r in _hll_registers(
+                _user_hashes(df, ["event_type"]), ["event_type"], HLL_P
+            ).collect()
         }
         model: dict[int, int] = {}
         for i in ids:
             h = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
-            bucket, rem = divmod(h, 1 << HLL_REM_BITS)
+            bucket, rem = divmod(h, 1 << rem_bits)
             rho = (
-                HLL_RHO_MAX if rem == 0 else HLL_RHO_MAX - rem.bit_length()
+                rho_max if rem == 0 else rho_max - rem.bit_length()
             )
             model[bucket] = max(model.get(bucket, 0), rho)
         assert got == set(model.items())

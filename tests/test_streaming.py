@@ -136,7 +136,7 @@ def test_runner_retries_then_fails(spark, tmp_path):
         attempts.append(row["attempts"])
         raise RuntimeError("boom")
 
-    stats = run_until_drained(table, process, max_attempts=3)
+    stats = run_until_drained(table, process)
     assert stats == {"done": 0, "failed": 1}
     row = table.read().collect()[0]
     assert row["attempts"] == 3            # reference Step Functions Retry 3x
@@ -207,7 +207,7 @@ def test_runner_expired_lease_spends_retry_budget(spark, tmp_path):
     table.enqueue(_mk_batches(spark, [("b1", "g1", ["a.csv"], t0)]))
     _backdate_claim(table, "b1", attempts=3)
     processed = []
-    assert run_until_drained(table, processed.append, max_attempts=3) == {
+    assert run_until_drained(table, processed.append) == {
         "done": 0,
         "failed": 1,
     }
