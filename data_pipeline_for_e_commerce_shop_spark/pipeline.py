@@ -70,7 +70,6 @@ from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
 
 @dataclass
 class ValidationResult:
-    status: str                      # 'SUCCESS' | 'FAILED'
     null_counts: dict = field(default_factory=dict)
     ri_violation_counts: dict = field(default_factory=dict)
 
@@ -142,7 +141,7 @@ class MedallionPipeline:
             [F.count(F.when(null_reject & F.col(c).isNull(), True)).alias(c) for c in gated],
         )
         nulls = {c: n for c, n in observed.items() if n}
-        return df, ValidationResult(status="SUCCESS", null_counts=nulls)
+        return df, ValidationResult(null_counts=nulls)
 
     def enforce_referential_integrity(
         self, dfs: dict[str, DataFrame]
@@ -348,7 +347,7 @@ class MedallionPipeline:
         all of them have, raising the first error after that.  The
         batch's cached frames are released on the way out, raised or
         not, and never under a running write."""
-        result = ValidationResult(status="SUCCESS")
+        result = ValidationResult()
         try:
             gates = [partial(self.validate_and_load, e, p) for e, p in paths.items()]
             dfs: dict[str, DataFrame] = {}

@@ -58,3 +58,11 @@ def scan_pushed_filters(df: DataFrame) -> list[str]:
         m.group(1).strip()
         for m in re.finditer(r"PushedFilters: \[(.*)\]", plan)
     ]
+
+
+def compiled_classes(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of
+    Spark's codegen compile-time histogram.  A cache hit compiles
+    nothing, so the difference across a block is its cache misses."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
