@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import read_parquet
-from .windowed import cached_stream_dir, drained, events_stream
+from .windowed import cached_stream_dir, drain, events_stream
 
 DUP_EVERY = 20  # every DUP_EVERY-th event_id is delivered twice
 
@@ -76,17 +76,16 @@ def stream_dedup_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     # Stateful-shuffle partition count becomes the state-store count;
-    # the stream runs on drain_session(spark)'s scoped SQLConf (8
-    # partitions), invisible to the caller's session.
-    with drained(spark, deduped, "append") as d:
-        return (
-            d.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("user_id").alias("n_users"),
-                (F.sum(F.floor(F.col("value") * 100)) / 100.0).alias(
-                    "total_value"
-                ),
-            )
-            .localCheckpoint(eager=True)
+    # the stream runs on drain_session(spark)'s scoped SQLConf (one
+    # partition per core), invisible to the caller's session.
+    d = drain(spark, deduped, "append")
+    return (
+        d.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            (F.sum(F.floor(F.col("value") * 100)) / 100.0).alias(
+                "total_value"
+            ),
         )
+    )

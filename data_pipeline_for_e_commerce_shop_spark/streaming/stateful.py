@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.events import DEBOUNCE_GAP_SECONDS
-from .windowed import drained, events_stream
+from .windowed import drain, events_stream
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -179,25 +179,24 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Finalize: per (user, session) keep the WIDEST emission — n_events
     # grows monotonically as batches extend a session, so max_by the
     # event count (session_end tiebreak is redundant but explicit).
-    with drained(spark, sessions, "update") as emitted:
-        return (
-            emitted.groupBy("user_id", "session_no")
-            .agg(
-                F.max_by(
-                    F.struct("session_start", "session_end", "n_events", "cents"),
-                    F.struct("n_events", "session_end"),
-                ).alias("s")
-            )
-            .select(
-                "user_id",
-                "session_no",
-                F.col("s.session_start").alias("session_start"),
-                F.col("s.session_end").alias("session_end"),
-                F.col("s.n_events").alias("n_events"),
-                (F.col("s.cents") / 100.0).alias("total_value"),
-            )
-            .localCheckpoint(eager=True)
+    emitted = drain(spark, sessions, "update")
+    return (
+        emitted.groupBy("user_id", "session_no")
+        .agg(
+            F.max_by(
+                F.struct("session_start", "session_end", "n_events", "cents"),
+                F.struct("n_events", "session_end"),
+            ).alias("s")
         )
+        .select(
+            "user_id",
+            "session_no",
+            F.col("s.session_start").alias("session_start"),
+            F.col("s.session_end").alias("session_end"),
+            F.col("s.n_events").alias("n_events"),
+            (F.col("s.cents") / 100.0).alias("total_value"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------
@@ -267,16 +266,15 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    with drained(spark, totals, "update") as emitted:
-        return (
-            emitted.groupBy("user_id")
-            .agg(
-                F.max(F.struct("n_events", "total_cents")).alias("s")
-            )
-            .select(
-                "user_id",
-                F.col("s.n_events").alias("n_events"),
-                (F.col("s.total_cents") / 100.0).alias("total_value"),
-            )
-            .localCheckpoint(eager=True)
+    emitted = drain(spark, totals, "update")
+    return (
+        emitted.groupBy("user_id")
+        .agg(
+            F.max(F.struct("n_events", "total_cents")).alias("s")
         )
+        .select(
+            "user_id",
+            F.col("s.n_events").alias("n_events"),
+            (F.col("s.total_cents") / 100.0).alias("total_value"),
+        )
+    )

@@ -4,11 +4,11 @@ control plane is processing-time, lambda/s3_validation.py:64-112).
 
 Every streaming op here (and in ``stateful.py`` and ``dedup.py``) is
 built from two helpers: :func:`events_stream` opens the events table
-as a file stream on the drain session, and :func:`drained` runs the
-op's aggregate with Trigger.AvailableNow, drains every available file
-into a per-call parquet directory and yields it as a batch DataFrame.
-The op materialises its post-step inside the ``with`` block, and the
-block deletes the output and checkpoint directories on exit.  The
+as a file stream on the drain session, and :func:`drain` runs the
+op's aggregate with Trigger.AvailableNow, holds every micro-batch in
+executor memory and returns the result as a batch DataFrame on the
+caller's session, its checkpoint directory already deleted.  The op's
+post-step on that frame stays lazy, like any batch query.  The
 aggregate columns are decomposable (counts + integer cents), so the
 streaming result is bit-identical to the batch dual
 (operators/events.hourly_window) and DuckDB — the stream/batch duality
@@ -25,7 +25,7 @@ would use append mode and emit each window once, on watermark close.
 from __future__ import annotations
 
 import atexit
-import contextlib
+import functools
 import os
 import shutil
 import tempfile
@@ -41,10 +41,6 @@ from ..schemas import canonical_ts, ensure_nanos_conf, parquet_schema, read_parq
 # per-source stream directories (the single-file symlink dirs here and
 # dedup's staged re-delivery dirs), reused across calls, removed at exit
 _STREAM_DIRS: dict[str, str] = {}
-
-# the stateful shuffle's partition count, which becomes the state-store
-# count, fixed at query start
-_STATE_PARTITIONS = 8
 
 TOPK = 3  # event types ranked per hour
 
@@ -101,9 +97,14 @@ def drain_session(spark: SparkSession) -> SparkSession:
     (executors, cached data, builder-level confs) but carries its OWN
     SQLConf, so pinning the stateful shuffle's partition count — which
     becomes the state-store count, fixed at query start — here leaks
-    nowhere.  One scoped session is cached per base session and reused,
-    so every op and perfbench's streaming-progress listener, which is
-    registered on this session, share one session.
+    nowhere.  The pin is the context's default parallelism, one state
+    store per core: at 8 stores on 4 cores the state-store commits of
+    the sessionize drain summed to 632 ms of task time, 385 ms at 4.
+    The pin stays although ``get_spark`` sets a width at build time:
+    a session built elsewhere would give a drain Spark's default of
+    200 state stores.  One scoped session is cached per base session
+    and reused, so every op and perfbench's streaming-progress
+    listener, which is registered on this session, share one session.
 
     The cache is a WeakKeyDictionary keyed by the base session itself
     (ADVICE r6: an ``id(spark)``-keyed plain dict pinned every session
@@ -124,7 +125,9 @@ def drain_session(spark: SparkSession) -> SparkSession:
         spark.conf.get("spark.sql.session.timeZone"),
     )
     ensure_nanos_conf(ds)
-    ds.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+    ds.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     return ds
 
 
@@ -145,48 +148,57 @@ def events_stream(
     return canonical_ts(stream)
 
 
-@contextlib.contextmanager
-def drained(spark: SparkSession, agg: DataFrame, output_mode: str = "complete"):
-    """Run ``agg`` to an availableNow drain and yield its result as a
-    batch DataFrame on ``spark``; the caller materialises what it keeps
-    inside the ``with`` block.
+def drain(
+    spark: SparkSession, agg: DataFrame, output_mode: str = "complete"
+) -> DataFrame:
+    """Run ``agg`` to an availableNow drain and return its result as a
+    batch DataFrame on ``spark``.
 
-    The drain spills through an EXECUTOR-SIDE parquet sink: Spark's
-    memory sink serializes every result row to the driver — at sf10
-    the sessionize drain blew spark.driver.maxResultSize (1118 MiB >
-    1024) the moment the directory-source fix made streams process
-    real data.  foreachBatch writes each micro-batch with the
-    cluster's parquet writer instead: complete mode overwrites (each
-    batch carries the full re-computed state), append/update modes
-    accumulate.  The output and a fresh checkpoint (no state carries
-    over between drains) live in per-call directories that are deleted
-    on exit, and the query is stopped in ``finally``, so an interrupted
-    drain leaves no active query behind."""
+    Each micro-batch stays in EXECUTOR memory (spilling to executor
+    disk): the ``foreachBatch`` handler checkpoints it where it was
+    computed (an eager ``localCheckpoint``), so no result row passes
+    through the driver — Spark's memory sink serialized every row to
+    the driver, and at sf10 the sessionize drain blew
+    spark.driver.maxResultSize (1118 MiB > 1024).  Complete mode keeps
+    only the last batch (each carries the full re-computed state);
+    append and update modes keep every batch and return their union.
+
+    Before it returns, the query is stopped (in ``finally``, so an
+    interrupted drain leaves no active query behind) and its per-call
+    checkpoint directory (fresh, so no state carries over between
+    drains) is deleted; the held batches do not live there, so the
+    frame stays readable and a post-step on it is as lazy as any batch
+    query.  The held plan is rebound to ``spark``: the batches belong
+    to the query's clone of :func:`drain_session`, and a post-step on
+    them would otherwise shuffle at the state-store width."""
     work = tempfile.mkdtemp(prefix="drain_")
-    out_dir = os.path.join(work, "out")
-    write_mode = "overwrite" if output_mode == "complete" else "append"
+    held: list[DataFrame] = []
 
-    def _put(batch, _bid):
-        batch.write.mode(write_mode).parquet(out_dir)
+    def _hold(batch: DataFrame, _bid: int) -> None:
+        kept = batch.localCheckpoint(eager=True)
+        if output_mode == "complete":
+            held.clear()
+        held.append(kept)
 
     q = None
     try:
         q = (
-            agg.writeStream.foreachBatch(_put)
+            agg.writeStream.foreachBatch(_hold)
             .outputMode(output_mode)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        if os.path.isdir(out_dir):
-            yield spark.read.schema(agg.schema).parquet(out_dir)
-        else:  # zero micro-batches (empty source): typed empty frame
-            yield spark.createDataFrame([], agg.schema)
     finally:
         if q is not None:
             q.stop()
         shutil.rmtree(work, ignore_errors=True)
+    if not held:  # zero micro-batches (empty source): typed empty frame
+        return spark.createDataFrame([], agg.schema)
+    plan = functools.reduce(DataFrame.union, held)._jdf.logicalPlan()
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
 def stream_hourly_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,17 +215,15 @@ def stream_hourly_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The stateful shuffle's partition count is fixed at query start and
     # becomes the state-store count; the stream was built on
-    # drain_session(spark), whose scoped SQLConf pins it to 8 without
-    # touching the caller's session (round-5 verdict footgun removed).
-    with drained(spark, agg) as d:
-        # localCheckpoint cuts the lineage to the drain's output
-        # directory, which is deleted when the block ends
-        return d.select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("hour_epoch"),
-            "event_type",
-            "n_events",
-            "total_value",
-        ).localCheckpoint(eager=True)
+    # drain_session(spark), whose scoped SQLConf pins it to one per core
+    # without touching the caller's session (round-5 verdict footgun
+    # removed).
+    return drain(spark, agg).select(
+        F.unix_timestamp(F.col("w.start")).cast("long").alias("hour_epoch"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
 
 
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,32 +263,32 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    with drained(spark, agg) as d:
-        sess = d.select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
-            (
-                F.unix_timestamp(F.col("w.end")).cast("long")
-                - DEBOUNCE_GAP_SECONDS
-            ).alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-        return sess.select(
-            "user_id",
-            (
-                F.row_number().over(
-                    Window.partitionBy("user_id").orderBy("session_start")
-                )
-                - 1
+    d = drain(spark, agg)
+    sess = d.select(
+        "user_id",
+        F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
+        (
+            F.unix_timestamp(F.col("w.end")).cast("long")
+            - DEBOUNCE_GAP_SECONDS
+        ).alias("session_end"),
+        "n_events",
+        "total_value",
+    )
+    return sess.select(
+        "user_id",
+        (
+            F.row_number().over(
+                Window.partitionBy("user_id").orderBy("session_start")
             )
-            .cast("long")
-            .alias("session_no"),
-            "session_start",
-            "session_end",
-            "n_events",
-            "total_value",
-        ).localCheckpoint(eager=True)
+            - 1
+        )
+        .cast("long")
+        .alias("session_no"),
+        "session_start",
+        "session_end",
+        "n_events",
+        "total_value",
+    )
 
 
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,31 +358,30 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("ts").cast("long").alias("p_sec"),
         )
     )
-    with drained(spark, pairs, "append") as d:
-        matched = d.groupBy("event_id", "user_id", "p_tsec").agg(
-            F.count(F.lit(1)).alias("n_clicks"),
-            (F.sum("c_cents") / 100.0).alias("click_value"),
-        )
-        return (
-            all_p.join(
-                matched.select(
-                    "event_id",
-                    F.unix_timestamp("p_tsec").cast("long").alias("p_sec_m"),
-                    "n_clicks",
-                    "click_value",
-                ),
-                ["event_id"],
-                "left",
-            )
-            .select(
+    d = drain(spark, pairs, "append")
+    matched = d.groupBy("event_id", "user_id", "p_tsec").agg(
+        F.count(F.lit(1)).alias("n_clicks"),
+        (F.sum("c_cents") / 100.0).alias("click_value"),
+    )
+    return (
+        all_p.join(
+            matched.select(
                 "event_id",
-                "user_id",
-                "p_sec",
-                F.coalesce("n_clicks", F.lit(0)).alias("n_clicks"),
-                F.coalesce("click_value", F.lit(0.0)).alias("click_value"),
-            )
-            .localCheckpoint(eager=True)
+                F.unix_timestamp("p_tsec").cast("long").alias("p_sec_m"),
+                "n_clicks",
+                "click_value",
+            ),
+            ["event_id"],
+            "left",
         )
+        .select(
+            "event_id",
+            "user_id",
+            "p_sec",
+            F.coalesce("n_clicks", F.lit(0)).alias("n_clicks"),
+            F.coalesce("click_value", F.lit(0.0)).alias("click_value"),
+        )
+    )
 
 
 def stream_enriched_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,19 +418,18 @@ def stream_enriched_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100)).alias("cents"),
         )
     )
-    with drained(spark, agg) as d:
-        return (
-            d.groupBy(
-                F.col("c_mktsegment").alias("segment"),
-                F.col("event_type"),
-            )
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.count("user_id").alias("n_users"),
-                (F.sum("cents") / 100.0).alias("total_value"),
-            )
-            .localCheckpoint(eager=True)
+    d = drain(spark, agg)
+    return (
+        d.groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.col("event_type"),
         )
+        .agg(
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.count("user_id").alias("n_users"),
+            (F.sum("cents") / 100.0).alias("total_value"),
+        )
+    )
 
 
 def stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,28 +459,27 @@ def stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wr = Window.partitionBy("hour_epoch").orderBy(
         F.col("cents").desc(), "event_type"
     )
-    with drained(spark, agg) as d:
-        return (
-            d.select(
-                F.unix_timestamp(F.col("w.start")).cast("long").alias(
-                    "hour_epoch"
-                ),
-                "event_type",
-                "n_events",
-                "cents",
-            )
-            .withColumn("rank", F.row_number().over(wr))
-            .where(F.col("rank") <= TOPK)
-            .select(
-                "hour_epoch",
-                "event_type",
-                "n_events",
-                (F.col("cents") / 100.0).alias("total_value"),
-                "rank",
-            )
-            .orderBy("hour_epoch", "rank")
-            .localCheckpoint(eager=True)
+    d = drain(spark, agg)
+    return (
+        d.select(
+            F.unix_timestamp(F.col("w.start")).cast("long").alias(
+                "hour_epoch"
+            ),
+            "event_type",
+            "n_events",
+            "cents",
         )
+        .withColumn("rank", F.row_number().over(wr))
+        .where(F.col("rank") <= TOPK)
+        .select(
+            "hour_epoch",
+            "event_type",
+            "n_events",
+            (F.col("cents") / 100.0).alias("total_value"),
+            "rank",
+        )
+        .orderBy("hour_epoch", "rank")
+    )
 
 
 def stream_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,20 +516,20 @@ def stream_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" + 6 * {mu} * {mu} * (CAST(s2 AS DOUBLE) / n)"
         f" - 3 * {mu} * {mu} * {mu} * {mu})"
     )
-    with drained(spark, agg) as m:
-        return m.select(
-            "event_type",
-            "n",
-            F.expr("s1 div n").alias("mean_dollars"),
-            F.expr(f"CAST(floor({m2} * 1000) AS BIGINT)").alias("var_e3"),
-            F.expr(
-                f"CAST(floor({m3} / pow({m2}, 1.5) * 1000000) AS BIGINT)"
-            ).alias("skew_ppm"),
-            F.expr(
-                f"CAST(floor(({m4} / ({m2} * {m2}) - 3) * 1000000)"
-                " AS BIGINT)"
-            ).alias("excess_kurtosis_ppm"),
-        ).orderBy("event_type").localCheckpoint(eager=True)
+    m = drain(spark, agg)
+    return m.select(
+        "event_type",
+        "n",
+        F.expr("s1 div n").alias("mean_dollars"),
+        F.expr(f"CAST(floor({m2} * 1000) AS BIGINT)").alias("var_e3"),
+        F.expr(
+            f"CAST(floor({m3} / pow({m2}, 1.5) * 1000000) AS BIGINT)"
+        ).alias("skew_ppm"),
+        F.expr(
+            f"CAST(floor(({m4} / ({m2} * {m2}) - 3) * 1000000)"
+            " AS BIGINT)"
+        ).alias("excess_kurtosis_ppm"),
+    ).orderBy("event_type")
 
 
 def stream_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,29 +553,34 @@ def stream_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
         .cast("long").alias("n1"),
     )
-    d = lambda col: F.col(col).cast("double")  # noqa: E731
-    tot = d("t0") + d("t1")
-    row_n = d("n0") + d("n1")
-    e1 = row_n * d("t1") / tot
-    e0 = row_n * d("t0") / tot
-    term = (d("n1") - e1) * (d("n1") - e1) / e1 + (
-        d("n0") - e0
-    ) * (d("n0") - e0) / e0
-    with drained(spark, agg) as c:
-        t = c.agg(F.sum("n0").alias("t0"), F.sum("n1").alias("t1"))
-        packed = c.crossJoin(F.broadcast(t)).select(
-            F.struct(F.col("event_type"), term.alias("x")).alias("row")
-        ).agg(
-            F.sort_array(F.collect_list("row")).alias("arr"),
-            F.count(F.lit(1)).alias("n_categories"),
-        )
-        return packed.select(
-            "n_categories",
-            F.expr(
-                "aggregate(arr, CAST(0.0 AS DOUBLE),"
-                " (acc, x) -> acc + x.x)"
-            ).alias("chi2"),
-        ).localCheckpoint(eager=True)
+    c = drain(spark, agg)
+    # One aggregate packs the categories with the pooled totals, so the
+    # 1-row totals never meet the categories through a nested-loop join;
+    # the fold sums each category's term in event_type order, as the
+    # batch dual does.
+    packed = c.agg(
+        F.sort_array(
+            F.collect_list(F.struct("event_type", "n0", "n1"))
+        ).alias("arr"),
+        F.count(F.lit(1)).alias("n_categories"),
+        F.sum("n0").cast("double").alias("t0"),
+        F.sum("n1").cast("double").alias("t1"),
+    )
+
+    def term(x):
+        n0, n1 = x["n0"].cast("double"), x["n1"].cast("double")
+        t0, t1 = F.col("t0"), F.col("t1")
+        tot = t0 + t1
+        e1 = (n0 + n1) * t1 / tot
+        e0 = (n0 + n1) * t0 / tot
+        return (n1 - e1) * (n1 - e1) / e1 + (n0 - e0) * (n0 - e0) / e0
+
+    return packed.select(
+        "n_categories",
+        F.aggregate(
+            "arr", F.lit(0.0), lambda acc, x: acc + term(x)
+        ).alias("chi2"),
+    )
 
 
 def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,19 +608,18 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         HLL_P,
     )
-    with drained(spark, regs) as d:
-        return (
-            _hll_fold(d, ["event_type"], HLL_P)
-            .select(
-                "event_type",
-                "sum_scaled",
-                F.expr("CAST(floor(hll_estimate) AS BIGINT)").alias(
-                    "hll_estimate"
-                ),
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
+    d = drain(spark, regs)
+    return (
+        _hll_fold(d, ["event_type"], HLL_P)
+        .select(
+            "event_type",
+            "sum_scaled",
+            F.expr("CAST(floor(hll_estimate) AS BIGINT)").alias(
+                "hll_estimate"
+            ),
         )
+        .orderBy("event_type")
+    )
 
 
 def stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -652,16 +663,16 @@ def stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rk",
         F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r"),
     ).withColumn("p", _cms_pos(F.col("r"), F.col("user_id")))
-    with drained(spark, counters) as words:
-        est = (
-            probes.join(F.broadcast(words), ["r", "p"])
-            .groupBy("user_id", "exact_n", "rk")
-            .agg(F.min("cnt").alias("cms_n"))
-        )
-        return est.select(
-            "user_id",
-            "rk",
-            "exact_n",
-            "cms_n",
-            (F.col("cms_n") - F.col("exact_n")).alias("overestimate"),
-        ).orderBy("rk").localCheckpoint(eager=True)
+    words = drain(spark, counters)
+    est = (
+        probes.join(F.broadcast(words), ["r", "p"])
+        .groupBy("user_id", "exact_n", "rk")
+        .agg(F.min("cnt").alias("cms_n"))
+    )
+    return est.select(
+        "user_id",
+        "rk",
+        "exact_n",
+        "cms_n",
+        (F.col("cms_n") - F.col("exact_n")).alias("overestimate"),
+    ).orderBy("rk")

@@ -322,8 +322,9 @@ def test_exactly_once_across_stream_restart(spark, tmp_path):
 def test_drain_session_scopes_shuffle_partitions(spark, sf_dir):
     """The round-5 footgun: a stateful drain must not mutate the
     caller session's spark.sql.shuffle.partitions, even transiently.
-    The drain runs on a scoped newSession whose conf is pinned to 8;
-    the caller's conf must be bit-identical before/after/during."""
+    The drain runs on a scoped newSession whose conf is pinned to one
+    partition (one state store) per core; the caller's conf must be
+    bit-identical before/after/during."""
     from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import (
         drain_session,
         stream_hourly_kpis,
@@ -332,7 +333,9 @@ def test_drain_session_scopes_shuffle_partitions(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     ds = drain_session(spark)
     assert ds is not spark
-    assert ds.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert ds.conf.get("spark.sql.shuffle.partitions") == str(
+        spark.sparkContext.defaultParallelism
+    )
     assert drain_session(spark) is ds  # cached per base session
     spark.conf.set("spark.sql.shuffle.partitions", "17")
     try:

@@ -1,14 +1,15 @@
 """The package opens a stream and drains one in one place each.
 ``streaming/windowed.events_stream`` is the only events file stream
-and ``streaming/windowed.drained`` the only drain: it yields the
-drained result as a DataFrame and deletes its output and checkpoint
-directories when the caller's block ends.  The two other stream
-sites are the exactly-once Delta sink's own ``foreachBatch`` drain
-and the custom tick source's self-contained drains.  This test walks
-the package source and fails if a second stream site comes back, if
-a streaming op hands its result over through a named query or a temp
-view again, or if the ``events.ts`` canonicalisation is written a
-second time outside ``schemas.canonical_ts``."""
+and ``streaming/windowed.drain`` the only drain: it holds each
+micro-batch in executor memory, deletes its checkpoint directory and
+returns the result as a DataFrame on the caller's session.  The two
+other stream sites are the exactly-once Delta sink's own
+``foreachBatch`` drain and the custom tick source's self-contained
+drains.  This test walks the package source and fails if a second
+stream site comes back, if a streaming op hands its result over
+through a named query or a temp view again, or if the ``events.ts``
+canonicalisation is written a second time outside
+``schemas.canonical_ts``."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ READ_STREAM = {
     ("sources/generator.py", "stream_generator_kpis"),
 }
 WRITE_STREAM = {
-    ("streaming/windowed.py", "drained"),
+    ("streaming/windowed.py", "drain"),
     ("streaming/delta_sink.py", "stream_events_to_delta"),
     ("sources/generator.py", "stream_generator_kpis"),
 }

@@ -318,13 +318,13 @@ def test_stream_drain_leaves_no_session_state(spark, sf_dir):
 
 
 def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch, capfd):
-    """Each drain deletes its output and checkpoint once the op has
-    materialised its result: three drains on one session leave no
-    ``drain_*`` tree behind, and the state store logs no error about the
-    deleted directories.  Then every streaming registry op and the Delta
-    maintenance op run once: all they leave are the per-source stream
-    directories (``stream_src_*``, ``stream_dup_*``), with no Delta
-    table, no active query and no temp view."""
+    """Each drain deletes its checkpoint directory before it returns:
+    three drains on one session leave no ``drain_*`` tree behind, and
+    the state store logs no error about the deleted directories.  Then
+    every streaming registry op and the Delta maintenance op run once:
+    all they leave are the per-source stream directories
+    (``stream_src_*``, ``stream_dup_*``), with no Delta table, no
+    active query and no temp view."""
     import tempfile
 
     from data_pipeline_for_e_commerce_shop_spark.queries import QUERIES
@@ -350,6 +350,72 @@ def test_stream_drains_leave_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch,
     assert spark.streams.active == []
     assert windowed.drain_session(spark).streams.active == []
     assert {v.name for v in spark.catalog.listTables()} == views
+
+
+def _two_file_stream(spark, src_dir):
+    """A file stream over two parquet files of ``k`` (0-2, then 10-12)
+    on the drain session, one file per micro-batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import (
+        drain_session,
+    )
+
+    os.makedirs(src_dir)
+    for i, ks in enumerate(([0, 1, 2], [10, 11, 12])):
+        pq.write_table(
+            pa.table({"k": pa.array(ks, pa.int64())}),
+            os.path.join(src_dir, f"part-{i}.parquet"),
+        )
+    return (
+        drain_session(spark)
+        .readStream.schema("k LONG")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src_dir))
+    )
+
+
+def test_drain_returns_a_frame_on_the_callers_session(spark, tmp_path, monkeypatch):
+    """``drain`` hands its result over in executor memory: the frame is
+    bound to the caller's session (in Python and in the JVM), and it
+    still counts after ``drain`` has returned and deleted its work
+    directory, which leaves no ``drain_*`` tree and no parquet file in
+    the temp directory."""
+    import tempfile
+
+    from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import drain
+
+    work = tmp_path / "tmp"
+    work.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work))
+    out = drain(spark, _two_file_stream(spark, tmp_path / "src"), "append")
+    assert out.sparkSession is spark
+    assert out._jdf.sparkSession().equals(spark._jsparkSession)
+    left = [os.path.join(r, f) for r, ds, fs in os.walk(work) for f in ds + fs]
+    assert [p for p in left if "drain_" in p or p.endswith(".parquet")] == []
+    assert out.count() == 6
+
+
+def test_append_drain_unions_every_micro_batch(spark, tmp_path):
+    """Append mode keeps each micro-batch: both files' rows come back,
+    not only the last batch's."""
+    from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import drain
+
+    out = drain(spark, _two_file_stream(spark, tmp_path / "src"), "append")
+    assert sorted(r.k for r in out.collect()) == [0, 1, 2, 10, 11, 12]
+
+
+def test_complete_drain_returns_the_last_batch_only(spark, tmp_path):
+    """Complete mode re-emits the whole state each micro-batch, so the
+    drain keeps only the last: one count of 6, not the 3 of the first
+    batch beside it."""
+    from data_pipeline_for_e_commerce_shop_spark.streaming.windowed import drain
+
+    counts = _two_file_stream(spark, tmp_path / "src").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    assert [r.n for r in drain(spark, counts).collect()] == [6]
 
 
 def test_stream_interval_join_matches_batch_dual(spark):
